@@ -5,9 +5,10 @@ Reference: integrations/ml.py — `iter_samples(project_yaml, output_id, limit)`
 definition, compile the runtime, hydrate artifacts, then stream `Sample`s /
 metadata-ordered numpy batches with strict finite checks.
 
-Spark shape: the wide DataFrame IS the sample table; batches come off
-`toLocalIterator` over Arrow-coalesced record batches so the driver holds at
-most one batch, and executors feed the iterator pipeline-parallel.
+Spark shape: the wide DataFrame IS the sample table. Samples and batches
+come off `toLocalIterator` as Python `Row`s, one partition on the driver at
+a time (with the next one prefetched), and batches are packed into NumPy
+arrays on the driver; no Arrow transfer is involved.
 """
 
 from __future__ import annotations
@@ -91,9 +92,10 @@ def iter_model_batches(
     """Metadata-ordered NumPy batches (reference iter_model_batches,
     ml.py:149-208: bounded batches, nulls/non-finite rejected, float32/64).
 
-    Arrow does the columnar transfer (`toArrow`-style batching via
-    `toLocalIterator` over an Arrow-friendly projection); scalar columns only
-    (sequence features become `(batch, len)` slabs when fixed-length).
+    Rows of the feature/target projection stream through
+    `toLocalIterator` (one partition on the driver at a time) and are
+    packed row by row into `(batch, n)` NumPy arrays on the driver; a
+    fixed-length sequence column contributes `len` matrix columns.
     """
     import numpy as np
 
@@ -228,9 +230,7 @@ def preview(
             raise ValueError(f"preview stage {stage!r} requires stream=")
         return compiled.stream_at(stream, stage)
     if stage == "series":
-        from datapipeline_spark.plans.artifacts import _build_series
-
-        return _build_series(compiled)
+        return compiled.series()
     if stage == "samples":
         from datapipeline_spark.plans.dataset_build import _build
 

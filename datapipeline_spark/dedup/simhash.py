@@ -42,12 +42,14 @@ def simhash(
     # HOF lambda, so the array is let-bound as a lambda variable instead:
     # transform(array(hs), __hs__ -> fingerprint)[1] evaluates `hs` exactly
     # once and binds it to __hs__. The vote sum is exact (longs), and the
-    # >0 sign test matches the old aggregate's.
+    # >0 sign test matches the old aggregate's. A NULL text would otherwise
+    # fold its all-NULL votes to 0, so it is guarded explicitly.
     hs = (
         f"transform(split(trim({text_col}), '\\\\s+'),"
         f" t -> CAST(conv(substring(md5(t), 1, {HASH_HEX_LEN}), 16, 10) AS BIGINT))"
     )
     fingerprint = f"""
+    CASE WHEN {text_col} IS NULL THEN CAST(NULL AS BIGINT) ELSE
     element_at(transform(array({hs}), __hs__ ->
       aggregate(
         zip_with(
@@ -59,6 +61,7 @@ def simhash(
           (s, i) -> CASE WHEN s > 0 THEN shiftleft(CAST(1 AS BIGINT), i)
                          ELSE CAST(0 AS BIGINT) END),
         CAST(0 AS BIGINT), (acc, x) -> acc + x)), 1)
+    END
     """
     return df.select(F.col(id_col), F.expr(fingerprint).alias("simhash"))
 

@@ -7,8 +7,9 @@ upstream artifact hashes, and artifacts/executor.py:95-205 skips fresh
 artifacts (AUTO) or rebuilds all (FORCE).
 
 The skip logic hashes **configs and file stats, never data**, so it ports
-unchanged; each producer is one Spark job writing Parquet plus a JSON
-manifest carrying the fingerprint.
+unchanged; each producer writes Parquet plus a JSON manifest carrying the
+fingerprint. The series and scaler producers share the staged series frame
+(``CompiledProject.series``), so the stream transforms run once for both.
 """
 
 from __future__ import annotations
@@ -144,26 +145,8 @@ def artifact_fingerprint(
 
 
 # --------------------------------------------------------------------------- #
-# producers — each one Spark job writing parquet + manifest
+# producers — each writes parquet + manifest
 # --------------------------------------------------------------------------- #
-
-
-def _build_series(compiled: CompiledProject) -> DataFrame:
-    """Long series frame for every dataset feature/target (reference
-    operations/artifacts/series.py:71-150 writes gzip JSONL; Parquet here)."""
-    from datapipeline_spark.plans.dataset_build import _long_frame
-
-    cfg = compiled.definition.dataset
-    keys = list(cfg.sample.keys)
-    out: DataFrame | None = None
-    for spec in [*cfg.features, *cfg.targets]:
-        if spec.sequence is not None:
-            continue  # sequences materialize at assembly; arrays don't union with scalars
-        lf = _long_frame(compiled, spec, keys)
-        out = lf if out is None else out.unionByName(lf)
-    if out is None:
-        raise ValueError("dataset has no scalar series")
-    return out
 
 
 def _build_metadata(compiled: CompiledProject, series: DataFrame) -> DataFrame:
@@ -184,12 +167,13 @@ def _build_coverage(compiled: CompiledProject, metadata: DataFrame) -> DataFrame
 
 
 def _build_scaler(compiled: CompiledProject) -> DataFrame:
-    from datapipeline_spark.plans.dataset_build import build_dataset
+    """The dataset build's own scaler fit, over the staged series frame."""
+    from datapipeline_spark.plans.dataset_build import fit_split_scaler
 
-    build = build_dataset(compiled)
-    if build.scaler_stats is None:
+    stats = fit_split_scaler(compiled.series(), compiled.definition.dataset)
+    if stats is None:
         raise ValueError("dataset requires no scaler (no scale: true entries)")
-    return build.scaler_stats
+    return stats
 
 
 def _build_ticks(compiled: CompiledProject) -> DataFrame:
@@ -306,7 +290,7 @@ def build_artifacts(
     frames: dict[str, DataFrame] = {}
 
     producers: dict[str, Callable[[], DataFrame]] = {
-        SERIES: lambda: _build_series(compiled),
+        SERIES: compiled.series,
         METADATA: lambda: _build_metadata(compiled, frames[SERIES]),
         COVERAGE_STATS: lambda: _build_coverage(compiled, frames[METADATA]),
         SCALER: lambda: _build_scaler(compiled),

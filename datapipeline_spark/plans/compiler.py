@@ -243,6 +243,18 @@ class CompiledProject:
     definition: ProjectDefinition
     _cache: dict[str, DataFrame] = field(default_factory=dict)
     _partitions: dict[str, list[str]] = field(default_factory=dict)
+    _series: DataFrame | None = None
+
+    def series(self) -> DataFrame:
+        """The dataset's scalar long series frame, staged once behind a lazy
+        localCheckpoint (the reference's series cache): assembly, the scaler
+        fit and the series artifact read it instead of re-running the stream
+        transforms. Its blocks live as long as this object's frames."""
+        if self._series is None:
+            from datapipeline_spark.plans.dataset_build import scalar_series
+
+            self._series = scalar_series(self).localCheckpoint(eager=False)
+        return self._series
 
     def partition_by(self, stream_id: str) -> list[str]:
         if stream_id not in self._partitions:

@@ -3,17 +3,24 @@ postprocess → split/scale → fold outputs.
 
 Reference lifecycle (pipelines/dataset/pipeline.py:69-246): assemble samples
 from the series artifact, label splits, fit/apply leakage-free per-fold
-scalers, run the fixed postprocess order, route folds. Here every step is a
-lazy DataFrame transformation; fold outputs are filters over one labeled
-plan, so Spark computes the expensive pivot once and fans out the writes.
+scalers, run the fixed postprocess order, route folds.
+
+Spark computes each stream's transforms once per compiled project and the
+pivot once per build, because two frames sit behind lazy localCheckpoints:
+the scalar series frame (``CompiledProject.series``; read by the id scan,
+window clip, pivot and scaler fit) and the wide sample table after its last
+shuffle (the lattice), so postprocess, labels, scaling and every fold/role
+write are narrow work over one materialization. Staged blocks live as long
+as the DataFrames that own them.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 from typing import Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
 from datapipeline_spark.dataset.postprocess import (
@@ -21,7 +28,7 @@ from datapipeline_spark.dataset.postprocess import (
     select_columns_by_coverage,
 )
 from datapipeline_spark.dataset.sample import assemble_samples, rectangular_samples
-from datapipeline_spark.dataset.scaler import apply_scaler, fit_scaler
+from datapipeline_spark.dataset.scaler import fit_scaler
 from datapipeline_spark.dataset.series import project_series
 from datapipeline_spark.dataset.split import time_split_label, hash_split_label
 from datapipeline_spark.functions.time import floor_time_expr, parse_datetime_utc
@@ -30,6 +37,7 @@ from datapipeline_spark.plans.compiler import CompiledProject
 from datapipeline_spark.plans.config import DatasetConfig, FeatureSpec
 
 LABEL = "__split__"
+ROLES = ("train", "validation", "test")
 
 
 def _long_frame(
@@ -60,12 +68,81 @@ def _long_frame(
     return long_df.withColumn("base_id", F.lit(spec.id))
 
 
-def _series_ids(long_df: DataFrame) -> list[str]:
-    """Distinct encoded ids for the pivot list. Tiny metadata-style scan at
-    plan-build time (the reference reads the same set from its series
-    artifact manifest); at 100 TB this comes from the metadata artifact
-    instead — see plans/artifacts.py."""
-    return sorted(r[0] for r in long_df.select("series_id").distinct().collect())
+def scalar_series(compiled: CompiledProject) -> DataFrame:
+    """Long rows of every scalar feature/target, unioned: the frame
+    ``CompiledProject.series`` stages and the series artifact writes
+    (reference operations/artifacts/series.py:71-150). Sequence arrays do
+    not union with scalars; they assemble from their own long frames."""
+    cfg = compiled.definition.dataset
+    if cfg is None:
+        raise ValueError("project has no dataset.yaml")
+    keys = list(cfg.sample.keys)
+    longs = [
+        _long_frame(compiled, spec, keys)
+        for spec in [*cfg.features, *cfg.targets]
+        if spec.sequence is None
+    ]
+    if not longs:
+        raise ValueError("dataset has no scalar series")
+    return _union_all(longs)
+
+
+def _union_all(frames: Sequence[DataFrame]) -> DataFrame:
+    return reduce(lambda a, b: a.unionByName(b), frames)
+
+
+def split_label(cfg: DatasetConfig) -> Column:
+    """The split label of a row with ``time`` and the sample keys: the time
+    interval it falls in, or its hash bucket over ``time|key…``. One rule
+    labels the wide samples (bucket times) and the long rows the scaler
+    fits on (raw series times), so labels and the leakage-free fit cannot
+    drift apart. Unsplit datasets label every row 'train'."""
+    split = cfg.split
+    if split is None:
+        return F.lit("train")
+    if split.mode == "time":
+        intervals = [
+            (iv.id, parse_datetime_utc(iv.until) if iv.until else None)
+            for iv in split.intervals
+        ]
+        return time_split_label("time", intervals)
+    key_col = F.concat_ws(
+        "|", F.col("time").cast("string"), *[F.col(k) for k in cfg.sample.keys]
+    )
+    return hash_split_label(key_col, split.ratios, split.seed)
+
+
+def fold_plan(cfg: DatasetConfig) -> dict[str, dict[str, list[str]]]:
+    """fold → role → split labels; empty when the dataset is unsplit."""
+    folds = cfg.split.folds if cfg.split is not None else []
+    return {f.id: {r: list(getattr(f, r)) for r in ROLES} for f in folds}
+
+
+def fit_split_scaler(series: DataFrame, cfg: DatasetConfig) -> DataFrame | None:
+    """Leakage-free scaler statistics (fold?, series_id, mean, std, n_obs)
+    from the long series frame: each fold fits only on rows labelled with
+    one of its train labels. Series are selected by BASE id and fitted per
+    FULL series id (each partition suffix owns its mean/std). None when
+    nothing is scaled."""
+    scaled_bases = [s.id for s in [*cfg.features, *cfg.targets] if s.scale]
+    if not scaled_bases:
+        return None
+    labeled = series.filter(F.col("base_id").isin(scaled_bases)).withColumn(
+        LABEL, split_label(cfg)
+    )
+    plan = fold_plan(cfg)
+    if not plan:
+        return fit_scaler(
+            labeled, id_col="series_id", train_filter=F.col(LABEL) == "train"
+        )
+    return _union_all(
+        [
+            fit_scaler(
+                labeled, id_col="series_id", train_filter=F.col(LABEL).isin(roles["train"])
+            ).withColumn("fold", F.lit(fold_id))
+            for fold_id, roles in plan.items()
+        ]
+    )
 
 
 @dataclass
@@ -74,16 +151,22 @@ class DatasetBuild:
     feature_columns: list[str]
     target_columns: list[str]
     column_base: dict[str, str]  # wide column → base feature/target id
-    scaler_stats: DataFrame | None  # (fold?, base_id, mean, std, count)
+    scaler_stats: DataFrame | None  # (fold?, series_id, mean, std, n_obs)
     fold_plan: dict[str, dict[str, list[str]]]  # fold → role → labels
 
     def outputs(self) -> dict[tuple[str, str], DataFrame]:
-        """(fold, role) → scaled frame; single-fold 'all/full' when no split."""
+        """(fold, role) → scaled frame; single-fold 'all/full' when no split.
+        The statistics of every fold come from one collect."""
+        stats: dict[str | None, dict[str, Row]] = {}
+        if self.scaler_stats is not None:
+            for r in self.scaler_stats.collect():
+                fold = r["fold"] if self.fold_plan else None
+                stats.setdefault(fold, {})[r["series_id"]] = r
         if not self.fold_plan:
-            return {("all", "full"): self._scaled(self.samples, None).drop(LABEL)}
+            return {("all", "full"): self._scaled(stats.get(None, {})).drop(LABEL)}
         outs: dict[tuple[str, str], DataFrame] = {}
         for fold, roles in self.fold_plan.items():
-            scaled = self._scaled(self.samples, fold)
+            scaled = self._scaled(stats.get(fold, {}))
             for role, labels in roles.items():
                 if labels:
                     outs[(fold, role)] = scaled.filter(
@@ -91,27 +174,18 @@ class DatasetBuild:
                     ).drop(LABEL)
         return outs
 
-    def _scaled(self, df: DataFrame, fold: str | None) -> DataFrame:
-        if self.scaler_stats is None:
-            return df
-        stats = self.scaler_stats
-        if fold is not None:
-            stats = stats.filter(F.col("fold") == fold).drop("fold")
-        scaled_cols = [c for c, b in self.column_base.items() if b in self._scaled_bases]
-        if not scaled_cols:
-            return df
-        # stats are keyed by FULL series id — partitioned columns each scale
-        # with their own statistics (reference vector/scaler.py:144-151:
-        # selection by base_id, lookup by vector_id); stats are tiny
-        rows = {r["series_id"]: r for r in stats.collect()}
-        out = df
-        dtypes = dict(df.dtypes)
-        for col in scaled_cols:
-            r = rows.get(col)
+    def _scaled(self, stats: Mapping[str, Row]) -> DataFrame:
+        """Standardize every column with statistics. Stats are keyed by FULL
+        series id — partitioned columns each scale with their own statistics
+        (reference vector/scaler.py:144-151: selection by base_id, lookup by
+        vector_id)."""
+        out = self.samples
+        for col, dtype in self.samples.dtypes:
+            r = stats.get(col)
             if r is None:
                 continue
             mean, std = F.lit(r["mean"]), F.lit(r["std"])
-            if dtypes[col].startswith("array"):
+            if dtype.startswith("array"):
                 # elementwise with null passthrough (reference
                 # transforms/vector/scaler.py:82-175 list handling)
                 scaled = F.transform(F.col(col), lambda x: (x - mean) / std)
@@ -119,8 +193,6 @@ class DatasetBuild:
                 scaled = (F.col(col) - mean) / std
             out = out.withColumn(col, F.when(F.col(col).isNotNull(), scaled))
         return out
-
-    _scaled_bases: set[str] = None  # populated by build_dataset
 
 
 def build_dataset(
@@ -132,27 +204,30 @@ def build_dataset(
     return _build(compiled, cfg, window_mode=window_mode)
 
 
-def _window_clip(wide, cadence, spec_longs, window_mode: str):
+def _window_clip(wide, cadence, longs: Sequence[DataFrame], window_mode: str):
     """Clip samples to the metadata window (reference operations/artifacts/
     metadata.py:36-108; serve applies it, default mode 'intersection'):
     per-base range = [min, max] observed ROW bucket with partitions unioned
     within a base; 'intersection' = max-of-firsts/min-of-lasts over base
     ranges, 'strict' = same over per-partition (full series id) ranges,
     'union' = min-of-firsts/max-of-lasts. All ranges come from ONE grouped
-    aggregation over the unioned long frames (partial agg map-side, one
-    shuffle on the tiny id domain)."""
+    aggregation over the unioned long frames (the staged scalar series plus
+    any sequence frames; partial agg map-side, one shuffle on the tiny id
+    domain)."""
     if window_mode not in {"union", "intersection", "strict"}:
         raise ValueError(
             f"window_mode must be union|intersection|strict, got {window_mode!r}"
         )
     group = "series_id" if window_mode == "strict" else "base_id"
-    slim = None
-    for _spec, long_df in spec_longs:
-        s = long_df.select(
-            F.col(group).alias("gid"),
-            floor_time_expr("time", cadence).alias("bucket"),
-        )
-        slim = s if slim is None else slim.unionByName(s)
+    slim = _union_all(
+        [
+            long_df.select(
+                F.col(group).alias("gid"),
+                floor_time_expr("time", cadence).alias("bucket"),
+            )
+            for long_df in longs
+        ]
+    )
     rows = (
         slim.groupBy("gid")
         .agg(F.min("bucket").alias("lo"), F.max("bucket").alias("hi"))
@@ -173,44 +248,29 @@ def _window_clip(wide, cadence, spec_longs, window_mode: str):
 def _build(
     compiled: CompiledProject, cfg: DatasetConfig, window_mode: str | None = None
 ) -> DatasetBuild:
+    """``cfg`` is the project's dataset config, possibly with postprocess or
+    split stripped (the preview stages); features, targets and sample keys
+    are the project's, which is what ``compiled.series()`` stages."""
     keys = list(cfg.sample.keys)
     cadence = cfg.sample.cadence
 
     specs = [(s, "feature") for s in cfg.features] + [(s, "target") for s in cfg.targets]
-    scalar_longs: list[DataFrame] = []
-    seq_longs: list[DataFrame] = []
-    spec_longs: list = []
-    for spec, _kind in specs:
-        long_df = _long_frame(compiled, spec, keys)
-        spec_longs.append((spec, long_df))
-        (seq_longs if spec.sequence is not None else scalar_longs).append(long_df)
+    seq_specs = [s for s, _ in specs if s.sequence is not None]
+    series = compiled.series() if len(seq_specs) < len(specs) else None
+    seq_longs = [_long_frame(compiled, s, keys) for s in seq_specs]
 
     col_base: dict[str, str] = {}
-    col_kind: dict[str, str] = {}
-
-    def union_all(frames: list[DataFrame]) -> DataFrame | None:
-        out = None
-        for f in frames:
-            out = f if out is None else out.unionByName(f)
-        return out
-
     wide: DataFrame | None = None
     list_conform: dict[str, int] = {}
-    scalar_long = union_all(scalar_longs)
-    base_of_scalar: dict[str, str] = {}
-    if scalar_long is not None:
-        ids = _series_ids(scalar_long)
-        for sid in ids:
-            base = sid.split("__", 1)[0]
-            col_base[sid] = base
-            base_of_scalar[sid] = base
-        # ---- bucket multiplicity: a series whose buckets hold >1 observation
-        # becomes a fixed-length list column, time-ordered within the bucket
-        # (reference operations/artifacts/series.py:336-367 _assemble_values:
-        # len != 1 → list; artifacts/utils.py:54-82 enforces ONE kind and ONE
-        # length per series). Plan-time decision from one aggregation.
+    if series is not None:
+        # ---- ONE plan-time scan: the pivot ids are the series_ids of the
+        # bucket-multiplicity rows. A series whose buckets hold >1
+        # observation becomes a fixed-length list column, time-ordered within
+        # the bucket (reference operations/artifacts/series.py:336-367
+        # _assemble_values: len != 1 → list; artifacts/utils.py:54-82
+        # enforces ONE kind and ONE length per series).
         mult = (
-            scalar_long.groupBy(
+            series.groupBy(
                 floor_time_expr("time", cadence).alias("__b__"), *keys, "series_id"
             )
             .agg(F.count(F.lit(1)).alias("n"))
@@ -218,6 +278,7 @@ def _build(
             .agg(F.min("n").alias("lo"), F.max("n").alias("hi"))
             .collect()
         )
+        ids = sorted(r["series_id"] for r in mult)
         multi_len = {r["series_id"]: r["hi"] for r in mult if r["hi"] > 1}
         for r in mult:
             if r["hi"] > 1 and r["lo"] != r["hi"]:
@@ -226,12 +287,9 @@ def _build(
                     f"{r['lo']} and {r['hi']} (the metadata contract requires "
                     "one kind and one fixed list length per series)"
                 )
+        col_base.update({sid: sid.split("__", 1)[0] for sid in ids})
         wide = assemble_samples(
-            scalar_long,
-            cadence,
-            keys,
-            series_ids=ids,
-            sequence_ids=sorted(multi_len),
+            series, cadence, keys, series_ids=ids, sequence_ids=sorted(multi_len)
         )
         # absent buckets of list-kind series conform to [null]*length —
         # applied after lattice densification (below) so lattice-only rows
@@ -239,10 +297,9 @@ def _build(
         list_conform.update(multi_len)
 
     if seq_longs:
-        seq_long = union_all(seq_longs)
-        ids = _series_ids(seq_long)
-        for sid in ids:
-            col_base[sid] = sid.split("__", 1)[0]
+        seq_long = _union_all(seq_longs)
+        ids = sorted(r[0] for r in seq_long.select("series_id").distinct().collect())
+        col_base.update({sid: sid.split("__", 1)[0] for sid in ids})
         seq_wide = assemble_samples(seq_long, cadence, keys, series_ids=ids)
         wide = (
             seq_wide
@@ -253,9 +310,7 @@ def _build(
         # a scalar null (reference transforms/vector/conform.py:10-75 list
         # handling, asserted by the identity-alignment fixture) — deferred to
         # after lattice densification like the multi-value conformance
-        size_of_base = {
-            s.id: s.sequence.size for s, _ in specs if s.sequence is not None
-        }
+        size_of_base = {s.id: s.sequence.size for s in seq_specs}
         for sid in ids:
             list_conform[sid] = size_of_base[col_base[sid]]
 
@@ -264,7 +319,8 @@ def _build(
     if window_mode is None and cfg.metadata is not None:
         window_mode = cfg.metadata.window_mode
     if window_mode is not None:
-        wide = _window_clip(wide, cadence, spec_longs, window_mode)
+        longs = ([series] if series is not None else []) + seq_longs
+        wide = _window_clip(wide, cadence, longs, window_mode)
     # ---- rectangular key lattice (reference sample/input.py:37 rectangular
     # =True on every serve: pipelines/sample/keys.py:16-121 dense lattice) —
     # every cadence tick inside each sample key's observed [first, last]
@@ -280,11 +336,13 @@ def _build(
                 F.array(*[F.lit(None).cast("double") for _ in range(length)]),
             ),
         )
+    # ---- stage the sample table after its last shuffle: the coverage scan
+    # and every fold/role output below are narrow work over this one
+    # materialization instead of re-running the pivot and the lattice
+    wide = wide.localCheckpoint(eager=False)
     kind_of = {s.id: k for s, k in specs}
-    for col, base in col_base.items():
-        col_kind[col] = kind_of[base]
-    feature_cols = [c for c, k in col_kind.items() if k == "feature"]
-    target_cols = [c for c, k in col_kind.items() if k == "target"]
+    feature_cols = [c for c, b in col_base.items() if kind_of[b] == "feature"]
+    target_cols = [c for c, b in col_base.items() if kind_of[b] == "target"]
 
     # ---- postprocess: vertical column selection, then horizontal row drop --- #
     if cfg.postprocess is not None:
@@ -305,72 +363,11 @@ def _build(
             if ps.targets is not None and target_cols:
                 wide = drop_rows_by_coverage(wide, target_cols, ps.targets.threshold)
 
-    # ---- split labeling ---------------------------------------------------- #
-    fold_plan: dict[str, dict[str, list[str]]] = {}
-    if cfg.split is not None:
-        if cfg.split.mode == "time":
-            intervals = [
-                (iv.id, parse_datetime_utc(iv.until) if iv.until else None)
-                for iv in cfg.split.intervals
-            ]
-            wide = wide.withColumn(LABEL, time_split_label("time", intervals))
-        else:
-            key_col = F.concat_ws(
-                "|", F.col("time").cast("string"), *[F.col(k) for k in keys]
-            )
-            wide = wide.withColumn(
-                LABEL, hash_split_label(key_col, cfg.split.ratios, cfg.split.seed)
-            )
-        for fold in cfg.split.folds:
-            fold_plan[fold.id] = {
-                "train": list(fold.train),
-                "validation": list(fold.validation),
-                "test": list(fold.test),
-            }
-    else:
-        wide = wide.withColumn(LABEL, F.lit("train"))
-
-    # ---- leakage-free scaler fit (train labels only, per fold) ------------- #
-    scaled_bases = {s.id for s, _ in specs if s.scale}
-    stats: DataFrame | None = None
-    if scaled_bases and scalar_long is not None:
-        # label long rows by the same split rule (applied to raw series times)
-        if cfg.split is not None and cfg.split.mode == "time":
-            label_col = time_split_label("time", intervals)
-        elif cfg.split is not None:
-            key_col = F.concat_ws(
-                "|", F.col("time").cast("string"), *[F.col(k) for k in keys]
-            )
-            label_col = hash_split_label(key_col, cfg.split.ratios, cfg.split.seed)
-        else:
-            label_col = F.lit("train")
-        # select which series get scaled by BASE id; fit statistics per FULL
-        # series id so each partition suffix owns its own mean/std
-        labeled = scalar_long.filter(F.col("base_id").isin(list(scaled_bases))).withColumn(
-            LABEL, label_col
-        )
-        if fold_plan:
-            per_fold = []
-            for fold_id, roles in fold_plan.items():
-                s = fit_scaler(
-                    labeled,
-                    id_col="series_id",
-                    train_filter=F.col(LABEL).isin(roles["train"]),
-                ).withColumn("fold", F.lit(fold_id))
-                per_fold.append(s)
-            stats = union_all(per_fold)
-        else:
-            stats = fit_scaler(
-                labeled, id_col="series_id", train_filter=F.col(LABEL) == "train"
-            )
-
-    build = DatasetBuild(
-        samples=wide,
+    return DatasetBuild(
+        samples=wide.withColumn(LABEL, split_label(cfg)),
         feature_columns=sorted(feature_cols),
         target_columns=sorted(target_cols),
         column_base=col_base,
-        scaler_stats=stats,
-        fold_plan=fold_plan,
+        scaler_stats=fit_split_scaler(series, cfg) if series is not None else None,
+        fold_plan=fold_plan(cfg),
     )
-    build._scaled_bases = scaled_bases
-    return build

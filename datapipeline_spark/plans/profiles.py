@@ -7,9 +7,9 @@ orchestration.py:227-239); serve profiles share one compiled runtime and
 route dataset outputs; materialize jobs are preflighted before any work.
 
 Spark shape: the expensive objects (compiled project, dataset build) are
-constructed once and shared across profiles — each profile is one more
-action over the same lazy plan, so Spark never recomputes the pivot for a
-second serve profile unless its frame actually differs.
+constructed once and shared across profiles; every serve profile's
+outputs are narrow reads of the build's one staged sample table
+(plans/dataset_build.py).
 """
 
 from __future__ import annotations
@@ -243,11 +243,7 @@ def _run_serve(
 def _run_inspect(
     compiled: CompiledProject, profs: list[InspectProfileConfig]
 ) -> list[ProfileResult]:
-    from datapipeline_spark.plans.artifacts import (
-        _build_coverage,
-        _build_metadata,
-        _build_series,
-    )
+    from datapipeline_spark.plans.artifacts import _build_coverage, _build_metadata
 
     results: list[ProfileResult] = []
     for p in profs:
@@ -264,7 +260,7 @@ def _run_inspect(
             results.append(ProfileResult(key, "inspected", "streams"))
         elif p.operation == "coverage":
             cov = _build_coverage(
-                compiled, _build_metadata(compiled, _build_series(compiled))
+                compiled, _build_metadata(compiled, compiled.series())
             )
             for row in cov.toJSON().toLocalIterator():
                 sys.stdout.write(row + "\n")
@@ -280,7 +276,7 @@ def _run_inspect(
             if cfg is None:
                 raise ValueError("inspect matrix requires dataset.yaml")
             statuses = availability_statuses(
-                _build_series(compiled), cfg.sample.cadence
+                compiled.series(), cfg.sample.cadence
             )
             html = render_html(*collect_matrix(statuses))
             if p.output is not None and p.output.transport == "fs":
