@@ -20,7 +20,11 @@ from typing import Iterator
 from pyspark.sql import DataFrame, SparkSession
 
 from datapipeline_spark.plans.compiler import CompiledProject, compile_project
-from datapipeline_spark.plans.dataset_build import DatasetBuild, build_dataset
+from datapipeline_spark.plans.dataset_build import (
+    build_dataset,
+    postprocess_preview,
+    samples_preview,
+)
 from datapipeline_spark.plans.project import load_project
 
 
@@ -183,21 +187,15 @@ def serve(
     profiles/orchestration.py → io/output.py:94-160). Projects without serve
     profiles get a default jsonl profile named 'dataset'.
     Returns {(fold, role): path} across the executed profiles."""
-    from datapipeline_spark.plans.config import ServeProfileConfig, ordered_profiles
-    from datapipeline_spark.plans.profiles import _run_serve
+    from datapipeline_spark.plans.config import ServeProfileConfig
+    from datapipeline_spark.plans.profiles import _run_serve, select_profiles
 
     defn = load_project(project_dir)
-    profs = [p for p in defn.profiles.values() if p.cmd == "serve" and p.enabled]
-    if profile is not None:
-        profs = [p for p in profs if p.name == profile]
-        if not profs:
-            raise KeyError(f"no enabled serve profile named {profile!r}")
-    if not profs:
-        profs = [ServeProfileConfig(name="dataset")]
+    profs = select_profiles(defn, "serve", profile) or [
+        ServeProfileConfig(name="dataset")
+    ]
     compiled = compile_project(spark, defn)
-    results = _run_serve(
-        compiled, defn, ordered_profiles(profs), Path(project_dir), run_id
-    )
+    results = _run_serve(compiled, defn, profs, Path(project_dir), run_id)
     written: dict[tuple[str, str], str] = {}
     for r in results:
         if r.output_id and "." in r.output_id:
@@ -232,19 +230,9 @@ def preview(
     if stage == "series":
         return compiled.series()
     if stage == "samples":
-        from datapipeline_spark.plans.dataset_build import _build
-
-        cfg = compiled.definition.dataset
-        if cfg is None:
-            raise ValueError("project has no dataset.yaml")
-        stripped = cfg.model_copy(update={"postprocess": None, "split": None})
-        return _build(compiled, stripped).samples.drop("__split__")
+        return samples_preview(compiled)
     if stage == "postprocess":
-        build = build_dataset(compiled)
-        outs = build.outputs()
-        if len(outs) == 1:
-            return next(iter(outs.values()))
-        return build.samples
+        return postprocess_preview(build_dataset(compiled))
     raise ValueError(
         f"unknown preview stage {stage!r}; use "
         "input|canonical|records|series|samples|postprocess"

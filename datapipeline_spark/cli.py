@@ -61,16 +61,15 @@ def cmd_build(args) -> int:
 
 def cmd_inspect(args) -> int:
     from datapipeline_spark.plans import compile_project, load_project
+    from datapipeline_spark.plans.profiles import stream_info
 
     defn = load_project(args.project)
     compiled = compile_project(_spark(args), defn)
-    info: dict = {"project": defn.project.name, "streams": {}, "sources": sorted(defn.sources)}
-    for sid in sorted(defn.streams):
-        df = compiled.stream(sid)
-        info["streams"][sid] = {
-            "partition_by": compiled.partition_by(sid),
-            "schema": df.schema.simpleString(),
-        }
+    info: dict = {
+        "project": defn.project.name,
+        "streams": stream_info(compiled),
+        "sources": sorted(defn.sources),
+    }
     if defn.dataset:
         info["dataset"] = {
             "cadence": defn.dataset.sample.cadence,

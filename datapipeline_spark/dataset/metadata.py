@@ -30,17 +30,25 @@ def collect_series_metadata(long_df: DataFrame, id_col: str = "series_id") -> Da
 def window_bounds(
     long_df: DataFrame, id_col: str = "series_id", mode: str = "union"
 ) -> tuple:
-    """Corpus time window across series: union = [min(first), max(last)],
-    intersection = [max(first), min(last)]
-    (reference operations/artifacts/metadata.py:93-109)."""
-    per = collect_series_metadata(long_df, id_col)
-    if mode == "union":
-        row = per.agg(F.min("first_time"), F.max("last_time")).collect()[0]
-    elif mode == "intersection":
-        row = per.agg(F.max("first_time"), F.min("last_time")).collect()[0]
-    else:
+    """Corpus time window across ids from each id's [min, max] ``time``:
+    union = [min(first), max(last)], intersection = [max(first), min(last)]
+    (reference operations/artifacts/metadata.py:93-109). One grouped
+    aggregation over the tiny id domain, combined on the driver; (None, None)
+    when no id has a time. An empty intersection has start > end."""
+    if mode not in {"union", "intersection"}:
         raise ValueError(f"window mode must be union|intersection, got {mode!r}")
-    return row[0], row[1]
+    rows = (
+        long_df.groupBy(id_col)
+        .agg(F.min("time").alias("lo"), F.max("time").alias("hi"))
+        .collect()
+    )
+    bounds = [(r["lo"], r["hi"]) for r in rows if r["lo"] is not None]
+    if not bounds:
+        return None, None
+    firsts, lasts = zip(*bounds)
+    if mode == "union":
+        return min(firsts), max(lasts)
+    return max(firsts), min(lasts)
 
 
 def coverage_stats(wide_df: DataFrame, columns: Sequence[str]) -> DataFrame:

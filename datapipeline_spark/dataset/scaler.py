@@ -6,12 +6,12 @@ rows — leakage-proof by construction (operations/artifacts/scaler.py:87-129).
 
 Spark shape: fit = one groupBy aggregate (Spark's var_pop is a single-pass
 merged moment computation — the distributed generalization of Welford);
-apply = broadcast join of the tiny stats table + column arithmetic.
+apply = column arithmetic against the collected per-id (mean, std) literals.
 """
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import Mapping, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -44,61 +44,28 @@ def fit_scaler(
 
 def apply_scaler(
     df: DataFrame,
-    stats: DataFrame,
+    stats: Mapping[str, tuple[float, float]],
     columns: Sequence[str],
-    id_col: str = "series_id",
-    fold_col: str | None = None,
-    round_digits: int | None = None,
 ) -> DataFrame:
     """Standardize wide columns: (x − mean)/std, null passthrough; arrays
     elementwise (reference transforms/vector/scaler.py:82-175).
 
-    `stats` rows are keyed by id (+fold). Stats are collected to a literal
-    map (they are tiny by definition) → pure column arithmetic, no join in
-    the hot path, exactly like the reference's in-memory artifact lookup.
+    `stats` is the collected {series_id: (mean, std)} mapping (the fitted
+    table is tiny by definition), so scaling is pure column arithmetic, no
+    join in the hot path, exactly like the reference's in-memory artifact
+    lookup. Columns without statistics pass through unchanged; stats are
+    keyed by FULL series id, so each partitioned column scales with its own
+    statistics (reference vector/scaler.py:144-151).
     """
-    keys = ([fold_col] if fold_col else []) + [id_col, "mean", "std"]
-    rows = stats.select(*keys).collect()
-
-    def lookup(fold, sid):
-        for r in rows:
-            if sid == r[id_col] and (fold_col is None or r[fold_col] == fold):
-                return r["mean"], r["std"]
-        return None
-
+    dtypes = dict(df.dtypes)
     out = df
-    if fold_col is None:
-        for c in columns:
-            ms = lookup(None, c)
-            if ms is None:
-                continue
-            mean, std = ms
-            expr = (F.col(c) - F.lit(mean)) / F.lit(std)
-            if dict(df.dtypes)[c].startswith("array"):
-                expr = F.transform(F.col(c), lambda x: (x - F.lit(mean)) / F.lit(std))
-            if round_digits is not None:
-                expr = (
-                    F.round(expr, round_digits)
-                    if not dict(df.dtypes)[c].startswith("array")
-                    else F.transform(expr, lambda x: F.round(x, round_digits))
-                )
-            out = out.withColumn(c, expr)
-        return out
-
-    folds = sorted({r[fold_col] for r in rows})
     for c in columns:
-        expr = F.col(c)
-        scaled = None
-        for fold in folds:
-            ms = lookup(fold, c)
-            if ms is None:
-                continue
-            mean, std = ms
-            branch = (F.col(c) - F.lit(mean)) / F.lit(std)
-            if round_digits is not None:
-                branch = F.round(branch, round_digits)
-            cond = F.col(fold_col) == F.lit(fold)
-            scaled = F.when(cond, branch) if scaled is None else scaled.when(cond, branch)
-        if scaled is not None:
-            out = out.withColumn(c, scaled.otherwise(expr))
+        if c not in stats:
+            continue
+        mean, std = (F.lit(v) for v in stats[c])
+        if dtypes[c].startswith("array"):
+            expr = F.transform(F.col(c), lambda x: (x - mean) / std)
+        else:
+            expr = (F.col(c) - mean) / std
+        out = out.withColumn(c, expr)
     return out

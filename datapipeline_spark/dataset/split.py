@@ -78,12 +78,14 @@ def route_folds(
     """fold_plan: fold → role → labels (purge labels appear in no role).
     Returns {(fold, role): filtered df} — each output is a filter over the
     labeled frame, so one upstream computation feeds all fold writes
-    (reference pipelines/dataset/pipeline.py:127-246 batch router)."""
-    outputs: dict[tuple[str, str], DataFrame] = {}
-    for fold, roles in fold_plan.items():
-        for role, labels in roles.items():
-            outputs[(fold, role)] = df.filter(F.col(label_col).isin(list(labels)))
-    return outputs
+    (reference pipelines/dataset/pipeline.py:127-246 batch router). A role
+    with no labels (e.g. a fold without validation) has no output."""
+    return {
+        (fold, role): df.filter(F.col(label_col).isin(list(labels)))
+        for fold, roles in fold_plan.items()
+        for role, labels in roles.items()
+        if labels
+    }
 
 
 def stratified_exact_split(

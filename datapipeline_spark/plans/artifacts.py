@@ -18,6 +18,7 @@ import hashlib
 import json
 import shutil
 from dataclasses import dataclass
+from functools import reduce
 from pathlib import Path
 from typing import Callable
 
@@ -45,6 +46,8 @@ DAG: dict[str, tuple[str, ...]] = {
 
 
 def topological_order(keys: set[str]) -> list[str]:
+    """``keys`` and everything they transitively depend on, each after its
+    dependencies."""
     order: list[str] = []
     seen: set[str] = set()
 
@@ -177,27 +180,25 @@ def _build_scaler(compiled: CompiledProject) -> DataFrame:
 
 
 def _build_ticks(compiled: CompiledProject) -> DataFrame:
-    """Per-partition dense tick grids at the sample cadence for every stream
-    used by the dataset (reference operations/artifacts/ticks.py:67-132)."""
+    """Per-partition dense tick grids at the sample cadence, one per stream
+    used by the dataset (reference operations/artifacts/ticks.py:67-132).
+    Each grid is unique per (partition, time), so the union needs no dedupe."""
     cfg = compiled.definition.dataset
     cadence = cfg.sample.cadence
-    out: DataFrame | None = None
-    for spec in [*cfg.features, *cfg.targets]:
-        df = compiled.stream(spec.stream)
-        partition_by = compiled.partition_by(spec.stream)
-        grid = tick_grid(df, cadence, partition_by).withColumn(
-            "stream_id", F.lit(spec.stream)
+    grids = []
+    for stream_id in dict.fromkeys(s.stream for s in [*cfg.features, *cfg.targets]):
+        partition_by = compiled.partition_by(stream_id)
+        grid = tick_grid(compiled.stream(stream_id), cadence, partition_by)
+        grids.append(
+            grid.select(
+                F.lit(stream_id).alias("stream_id"),
+                F.to_json(F.struct(*partition_by)).alias("partition_json")
+                if partition_by
+                else F.lit("{}").alias("partition_json"),
+                "time",
+            )
         )
-        keyed = grid.select(
-            "stream_id",
-            F.to_json(F.struct(*partition_by)).alias("partition_json")
-            if partition_by
-            else F.lit("{}").alias("partition_json"),
-            "time",
-        )
-        out = keyed if out is None else out.unionByName(keyed)
-    assert out is not None
-    return out.dropDuplicates(["stream_id", "partition_json", "time"])
+    return reduce(DataFrame.unionByName, grids)
 
 
 def dataset_requires_scaler(compiled: CompiledProject) -> bool:
@@ -274,17 +275,6 @@ def build_artifacts(
         keys = {SERIES, METADATA, COVERAGE_STATS, TICKS}
         if dataset_requires_scaler(compiled):
             keys.add(SCALER)
-    # pull in dependencies
-    closure = set(keys)
-    changed = True
-    while changed:
-        changed = False
-        for k in list(closure):
-            for dep in DAG[k]:
-                if dep not in closure:
-                    closure.add(dep)
-                    changed = True
-
     results: dict[str, BuildResult] = {}
     hashes: dict[str, str] = {}
     frames: dict[str, DataFrame] = {}
@@ -297,7 +287,7 @@ def build_artifacts(
         TICKS: lambda: _build_ticks(compiled),
     }
 
-    for key in topological_order(closure):
+    for key in topological_order(keys):
         deps = {d: hashes[d] for d in DAG[key]}
         fp = artifact_fingerprint(compiled, key, deps)
         hashes[key] = fp

@@ -432,7 +432,9 @@ class PostprocessSpec(_Strict):
 
 class MetadataSpec(_Strict):
     """Serve-time window clipping (reference config/tasks/metadata.py:
-    MetadataTask.window_mode, default 'intersection')."""
+    MetadataTask.window_mode, default 'intersection'). ``window_mode`` is the
+    only source of the clipping mode; a dataset without a ``metadata:``
+    section is not clipped."""
 
     window_mode: Literal["union", "intersection", "strict"] = "intersection"
 

@@ -12,25 +12,38 @@ window clip, pivot and scaler fit) and the wide sample table after its last
 shuffle (the lattice), so postprocess, labels, scaling and every fold/role
 write are narrow work over one materialization. Staged blocks live as long
 as the DataFrames that own them.
+
+Each dataset rule has one owner in ``datapipeline_spark.dataset`` that this
+module calls rather than restates: ``fit_scaler``/``apply_scaler`` fit and
+apply the leakage-free scaler (``outputs()`` collects every fold's
+statistics once), ``route_folds`` routes labelled rows to fold/role outputs,
+and ``window_bounds`` computes the metadata window the samples are clipped
+to. The preview stages (``samples_preview``, ``postprocess_preview``) are
+defined here once for the API and the serve profiles.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 from functools import reduce
-from typing import Mapping, Sequence
+from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, Row
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from datapipeline_spark.dataset.metadata import window_bounds
 from datapipeline_spark.dataset.postprocess import (
     drop_rows_by_coverage,
     select_columns_by_coverage,
 )
 from datapipeline_spark.dataset.sample import assemble_samples, rectangular_samples
-from datapipeline_spark.dataset.scaler import fit_scaler
+from datapipeline_spark.dataset.scaler import apply_scaler, fit_scaler
 from datapipeline_spark.dataset.series import project_series
-from datapipeline_spark.dataset.split import time_split_label, hash_split_label
+from datapipeline_spark.dataset.split import (
+    hash_split_label,
+    route_folds,
+    time_split_label,
+)
 from datapipeline_spark.functions.time import floor_time_expr, parse_datetime_utc
 from datapipeline_spark.operators.window import sequence_windows
 from datapipeline_spark.plans.compiler import CompiledProject
@@ -73,9 +86,7 @@ def scalar_series(compiled: CompiledProject) -> DataFrame:
     ``CompiledProject.series`` stages and the series artifact writes
     (reference operations/artifacts/series.py:71-150). Sequence arrays do
     not union with scalars; they assemble from their own long frames."""
-    cfg = compiled.definition.dataset
-    if cfg is None:
-        raise ValueError("project has no dataset.yaml")
+    cfg = _dataset(compiled)
     keys = list(cfg.sample.keys)
     longs = [
         _long_frame(compiled, spec, keys)
@@ -85,6 +96,13 @@ def scalar_series(compiled: CompiledProject) -> DataFrame:
     if not longs:
         raise ValueError("dataset has no scalar series")
     return _union_all(longs)
+
+
+def _dataset(compiled: CompiledProject) -> DatasetConfig:
+    cfg = compiled.definition.dataset
+    if cfg is None:
+        raise ValueError("project has no dataset.yaml")
+    return cfg
 
 
 def _union_all(frames: Sequence[DataFrame]) -> DataFrame:
@@ -157,97 +175,76 @@ class DatasetBuild:
     def outputs(self) -> dict[tuple[str, str], DataFrame]:
         """(fold, role) → scaled frame; single-fold 'all/full' when no split.
         The statistics of every fold come from one collect."""
-        stats: dict[str | None, dict[str, Row]] = {}
+        stats: dict[str | None, dict[str, tuple[float, float]]] = {}
         if self.scaler_stats is not None:
             for r in self.scaler_stats.collect():
                 fold = r["fold"] if self.fold_plan else None
-                stats.setdefault(fold, {})[r["series_id"]] = r
+                stats.setdefault(fold, {})[r["series_id"]] = (r["mean"], r["std"])
+        columns = self.samples.columns
         if not self.fold_plan:
-            return {("all", "full"): self._scaled(stats.get(None, {})).drop(LABEL)}
+            scaled = apply_scaler(self.samples, stats.get(None, {}), columns)
+            return {("all", "full"): scaled.drop(LABEL)}
         outs: dict[tuple[str, str], DataFrame] = {}
         for fold, roles in self.fold_plan.items():
-            scaled = self._scaled(stats.get(fold, {}))
-            for role, labels in roles.items():
-                if labels:
-                    outs[(fold, role)] = scaled.filter(
-                        F.col(LABEL).isin(list(labels))
-                    ).drop(LABEL)
+            scaled = apply_scaler(self.samples, stats.get(fold, {}), columns)
+            for key, df in route_folds(scaled, LABEL, {fold: roles}).items():
+                outs[key] = df.drop(LABEL)
         return outs
 
-    def _scaled(self, stats: Mapping[str, Row]) -> DataFrame:
-        """Standardize every column with statistics. Stats are keyed by FULL
-        series id — partitioned columns each scale with their own statistics
-        (reference vector/scaler.py:144-151: selection by base_id, lookup by
-        vector_id)."""
-        out = self.samples
-        for col, dtype in self.samples.dtypes:
-            r = stats.get(col)
-            if r is None:
-                continue
-            mean, std = F.lit(r["mean"]), F.lit(r["std"])
-            if dtype.startswith("array"):
-                # elementwise with null passthrough (reference
-                # transforms/vector/scaler.py:82-175 list handling)
-                scaled = F.transform(F.col(col), lambda x: (x - mean) / std)
-            else:
-                scaled = (F.col(col) - mean) / std
-            out = out.withColumn(col, F.when(F.col(col).isNotNull(), scaled))
-        return out
+
+def build_dataset(compiled: CompiledProject) -> DatasetBuild:
+    """The project's dataset; the metadata window mode comes from
+    ``dataset.yaml`` ``metadata:`` alone."""
+    return _build(compiled, _dataset(compiled))
 
 
-def build_dataset(
-    compiled: CompiledProject, window_mode: str | None = None
-) -> DatasetBuild:
-    cfg = compiled.definition.dataset
-    if cfg is None:
-        raise ValueError("project has no dataset.yaml")
-    return _build(compiled, cfg, window_mode=window_mode)
+def samples_preview(compiled: CompiledProject) -> DataFrame:
+    """The 'samples' preview: the wide frame BEFORE postprocess and splits."""
+    cfg = _dataset(compiled)
+    stripped = cfg.model_copy(update={"postprocess": None, "split": None})
+    return _build(compiled, stripped).samples.drop(LABEL)
+
+
+def postprocess_preview(build: DatasetBuild) -> DataFrame:
+    """The 'postprocess' preview: the single output of an unsplit (or
+    one-output) dataset, else the labelled sample table."""
+    outs = build.outputs()
+    return next(iter(outs.values())) if len(outs) == 1 else build.samples
+
+
+# window_mode → (range id, window_bounds mode): 'strict' intersects
+# per-partition (full series id) ranges, the others per-base ranges with the
+# partitions of a base unioned first
+_WINDOW = {
+    "strict": ("series_id", "intersection"),
+    "intersection": ("base_id", "intersection"),
+    "union": ("base_id", "union"),
+}
 
 
 def _window_clip(wide, cadence, longs: Sequence[DataFrame], window_mode: str):
     """Clip samples to the metadata window (reference operations/artifacts/
-    metadata.py:36-108; serve applies it, default mode 'intersection'):
-    per-base range = [min, max] observed ROW bucket with partitions unioned
-    within a base; 'intersection' = max-of-firsts/min-of-lasts over base
-    ranges, 'strict' = same over per-partition (full series id) ranges,
-    'union' = min-of-firsts/max-of-lasts. All ranges come from ONE grouped
-    aggregation over the unioned long frames (the staged scalar series plus
-    any sequence frames; partial agg map-side, one shuffle on the tiny id
-    domain)."""
-    if window_mode not in {"union", "intersection", "strict"}:
-        raise ValueError(
-            f"window_mode must be union|intersection|strict, got {window_mode!r}"
-        )
-    group = "series_id" if window_mode == "strict" else "base_id"
+    metadata.py:36-108; serve applies it, default mode 'intersection') over
+    the [min, max] observed ROW bucket of each id. All ranges come from ONE
+    grouped aggregation over the unioned slim long frames (the staged scalar
+    series plus any sequence frames; partial agg map-side, one shuffle on
+    the tiny id domain)."""
+    id_col, mode = _WINDOW[window_mode]
     slim = _union_all(
         [
-            long_df.select(
-                F.col(group).alias("gid"),
-                floor_time_expr("time", cadence).alias("bucket"),
-            )
+            long_df.select(id_col, floor_time_expr("time", cadence).alias("time"))
             for long_df in longs
         ]
     )
-    rows = (
-        slim.groupBy("gid")
-        .agg(F.min("bucket").alias("lo"), F.max("bucket").alias("hi"))
-        .collect()
-    )
-    bounds = [(r["lo"], r["hi"]) for r in rows if r["lo"] is not None]
-    if not bounds:
+    start, end = window_bounds(slim, id_col, mode)
+    if start is None:
         return wide
-    if window_mode == "union":
-        start, end = min(b[0] for b in bounds), max(b[1] for b in bounds)
-    else:
-        start, end = max(b[0] for b in bounds), min(b[1] for b in bounds)
-        if start > end:
-            return wide.filter(F.lit(False))
+    if start > end:
+        return wide.filter(F.lit(False))
     return wide.filter((F.col("time") >= F.lit(start)) & (F.col("time") <= F.lit(end)))
 
 
-def _build(
-    compiled: CompiledProject, cfg: DatasetConfig, window_mode: str | None = None
-) -> DatasetBuild:
+def _build(compiled: CompiledProject, cfg: DatasetConfig) -> DatasetBuild:
     """``cfg`` is the project's dataset config, possibly with postprocess or
     split stripped (the preview stages); features, targets and sample keys
     are the project's, which is what ``compiled.series()`` stages."""
@@ -315,12 +312,9 @@ def _build(
             list_conform[sid] = size_of_base[col_base[sid]]
 
     assert wide is not None
-    # explicit argument wins; else the dataset.yaml `metadata:` section
-    if window_mode is None and cfg.metadata is not None:
-        window_mode = cfg.metadata.window_mode
-    if window_mode is not None:
+    if cfg.metadata is not None:
         longs = ([series] if series is not None else []) + seq_longs
-        wide = _window_clip(wide, cadence, longs, window_mode)
+        wide = _window_clip(wide, cadence, longs, cfg.metadata.window_mode)
     # ---- rectangular key lattice (reference sample/input.py:37 rectangular
     # =True on every serve: pipelines/sample/keys.py:16-121 dense lattice) —
     # every cadence tick inside each sample key's observed [first, last]

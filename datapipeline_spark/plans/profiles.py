@@ -49,15 +49,7 @@ def run_profiles(
     only: str | None = None,
 ) -> list[ProfileResult]:
     defn = load_project(project_dir)
-    candidates = [p for p in defn.profiles.values() if p.cmd == command and p.enabled]
-    if only is not None:
-        candidates = [p for p in candidates if p.name == only]
-        if not candidates:
-            raise KeyError(
-                f"no enabled {command} profile named {only!r}; available: "
-                f"{sorted(p.name for p in defn.profiles.values() if p.cmd == command)}"
-            )
-    profs = ordered_profiles(candidates)
+    profs = select_profiles(defn, command, only)
     if not profs:
         return []
     compiled = compile_project(spark, defn)
@@ -72,28 +64,31 @@ def run_profiles(
     raise ValueError(f"unknown profile command {command!r}")
 
 
+def select_profiles(
+    defn: ProjectDefinition, command: str, only: str | None = None
+) -> list:
+    """The enabled profiles of ``command`` in execution order; with ``only``,
+    just the one of that name (KeyError when there is none)."""
+    candidates = [p for p in defn.profiles.values() if p.cmd == command and p.enabled]
+    if only is not None:
+        candidates = [p for p in candidates if p.name == only]
+        if not candidates:
+            raise KeyError(
+                f"no enabled {command} profile named {only!r}; available: "
+                f"{sorted(p.name for p in defn.profiles.values() if p.cmd == command)}"
+            )
+    return ordered_profiles(candidates)
+
+
 # --------------------------------------------------------------------------- #
 # build
 # --------------------------------------------------------------------------- #
 
 
-def _dependency_closure(key: str) -> set[str]:
-    from datapipeline_spark.plans.artifacts import DAG
-
-    out: set[str] = set()
-    stack = list(DAG[key])
-    while stack:
-        dep = stack.pop()
-        if dep not in out:
-            out.add(dep)
-            stack.extend(DAG[dep])
-    return out
-
-
 def validate_build_order(profs: list[BuildProfileConfig]) -> None:
     """Reference orchestration.py:227-239: operations unique; every
     configured dependency must be ordered before its dependent."""
-    from datapipeline_spark.plans.artifacts import DAG
+    from datapipeline_spark.plans.artifacts import DAG, topological_order
 
     operations = [p.operation for p in profs]
     for op in operations:
@@ -105,7 +100,9 @@ def validate_build_order(profs: list[BuildProfileConfig]) -> None:
         raise ValueError("build profiles must reference unique artifact operations")
     positions = {op: i for i, op in enumerate(operations)}
     for op, pos in positions.items():
-        for dep in _dependency_closure(op):
+        # op and every artifact it transitively needs (op itself never
+        # sits after its own position)
+        for dep in topological_order({op}):
             dep_pos = positions.get(dep)
             if dep_pos is not None and dep_pos > pos:
                 raise ValueError(
@@ -145,18 +142,14 @@ def _serve_frames(compiled: CompiledProject, prof: ServeProfileConfig, build):
     include_outputs (reference execution.py:49-78: output routing is a
     dataset-operation feature; preview bypasses fold routing)."""
     if prof.preview is not None:
-        from datapipeline_spark.plans.dataset_build import _build
+        from datapipeline_spark.plans.dataset_build import (
+            postprocess_preview,
+            samples_preview,
+        )
 
         if prof.preview == "samples":
-            cfg = compiled.definition.dataset
-            stripped = cfg.model_copy(update={"postprocess": None, "split": None})
-            frame = _build(compiled, stripped).samples.drop("__split__")
-        else:  # postprocess
-            outs = build.outputs()
-            frame = (
-                next(iter(outs.values())) if len(outs) == 1 else build.samples
-            )
-        return {prof.preview: frame}
+            return {"samples": samples_preview(compiled)}
+        return {"postprocess": postprocess_preview(build)}
     outs = {f"{fold}.{role}": df for (fold, role), df in build.outputs().items()}
     if prof.include_outputs is not None:
         missing = [o for o in prof.include_outputs if o not in outs]
@@ -240,6 +233,17 @@ def _run_serve(
 # --------------------------------------------------------------------------- #
 
 
+def stream_info(compiled: CompiledProject) -> dict[str, dict]:
+    """stream id → partition_by and schema, for every compiled stream."""
+    return {
+        sid: {
+            "partition_by": compiled.partition_by(sid),
+            "schema": compiled.stream(sid).schema.simpleString(),
+        }
+        for sid in sorted(compiled.definition.streams)
+    }
+
+
 def _run_inspect(
     compiled: CompiledProject, profs: list[InspectProfileConfig]
 ) -> list[ProfileResult]:
@@ -249,14 +253,7 @@ def _run_inspect(
     for p in profs:
         key = f"inspect.{p.name}"
         if p.operation == "streams":
-            info = {
-                sid: {
-                    "partition_by": compiled.partition_by(sid),
-                    "schema": compiled.stream(sid).schema.simpleString(),
-                }
-                for sid in sorted(compiled.definition.streams)
-            }
-            sys.stdout.write(json.dumps(info, indent=2) + "\n")
+            sys.stdout.write(json.dumps(stream_info(compiled), indent=2) + "\n")
             results.append(ProfileResult(key, "inspected", "streams"))
         elif p.operation == "coverage":
             cov = _build_coverage(

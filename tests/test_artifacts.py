@@ -92,6 +92,43 @@ def test_series_artifact_contents(spark, project):
     assert cov == [("val", 1.0)]
 
 
+def test_requested_key_builds_its_dependencies(spark, project):
+    from datapipeline_spark.plans.artifacts import build_artifacts
+
+    r = build_artifacts(_compiled(spark, project), keys={"coverage_stats"})
+    assert set(r) == {"series", "metadata", "coverage_stats"}
+    assert all(not res.skipped for res in r.values())
+    assert (project / "build" / "series" / "manifest.json").is_file()
+    assert (project / "build" / "metadata" / "manifest.json").is_file()
+
+
+def test_ticks_artifact_one_grid_per_stream(spark, project):
+    """Two features on one partitioned stream: the ticks artifact holds that
+    stream's grid once, one row per (partition, tick)."""
+    from datapipeline_spark.plans.artifacts import ArtifactStore, build_artifacts
+
+    _write(
+        project / "dataset.yaml",
+        """sample:
+  cadence: 1h
+  keys: [loc]
+features:
+  - { id: val, stream: s.m, field: value, scale: true }
+  - { id: val_again, stream: s.m, field: value }
+targets: []
+""",
+    )
+    compiled = _compiled(spark, project)
+    build_artifacts(compiled, keys={"ticks"})
+    ticks = ArtifactStore(project / "build").read(compiled, "ticks")
+    got = rows(ticks, "stream_id", "partition_json", "time")
+    assert [(s, p, t.hour) for s, p, t in got] == [
+        ("s.m", json.dumps({"loc": loc}, separators=(",", ":")), h)
+        for loc in ("x", "y")
+        for h in range(4)
+    ]
+
+
 def test_source_change_invalidates(spark, project):
     from datapipeline_spark.plans.artifacts import build_artifacts
 

@@ -78,16 +78,24 @@ def test_assemble_samples_pivot(spark):
 
 def test_scaler_fit_apply_and_clamp(spark):
     df = spark.createDataFrame(
-        [("x", 1.0), ("x", 3.0), ("y", 5.0), ("y", 5.0)], "series_id string, value double"
+        [("x", 1.0), ("x", 3.0), ("y", 5.0), ("y", 5.0), ("z", 1.0), ("z", 3.0)],
+        "series_id string, value double",
     )
     stats = {r["series_id"]: r for r in fit_scaler(df).collect()}
     assert stats["x"]["mean"] == 2.0 and stats["x"]["std"] == 1.0
     assert stats["y"]["std"] == 1e-12  # zero variance clamped
 
-    wide = spark.createDataFrame([(1.0, 5.0)], "x double, y double")
-    out = apply_scaler(wide, fit_scaler(df), ["x", "y"]).collect()[0]
-    assert out["x"] == -1.0
-    assert out["y"] == 0.0
+    wide = spark.createDataFrame(
+        [(1.0, 5.0, [1.0, None, 3.0]), (None, 5.0, None)],
+        "x double, y double, z array<double>",
+    )
+    collected = {sid: (r["mean"], r["std"]) for sid, r in stats.items()}
+    out = apply_scaler(wide, collected, ["x", "y", "z"]).collect()
+    assert out[0]["x"] == -1.0
+    assert out[0]["y"] == 0.0
+    # arrays scale elementwise; null cells and null elements pass through
+    assert out[0]["z"] == [-1.0, None, 1.0]
+    assert out[1]["x"] is None and out[1]["z"] is None
 
 
 def test_folded_scaler_leakage_invariant(spark):
@@ -156,8 +164,12 @@ def test_route_folds_purge(spark):
     plan = {
         "f0": {"train": ["train_0"], "validation": ["val_0"]},
         "f1": {"train": ["train_0", "purge_0", "val_0", "train_1"], "validation": ["val_1"]},
+        "f2": {"train": ["train_0"], "validation": [], "test": ["val_1"]},
     }
     outs = route_folds(labeled, "label", plan)
+    # a role without labels has no output
+    assert ("f2", "validation") not in outs
+    assert outs[("f2", "test")].count() == 2  # days 9-10
     assert outs[("f0", "train")].count() == 3  # days 1-3
     assert outs[("f0", "validation")].count() == 1  # day 5
     # purge day 4 in no f0 output

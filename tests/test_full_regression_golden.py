@@ -291,10 +291,17 @@ def test_window_modes(spark, project):
         ),
         encoding="utf-8",
     )
-    compiled = compile_project(spark, load_project(project))
+    dataset_yaml = project / "dataset.yaml"
+    base = dataset_yaml.read_text(encoding="utf-8")
 
     def hours(mode):
-        out = build_dataset(compiled, window_mode=mode).outputs()[("all", "full")]
+        # the mode comes from the dataset config's `metadata:` section
+        dataset_yaml.write_text(
+            base.replace("window_mode: intersection", f"window_mode: {mode}"),
+            encoding="utf-8",
+        )
+        compiled = compile_project(spark, load_project(project))
+        out = build_dataset(compiled).outputs()[("all", "full")]
         return sorted(r["time"].hour for r in out.select("time").collect())
 
     # base range of humidity = union(north 0-5, south 3-5) = 0-5, so the

@@ -173,6 +173,14 @@ def test_build_order_validation(spark, project):
     _write(project / "profiles" / "build.series.yaml", "order: 2\noperation: series\n")
     with pytest.raises(ValueError, match="ordered before"):
         run_profiles(spark, project, "build")
+    # transitive: coverage_stats needs series through metadata
+    (project / "profiles" / "build.metadata.yaml").unlink()
+    _write(
+        project / "profiles" / "build.coverage.yaml",
+        "order: 1\noperation: coverage_stats\n",
+    )
+    with pytest.raises(ValueError, match="'series' must be ordered before"):
+        run_profiles(spark, project, "build")
 
 
 def test_build_duplicate_operations_rejected(spark, project):
