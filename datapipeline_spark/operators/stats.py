@@ -17,7 +17,8 @@ deterministic and oracle-checkable:
   ln/exp), so the final rounded value hash-matches the SQL oracle.
 
 Plan shape: one hash exchange on the group key feeds two in-partition
-sorts (ranks for x and y; the tie counts ride the same sorts), then one
+sorts (ranks for x and y from _rank2, the one rank kernel the rank-based
+operators share; tie counts ride the same sorts), then one
 map-side-combined aggregate. No joins, no collects.
 """
 
@@ -69,92 +70,20 @@ def _sumprod(a: F.Column, b: F.Column, wide: bool) -> F.Column:
     return _xsum(a.cast("long") * b.cast("long"))
 
 
-def _rank2(groups: Sequence[str], col: str) -> F.Column:
-    """Doubled fractional rank: 2*rank + ties - 1 = rank_min + rank_max
-    (exact bigint). rank_max comes from a RANGE-frame count over the SAME
-    window sort (peers of the current value are all inside the frame), so
-    one (groups)-keyed exchange + one in-partition sort serves both terms
-    — the old Window.partitionBy(groups, col) tie count cost a second
-    full-data exchange."""
+def _rank2(groups: Sequence[str], col: str) -> tuple[F.Column, F.Column]:
+    """The stats family's one rank kernel: ``(r2, t)`` for ``col`` per
+    ``groups``. r2 is the doubled fractional rank 2*rank + ties - 1 =
+    rank_min + rank_max (exact bigint) and t the size of the row's tie
+    block. rank_max comes from a RANGE-frame count over the SAME window
+    sort (peers of the current value are all inside the frame), so one
+    (groups)-keyed exchange + one in-partition sort serves both:
+    r2 = rank + cnt_le and t = cnt_le - rank + 1. NULL groups rank as
+    their own partition; NULL values rank first as one tie block."""
     w = Window.partitionBy(*groups).orderBy(col)
     wr = w.rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    return (F.rank().over(w) + F.count(F.lit(1)).over(wr)).cast("long")
-
-
-def _ranked2_small(
-    df: DataFrame, groups: Sequence[str], col: str, out: str
-) -> DataFrame:
-    """Attach the doubled fractional rank of ``col`` per ``groups`` as
-    ``out`` WITHOUT any full-data exchange — for SMALL value domains
-    (categorical / quantized columns, e.g. TPC-H quantity's 50 values).
-
-    Every row of a tie block shares one doubled rank
-    (rank_min + rank_max = 2·cnt_less + cnt_eq + 1), so the rank is a pure
-    function of (groups, value): compute it on the (groups, value)
-    frequency table (map-side-combined aggregate → tiny exchange; the
-    prefix window runs over ≤|domain| rows per group) and broadcast-join
-    it back. The heavy data never shuffles and never sorts — guide §2.1.
-    ``col`` must be non-null (a NULL key would drop out of the inner
-    broadcast join; the windowed default path keeps NULLs first)."""
-    gx = list(groups)
-    counts = df.groupBy(*gx, col).agg(F.count(F.lit(1)).alias("__c"))
-    w = Window.partitionBy(*gx).orderBy(col).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    ranks = counts.select(
-        *gx,
-        col,
-        (
-            2 * F.coalesce(F.sum("__c").over(w), F.lit(0)) + F.col("__c") + 1
-        ).cast("long").alias(out),
-    )
-    return df.join(F.broadcast(ranks), [*gx, col])
-
-
-def _ranked2_bucketed(
-    df: DataFrame,
-    groups: Sequence[str],
-    col: str,
-    out: str,
-    shift: int,
-    ties: str | None = None,
-) -> DataFrame:
-    """Attach the doubled fractional rank of ``col`` per ``groups`` as
-    ``out`` via the two-phase monotone-bucket scheme (operators/rank.py;
-    the ks_test shape): the value's high bits (``col >> shift``,
-    arithmetic shift — monotone for signed longs) form a monotone prefix
-    of the per-group value order, per-(groups, bucket) counts give
-    exclusive offsets over a tiny broadcast table, and the rank window
-    runs per (groups, bucket) with executor parallelism — never the
-    single-task-per-group sort of the plain ``partitionBy(groups)``
-    window. Equal values land in one bucket (the bucket is a function of
-    the value), so rank() + the RANGE-frame peer count within the bucket
-    are the local min/max ranks and
-    r2 = 2·offset + rank_local + cnt_le_local is exactly
-    rank_min_global + rank_max_global. ``ties`` optionally also attaches
-    the tie-block size t = cnt_le − rank + 1 (mann_whitney's correction
-    term). ``col`` must be integral and non-null; one extra counting pass
-    over the input (map-side partials → tiny exchange) buys the parallel
-    sort."""
-    gx = list(groups)
-    bk = f"__bk_{out}"
-    b = df.withColumn(bk, F.shiftright(F.col(col).cast("long"), shift).cast("int"))
-    counts = b.groupBy(*gx, bk).agg(F.count(F.lit(1)).alias("__c"))
-    w_off = Window.partitionBy(*gx).orderBy(bk).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = counts.select(
-        *gx, bk, F.coalesce(F.sum("__c").over(w_off), F.lit(0)).alias("__off")
-    )
-    j = b.join(F.broadcast(offsets), [*gx, bk])
-    w_in = Window.partitionBy(*gx, bk).orderBy(col)
-    wr = w_in.rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    rk = F.rank().over(w_in).cast("long")
+    rk = F.rank().over(w).cast("long")
     cle = F.count(F.lit(1)).over(wr).cast("long")
-    res = j.withColumn(out, (2 * F.col("__off") + rk + cle).cast("long"))
-    if ties is not None:
-        res = res.withColumn(ties, (cle - rk + 1).cast("long"))
-    return res.drop(bk, "__off")
+    return rk + cle, cle - rk + 1
 
 
 def spearman_corr(
@@ -164,8 +93,6 @@ def spearman_corr(
     groups: Sequence[str] = (),
     out: str = "spearman",
     wide: bool = False,
-    x_small_domain: bool = False,
-    bucket_shift: int | None = None,
 ) -> DataFrame:
     """Per-group Spearman rank correlation of ``x`` vs ``y`` (average ranks
     for ties). Output: groups + (n, <out>), corr rounded to 6 decimals.
@@ -177,30 +104,12 @@ def spearman_corr(
     accumulation is the exact two-long _xsum recombined in decimal(38,0),
     order- and partition-invariant.
 
-    Scale posture (round-8 opt, guide §2.1/§2.5): the default path ranks
-    both columns with ONE (groups)-keyed window — a single-task-per-group
-    sort, the classic ceiling when groups are few. ``x_small_domain=True``
-    ranks x from its (groups, x) frequency table via broadcast (zero
-    full-data exchange — for categorical/quantized x);
-    ``bucket_shift=k`` ranks y (and x too, unless x took the small-domain
-    path) with the two-phase monotone-bucket scheme, so the heavy sort
-    runs per (groups, value>>k) bucket with executor parallelism.
-    Identical doubled ranks — the bucket decomposition is exact, not an
-    approximation; both opt-in paths require non-null integral columns."""
+    Both ranks come from _rank2 windows over the same (groups) partitioning:
+    one group-keyed exchange, two in-partition sorts (one per column). Each
+    group sorts in one task — the cost ceiling when groups are few and
+    large."""
     gx = list(groups)
-    if x_small_domain or bucket_shift is not None:
-        d = df.select(*gx, x, y)
-        if x_small_domain:
-            d = _ranked2_small(d, gx, x, "rx")
-        elif bucket_shift is not None:
-            d = _ranked2_bucketed(d, gx, x, "rx", bucket_shift)
-        if bucket_shift is not None:
-            d = _ranked2_bucketed(d, gx, y, "ry", bucket_shift)
-        else:
-            d = d.select(*gx, F.col("rx"), _rank2(gx, y).alias("ry"))
-        d = d.select(*gx, "rx", "ry")
-    else:
-        d = df.select(*gx, _rank2(gx, x).alias("rx"), _rank2(gx, y).alias("ry"))
+    d = df.select(*gx, _rank2(gx, x)[0].alias("rx"), _rank2(gx, y)[0].alias("ry"))
     rx, ry = F.col("rx"), F.col("ry")
     a = d.groupBy(*gx).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -560,7 +469,9 @@ def ks_test(
             F.sum(1 - F.col(side).cast("long")).alias("d0"),
             F.sum(F.col(side).cast("long")).alias("d1"),
         )
-        .withColumn("__bucket__", F.shiftright(F.col("v"), bucket_shift).cast("int"))
+        # the bucket id keeps v's integral type: an int cast would raise
+        # (ANSI) or wrap for v >= 2^(31 + bucket_shift)
+        .withColumn("__bucket__", F.shiftright(F.col("v"), bucket_shift))
     )
     per_bucket = g.groupBy("__bucket__").agg(
         F.sum("d0").alias("t0"), F.sum("d1").alias("t1")
@@ -629,7 +540,6 @@ def mann_whitney(
     value: str,
     side: str,
     groups: Sequence[str] = (),
-    bucket_shift: int | None = None,
 ) -> DataFrame:
     """Per-group Mann-Whitney U test (rank-sum) with tie-corrected normal
     approximation — the nonparametric two-sample location test, built on
@@ -642,37 +552,13 @@ def mann_whitney(
     μ₂ = n1·n0, and σ₂² = n1·n0·((n+1)·n·(n−1) − T) / (3·n·(n−1)).
     Output: groups + (n0, n1, u, z) where u = U₂/2 (exact halving).
     One group-keyed exchange, one in-partition rank sort, one aggregate —
-    the doubled rank AND the tie size both derive from (rank, count≤) of
-    the same window sort (t = count≤ − rank + 1), so no second
-    (groups, value)-keyed exchange.
-
-    ``bucket_shift=k`` (round-8 opt, guide §2.5): the default window sorts
-    each group in ONE task — the scale ceiling when groups are few. The
-    bucketed path ranks via the two-phase monotone-bucket scheme
-    (_ranked2_bucketed): identical doubled ranks and tie sizes (tie blocks
-    never span buckets), the sort runs per (groups, value>>k) bucket with
-    executor parallelism. Requires an integral non-null ``value``."""
+    _rank2 yields the doubled rank AND the tie size from the same window
+    sort, so no second (groups, value)-keyed exchange."""
     gx = list(groups)
-    if bucket_shift is not None:
-        d = _ranked2_bucketed(
-            df.select(*gx, value, F.col(side).cast("long").alias("__s")),
-            gx,
-            value,
-            "r2",
-            bucket_shift,
-            ties="__t",
-        ).select(*gx, "__s", "r2", "__t")
-    else:
-        w = Window.partitionBy(*gx).orderBy(value)
-        wr = w.rangeBetween(Window.unboundedPreceding, Window.currentRow)
-        rk = F.rank().over(w).cast("long")
-        cle = F.count(F.lit(1)).over(wr).cast("long")
-        d = df.select(
-            *gx,
-            F.col(side).cast("long").alias("__s"),
-            (rk + cle).alias("r2"),
-            (cle - rk + 1).alias("__t"),
-        )
+    r2, t = _rank2(gx, value)
+    d = df.select(
+        *gx, F.col(side).cast("long").alias("__s"), r2.alias("r2"), t.alias("__t")
+    )
     a = d.groupBy(*gx).agg(
         F.sum(1 - F.col("__s")).cast("long").alias("n0"),
         F.sum("__s").cast("long").alias("n1"),
@@ -901,7 +787,6 @@ def weighted_median(
     group_cols: Sequence[str],
     value_col: str,
     weight_col: str,
-    bucket_shift: int | None = None,
 ) -> DataFrame:
     """Exact weighted median per group: the smallest value whose
     cumulative weight reaches half the group total (lower weighted
@@ -909,65 +794,23 @@ def weighted_median(
     ``value_col`` and ``weight_col`` must be integral (weights
     non-negative). One group-keyed window over the group's rows plus one
     aggregate — the same cost class as any per-group rank; at corpus
-    scale the window is bounded by group size, never table size.
-
-    ``bucket_shift=k`` (round-8 opt, guide §2.5): the default cumulative
-    window sorts each group in ONE task. The bucketed path uses the
-    two-phase monotone-bucket scheme (the ks_test shape): per-(group,
-    value>>k) weight totals give exclusive cumulative offsets AND the
-    group totals from one tiny broadcast table, and the in-bucket cumsum
-    runs with executor parallelism. Identical output: the crossing test
-    only depends on each tie block's CLOSING cumulative weight (rows of
-    one value are interchangeable under sum — the documented tie
-    contract), and blocks never span buckets. Requires non-null values."""
-    from pyspark.sql import Window
-
-    if bucket_shift is not None:
-        base = df.select(
-            *group_cols,
-            F.col(value_col).cast("long").alias("v"),
-            F.col(weight_col).cast("long").alias("wt"),
-        )
-        b = base.withColumn(
-            "__bk", F.shiftright(F.col("v"), bucket_shift).cast("int")
-        )
-        per_bucket = b.groupBy(*group_cols, "__bk").agg(
-            F.sum("wt").alias("__bw")
-        )
-        w_off = (
-            Window.partitionBy(*group_cols)
-            .orderBy("__bk")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        w_all = Window.partitionBy(*group_cols)
-        offsets = per_bucket.select(
-            *group_cols,
-            "__bk",
-            F.coalesce(F.sum("__bw").over(w_off), F.lit(0)).alias("__offw"),
-            F.sum("__bw").over(w_all).alias("tw"),
-        )
-        w_in = (
-            Window.partitionBy(*group_cols, "__bk")
-            .orderBy("v")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        cum = b.join(F.broadcast(offsets), [*group_cols, "__bk"]).withColumn(
-            "cw", F.col("__offw") + F.sum("wt").over(w_in)
-        )
-    else:
-        w = (
-            Window.partitionBy(*group_cols)
-            .orderBy(F.col("v"))  # post-rename name: the window runs on `cum`
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        wg = Window.partitionBy(*group_cols)
-        cum = df.select(
-            *group_cols,
-            F.col(value_col).cast("long").alias("v"),
-            F.col(weight_col).cast("long").alias("wt"),
-        ).withColumn("cw", F.sum("wt").over(w)).withColumn(
-            "tw", F.sum("wt").over(wg)
-        )
+    scale the window is bounded by group size, never table size. Rows of
+    one value may cumulate in any order: the crossing test keeps the
+    smallest crossing value, which only depends on each tie block's
+    closing cumulative weight."""
+    w = (
+        Window.partitionBy(*group_cols)
+        .orderBy(F.col("v"))  # post-rename name: the window runs on `cum`
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    wg = Window.partitionBy(*group_cols)
+    cum = df.select(
+        *group_cols,
+        F.col(value_col).cast("long").alias("v"),
+        F.col(weight_col).cast("long").alias("wt"),
+    ).withColumn("cw", F.sum("wt").over(w)).withColumn(
+        "tw", F.sum("wt").over(wg)
+    )
     return (
         cum.filter(F.col("cw") * 2 >= F.col("tw"))
         .groupBy(*group_cols)

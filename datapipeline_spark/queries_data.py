@@ -2760,27 +2760,16 @@ def q_spearman_qty_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct values mean ~n/50-deep ties per group; the average-rank
     treatment is what makes that exact.
 
-    Round-8 shape (guide §2.1/§2.5): quantity's rank is a broadcast map
-    from its 150-row frequency table (x_small_domain — no exchange, no
-    sort), and the price rank runs the two-phase monotone-bucket scheme
-    (bucket = dollars>>8, ~400 buckets) — the old single
-    (returnflag)-keyed window sorted each flag's ~600k rows twice in ONE
-    task per flag; now the only full-data exchange is (flag, bucket)-keyed
-    with executor-parallel sorts. Identical doubled ranks (tie blocks
-    never span buckets)."""
+    Plan: one (returnflag)-keyed exchange feeds two in-partition window
+    sorts — quantity's and price's doubled ranks (stats._rank2) — then
+    one map-side-combined aggregate. No join; each flag's rows sort in
+    one task."""
     from datapipeline_spark.operators.stats import spearman_corr
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_quantity", "l_extendedprice"
     )
-    return spearman_corr(
-        li,
-        "l_quantity",
-        "l_extendedprice",
-        ["l_returnflag"],
-        x_small_domain=True,
-        bucket_shift=8,
-    )
+    return spearman_corr(li, "l_quantity", "l_extendedprice", ["l_returnflag"])
 
 
 @query(
@@ -3461,11 +3450,9 @@ def q_mw_price_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final sqrt/divide chain touches float — so both U and the
     tie-corrected z hash-match.
 
-    Round-8 shape (guide §2.5): ranks via the two-phase monotone-bucket
-    scheme (bucket = cents>>16, ~160 buckets) — the old
-    (linestatus)-keyed window sorted each status's ~300-600k rows in ONE
-    task; now the full-data exchange is (status, bucket)-keyed with
-    executor-parallel sorts. Identical doubled ranks and tie sizes."""
+    Plan: one (linestatus)-keyed exchange feeds one in-partition window
+    sort that yields each row's doubled rank and tie size
+    (stats._rank2), then one aggregate. No join."""
     from datapipeline_spark.operators.stats import mann_whitney
 
     d = load_table(spark, sf_dir, "lineitem").select(
@@ -3473,7 +3460,7 @@ def q_mw_price_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("s"),
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("v"),
     )
-    return mann_whitney(d, "v", "s", ["l_linestatus"], bucket_shift=16)
+    return mann_whitney(d, "v", "s", ["l_linestatus"])
 
 
 def _benford_sql() -> str:
@@ -6335,13 +6322,9 @@ def q_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the SAME total order (v alone — duplicate v rows are
     interchangeable under sum).
 
-    Round-8 shape (guide §2.5): the cumulative weights run the two-phase
-    monotone-bucket scheme (bucket = cents>>16) — per-(flag, bucket)
-    weight totals give exclusive offsets and the flag totals from one
-    tiny broadcast table, in-bucket cumsums run executor-parallel — the
-    old (returnflag)-keyed window summed each flag's ~600k rows in ONE
-    task. Identical output (the crossing test reads tie-block CLOSING
-    sums, and blocks never span buckets)."""
+    Plan: one (returnflag)-keyed exchange feeds one in-partition sort;
+    the cumulative and total weights are windows over it, then one
+    aggregate keeps the smallest crossing value. No join."""
     from datapipeline_spark.operators.stats import weighted_median
 
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -6349,7 +6332,7 @@ def q_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
         F.col("l_quantity").cast("long").alias("qty"),
     )
-    return weighted_median(li, ["l_returnflag"], "cents", "qty", bucket_shift=16)
+    return weighted_median(li, ["l_returnflag"], "cents", "qty")
 
 
 @query(

@@ -14,7 +14,7 @@ from datetime import datetime, timedelta, timezone
 
 import pandas as pd
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 
 values_strategy = st.lists(
@@ -609,6 +609,21 @@ def test_cusum_matches_recurrence_model(spark, cents, target_c):
     assert got == want
 
 
+def _avg_ranks(vals):
+    """1-based average ranks with ties (pure Python)."""
+    order = sorted(range(len(vals)), key=lambda i: vals[i])
+    ranks = [0.0] * len(vals)
+    i = 0
+    while i < len(order):
+        j = i
+        while j < len(order) and vals[order[j]] == vals[order[i]]:
+            j += 1
+        for k in range(i, j):
+            ranks[order[k]] = (i + j + 1) / 2
+        i = j
+    return ranks
+
+
 @given(
     st.lists(
         st.tuples(st.integers(0, 30), st.integers(0, 30)), min_size=3, max_size=60
@@ -621,21 +636,7 @@ def test_spearman_matches_pure_python(spark, xy):
     xs = [float(a) for a, _ in xy]
     ys = [float(b) for _, b in xy]
 
-    def frank(v):  # average ranks with ties
-        order = sorted(range(len(v)), key=lambda i: v[i])
-        r = [0.0] * len(v)
-        i = 0
-        while i < len(order):
-            j = i
-            while j < len(order) and v[order[j]] == v[order[i]]:
-                j += 1
-            avg = (i + j + 1) / 2  # ranks are 1-based
-            for k in range(i, j):
-                r[order[k]] = avg
-            i = j
-        return r
-
-    rx, ry = frank(xs), frank(ys)
+    rx, ry = _avg_ranks(xs), _avg_ranks(ys)
     n = len(xy)
     sx, sy = sum(rx), sum(ry)
     sxx = sum(a * a for a in rx)
@@ -766,6 +767,7 @@ def test_ols_matches_pure_python(spark, xy):
         st.tuples(st.integers(0, 40), st.booleans()), min_size=4, max_size=100
     ).filter(lambda xs: any(s for _, s in xs) and any(not s for _, s in xs))
 )
+@example([(2**33 + 5, True), (2**33 + 5, False), (3, False), (2**40, True)])
 @settings(max_examples=25, deadline=None)
 def test_ks_matches_pure_python(spark, data):
     from datapipeline_spark.operators.stats import ks_test
@@ -1477,50 +1479,90 @@ def test_prereduce_sufficient_stats_identical(spark, rows):
     )
 
 
+#: rank-family values: heavy ties near zero plus magnitudes at and past 2^39
+_rank_values = st.one_of(
+    st.integers(-3, 3),
+    st.sampled_from([-(2**41) - 7, -(2**39), 2**39, 2**39 + 1, 2**40, 2**62]),
+)
+
+
 @given(
     st.lists(
         st.tuples(
+            st.sampled_from([None, 0, 1]),
+            _rank_values,
+            _rank_values,
             st.integers(0, 1),
-            st.integers(-5, 5),
-            st.integers(-70_000, 70_000),
+            st.integers(0, 3),
         ),
-        min_size=2,
-        max_size=80,
+        min_size=1,
+        max_size=60,
     )
 )
+@example(
+    [
+        (None, 2**39, -(2**41) - 7, 1, 2),
+        (None, 2**39, 2**62, 0, 1),
+        (None, -3, 2**39, 0, 0),
+        (0, 1, 1, 1, 3),
+        (0, 2**40, 1, 0, 1),
+        (1, 0, 0, 1, 0),
+    ]
+)
 @settings(max_examples=20, deadline=None)
-def test_bucketed_rank_paths_identical(spark, rows):
-    """The round-8 two-phase bucket rank (bucket_shift) and the
-    small-domain broadcast rank (x_small_domain) must return the EXACT
-    rows of the windowed default for spearman_corr / mann_whitney /
-    weighted_median — heavy ties (x in [-5,5]), negative values (the
-    arithmetic shiftright bucket must stay monotone), cross-bucket tie
-    placement (y spans several 2^14 buckets), and group multiplicity all
-    drawn by hypothesis."""
-    from pyspark.sql import functions as F
-
+def test_rank_family_matches_pure_python_per_group(spark, rows):
+    """spearman_corr, mann_whitney and weighted_median per group against
+    pure-Python transcriptions: NULL group keys (each NULL-keyed group is
+    its own output row), heavy ties, and |x| >= 2^39."""
     from datapipeline_spark.operators.stats import (
         mann_whitney,
         spearman_corr,
         weighted_median,
     )
 
-    df = spark.createDataFrame(rows, "g long, x long, v long")
+    df = spark.createDataFrame(rows, "g long, x long, y long, s long, w long")
+    groups: dict = {}
+    for g, x, y, s, w in rows:
+        groups.setdefault(g, []).append((x, y, s, w))
 
-    def rs(frame):
-        return sorted(tuple(r) for r in frame.collect())
+    sp = {r.g: r for r in spearman_corr(df, "x", "y", ["g"]).collect()}
+    mw = {r.g: r for r in mann_whitney(df, "x", "s", ["g"]).collect()}
+    wm = {r.g: r for r in weighted_median(df, ["g"], "x", "w").collect()}
+    assert set(sp) == set(mw) == set(wm) == set(groups)
 
-    assert rs(
-        spearman_corr(df, "x", "v", ["g"], x_small_domain=True, bucket_shift=14)
-    ) == rs(spearman_corr(df, "x", "v", ["g"]))
-    assert rs(spearman_corr(df, "x", "v", ["g"], bucket_shift=14)) == rs(
-        spearman_corr(df, "x", "v", ["g"])
-    )
-    side = df.withColumn("s", (F.col("x") > 0).cast("int"))
-    assert rs(mann_whitney(side, "v", "s", ["g"], bucket_shift=14)) == rs(
-        mann_whitney(side, "v", "s", ["g"])
-    )
-    wm = df.withColumn("wt", F.abs(F.col("x")))
-    assert rs(weighted_median(wm, ["g"], "v", "wt", bucket_shift=14)) == rs(
-        weighted_median(wm, ["g"], "v", "wt")
-    )
+    for g, grp in groups.items():
+        n = len(grp)
+        rx = _avg_ranks([x for x, _, _, _ in grp])
+        ry = _avg_ranks([y for _, y, _, _ in grp])
+        vx = n * sum(a * a for a in rx) - sum(rx) ** 2
+        vy = n * sum(b * b for b in ry) - sum(ry) ** 2
+        assert sp[g].n == n
+        if vx == 0 or vy == 0:
+            assert sp[g].spearman is None
+        else:
+            cov = n * sum(a * b for a, b in zip(rx, ry)) - sum(rx) * sum(ry)
+            assert abs(sp[g].spearman - cov / math.sqrt(vx * vy)) < 1e-5
+
+        n1 = sum(s for _, _, s, _ in grp)
+        n0 = n - n1
+        u1 = sum(r for r, (_, _, s, _) in zip(rx, grp) if s == 1) - n1 * (n1 + 1) / 2
+        ties = {}
+        for x, _, _, _ in grp:
+            ties[x] = ties.get(x, 0) + 1
+        tie = sum(t**3 - t for t in ties.values())
+        assert (mw[g].n0, mw[g].n1) == (n0, n1)
+        assert mw[g].u == u1
+        var = n0 * n1 / 12 * ((n + 1) - tie / (n * (n - 1))) if n > 1 else 0
+        if n0 == 0 or n1 == 0 or var == 0:
+            assert mw[g].z is None
+        else:
+            assert abs(mw[g].z - (u1 - n0 * n1 / 2) / math.sqrt(var)) < 1e-5
+
+        total = sum(w for _, _, _, w in grp)
+        cum, median = 0, None
+        for x, w in sorted((x, w) for x, _, _, w in grp):
+            cum += w
+            if cum * 2 >= total:
+                median = x
+                break
+        assert (wm[g].weighted_median, wm[g].total_weight) == (median, total)
