@@ -21,28 +21,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: symmetric edge count up to which components are resolved on the driver
+DRIVER_EDGE_THRESHOLD = 200_000
+
 
 def connected_components(
     pairs: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
     max_iterations: int = 20,
-    checkpoint: bool = True,
-    driver_edge_threshold: int = 200_000,
 ) -> DataFrame:
     """(id, component) for every vertex in `pairs`; component = min vertex id
-    reachable. Raises if not converged within `max_iterations`.
+    reachable. Raises if the distributed loop has not converged within
+    `max_iterations` rounds.
 
     Scale-adaptive (the AQE-broadcast idea applied to graph iteration):
     after the edge list materializes, if it holds at most
-    ``driver_edge_threshold`` edges (a bounded few MB) the components are
+    DRIVER_EDGE_THRESHOLD edges (a bounded few MB) the components are
     resolved DRIVER-SIDE by union-find — identical min-label output,
     microseconds instead of one multi-job Spark round per log(diameter).
     Verified near-dup graphs are usually tiny (the expensive part was
     finding the pairs); the distributed pointer-jumping loop remains the
     path for genuinely large match graphs, where per-round job overhead
-    amortizes. Pass ``driver_edge_threshold=0`` to force the distributed
-    path."""
+    amortizes."""
     # both directions IN-ROW (one explode): the old two-select union
     # consumed the (often expensive: LSH / verification) pair subtree
     # twice before the checkpoint could help. Deliberately NOT
@@ -61,21 +62,26 @@ def connected_components(
         .select("__e__.a", "__e__.b")
         .distinct()
     )
-    if checkpoint:
-        # the loop runs actions every round — without a checkpoint here,
-        # the (often expensive: LSH / O(n²) cosine) pair generation
-        # upstream would be recomputed every round. LAZY: the driver-path
-        # probe (or the first loop action) materializes it; partitions the
-        # early-exiting probe never touched are computed and stored at
-        # their first consumer, never twice. (Round-7 idle-host A/B on
-        # near_dup_clusters @ sf0.1, min-of-3 alternating: lazy 2.81 s vs
-        # eager 3.02 s — the r6 driver-bench swing was ambient drift, the
-        # whole LSH family moved together; lazy stays.)
-        edges = edges.localCheckpoint(eager=False)
-    if driver_edge_threshold > 0:
-        n_edges = edges.limit(driver_edge_threshold + 1).count()
-        if n_edges <= driver_edge_threshold:
-            return _driver_union_find(pairs.sparkSession, edges)
+    # the loop runs actions every round — without a checkpoint here, the
+    # (often expensive: LSH / O(n²) cosine) pair generation upstream would
+    # be recomputed every round. LAZY: the driver-path probe materializes
+    # it; partitions the early-exiting probe never touched are computed
+    # and stored at their first consumer, never twice. (Round-7 idle-host
+    # A/B on near_dup_clusters @ sf0.1, min-of-3 alternating: lazy 2.81 s
+    # vs eager 3.02 s — the r6 driver-bench swing was ambient drift, the
+    # whole LSH family moved together; lazy stays.)
+    edges = edges.localCheckpoint(eager=False)
+    n_edges = edges.limit(DRIVER_EDGE_THRESHOLD + 1).count()
+    if n_edges <= DRIVER_EDGE_THRESHOLD:
+        return _driver_union_find(pairs.sparkSession, edges)
+    return _distributed_components(edges, max_iterations)
+
+
+def _distributed_components(edges: DataFrame, max_iterations: int) -> DataFrame:
+    """Pointer-jumping min-label propagation over the symmetric edge list
+    (a, b) — the path for edge lists above DRIVER_EDGE_THRESHOLD. Returns
+    (id, component), identical to `_driver_union_find` on the same edges;
+    raises RuntimeError if not converged within `max_iterations` rounds."""
     labels = (
         edges.select(F.col("a").alias("id"))
         .distinct()
@@ -120,8 +126,7 @@ def connected_components(
         new_labels = new_labels.join(
             labels.select("id", F.col("component").alias("__prev__")), "id"
         )
-        if checkpoint:
-            new_labels = new_labels.localCheckpoint(eager=False)
+        new_labels = new_labels.localCheckpoint(eager=False)
         changed = (
             new_labels.filter(F.col("component") != F.col("__prev__"))
             .limit(1)

@@ -6,7 +6,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -33,10 +33,3 @@ def no_infinity(col: Column | str, context: str = "value") -> Column:
         F.raise_error(F.lit(f"Infinite values are not allowed in {context}")),
     ).otherwise(c)
 
-
-def normalize_floats(df: DataFrame, *cols: str) -> DataFrame:
-    """Apply the full canon (NaN→null, Inf→error) to float columns."""
-    out = df
-    for name in cols:
-        out = out.withColumn(name, no_infinity(nan_to_null(name), name))
-    return out

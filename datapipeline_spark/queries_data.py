@@ -2274,7 +2274,7 @@ def q_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_orderkey", "l_partkey")
     )
     edges = cooccurrence_edges(li, group_col="l_orderkey", item_col="l_partkey")
-    return triangle_counts(edges, checkpoint=True).select(
+    return triangle_counts(edges).select(
         F.col("node").alias("p_partkey"), "n_triangles"
     )
 
@@ -6046,7 +6046,7 @@ def q_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE checkpointed undirected/oriented edge subtree feeds both the
     # degree table and the wedge counter (triangle_counts would otherwise
     # re-derive the same co-occurrence self-join + dedup internally)
-    deg0, ranked = oriented_edges(edges, checkpoint=True)
+    deg0, ranked = oriented_edges(edges)
     deg = deg0.select("a", F.col("d").cast("long").alias("d"))
     tc = triangle_counts_from_oriented(ranked)
     j = deg.join(tc, deg["a"] == tc["node"], "left")

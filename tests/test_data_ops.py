@@ -263,6 +263,42 @@ def test_connected_components_long_chain_converges(spark):
     assert set(comp.values()) == {0} and len(comp) == n + 1
 
 
+def test_distributed_components_matches_driver_union_find(spark):
+    """Every test graph sits below DRIVER_EDGE_THRESHOLD, so
+    connected_components answers it by driver union-find; the
+    pointer-jumping loop that large edge lists take is called directly
+    here and must give the union-find labels on the same symmetric edges."""
+    from datapipeline_spark.dedup.cluster import (
+        _distributed_components,
+        _driver_union_find,
+    )
+
+    def sym(pairs):
+        rows = sorted({(a, b) for a, b in pairs} | {(b, a) for a, b in pairs})
+        return spark.createDataFrame(rows, "a bigint, b bigint")
+
+    def labels(df):
+        return {r["id"]: r["component"] for r in df.collect()}
+
+    chain31 = sym([(i, i + 1) for i in range(30)])
+    cases = [
+        (
+            sym([(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22), (20, 22)]),
+            {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20},
+        ),
+        (chain31, {i: 0 for i in range(31)}),
+        # a degenerate (x, x) pair must still emit vertex x
+        (sym([(7, 7), (1, 2)]), {7: 7, 1: 1, 2: 1}),
+    ]
+    for edges, want in cases:
+        # 8 rounds < the chain's diameter of 30: only pointer jumping
+        # converges that fast
+        got = labels(_distributed_components(edges, max_iterations=8))
+        assert got == want == labels(_driver_union_find(spark, edges))
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        _distributed_components(chain31, max_iterations=1)
+
+
 def test_dedup_representatives(spark):
     from datapipeline_spark.dedup.cluster import dedup_representatives
 
@@ -804,11 +840,11 @@ def test_kcore_peels_layers(spark):
     # peels layer by layer, exercising multi-round convergence)
     edges = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5), (5, 6), (6, 7)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    core2 = sorted(r.node for r in kcore_nodes(df, 2, checkpoint=False).collect())
+    core2 = sorted(r.node for r in kcore_nodes(df, 2).collect())
     assert core2 == [1, 2, 3, 4]
-    core3 = sorted(r.node for r in kcore_nodes(df, 3, checkpoint=False).collect())
+    core3 = sorted(r.node for r in kcore_nodes(df, 3).collect())
     assert core3 == [1, 2, 3, 4]
-    assert kcore_nodes(df, 4, checkpoint=False).count() == 0
+    assert kcore_nodes(df, 4).count() == 0
 
 
 def test_bloom_prefilter_no_false_negatives_and_join_equivalence(spark):
@@ -934,11 +970,11 @@ def test_bfs_distances_path_graph(spark):
     e = [(i, i + 1) for i in range(1, 5)] + [(i + 1, i) for i in range(1, 5)]
     edges = spark.createDataFrame(e, "src long, dst long")
     srcs = spark.createDataFrame([(1,)], "node long")
-    got = {r.node: r.dist for r in bfs_distances(edges, srcs, 3, checkpoint=False).collect()}
+    got = {r.node: r.dist for r in bfs_distances(edges, srcs, 3).collect()}
     assert got == {1: 0, 2: 1, 3: 2, 4: 3}  # 5 is beyond the horizon
     # two sources: distances are min over sources
     srcs2 = spark.createDataFrame([(1,), (5,)], "node long")
-    got2 = {r.node: r.dist for r in bfs_distances(edges, srcs2, 3, checkpoint=False).collect()}
+    got2 = {r.node: r.dist for r in bfs_distances(edges, srcs2, 3).collect()}
     assert got2 == {1: 0, 5: 0, 2: 1, 4: 1, 3: 2}
 
 
@@ -1079,16 +1115,14 @@ def test_label_propagation_two_triangles(spark):
     )
     got = {
         r.node: r.community
-        for r in label_propagation(e, rounds=4, checkpoint=False).collect()
+        for r in label_propagation(e, rounds=4).collect()
     }
     # each component converges to its minimum node id
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10}
     # partition invariance (deterministic sync + min tie-break)
     again = {
         r.node: r.community
-        for r in label_propagation(
-            e.repartition(7), rounds=4, checkpoint=False
-        ).collect()
+        for r in label_propagation(e.repartition(7), rounds=4).collect()
     }
     assert again == got
 
@@ -1106,31 +1140,9 @@ def test_label_propagation_min_tie_break(spark):
     )
     got = {
         r.node: r.community
-        for r in label_propagation(e, rounds=1, checkpoint=False).collect()
+        for r in label_propagation(e, rounds=1).collect()
     }
     assert got[5] == 1
-
-
-def test_cooccurrence_edges_strategies_agree(spark):
-    """The default collect_set + in-row explode form and the spilling
-    self-join form must produce the identical distinct edge set,
-    including duplicate (group, item) rows and single-item groups."""
-    from datapipeline_spark.operators.graph import cooccurrence_edges
-
-    df = spark.createDataFrame(
-        [(1, 10), (1, 11), (1, 11), (1, 12), (2, 10), (2, 13), (3, 14)],
-        "g long, item long",
-    )
-    s = sorted(
-        map(tuple, cooccurrence_edges(df, "g", "item", strategy="set").collect())
-    )
-    j = sorted(
-        map(tuple, cooccurrence_edges(df, "g", "item", strategy="join").collect())
-    )
-    assert s == j
-    assert (10, 11) in s and (11, 10) in s  # both directions
-    assert all(a != b for a, b in s)  # no self-loops
-    assert not any(a == 14 or b == 14 for a, b in s)  # singleton group
 
 
 def test_undirected_drops_self_loops_both_directions(spark):
@@ -1237,13 +1249,13 @@ def test_sssp_weighted_path(spark):
     srcs = spark.createDataFrame([(1,)], "node long")
     got = {
         r.node: r.dist
-        for r in sssp_distances(e, srcs, rounds=3, checkpoint=False).collect()
+        for r in sssp_distances(e, srcs, rounds=3).collect()
     }
     assert got == {1: 0, 2: 2, 3: 5}
     # capped horizon: 1 round can't take the 2-hop path yet
     one = {
         r.node: r.dist
-        for r in sssp_distances(e, srcs, rounds=1, checkpoint=False).collect()
+        for r in sssp_distances(e, srcs, rounds=1).collect()
     }
     assert one == {1: 0, 2: 2, 3: 10}
 

@@ -34,12 +34,12 @@ def test_graph_family_empty(spark, empties):
     e = empties["edges"]
     assert pagerank(e, iterations=2).count() == 0
     assert triangle_counts(e).count() == 0
-    assert kcore_nodes(e, k=2, checkpoint=False).count() == 0
-    assert label_propagation(e, rounds=2, checkpoint=False).count() == 0
+    assert kcore_nodes(e, k=2).count() == 0
+    assert label_propagation(e, rounds=2).count() == 0
     src = spark.createDataFrame([], "node long")
-    assert bfs_distances(e, src, max_hops=2, checkpoint=False).count() == 0
+    assert bfs_distances(e, src, max_hops=2).count() == 0
     we = spark.createDataFrame([], "src long, dst long, w long")
-    assert sssp_distances(we, src, rounds=2, checkpoint=False).count() == 0
+    assert sssp_distances(we, src, rounds=2).count() == 0
 
 
 def test_stats_family_empty(spark, empties):
@@ -94,7 +94,7 @@ def test_adjacency_operators_survive_hub_degree(spark):
 
     labs = {
         r.node: r.community
-        for r in label_propagation(edges, rounds=2, checkpoint=False).collect()
+        for r in label_propagation(edges, rounds=2).collect()
     }
     # round 1: hub adopts min leaf label (1), leaves adopt hub label (0);
     # round 2: hub hears only 0s -> 0, leaves hear the hub's 1 -> 1
@@ -103,7 +103,7 @@ def test_adjacency_operators_survive_hub_degree(spark):
     src = spark.createDataFrame([(0,)], "node long")
     dist = {
         r.node: r.dist
-        for r in bfs_distances(edges, src, max_hops=2, checkpoint=False).collect()
+        for r in bfs_distances(edges, src, max_hops=2).collect()
     }
     assert dist[0] == 0 and all(dist[leaf] == 1 for leaf in (1, 2, n))
 

@@ -618,21 +618,23 @@ def test_table_profile_single_scan(spark):
 def test_triangle_plan(spark):
     from pyspark.sql import functions as F
 
-    from datapipeline_spark.operators.graph import cooccurrence_edges, triangle_counts
+    from datapipeline_spark.operators.graph import _undirected, cooccurrence_edges
     from datapipeline_spark.queries_data import REGISTRY
     from datapipeline_spark.tables import load_table
 
     plan = _plan(REGISTRY["triangle_counts_parts"][0](spark, SF))
     assert "CartesianProduct" not in plan
-    # the registry query checkpoints the undirected edge set, so the scan
-    # sits BELOW the checkpoint barrier; assert pushdown on the
-    # non-checkpointed operator form (same plan minus the barrier)
+    # triangle_counts checkpoints the undirected edge set, so the scan sits
+    # BELOW the checkpoint barrier; assert pushdown on the frame it
+    # checkpoints (the same subtree, above no barrier)
     li = (
         load_table(spark, SF, "lineitem")
         .filter(F.col("l_orderkey") % 5 == 0)
         .select("l_orderkey", "l_partkey")
     )
-    raw = _plan(triangle_counts(cooccurrence_edges(li, "l_orderkey", "l_partkey")))
+    raw = _plan(
+        _undirected(cooccurrence_edges(li, "l_orderkey", "l_partkey"), "src", "dst")
+    )
     assert "CartesianProduct" not in raw
     assert "l_orderkey" in raw and "FileScan" in raw
 

@@ -312,6 +312,40 @@ def test_pagerank_matches_reference_and_is_order_invariant(spark, edges):
     assert got2 == want
 
 
+# ------------------------------------------------------------ co-occurrence
+
+
+@given(
+    st.lists(
+        st.tuples(st.integers(0, 4), st.integers(0, 7)), min_size=0, max_size=30
+    )
+)
+# a duplicate row, the pair (10, 11) in two groups, a single-item group
+@example(rows=[(1, 10), (1, 11), (1, 11), (1, 12), (2, 10), (2, 11), (3, 14)])
+@settings(max_examples=10, deadline=None)
+def test_cooccurrence_edges_match_pure_python(spark, rows):
+    """Distinct directed edges between items sharing a group, against a
+    pure-Python transcription: duplicate (group, item) rows add no edge,
+    single-item groups add none, every edge appears in both directions,
+    never as a self-loop, and exactly once."""
+    from collections import defaultdict
+
+    from datapipeline_spark.operators.graph import cooccurrence_edges
+
+    items = defaultdict(set)
+    for g, item in rows:
+        items[g].add(item)
+    want = {(a, b) for its in items.values() for a in its for b in its if a != b}
+
+    df = spark.createDataFrame(rows, "g long, item long")
+    got = [tuple(r) for r in cooccurrence_edges(df, "g", "item").collect()]
+    edges = set(got)
+    assert len(got) == len(edges)  # distinct
+    assert all((b, a) in edges for a, b in got)  # both directions
+    assert all(a != b for a, b in got)  # no self-loops
+    assert edges == want
+
+
 # ---------------------------------------------------------------- triangles
 
 
@@ -395,7 +429,7 @@ def test_label_propagation_matches_reference(spark, edges, rounds):
     df = spark.createDataFrame(sym, "src long, dst long")
     got = {
         r.node: r.community
-        for r in label_propagation(df, rounds=rounds, checkpoint=False).collect()
+        for r in label_propagation(df, rounds=rounds).collect()
     }
     assert got == _ref_lpa(sym, rounds)
 
@@ -433,9 +467,7 @@ def test_kcore_matches_reference(spark, edges, k):
 
     sym = sorted({(s, d) for s, d in edges} | {(d, s) for s, d in edges})
     df = spark.createDataFrame(sym, "src long, dst long")
-    got = {
-        r.node for r in kcore_nodes(df, k=k, checkpoint=False).collect()
-    }
+    got = {r.node for r in kcore_nodes(df, k=k).collect()}
     assert got == _ref_kcore(sym, k)
 
 
@@ -479,7 +511,7 @@ def test_bfs_matches_reference(spark, edges, max_hops):
     sdf = spark.createDataFrame([(s,) for s in srcs], "node long")
     got = {
         r.node: r.dist
-        for r in bfs_distances(df, sdf, max_hops=max_hops, checkpoint=False).collect()
+        for r in bfs_distances(df, sdf, max_hops=max_hops).collect()
     }
     assert got == _ref_bfs(sym, srcs, max_hops)
 
@@ -519,9 +551,7 @@ def test_sssp_matches_reference(spark, edges_w, rounds):
     sdf = spark.createDataFrame([(s,) for s in srcs], "node long")
     got = {
         r.node: r.dist
-        for r in sssp_distances(
-            df, sdf, rounds=rounds, checkpoint=False
-        ).collect()
+        for r in sssp_distances(df, sdf, rounds=rounds).collect()
     }
     assert got == _ref_sssp(edges_w, srcs, rounds)
 

@@ -17,7 +17,7 @@ finished. The exit status is 1 if any run failed.
 The probe pair distinguishes ambient multi-core throughput phases (single
 core flat, parallel scaling degraded — the round-7 finding) from plain CPU
 contention. Usage:
-  python tools/bench_protocol.py --out BENCH_opt_r08_before [--runs 3]
+  python tools/bench_protocol.py --out BENCH_protocol [--runs 3]
 """
 
 from __future__ import annotations

@@ -1,9 +1,11 @@
 #!/usr/bin/env python
 """Differential artifact for the ONE rows-only registry entry (ivf_knn):
 the learned k-means quantizer is not SQL-expressible, so its evidence is a
-committed differential against exact brute force instead of a DuckDB hash
-(the BPE-merge precedent, promoted to an on-disk artifact per the round-6
-verdict item 7).
+differential against exact brute force instead of a DuckDB hash (the
+BPE-merge precedent, promoted to an on-disk artifact per the round-6
+verdict item 7). The round-7 record, DIFFERENTIAL_ivf_r7.json, is kept in
+git history (`git show 2ed05b6:DIFFERENTIAL_ivf_r7.json`); rerun this tool
+for a current one.
 
 Per SF it records:
 - full_probe_exact: ivf_knn at nprobe == n_centroids returns EXACTLY the

@@ -7,7 +7,6 @@ Usage:
   python tools/opt_profile.py q1 q2 ...            # time, min-of-3
   python tools/opt_profile.py --runs 5 q1
   python tools/opt_profile.py --dump before q1 q2  # also write plan files
-  python tools/opt_profile.py --jobs q1            # per-job breakdown via listener
 """
 
 from __future__ import annotations
