@@ -1596,3 +1596,168 @@ def test_rank_family_matches_pure_python_per_group(spark, rows):
                 median = x
                 break
         assert (wm[g].weighted_median, wm[g].total_weight) == (median, total)
+
+
+#: vector elements: small integers (exact zero vectors, exact ties),
+#: decimals whose sums round (so accumulation order shows) and finite
+#: doubles, bounded so no product or square overflows
+_vec_elem = st.one_of(
+    st.integers(-3, 3).map(float),
+    st.sampled_from([0.1, 0.2, 0.3, -0.3, 0.4, 0.6, 0.7, 1 / 3]),
+    st.floats(min_value=-100, max_value=100, allow_nan=False, allow_infinity=False),
+)
+
+
+@st.composite
+def _vector_case(draw):
+    dim = draw(st.integers(1, 9))
+    bands = draw(st.sampled_from([1, 2]))
+    planes = bands * draw(st.integers(1, 3))
+    seed = draw(st.integers(0, 2**16))
+    vec = st.one_of(
+        st.none(),
+        st.lists(_vec_elem, min_size=dim, max_size=dim),
+        st.lists(_vec_elem, min_size=dim, max_size=dim),
+        st.lists(_vec_elem, min_size=0, max_size=dim + 1),
+    )
+    rows = draw(st.lists(st.tuples(vec, vec), min_size=1, max_size=12))
+    cents = draw(
+        st.lists(st.lists(_vec_elem, min_size=dim, max_size=dim), min_size=1, max_size=3)
+    )
+    return dim, planes, bands, seed, rows, cents
+
+
+def _fold_cosine(a, b):
+    """Left-to-right IEEE fold: NULL for a NULL side, a length mismatch or
+    a zero norm."""
+    if a is None or b is None or len(a) != len(b):
+        return None
+    dot = qa = qb = 0.0
+    for x, y in zip(a, b):
+        dot = dot + x * y
+        qa = qa + x * x
+        qb = qb + y * y
+    den = math.sqrt(qa) * math.sqrt(qb)
+    return None if den == 0.0 else dot / den
+
+
+@given(_vector_case())
+@example(
+    # NULL array, mismatched pair lengths, zero vector, length != dim
+    (
+        2,
+        4,
+        2,
+        42,
+        [
+            (None, [1.0, 2.0]),
+            ([1.0, 2.0], [1.0, 2.0, 3.0]),
+            ([0.0, 0.0], [1.0, 1.0]),
+            ([1.0, 2.0, 3.0], [1.0, 2.0, 3.0]),
+            ([1.0, -2.0], [0.5, 0.25]),
+            ([3.0, -1.0], [-2.0, 7.5]),
+        ],
+        [[0.0, 0.0], [1.0, -1.0]],
+    )
+)
+@example(
+    # sums that round: a different accumulation order changes the bits
+    (
+        3,
+        2,
+        1,
+        7,
+        [
+            ([0.1, 0.2, 0.3], [1.0, 1.0, 1.0]),
+            ([0.2, 0.4, 0.6], [0.3, 0.2, 0.1]),
+            ([0.1, 0.2, -0.3], [0.7, 1 / 3, 0.1]),
+            # plane 0 of seed 7 is (+, +, -): 0.1 + 0.6 - 0.7 signs by order
+            ([0.1, 0.6, 0.7], [0.4, 0.6, -0.3]),
+        ],
+        [[0.3, 0.1, 0.2], [1 / 3, 0.7, -0.3]],
+    )
+)
+@settings(max_examples=10, deadline=None)
+def test_vector_kernels_match_pure_python_fold(spark, case):
+    """The Arrow vector kernels of similarity/ann.py against pure-Python
+    left-to-right folds, bit for bit: the cosine, the sign-LSH signature
+    (a NULL or wrong-length row signs 0), the squared centroid distances
+    (NULL array for a NULL or wrong-length row) and the in-bucket pair
+    scores of `lsh_similar_pairs` (rounded half-up to 4 places by Spark)."""
+    import random
+    from decimal import ROUND_HALF_UP, Decimal
+
+    from pyspark.sql import functions as F
+
+    from datapipeline_spark.similarity import (
+        cosine_similarity_np,
+        lsh_similar_pairs,
+        random_hyperplane_signature,
+    )
+    from datapipeline_spark.similarity.ann import _centroid_dists
+
+    dim, planes, bands, seed, pairs, cents = case
+    df = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(pairs)],
+        "vec_id long, a array<double>, b array<double>",
+    )
+    got = {
+        r.vec_id: r
+        for r in random_hyperplane_signature(df, "a", dim, planes, seed)
+        .select(
+            "vec_id",
+            cosine_similarity_np(F.col("a"), F.col("b")).alias("cos"),
+            "rh_sig",
+            _centroid_dists("a", cents).alias("dists"),
+        )
+        .collect()
+    }
+
+    rng = random.Random(seed)
+    hyper = [
+        [1.0 if rng.random() < 0.5 else -1.0 for _ in range(dim)]
+        for _ in range(planes)
+    ]
+    sigs = {}
+    for i, (a, b) in enumerate(pairs):
+        ok = a is not None and len(a) == dim
+        sig = 0
+        if ok:
+            for p, plane in enumerate(hyper):
+                acc = 0.0
+                for x, s in zip(a, plane):
+                    acc = acc + x if s > 0 else acc - x
+                sig |= int(acc > 0) << p
+        dists = None
+        if ok:
+            dists = []
+            for c in cents:
+                acc = 0.0
+                for x, cj in zip(a, c):
+                    t = x - cj
+                    acc = acc + t * t
+                dists.append(acc)
+        assert got[i].cos == _fold_cosine(a, b)
+        assert got[i].rh_sig == sig
+        assert got[i].dists == dists
+        if ok:
+            sigs[i] = sig
+
+    bits = planes // bands
+    want = {}
+    for i in sigs:
+        for j in sigs:
+            shared = any(
+                (sigs[i] >> (k * bits)) & ((1 << bits) - 1)
+                == (sigs[j] >> (k * bits)) & ((1 << bits) - 1)
+                for k in range(bands)
+            )
+            cos = _fold_cosine(pairs[i][0], pairs[j][0]) if i < j and shared else None
+            if cos is not None:
+                want[(i, j)] = float(
+                    Decimal(repr(cos)).quantize(Decimal("0.0001"), ROUND_HALF_UP)
+                )
+    scored = lsh_similar_pairs(
+        df, vec_col="a", threshold=-2.0, dim=dim, planes=planes, bands=bands, seed=seed
+    )
+    assert {(r.id_a, r.id_b): r.cosine for r in scored.collect()} == want
