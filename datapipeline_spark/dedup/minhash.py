@@ -236,9 +236,12 @@ def jaccard_pairs(
     documents BEFORE sizes and intersections are computed, i.e. jaccard
     over the non-boilerplate shingle universe — the same degenerate-key
     guard `shared_passage_pairs` uses, and a deterministic semantics an
-    oracle can mirror exactly.
+    oracle can mirror exactly. The two bounds are alternatives: passing
+    both raises ValueError.
     """
-    if candidates is None and max_doc_freq is not None:
+    if candidates is not None and max_doc_freq is not None:
+        raise ValueError("jaccard_pairs takes candidates or max_doc_freq, not both")
+    if max_doc_freq is not None:
         # In-row pair generation (round-7 opt, the ppjoin/inrow_pairs
         # shape): ONE groupBy(shingle) collects each rare shingle's member
         # ids — shingles are distinct per doc, so array size == doc freq
@@ -278,15 +281,6 @@ def jaccard_pairs(
             .filter(F.col("jaccard") >= threshold)
             .select("id_a", "id_b", "jaccard")
         )
-    if max_doc_freq is not None:
-        # shingles are distinct per doc, so count(*) per shingle == doc freq
-        rare = (
-            shingles.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") <= max_doc_freq)
-            .select("shingle")
-        )
-        shingles = shingles.join(rare, "shingle", "leftsemi")
     if candidates is not None:
         # both pair ids in-row (one Generate) — the unionByName form
         # consumed the candidate subtree twice, and the candidate subtree

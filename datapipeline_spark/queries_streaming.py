@@ -305,24 +305,6 @@ def streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table("streaming_enrich_mem")
 
 
-def _staged_documents(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the documents table once as a single parquet file for the file
-    streaming source (same cache-key scheme as _staged_events)."""
-    src = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(src)
-        stamp = f"v2|{src}|{st.st_size}|{st.st_mtime_ns}"
-    except OSError:
-        stamp = f"v2|{src}"
-    key = hashlib.sha256(stamp.encode()).hexdigest()[:12]
-    staging = f"/tmp/spark_graft_stream_docs_{key}"
-    if not os.path.exists(os.path.join(staging, "_SUCCESS")):
-        load_table(spark, sf_dir, "documents").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(staging)
-    return staging
-
-
 @query(
     "streaming_quality_filter",
     """
@@ -599,11 +581,8 @@ FROM base GROUP BY user_id
 """.format(base=EVENTS_BASE),
 )
 def streaming_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-key running profile on the Spark 4 `transformWithStateInPandas`
-    typed-state API (streaming/ops.py profile_stream; auto-falls back to a
-    semantics-identical applyInPandasWithState fold where the TWS Python
-    runner's protobuf dependency is absent, as in this container) — the
-    engine exercises both stateful surfaces.
+    """Per-key running profile via `applyInPandasWithState`
+    (streaming/ops.py profile_stream).
     One availableNow batch → one final profile row per user, so the batch
     aggregate is an exact oracle: the sum folds integer cents in state
     (batch-split invariant), min/max are moved doubles."""

@@ -1,6 +1,5 @@
 from datapipeline_spark.similarity.ann import (
     brute_force_knn,
-    cosine_similarity_expr,
     cosine_similarity_np,
     embedding_similar_pairs,
     fit_ivf_centroids,
@@ -15,7 +14,6 @@ from datapipeline_spark.similarity.gram import int_gram_matrix
 __all__ = [
     "int_gram_matrix",
     "brute_force_knn",
-    "cosine_similarity_expr",
     "cosine_similarity_np",
     "embedding_similar_pairs",
     "fit_ivf_centroids",

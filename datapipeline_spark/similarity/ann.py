@@ -6,86 +6,95 @@
 - `lsh_knn`: random-hyperplane (sign) LSH — banding over sign bits buckets
   the corpus so each query only scans its buckets. The 100 TB path: bucket
   assignment is a map; the join is an equi-join on (band, bucket).
-- All float math is done in DOUBLE with sequential `aggregate` folds so
-  results are deterministic and engine-comparable.
+- All float math is done in DOUBLE by Arrow-batched numpy kernels that
+  accumulate dimension by dimension (see `_cosine_rows`), so results are
+  deterministic and equal to the oracles' sequential SQL folds.
 """
 
 from __future__ import annotations
 
-import math
 import random
+import sys
 
+import numpy as np
 import pandas as pd
 
+from pyspark import cloudpickle
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+# The Arrow kernels below call this module's helpers from Python workers,
+# which need not have this package on their path: ship them by value.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+#: decimal places of every cosine score before ranking or thresholding
+SCORE_DIGITS = 4
+
+#: the sign-LSH signature column `random_hyperplane_signature` adds
+_SIG = "rh_sig"
 
 
 def _to_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
 
 
-def dot_expr(a: Column, b: Column) -> Column:
-    """Sequential-fold dot product in double (deterministic order)."""
-    return F.aggregate(
-        F.zip_with(_to_double(a), _to_double(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def _lengths(v: pd.Series) -> np.ndarray:
+    """Array length per row; -1 for a NULL array."""
+    ok = v.notna().to_numpy()
+    vv = v.to_numpy()
+    return np.fromiter(
+        (len(vv[i]) if ok[i] else -1 for i in range(len(vv))),
+        dtype=np.int64,
+        count=len(vv),
     )
 
 
-def norm_expr(a: Column) -> Column:
-    return F.sqrt(F.aggregate(_to_double(a), F.lit(0.0), lambda acc, x: acc + x * x))
+def _stack_rows(v: pd.Series, rows: np.ndarray) -> np.ndarray:
+    """The arrays at positions `rows` (non-NULL, all one length) as one
+    float64 matrix, a row each."""
+    vv = v.to_numpy()
+    return np.vstack([vv[i] for i in rows]).astype(np.float64)
 
 
-def cosine_similarity_expr(a: Column, b: Column) -> Column:
-    return dot_expr(a, b) / F.nullif(norm_expr(a) * norm_expr(b), F.lit(0.0))
+def _cosine_rows(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Row-wise cosine of two equal-shape matrices; NaN for a zero norm.
+
+    numpy vectorizes ACROSS ROWS while looping OVER DIMS, so each row's
+    sums are the exact left-associative IEEE chain the SQL oracles replay
+    (``acc += x*y`` per dim ≡ ``aggregate(zip_with(..), 0.0, acc + x*y)``)
+    — bit-identical, not merely close. The sign-flip loop of
+    `random_hyperplane_signature` and the squared-distance loop of
+    `_centroid_dists` keep the same dim order for the same reason."""
+    dot = np.zeros(len(A))
+    qa = np.zeros(len(A))
+    qb = np.zeros(len(A))
+    for j in range(A.shape[1]):
+        x, y = A[:, j], B[:, j]
+        dot += x * y
+        qa += x * x
+        qb += y * y
+    den = np.sqrt(qa) * np.sqrt(qb)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        return np.where(den == 0.0, np.nan, dot / den)
 
 
 def cosine_similarity_np(a: Column, b: Column) -> Column:
-    """Arrow-vectorized twin of ``cosine_similarity_expr`` — BIT-IDENTICAL
-    results, ~100x the throughput on wide candidate sets.
+    """Cosine of two array columns as DOUBLE, Arrow-vectorized (~100x an
+    interpreted HOF fold on wide candidate sets).
 
-    The interpreted HOF folds cost ~1 µs per element-step, which dominates
-    pair surfaces (500k candidates × 64 dims × 3 folds ≈ seconds); numpy
-    vectorizes ACROSS ROWS while looping OVER DIMS, so each row's
-    accumulation is still the exact left-associative IEEE chain the SQL
-    oracle replays: ``acc += x*y`` per dim ≡ ``fold(acc + x*y)``.
-    Semantics matched to the expression form: null array, length-mismatched
-    pair (zip_with null padding poisons the fold), NaN element, and zero
-    norm (nullif) all yield NULL. One caveat: Arrow erases the null-vs-NaN
-    distinction INSIDE an array (both arrive as NaN), so a NaN element is
-    treated like a null element (→ NULL result) rather than Spark's
-    NaN-is-greatest ordering — immaterial under the repo's strict-finite
-    input discipline (api.py model batches reject non-finite values)."""
+    NULL for a NULL array, a length-mismatched pair, a NaN element and a
+    zero norm. One caveat: Arrow erases the null-vs-NaN distinction INSIDE
+    an array (both arrive as NaN), so a NaN element is treated like a null
+    element (→ NULL result) rather than Spark's NaN-is-greatest ordering —
+    immaterial under the repo's strict-finite input discipline (api.py
+    model batches reject non-finite values)."""
     @F.pandas_udf("double")
     def _cos(sa: pd.Series, sb: pd.Series) -> pd.Series:
-        import numpy as np
-
-        n = len(sa)
-        out = np.full(n, np.nan, dtype=np.float64)
-        ok = sa.notna().to_numpy() & sb.notna().to_numpy()
-        if ok.any():
-            aa, bb = sa.to_numpy(), sb.to_numpy()
-            idx = np.flatnonzero(ok)
-            la = np.fromiter((len(aa[i]) for i in idx), dtype=np.int64, count=len(idx))
-            lb = np.fromiter((len(bb[i]) for i in idx), dtype=np.int64, count=len(idx))
-            same = la == lb
-            for d in np.unique(la[same]):
-                rows = idx[same & (la == d)]
-                A = np.vstack([aa[i] for i in rows]).astype(np.float64)
-                B = np.vstack([bb[i] for i in rows]).astype(np.float64)
-                dot = np.zeros(len(rows))
-                qa = np.zeros(len(rows))
-                qb = np.zeros(len(rows))
-                for j in range(int(d)):
-                    x, y = A[:, j], B[:, j]
-                    dot += x * y
-                    qa += x * x
-                    qb += y * y
-                den = np.sqrt(qa) * np.sqrt(qb)
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    out[rows] = np.where(den == 0.0, np.nan, dot / den)
+        out = np.full(len(sa), np.nan, dtype=np.float64)
+        la, lb = _lengths(sa), _lengths(sb)
+        for d in np.unique(la[(la == lb) & (la >= 0)]):
+            rows = np.flatnonzero((la == d) & (lb == d))
+            out[rows] = _cosine_rows(_stack_rows(sa, rows), _stack_rows(sb, rows))
         res = pd.Series(out).astype("Float64")
         res[np.isnan(out)] = pd.NA
         return res
@@ -93,30 +102,16 @@ def cosine_similarity_np(a: Column, b: Column) -> Column:
     return _cos(a, b)
 
 
-def brute_force_knn(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 3,
-    round_digits: int = 4,
-) -> DataFrame:
-    """Exact top-k by cosine: (query_id, neighbor_id, rank, score).
+def _score(a: str, b: str) -> Column:
+    return F.round(cosine_similarity_np(F.col(a), F.col(b)), SCORE_DIGITS)
 
-    The query side is broadcast — corpus never shuffles; ranking is a window
-    over query_id (top-k per query via row_number, ties broken by rounded
-    score then neighbor id for cross-engine determinism).
-    """
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    )
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
-    scored = (
-        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "score", F.round(cosine_similarity_np(F.col("q_vec"), F.col("c_vec")), round_digits)
-        )
-        .select("query_id", "neighbor_id", "score")
+
+def _top_k(cand: DataFrame, q_vec: str, c_vec: str, k: int) -> DataFrame:
+    """(query_id, neighbor_id, rank, score): the `k` best candidates per
+    query by rounded cosine, ties broken by neighbor id for cross-engine
+    determinism."""
+    scored = cand.withColumn("score", _score(q_vec, c_vec)).select(
+        "query_id", "neighbor_id", "score"
     )
     w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
     return (
@@ -126,26 +121,42 @@ def brute_force_knn(
     )
 
 
+def brute_force_knn(
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    k: int = 3,
+) -> DataFrame:
+    """Exact top-k by cosine: (query_id, neighbor_id, rank, score).
+
+    The query side is broadcast — corpus never shuffles; ranking is a window
+    over query_id (top-k per query via row_number).
+    """
+    q = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+    )
+    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
+    cand = c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
+    return _top_k(cand, "q_vec", "c_vec", k)
+
+
 def random_hyperplane_signature(
     df: DataFrame,
     vec_col: str = "embedding",
     dim: int = 64,
     planes: int = 16,
     seed: int = 42,
-    out: str = "rh_sig",
 ) -> DataFrame:
-    """Sign-LSH signature: bit p = [v · h_p > 0] with h_p a deterministic
-    pseudo-random ±1 hyperplane. Pure map stage.
+    """Adds the sign-LSH signature column ``rh_sig``: bit p = [v · h_p > 0]
+    with h_p a deterministic pseudo-random ±1 hyperplane. Pure map stage.
 
-    Arrow-vectorized: ±1 planes make every product a sign flip (x·(−1.0)
-    ≡ −x and a+(−x) ≡ a−x are IEEE-exact), so accumulating ``acc ±=
-    M[:, j]`` per dim — vectorized across rows, sequential over dims — is
-    bit-identical to the zip_with/aggregate fold the SQL oracle replays.
-    The interpreted HOF form paid ~1 µs per element-step (planes × dim
-    steps PER ROW) and dominated every signature consumer; a single F.expr
-    chain was A/B-rejected too (the 26 KB expression cost ~7 s to parse).
-    Rows whose array length differs from ``dim`` get signature 0, exactly
-    like the fold (zip_with's null padding poisons every plane's sum)."""
+    ±1 planes make every product a sign flip (x·(−1.0) ≡ −x and a+(−x) ≡
+    a−x are IEEE-exact), so ``acc ±= M[:, j]`` per dim equals the SQL
+    oracle's fold. A single F.expr chain was A/B-rejected (the 26 KB
+    expression cost ~7 s to parse). Rows whose array length differs from
+    ``dim`` get signature 0, exactly like the fold (zip_with's null
+    padding poisons every plane's sum)."""
     rng = random.Random(seed)
     hyper = [
         [1.0 if rng.random() < 0.5 else -1.0 for _ in range(dim)]
@@ -153,32 +164,52 @@ def random_hyperplane_signature(
     ]
     @F.pandas_udf("long")
     def _sig(v: pd.Series) -> pd.Series:
-        import numpy as np
-
         res = np.zeros(len(v), dtype=np.int64)
-        ok = v.notna().to_numpy()
-        if ok.any():
-            vv = v.to_numpy()
-            idx = np.flatnonzero(ok)
-            lens = np.fromiter(
-                (len(vv[i]) for i in idx), dtype=np.int64, count=len(idx)
-            )
-            rows = idx[lens == dim]
-            if len(rows):
-                M = np.vstack([vv[i] for i in rows]).astype(np.float64)
-                sig = np.zeros(len(rows), dtype=np.int64)
-                for p, plane in enumerate(hyper):
-                    acc = np.zeros(len(rows))
-                    for j, s in enumerate(plane):
-                        if s > 0:
-                            acc += M[:, j]
-                        else:
-                            acc -= M[:, j]
-                    sig |= (acc > 0).astype(np.int64) << np.int64(p)
-                res[rows] = sig
+        rows = np.flatnonzero(_lengths(v) == dim)
+        if len(rows):
+            M = _stack_rows(v, rows)
+            sig = np.zeros(len(rows), dtype=np.int64)
+            for p, plane in enumerate(hyper):
+                acc = np.zeros(len(rows))
+                for j, s in enumerate(plane):
+                    if s > 0:
+                        acc += M[:, j]
+                    else:
+                        acc -= M[:, j]
+                sig |= (acc > 0).astype(np.int64) << np.int64(p)
+            res[rows] = sig
         return pd.Series(res)
 
-    return df.withColumn(out, _sig(F.col(vec_col)))
+    return df.withColumn(_SIG, _sig(F.col(vec_col)))
+
+
+def _banded(
+    df: DataFrame,
+    cols: dict[str, str],
+    vec_col: str,
+    dim: int,
+    planes: int,
+    bands: int,
+    seed: int,
+) -> DataFrame:
+    """One row per (vector, band): the `cols` ({alias: column}) plus the
+    band number and its `planes // bands`-bit bucket of the signature.
+
+    One parsed expression instead of per-band Column ops: the band/bucket
+    structs are generated by a transform over a literal sequence (each
+    F.lit/shiftright/bitwiseAND chain was a Py4J round-trip, ~0.13 s per
+    call at bands=4)."""
+    bits = planes // bands
+    bb = F.expr(
+        f"explode(transform(sequence(0, {bands - 1}), b -> "
+        f"struct(CAST(b AS INT) AS band, "
+        f"shiftright({_SIG}, b * {bits}) & {(1 << bits) - 1} AS bucket)))"
+    )
+    return (
+        random_hyperplane_signature(df, vec_col, dim, planes, seed)
+        .select(*[F.col(c).alias(a) for a, c in cols.items()], bb.alias("bb"))
+        .select(*cols, "bb.band", "bb.bucket")
+    )
 
 
 def lsh_knn(
@@ -192,17 +223,10 @@ def lsh_knn(
     k: int = 3,
     seed: int = 42,
     max_bucket: int = 1000,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Approximate top-k: candidates share at least one LSH band with the
-    query, then exact cosine re-rank.
-
-    ``broadcast_queries`` forces the query-vector side of the re-rank join
-    driver-broadcast — right for the typical few-to-thousands query set.
-    Pass False for a LARGE query set (the hint would otherwise push the
-    whole table through the driver and can OOM it); AQE then picks the
-    join strategy from observed sizes and the plan degrades gracefully to
-    a shuffled hash join.
+    query, then exact cosine re-rank. The query side of both joins is
+    driver-broadcast — sized for the typical few-to-thousands query set.
 
     Scale shape (the `lsh_similar_pairs` discipline): candidate
     generation carries (id, band, bucket) rows ONLY — vectors never ride
@@ -218,28 +242,10 @@ def lsh_knn(
     under `max_bucket`: planes ≈ bands · log2(n / max_bucket) — 16/4
     suits ~10⁴–10⁵ vectors; a 100 TB corpus wants more planes (deeper
     buckets), not a bigger cap."""
-    bits = planes // bands
-
-    def banded_ids(df: DataFrame, role: str) -> DataFrame:
-        s = random_hyperplane_signature(df, vec_col, dim, planes, seed)
-        # one parsed expression instead of per-band Column ops: the
-        # band/bucket structs are generated by a transform over a literal
-        # sequence (the bloom-bitmap construction-time fix generalized —
-        # each F.lit/shiftright/bitwiseAND chain was a Py4J round-trip,
-        # ~0.13 s per banded_ids call at bands=4)
-        bb = F.expr(
-            f"explode(transform(sequence(0, {bands - 1}), b -> "
-            f"struct(CAST(b AS INT) AS band, "
-            f"shiftright(rh_sig, b * {bits}) & {(1 << bits) - 1} AS bucket)))"
-        )
-        return s.select(
-            F.col(id_col).alias(f"{role}_id"), bb.alias("bb")
-        ).select(f"{role}_id", "bb.band", "bb.bucket")
-
     from datapipeline_spark.tables import spread
 
-    # the signature projection is compute-bound (planes × dim HOF folds per
-    # row) and the corpus arrives as few file splits — spread it wide.
+    # the signature projection is compute-bound (planes × dim per row) and
+    # the corpus arrives as few file splits — spread it wide.
     # Bucket membership is collected IN-ROW (round-7 opt, the
     # lsh_similar_pairs discipline): one groupBy(band, bucket) holds each
     # bucket's member ids, the max_bucket gate is a size filter on the
@@ -250,35 +256,23 @@ def lsh_knn(
     # join) through a localCheckpoint whose AQE materialization ran the
     # signature scan at build; one consumer needs no checkpoint and one
     # fewer join.
-    c_banded = banded_ids(spread(corpus), "neighbor")
+    c_banded = _banded(
+        spread(corpus), {"neighbor_id": id_col}, vec_col, dim, planes, bands, seed
+    )
     buckets = c_banded.groupBy("band", "bucket").agg(
         F.collect_list("neighbor_id").alias("__ids__")
     ).filter(F.size("__ids__") <= max_bucket)
-    q_banded = banded_ids(queries, "query")
+    q_banded = _banded(queries, {"query_id": id_col}, vec_col, dim, planes, bands, seed)
     cand = (
-        buckets.join(
-            F.broadcast(q_banded) if broadcast_queries else q_banded,
-            ["band", "bucket"],
-        )
+        buckets.join(F.broadcast(q_banded), ["band", "bucket"])
         .select("query_id", F.explode("__ids__").alias("neighbor_id"))
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .distinct()
     )
     qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
     cv = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
-    scored = (
-        cand.join(cv, "neighbor_id")
-        .join(F.broadcast(qv) if broadcast_queries else qv, "query_id")
-        .withColumn(
-            "score", F.round(cosine_similarity_np(F.col("q_vec"), F.col("c_vec")), 4)
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    cand = cand.join(cv, "neighbor_id").join(F.broadcast(qv), "query_id")
+    return _top_k(cand, "q_vec", "c_vec", k)
 
 
 def fit_ivf_centroids(
@@ -303,40 +297,31 @@ def fit_ivf_centroids(
 
 def _centroid_dists(vec_col: str, centroids: list[list[float]]) -> Column:
     """Array of squared L2 distances to each centroid — Arrow-vectorized
-    (the cosine_similarity_np discipline): ``acc += (x − c_j)²`` per dim is
-    the exact left-associative IEEE chain of the zip_with/aggregate fold
-    the SQL oracle replays, vectorized across rows. The centroid constants
-    live in the UDF closure — no per-element driver-side lit() calls (the
-    expression form built k×dim Py4J literals per query construction).
-    Rows whose array length differs from the centroid dim yield a NULL
-    distance array (the fold form yields all-null distances; both reduce
-    to a null assignment downstream — inputs are fixed-dim per contract)."""
+    like `_cosine_rows`: ``acc += (x − c_j)²`` per dim is the exact
+    left-associative IEEE chain of the zip_with/aggregate fold the SQL
+    oracle replays. The centroid constants live in the UDF closure — no
+    per-element driver-side lit() calls (the expression form built k×dim
+    Py4J literals per query construction). Rows whose array length
+    differs from the centroid dim yield a NULL distance array (the fold
+    form yields all-null distances; both reduce to a null assignment
+    downstream — inputs are fixed-dim per contract)."""
     dim = len(centroids[0]) if centroids else 0
 
     @F.pandas_udf("array<double>")
     def _d(v: pd.Series) -> pd.Series:
-        import numpy as np
-
         out: list = [None] * len(v)
-        ok = v.notna().to_numpy()
-        if ok.any():
-            vv = v.to_numpy()
-            idx = np.flatnonzero(ok)
-            lens = np.fromiter(
-                (len(vv[i]) for i in idx), dtype=np.int64, count=len(idx)
-            )
-            rows = idx[lens == dim]
-            if len(rows):
-                M = np.vstack([vv[i] for i in rows]).astype(np.float64)
-                D = np.empty((len(rows), len(centroids)), dtype=np.float64)
-                for ci, c in enumerate(centroids):
-                    acc = np.zeros(len(rows))
-                    for j, cj in enumerate(c):
-                        t = M[:, j] - cj
-                        acc += t * t
-                    D[:, ci] = acc
-                for r_i, i in enumerate(rows):
-                    out[i] = D[r_i]
+        rows = np.flatnonzero(_lengths(v) == dim)
+        if len(rows):
+            M = _stack_rows(v, rows)
+            D = np.empty((len(rows), len(centroids)), dtype=np.float64)
+            for ci, c in enumerate(centroids):
+                acc = np.zeros(len(rows))
+                for j, cj in enumerate(c):
+                    t = M[:, j] - cj
+                    acc += t * t
+                D[:, ci] = acc
+            for r_i, i in enumerate(rows):
+                out[i] = D[r_i]
         return pd.Series(out)
 
     return _d(F.col(vec_col))
@@ -405,16 +390,7 @@ def ivf_knn(
     cand = assigned.join(F.broadcast(probes), "centroid_id").filter(
         F.col("neighbor_id") != F.col("query_id")
     )
-    scored = cand.withColumn(
-        "score",
-        F.round(cosine_similarity_np(F.col("query_vec"), F.col("neighbor_vec")), 4),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    return _top_k(cand, "query_vec", "neighbor_vec", k)
 
 
 def lsh_similar_pairs(
@@ -427,41 +403,21 @@ def lsh_similar_pairs(
     bands: int = 4,
     seed: int = 42,
     max_bucket: int = 1000,
-    round_digits: int = 4,
 ) -> DataFrame:
     """Sign-LSH-blocked cosine pairs — the 100 TB form of the pair surface.
 
-    Candidate generation collects each (band, bucket)'s member ids ONCE
-    (collect_set — sorted and deduped; ids are unique per (band, bucket)
-    so the dedup is a no-op, the basket-pair pattern) and explodes the (id_a <
-    id_b) pairs in-row from the sorted list, with buckets larger than
-    `max_bucket` dropped by an in-row size gate BEFORE any pair
+    Each vector is banded into one (band, bucket) row per band, and every
+    bucket scores its own (id_a < id_b) pairs in one grouped-map call;
+    buckets larger than `max_bucket` are skipped BEFORE any pair
     materializes (degenerate-region guard, mirroring the MinHash path).
-    This replaces the old bucket-keyed self-join + separate count-gate
-    (which consumed the signature subtree twice and cost two extra
-    exchanges): one groupBy per blocking stage, 2.6 s -> 1.6 s at sf0.1
-    for the identical pair set. Only the candidate pairs are exact-cosine
-    scored; the vectors never ride through the blocking — candidates are
-    distinct id pairs, and the embeddings join back by id afterwards, so
-    the shuffle mass of the blocking stage is (id, band, bucket) rows only.
 
     Deterministic end-to-end: the hyperplanes are seed-derived literals, so
     the candidate set — and hence the result — has an exact SQL oracle
     (recall vs the brute-force all-pairs form is the only approximation).
     """
-    bits = planes // bands
-    sig = random_hyperplane_signature(df, vec_col, dim, planes, seed)
-    # one parsed expression for the band/bucket explosion (same
-    # construction-time fix as lsh_knn's banded_ids)
-    banded = sig.select(
-        F.col(id_col).alias("bid"),
-        F.col(vec_col).alias("__v__"),
-        F.expr(
-            f"explode(transform(sequence(0, {bands - 1}), b -> "
-            f"struct(CAST(b AS INT) AS band, "
-            f"shiftright(rh_sig, b * {bits}) & {(1 << bits) - 1} AS bucket)))"
-        ).alias("bb"),
-    ).select("bid", "__v__", "bb.band", "bb.bucket")
+    banded = _banded(
+        df, {"bid": id_col, "__v__": vec_col}, vec_col, dim, planes, bands, seed
+    )
 
     # Scoring happens IN-BUCKET (grouped map per (band, bucket)) instead of
     # per candidate pair: the old shape generated distinct id pairs and
@@ -473,17 +429,13 @@ def lsh_similar_pairs(
     # average ≥ 3 members, so the in-bucket form moves strictly fewer
     # bytes in exactly the dense-bucket regime where pair scoring gets
     # expensive; per-group memory is bounded by the `max_bucket` cap
-    # (≤ cap × dim doubles). The per-dim accumulation loop reproduces the
-    # IEEE chain of `cosine_similarity_expr` / the SQL oracle verbatim
-    # (same order, same ops — cf. cosine_similarity_np), the raw score is
-    # returned and Spark applies the SAME F.round; pairs appearing in
+    # (≤ cap × dim doubles). The raw `_cosine_rows` score is returned and
+    # Spark applies the SAME F.round as the pair form; pairs appearing in
     # several buckets carry identical scores, so the trailing distinct is
     # unchanged in effect. Pairs whose cosine is NULL in the pair form
     # (null / length-mismatched / NaN vector, zero norm) are dropped
     # in-group — identical to the NULL failing the threshold filter.
     def _score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
         empty = pd.DataFrame(
             {"id_a": pd.Series(dtype="int64"),
              "id_b": pd.Series(dtype="int64"),
@@ -491,31 +443,15 @@ def lsh_similar_pairs(
         )
         if len(pdf) < 2 or len(pdf) > max_bucket:
             return empty
-        ids = pdf["bid"].to_numpy()
-        vv = pdf["__v__"].to_numpy()
-        keep = [
-            i for i in range(len(ids))
-            if vv[i] is not None and len(vv[i]) == dim
-        ]
+        keep = np.flatnonzero(_lengths(pdf["__v__"]) == dim)
         if len(keep) < 2:
             return empty
-        order = sorted(keep, key=lambda i: ids[i])
-        M = np.vstack([vv[i] for i in order]).astype(np.float64)
-        oid = np.asarray([ids[i] for i in order], dtype=np.int64)
-        n = len(order)
-        ia, ib = np.triu_indices(n, k=1)
-        A, B = M[ia], M[ib]
-        dot = np.zeros(len(ia))
-        qa = np.zeros(len(ia))
-        qb = np.zeros(len(ia))
-        for j in range(dim):
-            x, y = A[:, j], B[:, j]
-            dot += x * y
-            qa += x * x
-            qb += y * y
-        den = np.sqrt(qa) * np.sqrt(qb)
-        with np.errstate(invalid="ignore", divide="ignore"):
-            raw = np.where(den == 0.0, np.nan, dot / den)
+        ids = pdf["bid"].to_numpy()
+        order = keep[np.argsort(ids[keep], kind="stable")]
+        M = _stack_rows(pdf["__v__"], order)
+        oid = ids[order].astype(np.int64)
+        ia, ib = np.triu_indices(len(order), k=1)
+        raw = _cosine_rows(M[ia], M[ib])
         ok = ~np.isnan(raw)
         return pd.DataFrame(
             {"id_a": oid[ia[ok]], "id_b": oid[ib[ok]], "__raw__": raw[ok]}
@@ -525,7 +461,7 @@ def lsh_similar_pairs(
         _score_bucket, "id_a long, id_b long, __raw__ double"
     )
     return (
-        scored.withColumn("cosine", F.round(F.col("__raw__"), round_digits))
+        scored.withColumn("cosine", F.round(F.col("__raw__"), SCORE_DIGITS))
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
         .distinct()
@@ -537,7 +473,6 @@ def embedding_similar_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.3,
-    round_digits: int = 4,
 ) -> DataFrame:
     """All pairs with cosine ≥ threshold (embedding near-dup surface).
 
@@ -549,7 +484,7 @@ def embedding_similar_pairs(
     b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", F.round(cosine_similarity_np(F.col("va"), F.col("vb")), round_digits))
+        .withColumn("cosine", _score("va", "vb"))
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )

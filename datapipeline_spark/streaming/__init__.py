@@ -7,7 +7,6 @@ from datapipeline_spark.streaming.ops import (
     cusum_stream,
     near_dup_filter_stream,
     profile_stream,
-    use_rocksdb_state_store,
     rolling_mean_stream,
     sessionize_stream,
     sequence_windows_stream,
@@ -23,7 +22,6 @@ __all__ = [
     "cusum_stream",
     "near_dup_filter_stream",
     "profile_stream",
-    "use_rocksdb_state_store",
     "rolling_mean_stream",
     "sessionize_stream",
     "sequence_windows_stream",

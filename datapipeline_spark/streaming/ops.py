@@ -433,30 +433,16 @@ def profile_stream(
     entity_keys: Sequence[str],
     value_field: str = "value",
 ) -> DataFrame:
-    """Per-key running profile (count / exact-cent sum / min / max) on the
-    Spark 4 `transformWithStateInPandas` API — the typed-state successor to
-    `applyInPandasWithState` (ValueState handles, per-state TTL, timers,
-    initial-state bootstrap), used here so the engine exercises both
-    stateful surfaces. Emits ONE profile row per key per micro-batch
-    (running totals), so with a single availableNow batch the batch
-    aggregate is an exact oracle, and across batches the last emission
-    folds to the one-shot result (tested). The sum accumulates integer
-    cents in state — exact in any batch split; min/max are moved doubles.
+    """Per-key running profile (count / exact-cent sum / min / max) via
+    `applyInPandasWithState`. Emits ONE profile row per key per
+    micro-batch (running totals), so with a single availableNow batch the
+    batch aggregate is an exact oracle, and across batches the last
+    emission folds to the one-shot result (tested). The sum accumulates
+    integer cents in state — exact in any batch split; min/max are moved
+    doubles.
 
-    State is one fixed-width tuple per key, partitioned across executors
-    (RocksDB-backed in production): bounded by key cardinality, not data
-    volume.
-
-    Environment gate: the transformWithState Python runner requires
-    protobuf AND the RocksDB state store provider. The provider switch is
-    session-wide state, so this builder never flips it implicitly (doing
-    so would silently change the state backend of every other stateful
-    query started later in the session) — call `use_rocksdb_state_store`
-    explicitly before building. When protobuf is absent — as in this
-    container — or the session is not RocksDB-configured, the op falls
-    back to an `applyInPandasWithState` implementation with identical
-    semantics, state shape, and output schema; `test_streaming` asserts
-    the two surfaces agree wherever both are available."""
+    State is one fixed-width tuple per key, partitioned across executors:
+    bounded by key cardinality, not data volume."""
     keys = list(entity_keys)
     key_fields = [f for f in sdf.schema.fields if f.name in keys]
     out_schema = (
@@ -465,8 +451,11 @@ def profile_stream(
         + " `min_value` double, `max_value` double"
     )
 
-    def _fold(pdfs, n, s, mn, mx):
-        for pdf in pdfs:
+    def fn(
+        key: tuple, pdf_iter: Iterable[pd.DataFrame], state: GroupState
+    ) -> Iterable[pd.DataFrame]:
+        n, s, mn, mx = state.get if state.exists else (0, 0, None, None)
+        for pdf in pdf_iter:
             vals = pdf[value_field].astype("float64")
             n += int(len(vals))
             # exact integer cents, like the batch convention: round half
@@ -476,10 +465,8 @@ def profile_stream(
             bmx = float(vals.max())
             mn = bmn if mn is None or bmn < mn else mn
             mx = bmx if mx is None or bmx > mx else mx
-        return n, s, mn, mx
-
-    def _emit(key, n, s, mn, mx):
-        return pd.DataFrame(
+        state.update((n, s, mn, mx))
+        yield pd.DataFrame(
             {
                 **{k: [kv] for k, kv in zip(keys, key)},
                 "n_events": [n],
@@ -489,42 +476,6 @@ def profile_stream(
             }
         )
 
-    if has_transform_with_state() and _is_rocksdb_session(sdf.sparkSession):
-        from pyspark.sql.streaming.stateful_processor import (
-            StatefulProcessor,
-            StatefulProcessorHandle,
-        )
-
-        class ProfileProcessor(StatefulProcessor):
-            def init(self, handle: StatefulProcessorHandle) -> None:
-                self._state = handle.getValueState(
-                    "profile", "n BIGINT, s BIGINT, mn DOUBLE, mx DOUBLE"
-                )
-
-            def handleInputRows(self, key, rows, timerValues):
-                st = self._state.get() if self._state.exists() else None
-                n, s, mn, mx = _fold(rows, *(st or (0, 0, None, None)))
-                self._state.update((n, s, mn, mx))
-                yield _emit(key, n, s, mn, mx)
-
-            def close(self) -> None:
-                pass  # required by the StatefulProcessor ABC; no resources held
-
-        return sdf.groupBy(*keys).transformWithStateInPandas(
-            statefulProcessor=ProfileProcessor(),
-            outputStructType=out_schema,
-            outputMode="Append",
-            timeMode="None",
-        )
-
-    def fn(
-        key: tuple, pdf_iter: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        st = state.get if state.exists else (0, 0, None, None)
-        n, s, mn, mx = _fold(pdf_iter, *st)
-        state.update((n, s, mn, mx))
-        yield _emit(key, n, s, mn, mx)
-
     return sdf.groupBy(*keys).applyInPandasWithState(
         fn,
         outputStructType=out_schema,
@@ -532,46 +483,6 @@ def profile_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-def use_rocksdb_state_store(spark) -> None:
-    """Explicit opt-in to the RocksDB state store (required by
-    transformWithState; recommended for any large-state streaming job).
-    Session-wide by design — Spark resolves the provider from the session
-    conf at query start, so there is no per-query scope; keeping the
-    switch a named, caller-visible action is what prevents one operator
-    from silently changing every other stateful query's backend."""
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-
-
-def _is_rocksdb_session(spark) -> bool:
-    try:
-        return (
-            spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-            == ROCKSDB_PROVIDER
-        )
-    except Exception:
-        # conf probe only: some session states raise on unknown streaming
-        # keys — "couldn't read the conf" and "not RocksDB" route the same
-        # way (the caller picks the HDFS-backed default provider)
-        return False
-
-
-def has_transform_with_state() -> bool:
-    """True when the Spark 4 transformWithState Python runner can start:
-    its worker imports protobuf at init, so a missing protobuf crashes the
-    whole query rather than failing gracefully."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 
 def incremental_rollup_sink(

@@ -519,6 +519,10 @@ def test_jaccard_max_doc_freq_restricts_universe(spark):
         ).collect()
     }
     assert capped == manual and capped
+    # the two bounds are alternatives: both at once is refused
+    cand = spark.createDataFrame([(0, 1)], "id_a long, id_b long")
+    with pytest.raises(ValueError, match="not both"):
+        jaccard_pairs(sh, "doc_id", cand, threshold=0.4, max_doc_freq=5)
 
 
 def test_lsh_similar_pairs_subset_of_brute_with_recall(vectors):

@@ -409,10 +409,9 @@ def test_incremental_rollup_fold_equals_one_shot(spark, tmp_path):
 
 
 def test_profile_stream_fold_equals_one_shot(spark, tmp_path):
-    """profile_stream (transformWithState when available, otherwise the
-    applyInPandasWithState fallback): folding the source over 3
-    micro-batches must end at the same per-key profile as one batch, with
-    the cent-sum exact under any batch split."""
+    """profile_stream's applyInPandasWithState fold: folding the source
+    over 3 micro-batches must end at the same per-key profile as one
+    batch, with the cent-sum exact under any batch split."""
     from pyspark.sql import functions as F
 
     from datapipeline_spark.streaming import profile_stream
