@@ -34,10 +34,6 @@ SCORE_DIGITS = 4
 _SIG = "rh_sig"
 
 
-def _to_double(col: Column) -> Column:
-    return F.transform(col, lambda x: x.cast("double"))
-
-
 def _lengths(v: pd.Series) -> np.ndarray:
     """Array length per row; -1 for a NULL array."""
     ok = v.notna().to_numpy()
@@ -289,7 +285,9 @@ def fit_ivf_centroids(
     from pyspark.ml.functions import array_to_vector
 
     train = corpus.select(
-        array_to_vector(_to_double(F.col(vec_col))).alias("features")
+        array_to_vector(
+            F.transform(F.col(vec_col), lambda x: x.cast("double"))
+        ).alias("features")
     )
     model = KMeans(k=n_centroids, seed=seed, maxIter=max_iter).fit(train)
     return [list(map(float, c)) for c in model.clusterCenters()]
