@@ -1,7 +1,6 @@
 from datapipeline_spark.dedup.exact import exact_dedup, text_fingerprints
 from datapipeline_spark.dedup.minhash import (
     MinHashParams,
-    char_shingles,
     jaccard_pairs,
     lsh_candidate_pairs,
     minhash_dedup_pairs,
@@ -9,7 +8,6 @@ from datapipeline_spark.dedup.minhash import (
     row_minhash,
     word_shingles,
 )
-from datapipeline_spark.dedup.passjoin import edit_distance_join
 from datapipeline_spark.dedup.ppjoin import ppjoin_pairs, prefix_filter_candidates
 from datapipeline_spark.dedup.simhash import simhash
 from datapipeline_spark.dedup.symdelete import deletion_join, deletion_variants
@@ -18,14 +16,12 @@ __all__ = [
     "exact_dedup",
     "text_fingerprints",
     "MinHashParams",
-    "char_shingles",
     "word_shingles",
     "minhash_signatures",
     "row_minhash",
     "lsh_candidate_pairs",
     "jaccard_pairs",
     "minhash_dedup_pairs",
-    "edit_distance_join",
     "deletion_join",
     "deletion_variants",
     "ppjoin_pairs",

@@ -60,18 +60,6 @@ def hash48(col) -> F.Column:
     return F.conv(F.substring(F.md5(col), 1, HASH_HEX_LEN), 16, 10).cast("long")
 
 
-def char_shingles(df: DataFrame, id_col: str, text_col: str, k: int = 5) -> DataFrame:
-    """Distinct character k-grams per document → (id, shingle)."""
-    grams = F.expr(
-        f"transform(sequence(1, greatest(length({text_col}) - {k - 1}, 0)),"
-        f" i -> substring({text_col}, i, {k}))"
-    )
-    return (
-        df.select(id_col, F.explode(grams).alias("shingle"))
-        .distinct()
-    )
-
-
 def word_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 2) -> DataFrame:
     """Distinct word n-grams per document → (id, shingle)."""
     return word_shingles_from_tokens(

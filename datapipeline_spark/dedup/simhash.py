@@ -64,26 +64,3 @@ def simhash(
     END
     """
     return df.select(F.col(id_col), F.expr(fingerprint).alias("simhash"))
-
-
-def hamming_distance(col_a, col_b) -> F.Column:
-    """Popcount of XOR — Spark's bit_count is JVM-side."""
-    return F.bit_count(col_a.bitwiseXOR(col_b))
-
-
-def simhash_near_pairs(
-    sig: DataFrame, id_col: str = "doc_id", max_hamming: int = 3, prefix_bits: int = 8
-) -> DataFrame:
-    """Candidate pairs by identical high-`prefix_bits` block (cheap LSH-style
-    blocking), verified by full hamming distance ≤ `max_hamming`."""
-    block = F.shiftright(F.col("simhash"), 32 - prefix_bits)
-    s = sig.withColumn("block", block)
-    a = s.select(F.col("block"), F.col(id_col).alias("id_a"), F.col("simhash").alias("sh_a"))
-    b = s.select(F.col("block"), F.col(id_col).alias("id_b"), F.col("simhash").alias("sh_b"))
-    return (
-        a.join(b, "block")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("hamming", hamming_distance(F.col("sh_a"), F.col("sh_b")))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )

@@ -8,13 +8,11 @@ equi-join of the ≤k-deletion variant sets, then bounded levenshtein
 removes false positives. Same output as the naive blocked self-join,
 which therefore remains the oracle verbatim.
 
-Complementary to dedup/passjoin.py (segment pigeonhole, any k): PassJoin
-keys candidates on positional SEGMENTS and degrades to quadratic when
-strings share long constant regions (every "Customer#…" name shares its
-slot-0 segment with every other); deletion variants keep the FULL
-discriminating content in the join key, so low-entropy shared prefixes
-don't collide — the right tool for short entity fields (names, SKUs,
-addresses). Cost is C(L,k) variants per string (L=18, k=2 → ≤172):
+Deletion variants keep the FULL discriminating content in the join key,
+so low-entropy shared prefixes don't collide (every "Customer#…" name
+shares its prefix with every other, which sends positional-segment
+schemes such as PassJoin quadratic) — the right tool for short entity
+fields (names, SKUs, addresses). Cost is C(L,k) variants per string (L=18, k=2 → ≤172):
 linear in rows with a constant factor, the standard spell-index trade.
 Variant generation is pure JVM higher-order functions; no Python.
 """

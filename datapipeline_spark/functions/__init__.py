@@ -4,13 +4,12 @@ from datapipeline_spark.functions.time import (
     parse_timecode_seconds,
     shift_time_expr,
 )
-from datapipeline_spark.functions.values import nan_to_null, no_infinity
+from datapipeline_spark.functions.values import no_infinity
 
 __all__ = [
     "floor_time_expr",
     "parse_cadence_seconds",
     "parse_timecode_seconds",
     "shift_time_expr",
-    "nan_to_null",
     "no_infinity",
 ]

@@ -1,7 +1,10 @@
 """Missing-value canon (reference src/datapipeline/domain/value.py:6-38).
 
-- `None` is the one missing value; NaN normalizes to null.
-- Infinity is rejected (raise) everywhere.
+- `None` is the one missing value. NaN passes through as a double: the
+  operators treat it as missing.
+- Infinity is rejected (raise) at the one parse boundary,
+  `plans/compiler.load_source`, which wraps every float/double source column
+  in `no_infinity`.
 """
 
 from __future__ import annotations
@@ -12,12 +15,6 @@ from pyspark.sql import functions as F
 
 def _as_col(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
-
-
-def nan_to_null(col: Column | str) -> Column:
-    """NaN → null for float columns (domain/value.py:9-11)."""
-    c = _as_col(col)
-    return F.when(F.isnan(c), F.lit(None)).otherwise(c)
 
 
 def no_infinity(col: Column | str, context: str = "value") -> Column:
@@ -32,4 +29,3 @@ def no_infinity(col: Column | str, context: str = "value") -> Column:
         c.isin(float("inf"), float("-inf")),
         F.raise_error(F.lit(f"Infinite values are not allowed in {context}")),
     ).otherwise(c)
-

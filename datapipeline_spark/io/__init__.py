@@ -1,22 +1,10 @@
 from datapipeline_spark.io.writers import (
-    compact_files,
     materialize,
     run_output_path,
     write_csv,
     write_jsonl,
     write_orc,
     write_parquet,
-    write_pickle,
-    write_stdout,
-)
-from datapipeline_spark.io.versioned import (
-    compact_version,
-    current_version,
-    manifest_info,
-    read_version,
-    vacuum,
-    versioned_sink,
-    write_version,
 )
 
 __all__ = [
@@ -24,16 +12,6 @@ __all__ = [
     "write_csv",
     "write_parquet",
     "write_orc",
-    "compact_files",
-    "write_pickle",
-    "write_stdout",
     "materialize",
     "run_output_path",
-    "write_version",
-    "read_version",
-    "current_version",
-    "compact_version",
-    "vacuum",
-    "manifest_info",
-    "versioned_sink",
 ]

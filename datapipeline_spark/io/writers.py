@@ -9,6 +9,10 @@
   `latest` symlink.
 - `materialize` persists any intermediate stream as a durable checkpoint
   (services/materialize.py:23-58).
+
+The reference's pickle writer is not reproduced (SURVEY.md §2.2: a
+single-file driver-side format is unnecessary here), and stdout serving
+belongs to the `serve` profile (plans/profiles.py).
 """
 
 from __future__ import annotations
@@ -68,81 +72,6 @@ def write_orc(
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.orc(path)
-
-
-def compact_files(
-    spark,
-    path: str,
-    format: str = "parquet",
-    target_file_mb: int = 128,
-    sort_within_by: Sequence[str] = (),
-) -> int:
-    """Small-files compaction (lakehouse table maintenance, the OPTIMIZE
-    verb — no reference analogue because a single-process runtime never
-    fragments its output; a distributed engine writing per-task files
-    does). Rewrites a directory to ~target-sized files: reads the current
-    layout, coalesces to ceil(bytes / target) partitions, optionally
-    re-sorts rows within each output file for scan locality, and swaps the
-    directory via an adjacent staging path + rename. Returns the new file
-    count.
-
-    All filesystem ops go through the Hadoop FileSystem resolved for the
-    path (like incremental_rollup_sink), so the maintenance verb works on
-    HDFS / object stores, not just the local FS. The swap is two renames
-    (path→__old__, __compacting__→path) — each rename is atomic on
-    HDFS-like stores but the PAIR is not: a crash between them leaves the
-    table at __old__ with the compacted copy at __compacting__. The next
-    invocation recovers on entry (restores __old__→path, clears stale
-    staging), so no data is ever stranded; concurrent readers during the
-    instant between the renames can observe a missing directory — serialize
-    maintenance against readers via a catalog/manifest where that matters.
-
-    The coalesce is a NARROW repartition (no shuffle) unless a
-    within-file sort is requested, in which case the rewrite pays one
-    range-free sortWithinPartitions."""
-    import math
-
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path.rstrip("/"))
-    fs = jpath.getFileSystem(hconf)
-    staging = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__compacting__")
-    old = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__old__")
-
-    # crash recovery from a previously interrupted swap
-    if fs.exists(old):
-        if not fs.exists(jpath):
-            fs.rename(old, jpath)  # roll the original back into place
-        else:
-            fs.delete(old, True)  # swap completed, cleanup died
-    if fs.exists(staging):
-        fs.delete(staging, True)  # stale staging from a dead run
-
-    def _data_files(p):
-        it = fs.listFiles(p, True)
-        out = []
-        while it.hasNext():
-            st = it.next()
-            name = st.getPath().getName()
-            if not name.startswith(("_", ".")) and not name.endswith(".crc"):
-                out.append(st.getLen())
-        return out
-
-    reader = getattr(spark.read, format)
-    df = reader(path)
-    total = sum(_data_files(jpath))
-    n = max(1, math.ceil(total / (target_file_mb * 1024 * 1024)))
-    out = df.coalesce(n)
-    if sort_within_by:
-        out = out.sortWithinPartitions(*sort_within_by)
-    getattr(out.write.mode("overwrite"), format)(staging.toString())
-    if not fs.rename(jpath, old):
-        raise IOError(f"compact_files: rename {path} -> {old} failed")
-    if not fs.rename(staging, jpath):
-        fs.rename(old, jpath)  # roll back so the table stays readable
-        raise IOError(f"compact_files: rename {staging} -> {path} failed (rolled back)")
-    fs.delete(old, True)
-    return len(_data_files(jpath))
 
 
 def write_table(
@@ -270,77 +199,6 @@ def ensure_bucketed_table(
                 )
             )
     return spark.table(name)
-
-
-def write_pickle(df: DataFrame, path: str, overwrite: bool = True) -> int:
-    """Pickle-stream export sink (reference io/writers/pickle_writer.py:1-21,
-    io/factory.py:53-55): one local file of consecutively pickled row dicts,
-    written atomically (temp file + rename, mirroring AtomicBinaryFileSink).
-
-    Deliberately a DRIVER-SIDE export: the reference's pickle target is a
-    single local file for handoff into Python tooling, so rows stream through
-    ``toLocalIterator`` (one partition in memory at a time, never a full
-    collect). This is an edge sink for small exports — at scale use
-    ``write_parquet``/``write_table``; pickle is neither splittable nor
-    cross-language. Returns the row count written."""
-    import pickle
-
-    if not overwrite and os.path.exists(path):
-        raise FileExistsError(path)
-    os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
-    tmp = path + ".tmp"
-    n = 0
-    try:
-        with open(tmp, "wb") as fh:
-            pickler = pickle.Pickler(fh, protocol=pickle.HIGHEST_PROTOCOL)
-            for row in df.toLocalIterator():
-                pickler.dump(row.asDict(recursive=True))
-                pickler.clear_memo()  # rows are independent; don't grow the memo
-                n += 1
-        os.replace(tmp, path)
-    except BaseException:
-        try:
-            os.remove(tmp)
-        except OSError:
-            pass
-        raise
-    return n
-
-
-def write_stdout(
-    df: DataFrame,
-    format: str = "jsonl",
-    limit: int | None = None,
-    stream=None,
-) -> int:
-    """Stdout sink (reference io/sinks/stdout.py, io/factory.py:24-29):
-    stream rows to a text stream as JSON lines or plain text.
-
-    Driver-side by contract (stdout lives on the driver); rows arrive via
-    ``toLocalIterator`` so memory stays bounded — ``limit`` caps output for
-    previews. ``txt`` requires a single string column (matching the
-    reference's text_line_serializer on raw payloads)."""
-    import json as _json
-    import sys
-
-    out = sys.stdout if stream is None else stream
-    if format not in {"jsonl", "txt"}:
-        raise ValueError(f"Unsupported stdout format {format!r}")
-    if format == "txt":
-        cols = df.columns
-        if len(cols) != 1:
-            raise ValueError("txt output requires exactly one (string) column")
-    if limit is not None:
-        df = df.limit(limit)
-    n = 0
-    for row in df.toLocalIterator():
-        if format == "jsonl":
-            out.write(_json.dumps(row.asDict(recursive=True), default=str) + "\n")
-        else:
-            out.write(str(row[0]) + "\n")
-        n += 1
-    out.flush()
-    return n
 
 
 def materialize(df: DataFrame, path: str, format: str = "jsonl", gzip: bool = False) -> DataFrame:

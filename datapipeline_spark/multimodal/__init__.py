@@ -4,7 +4,6 @@ from datapipeline_spark.multimodal.blobs import (
     decode_media,
     extract_features,
     fake_media_table,
-    frame_sample,
 )
 
 __all__ = [
@@ -13,5 +12,4 @@ __all__ = [
     "decode_media",
     "extract_features",
     "fake_media_table",
-    "frame_sample",
 ]

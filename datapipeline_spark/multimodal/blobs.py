@@ -3,7 +3,7 @@
 Spark-side design (the part that matters at 100 TB):
 - media rows are (id, media: binary, media_type, meta: struct) — binary stays
   opaque through shuffles; metadata is columnar and prunable;
-- decode / feature-extract / resize / frame-sample run as Arrow-batched
+- decode / feature-extract run as Arrow-batched
   `mapInPandas` stages so bytes move Python-side once per batch, not per row;
 - partitioning: blobs are large → `spark.sql.files.maxPartitionBytes` governs
   scan parallelism; repartition by id before UDF stages to balance batches.
@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -167,93 +166,5 @@ def extract_features(df: DataFrame, dim: int = 16) -> DataFrame:
                 h = hashlib.sha256((bytes(b) if b is not None else b"").hex().encode()).digest()
                 feats.append(np.frombuffer((h * ((dim * 4) // len(h) + 1))[: dim * 4], dtype="<u4").astype("float32") / 2**32)
             yield pd.DataFrame({"media_id": pdf["media_id"].values, "feature": [f.tolist() for f in feats]})
-
-    return df.select("media_id", "media").mapInPandas(gen, FEATURE_SCHEMA)
-
-
-def frame_sample(df: DataFrame, every_n: int = 8) -> DataFrame:
-    """Video frame sampling plan: one output row per sampled frame index.
-
-    JVM-side: decode metadata (n_frames) is already columnar, so the frame
-    lattice is a `sequence` + `explode` — the real frame *decode* would be a
-    follow-up mapInPandas over (media_id, frame_idx) batches."""
-    decoded = decode_media(df)
-    frames = decoded.filter(F.col("media_type") == "video").select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_n))
-        ).alias("frame_idx"),
-    )
-    return frames
-
-
-def extract_real_features(df: DataFrame, dim: int = 16) -> DataFrame:
-    """REAL content features for the natively-decodable formats, computed
-    with numpy inside the Arrow-batched stage:
-
-    - PPM images → [mean_R, mean_G, mean_B, std_R, std_G, std_B,
-      10-bin luminance histogram (density)] = 16 dims;
-    - PCM WAV → [RMS, zero-crossing rate, 14 log-spaced FFT band energies
-      (L1-normalized)] = 16 dims.
-
-    Deterministic (pure numpy on the decoded arrays), so downstream ANN /
-    dedup over these vectors is reproducible. Compressed inputs raise, as
-    in :func:`decode_media` codec="real"."""
-    import io
-    import wave as _wave
-
-    import numpy as np
-    import pandas as pd
-
-    if dim != 16:
-        raise ValueError("extract_real_features emits fixed 16-dim vectors")
-
-    def one(blob: bytes) -> "np.ndarray":
-        if blob[:2] == b"P6":
-            import re as _re
-
-            m = _re.match(rb"P6\s+(?:#[^\n]*\n\s*)*(\d+)\s+(\d+)\s+(\d+)\s", blob)
-            if not m:
-                raise ValueError("malformed PPM header")
-            w, h = int(m.group(1)), int(m.group(2))
-            px = np.frombuffer(blob[m.end() : m.end() + w * h * 3], dtype=np.uint8)
-            px = px.reshape(-1, 3).astype(np.float32) / 255.0
-            lum = px @ np.array([0.299, 0.587, 0.114], dtype=np.float32)
-            hist, _ = np.histogram(lum, bins=10, range=(0.0, 1.0))
-            hist = hist.astype(np.float32) / max(1, lum.size)
-            return np.concatenate([px.mean(0), px.std(0), hist]).astype(np.float32)
-        if blob[:4] == b"RIFF" and blob[8:12] == b"WAVE":
-            with _wave.open(io.BytesIO(blob)) as wf:
-                raw = wf.readframes(wf.getnframes())
-                width = wf.getsampwidth()
-            x = (
-                np.frombuffer(raw, dtype="<i2").astype(np.float32) / 32768.0
-                if width == 2
-                else np.frombuffer(raw, dtype=np.uint8).astype(np.float32) / 128.0 - 1.0
-            )
-            rms = float(np.sqrt(np.mean(x * x))) if x.size else 0.0
-            zcr = float(np.mean(np.abs(np.diff(np.signbit(x))))) if x.size > 1 else 0.0
-            spec = np.abs(np.fft.rfft(x[: 1 << 14]))
-            edges = np.unique(
-                np.geomspace(1, max(2, spec.size - 1), 15).astype(int)
-            )
-            bands = np.array(
-                [spec[a:b].sum() for a, b in zip(edges[:-1], edges[1:])],
-                dtype=np.float32,
-            )
-            bands = np.pad(bands, (0, 14 - bands.size))[:14]
-            tot = float(bands.sum()) or 1.0
-            return np.concatenate([[rms, zcr], bands / tot]).astype(np.float32)
-        raise NotImplementedError(
-            "real features need a decodable blob (PPM/PCM-WAV here; plug in "
-            "PIL/torchaudio for compressed formats)"
-        )
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            feats = [one(bytes(b) if b is not None else b"") for b in pdf["media"]]
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"].values, "feature": [f.tolist() for f in feats]}
-            )
 
     return df.select("media_id", "media").mapInPandas(gen, FEATURE_SCHEMA)

@@ -31,24 +31,17 @@ from datapipeline_spark.operators.bloom import (
     bloom_filter_keys,
     bloom_prefilter_join,
 )
-from datapipeline_spark.operators.basket import (
-    association_rules,
-    frequent_pairs,
-    item_supports,
-)
+from datapipeline_spark.operators.basket import association_rules, frequent_pairs
 from datapipeline_spark.operators.interval import interval_concurrency, interval_join
 from datapipeline_spark.operators.skyline import skyline_2d
-from datapipeline_spark.operators.survival import kaplan_meier, life_table
+from datapipeline_spark.operators.survival import life_table
 from datapipeline_spark.operators.survivorship import golden_record
 from datapipeline_spark.operators.apportion import apportion
 from datapipeline_spark.operators.fd import fd_profile
 from datapipeline_spark.operators.impute import group_mode, impute_mode
 from datapipeline_spark.operators.cdc import apply_changes, snapshot_diff
 from datapipeline_spark.operators.cover import greedy_max_coverage
-from datapipeline_spark.operators.privacy import (
-    k_anonymity_report,
-    suppress_small_classes,
-)
+from datapipeline_spark.operators.privacy import k_anonymity_report
 from datapipeline_spark.operators.expect import (
     Expectation,
     apply_expectations,
@@ -104,13 +97,11 @@ __all__ = [
     "broadcast_stream",
     "association_rules",
     "frequent_pairs",
-    "item_supports",
     "interval_join",
     "interval_concurrency",
     "skyline_2d",
     "golden_record",
     "life_table",
-    "kaplan_meier",
     "fd_profile",
     "apportion",
     "group_mode",
@@ -119,7 +110,6 @@ __all__ = [
     "greedy_max_coverage",
     "snapshot_diff",
     "k_anonymity_report",
-    "suppress_small_classes",
     "Expectation",
     "expectation_report",
     "apply_expectations",

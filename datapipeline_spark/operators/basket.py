@@ -31,34 +31,8 @@ bit-identical across engines and partition layouts.
 
 from __future__ import annotations
 
-from typing import Sequence
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def basket_items(df: DataFrame, basket_col: str, item_col: str) -> DataFrame:
-    """Distinct (basket, item) pairs — presence, not multiplicity."""
-    return df.select(
-        F.col(basket_col).alias("basket"), F.col(item_col).alias("item")
-    ).distinct()
-
-
-def item_supports(
-    df: DataFrame, basket_col: str, item_col: str, min_support: int = 1
-) -> DataFrame:
-    """Per-item basket counts, pruned to ``support >= min_support``.
-
-    One exchange on the item key with map-side partial counts; the distinct
-    upstream shares the same basket-keyed exchange as the pair join when
-    both are used (Spark reuses the shuffle under AQE).
-    """
-    return (
-        basket_items(df, basket_col, item_col)
-        .groupBy("item")
-        .agg(F.count(F.lit(1)).cast("long").alias("support"))
-        .filter(F.col("support") >= min_support)
-    )
 
 
 def frequent_pairs(
@@ -120,8 +94,7 @@ def _pairs_from_base(
 ) -> tuple[DataFrame, DataFrame]:
     """(pairs, all-item supports) from a `_basket_base` result. Supports
     are counted on the UNPRUNED base (true frequencies — the a-priori
-    prune list derives from them), exactly as the split
-    item_supports/frequent_pairs helpers did."""
+    prune list derives from them)."""
     sup_all = d0.groupBy("item").agg(
         F.count(F.lit(1)).cast("long").alias("support")
     )

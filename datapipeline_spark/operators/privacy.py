@@ -1,20 +1,17 @@
-"""k-anonymity / l-diversity auditing and enforcement.
+"""k-anonymity / l-diversity auditing.
 
 Training-data governance companions to the PII redaction surface
 (text/clean.py): before a table with quasi-identifiers ships in a corpus,
 measure re-identification risk (Sweeney 2002: a record is k-anonymous when
 at least k rows share its quasi-identifier combination) and attribute-
 disclosure risk (Machanavajjhala et al. 2006: an equivalence class is
-l-diverse when its sensitive attribute takes at least l distinct values),
-then suppress the failing classes.
+l-diverse when its sensitive attribute takes at least l distinct values).
 
 Scale shape: the audit is ONE map-side-combinable aggregation keyed by the
 quasi-identifier tuple — class count and distinct-sensitive count ride the
 same shuffle (count_distinct keeps the per-class value set, bounded by the
 sensitive domain, as intermediate state; for an unbounded sensitive domain
-swap in approx_count_distinct). Enforcement is a key-join of the rows
-against their own class verdicts — co-partitioned on the same keys, so AQE
-plans it as one additional exchange at most; no row ever leaves the JVM.
+swap in approx_count_distinct).
 
 Reference gap: the reference has no privacy surface at all (nearest is
 nothing — redaction/anonymization are repo-original training-data ops).
@@ -43,18 +40,3 @@ def k_anonymity_report(
         (F.count(F.lit(1)) >= k).cast("int").alias("k_anonymous"),
         (F.count_distinct(F.col(sensitive_col)) >= l).cast("int").alias("l_diverse"),
     )
-
-
-def suppress_small_classes(
-    df: DataFrame, quasi_cols: Sequence[str], k: int = 5
-) -> DataFrame:
-    """Drop every row whose quasi-identifier class has fewer than k members
-    (suppression — the conservative generalization-free enforcement).
-    Verdicts and rows join on the same keys they were aggregated on."""
-    safe = (
-        df.groupBy(*quasi_cols)
-        .agg(F.count(F.lit(1)).alias("__n__"))
-        .filter(F.col("__n__") >= k)
-        .drop("__n__")
-    )
-    return df.join(safe, list(quasi_cols), "left_semi")

@@ -1,4 +1,4 @@
-"""Survival analysis: life table + Kaplan-Meier estimator.
+"""Survival analysis: the life table behind the Kaplan-Meier estimator.
 
 Churn/retention's principled form (Kaplan-Meier 1958): given per-subject
 durations with right-censoring flags, the life table gives, at every
@@ -11,11 +11,10 @@ contingency — bounded by the DURATION DOMAIN (days of a product's life),
 not subjects — and the at-risk counts come from a reverse prefix sum over
 that tiny aggregated table (the markov/prefix tiny-table contract; for an
 unbounded duration domain route it through the two-phase bucketed scan).
-The registry entry emits the LIFE TABLE only — pure exact integers, so it
-hash-matches the oracle; the survival product is a float chain
-(``F.product`` over the sorted tiny table) kept in the operator and
-pinned by a pytest differential against a hand-rolled KM, the same
-discipline that keeps libm out of oracles elsewhere.
+The operator emits the LIFE TABLE only — pure exact integers, so it
+hash-matches the oracle; the survival product is a float chain over that
+tiny sorted table, left to the consumer, the same discipline that keeps
+libm out of oracles elsewhere.
 
 Reference gap: the reference has no survival surface (closest is nothing
 — retention grids in this repo are the empirical cousin).
@@ -47,20 +46,3 @@ def life_table(df: DataFrame, duration_col: str, event_col: str) -> DataFrame:
     return cell.withColumn(
         "n_risk", F.sum(F.col("d_events") + F.col("c_censored")).over(w)
     ).select("t", "n_risk", "d_events", "c_censored")
-
-
-def kaplan_meier(
-    df: DataFrame, duration_col: str, event_col: str, out: str = "survival"
-) -> DataFrame:
-    """Life table + the KM survival estimate S(t) = Π_{t' <= t, d>0}
-    (n_risk − d)/n_risk — a float running product over the sorted tiny
-    table (deterministic within an engine; differential-tested, not
-    oracle'd)."""
-    lt = life_table(df, duration_col, event_col)
-    w = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
-    factor = F.when(
-        F.col("d_events") > 0,
-        (F.col("n_risk") - F.col("d_events")).cast("double")
-        / F.col("n_risk").cast("double"),
-    ).otherwise(F.lit(1.0))
-    return lt.withColumn(out, F.product(factor).over(w))

@@ -15,7 +15,9 @@ from dataclasses import dataclass, field
 from typing import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DoubleType, FloatType
 
+from datapipeline_spark.functions.values import no_infinity
 from datapipeline_spark.operators.align import align_streams, broadcast_stream
 from datapipeline_spark.operators.record import (
     collapse,
@@ -61,7 +63,12 @@ def _sanitize(stream_id: str) -> str:
 def load_source(
     spark: SparkSession, cfg: SourceConfig, definition: ProjectDefinition
 ) -> DataFrame:
-    """Loader + parser for one source (reference sources/source.py:12-30)."""
+    """Loader + parser for one source (reference sources/source.py:12-30).
+
+    The parsed frame is the one parse boundary for ±Inf: every float/double
+    column raises at execution time on an infinite value (the reference
+    rejects it in domain/value.py:12-14). NaN passes through; the operators
+    treat it as missing."""
     from datapipeline_spark.sources import readers
 
     if isinstance(cfg.loader, EntryPoint):
@@ -106,7 +113,14 @@ def load_source(
     if cfg.parser is not None:
         parser_fn = registry.resolve("parser", cfg.parser.entrypoint)
         df = parser_fn(df, cfg.parser.args)
-    return df
+    floats = [
+        f.name for f in df.schema.fields if isinstance(f.dataType, (FloatType, DoubleType))
+    ]
+    if not floats:
+        return df
+    return df.withColumns(
+        {c: no_infinity(df[c], f"source {cfg.id!r} column {c!r}") for c in floats}
+    )
 
 
 def apply_transform(

@@ -529,7 +529,8 @@ def dq_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     counters — the report form of the reference's fail-fast contracts
     (domain/value.py rejects Inf, map_records demands tz-aware time). In a
     lazy engine the check runs as an aggregate you alert on, instead of an
-    exception mid-stream; operators/validate.py holds the raising variants."""
+    exception mid-stream. The one raising check is at the parse boundary:
+    plans/compiler.load_source rejects ±Inf in float columns."""
     s = events_stream(spark, sf_dir)
     one = lambda c: F.sum(F.when(c, 1).otherwise(0))  # noqa: E731
     return s.groupBy("event_type").agg(

@@ -1931,12 +1931,12 @@ def fuzzy_match_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     close pairs must share a ≤2-deletion variant, candidates are the
     equi-join on (block, variant), bounded levenshtein verifies — so the
     naive O(block²) SQL remains the oracle verbatim (differential pytest
-    pins equality vs brute force). Chosen over the also-exact PassJoin
-    segment scheme (dedup/passjoin.py) because these names share a long
-    constant prefix: positional segments all collide (measured quadratic
-    again), while deletion variants keep the discriminating digits in
-    the join key. deletion_join spreads its own variant explode off the
-    single-file dim scan (round-7: moved into the operator)."""
+    pins equality vs brute force). These names share a long constant
+    prefix, so a positional-segment scheme (PassJoin) collides on every
+    segment and measured quadratic again, while deletion variants keep
+    the discriminating digits in the join key. deletion_join spreads its
+    own variant explode off the single-file dim scan (round-7: moved into
+    the operator)."""
     from datapipeline_spark.dedup.symdelete import deletion_join
 
     c = load_table(spark, sf_dir, "customer").select(
@@ -3722,9 +3722,7 @@ def q_k_anonymity_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     account-balance band), class size vs k=5 and distinct market segments
     vs l=2. One map-side-combinable aggregation — class count and the
     distinct-sensitive count share the shuffle; the band is integer
-    floor-division so both engines bucket identically. The enforcement
-    twin (suppress_small_classes) is pytest-pinned to drop exactly the
-    rows of the k_anonymous=0 classes."""
+    floor-division so both engines bucket identically."""
     from datapipeline_spark.operators.privacy import k_anonymity_report
 
     c = load_table(spark, sf_dir, "customer").withColumns(

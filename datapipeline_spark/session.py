@@ -73,10 +73,7 @@ def get_spark(
         # phased protocol's 14.7 s — the entire "interleaved penalty" was
         # codegen recompilation, not JIT or page locality. Static conf;
         # memory cost is bounded by generated-class size (small units).
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "5000"),
-        )
+        .config("spark.sql.codegen.cache.maxEntries", "5000")
         # Driver hygiene for long-lived sessions cycling many distinct
         # plans (this registry; any multi-tenant SQL service). Spark frees
         # shuffle files, broadcasts and localCheckpoint blocks through
@@ -88,10 +85,7 @@ def get_spark(
         # → 159.1 s with a 90 s periodic GC alone. Scale posture: the
         # cleanup backlog grows with queries-per-session, not with data
         # size — a production driver needs this MORE, not less.
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("SPARK_GRAFT_PERIODIC_GC", "90s"),
-        )
+        .config("spark.cleaner.periodicGC.interval", "90s")
         # The 5000-entry codegen class cache (above) keeps thousands of
         # JIT-compiled generated classes live; the JVM's default 240 MB
         # reserved code cache then overflows mid-run and HotSpot silently
@@ -109,19 +103,17 @@ def get_spark(
         # cycles: cleanup still happens, queries keep running.
         .config(
             "spark.driver.extraJavaOptions",
-            os.environ.get(
-                "SPARK_GRAFT_DRIVER_JAVA_OPTS",
-                "-XX:ReservedCodeCacheSize=512m -XX:+ExplicitGCInvokesConcurrent",
-            ),
+            "-XX:ReservedCodeCacheSize=512m -XX:+ExplicitGCInvokesConcurrent",
         )
     )
     for k, v in RUNTIME_CONF.items():
         builder = builder.config(k, v)
-    # experiment hook: semicolon-separated k=v pairs applied at build time
-    # (e.g. SPARK_GRAFT_EXTRA_CONF="spark.sql.codegen.cache.maxEntries=5000"
-    # for the round-7 interleaved-protocol probe). Production deployments
-    # tune through their own session factory; this exists so bench tools
-    # can A/B session-static conf without code edits.
+    # experiment hook: semicolon-separated k=v pairs applied at build time,
+    # after the literals above, so it overrides them too (e.g.
+    # SPARK_GRAFT_EXTRA_CONF="spark.sql.codegen.cache.maxEntries=100" to A/B
+    # the codegen cache). Production deployments tune through their own
+    # session factory; this exists so bench tools can A/B session-static
+    # conf without code edits.
     extra = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
     for pair in filter(None, (p.strip() for p in extra.split(";"))):
         k, _, v = pair.partition("=")

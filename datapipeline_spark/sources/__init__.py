@@ -5,7 +5,6 @@ from datapipeline_spark.sources.readers import (
     read_jsonl,
     read_orc_glob,
     read_parquet_glob,
-    temporal_csv,
     time_ticks,
 )
 
@@ -15,7 +14,6 @@ __all__ = [
     "read_jsonl",
     "read_parquet_glob",
     "read_orc_glob",
-    "temporal_csv",
     "time_ticks",
     "http_source",
 ]

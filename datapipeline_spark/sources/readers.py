@@ -5,8 +5,9 @@ Strictness contracts from the reference, expressed Spark-side:
   strict field count (FAILFAST), duplicate/empty header rejection
   (sources/decoders.py:80-130);
 - JSON: whole-document with optional array-field unwrap; JSONL line mode
-  (decoders.py:133-173); NaN/Inf constants rejected by keeping the default
-  (non-lenient) JSON parser options;
+  (decoders.py:133-173). Spark's JSON parser accepts the NaN/Infinity
+  constants by default; ±Inf is rejected after parsing, at the project
+  parse boundary (plans/compiler.load_source), and NaN passes as missing;
 - parquet: file or sorted glob, duplicate-column rejection
   (sources/parquet_loader.py:8-62);
 - synthetic time ticks: bounded start..end at fixed frequency
@@ -29,7 +30,7 @@ from typing import Mapping, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datapipeline_spark.functions.time import parse_cadence_seconds, parse_timecode_seconds
+from datapipeline_spark.functions.time import parse_cadence_seconds
 
 
 def _check_headers(df: DataFrame, context: str) -> DataFrame:
@@ -83,39 +84,6 @@ def read_csv(
         reader = reader.option("inferSchema", True)
     df = reader.csv(list(path) if isinstance(path, (list, tuple)) else path)
     return _check_headers(df, f"csv {path}")
-
-
-def temporal_csv(
-    spark: SparkSession,
-    path: str | Sequence[str],
-    time_field: str,
-    value_fields: Mapping[str, str],
-    time_format: str | None = None,
-    delimiter: str = ";",
-    decimal: str = ".",
-    attrs: Sequence[str] = (),
-) -> DataFrame:
-    """Messy real-world temporal CSV (reference fixture parser
-    tests/parsers/temporal_csv.py:56-96): named time column with explicit
-    format (assumed UTC), decimal-comma numerics, selected value/attr fields.
-
-    Output: (time, *attrs, *value_fields keys) — a canonical temporal stream.
-    """
-    raw = read_csv(spark, path, delimiter=delimiter, strict=True, schema=None)
-    # numerics arrive as strings when decimal=','; normalize then cast
-    cols = [F.to_timestamp(F.col(time_field), time_format).alias("time") if time_format
-            else F.to_timestamp(F.col(time_field)).alias("time")]
-    cols += [F.col(a) for a in attrs]
-    for out_name, src in value_fields.items():
-        c = F.col(src).cast("string")
-        if decimal == ",":
-            # European format: '.' is a thousands separator, ',' the decimal
-            c = F.regexp_replace(F.regexp_replace(c, r"\.", ""), ",", ".")
-        elif decimal != ".":
-            c = F.regexp_replace(c, decimal, ".")
-        cols.append(c.cast("double").alias(out_name))
-    out = raw.select(*cols)
-    return out.filter(F.col("time").isNotNull())
 
 
 def read_jsonl(spark: SparkSession, path: str | Sequence[str], schema: str | None = None) -> DataFrame:

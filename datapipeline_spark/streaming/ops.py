@@ -9,7 +9,6 @@ versions:
 | cadence bucket grouping            | tumbling `F.window(time, cadence)` agg  |
 | late/duplicate data (hard errors)  | watermark + `dropDuplicatesWithinWatermark` |
 | per-key generator state (rolling)  | `applyInPandasWithState` per-key state  |
-| sliding sequences                  | stateful trailing-window emitter        |
 
 Scale posture: state is partitioned by key across executors (RocksDB-backed
 state store in production configs); watermarks bound state size; all
@@ -149,61 +148,6 @@ def rolling_mean_stream(
     )
 
 
-def sequence_windows_stream(
-    sdf: DataFrame,
-    field: str,
-    size: int,
-    entity_keys: Sequence[str],
-    stride: int = 1,
-    time_field: str = "time",
-    out: str = "sequence",
-    order_cols: Sequence[str] | None = None,
-) -> DataFrame:
-    """Sliding fixed-size sequences per key (streaming form of
-    operators/window.sequence_windows; reference pipelines/series/stages.py:
-    32-60): emit only full windows aligned to `stride` from the series start;
-    state = trailing values + row count per key."""
-    dtypes = dict(sdf.dtypes)
-    key_fields = ", ".join(f"`{k}` {dtypes[k]}" for k in entity_keys)
-    out_schema = ", ".join(
-        part
-        for part in (f"`{time_field}` timestamp", key_fields, f"`{out}` array<double>")
-        if part
-    )
-    state_schema = "values array<double>, n bigint"
-    sort_cols = list(order_cols) if order_cols else [time_field]
-
-    def fn(
-        key: tuple, pdf_iter: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            buf, n = state.get
-            buf = list(buf)
-        else:
-            buf, n = [], 0
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(sort_cols)
-            rows = []
-            for t, v in zip(pdf[time_field], pdf[field]):
-                buf.append(None if pd.isna(v) else float(v))
-                n += 1
-                if len(buf) > size:
-                    buf.pop(0)
-                if n >= size and (n - size) % stride == 0:
-                    rows.append((t, *key, list(buf)))
-            if rows:
-                yield pd.DataFrame(rows, columns=[time_field, *entity_keys, out])
-        state.update((buf, n))
-
-    return sdf.groupBy(*entity_keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def interval_join_stream(
     left: DataFrame,
     right: DataFrame,
@@ -287,36 +231,6 @@ def sessionize_stream(
             "n_events",
         )
     )
-
-
-def idempotent_batch_sink(path: str):
-    """foreachBatch sink with exactly-once delivery by idempotence.
-
-    Structured Streaming guarantees at-least-once invocation of
-    foreachBatch: after a failure the SAME batch_id is replayed with the
-    SAME data. Writing each micro-batch to its own `batch_id=<n>` directory
-    and skipping directories that already committed (`_SUCCESS` marker)
-    makes the replay a no-op — the standard exactly-once file-sink pattern
-    when the built-in file sink's log can't be used (e.g. custom layouts,
-    multi-table fan-out). The output is itself a readable hive-partitioned
-    dataset.
-
-    Returns the function to pass to ``writeStream.foreachBatch``.
-    """
-
-    def process(batch_df, batch_id: int) -> None:
-        out = path.rstrip("/") + f"/batch_id={batch_id}"
-        # Probe the commit marker through the Hadoop FileSystem resolved for
-        # the path's scheme — os.path.exists would silently never fire on
-        # hdfs:// or s3a:// paths, turning the skip into dead code there.
-        spark = batch_df.sparkSession
-        marker = spark._jvm.org.apache.hadoop.fs.Path(out + "/_SUCCESS")
-        fs = marker.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(marker):
-            return  # replayed after failure: already committed, skip
-        batch_df.write.mode("overwrite").parquet(out)
-
-    return process
 
 
 def cdc_upsert_sink(path: str, keys, seq, op_col: str = "op", delete_op: str = "D"):
@@ -483,111 +397,6 @@ def profile_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def incremental_rollup_sink(
-    path: str,
-    keys: Sequence[str],
-    counters: Sequence[str],
-):
-    """foreachBatch incremental aggregate maintenance: keep a materialized
-    per-key table of ASSOCIATIVE counters (counts, integer sums) current as
-    micro-batches arrive — the continuous-aggregate refresh pattern
-    (TimescaleDB/Materialize) on plain parquet.
-
-    Each trigger pre-aggregates ONLY the batch (tiny), unions it with the
-    matching rows of the existing state, re-sums, and swaps the state dir
-    via staging + Hadoop FS rename. Because every counter is associative
-    and commutative, folding N micro-batches equals one batch aggregate —
-    asserted in tests. Counters must be pre-computed columns (e.g. a 1 for
-    counts, cent-scaled longs for sums); the merge is a plain SUM over
-    (state ∪ batch-aggregate).
-
-    Bootstrap: first batch creates the state. Read the live rollup with a
-    plain ``spark.read.parquet(path)``.
-    """
-
-    def process(batch_df, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        state = jvm.org.apache.hadoop.fs.Path(path)
-        fs = state.getFileSystem(conf)
-        from pyspark.sql import functions as F
-
-        delta = batch_df.groupBy(*keys).agg(
-            *[F.sum(c).alias(c) for c in counters]
-        )
-        if fs.exists(state):
-            prev = spark.read.parquet(path)
-            merged = (
-                prev.unionByName(delta)
-                .groupBy(*keys)
-                .agg(*[F.sum(c).alias(c) for c in counters])
-            )
-        else:
-            merged = delta
-        staging = path.rstrip("/") + f".staging-{batch_id}"
-        merged.write.mode("overwrite").parquet(staging)
-        fs.delete(state, True)
-        fs.rename(jvm.org.apache.hadoop.fs.Path(staging), state)
-
-    return process
-
-
-def expectations_sink(path: str, expectations):
-    """foreachBatch data-quality ledger: fold each micro-batch's
-    expectation_report (operators/expect.py) into a cumulative per-rule
-    violation table on plain parquet — the streaming face of the
-    declarative DQ surface (batch report == the fold of the per-batch
-    reports, because every column is an associative count; the ppm ratio
-    is recomputed from the folded integers, never averaged).
-
-    State dir swaps via staging + Hadoop FS rename (object-store safe,
-    same contract as incremental_rollup_sink). Read the live ledger with
-    ``spark.read.parquet(path)``.
-    """
-
-    def process(batch_df, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        from datapipeline_spark.operators.expect import expectation_report
-
-        spark = batch_df.sparkSession
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        state = jvm.org.apache.hadoop.fs.Path(path)
-        fs = state.getFileSystem(conf)
-
-        delta = expectation_report(batch_df, expectations).select(
-            "rule", "action", "n_rows", "n_violations"
-        )
-        if fs.exists(state):
-            prev = spark.read.parquet(path).select(
-                "rule", "action", "n_rows", "n_violations"
-            )
-            merged = (
-                prev.unionByName(delta)
-                .groupBy("rule", "action")
-                .agg(
-                    F.sum("n_rows").alias("n_rows"),
-                    F.sum("n_violations").alias("n_violations"),
-                )
-            )
-        else:
-            merged = delta
-        merged = merged.withColumn(
-            "violation_ppm",
-            F.expr(
-                "CAST((n_violations * 1000000) DIV greatest(n_rows, 1) AS BIGINT)"
-            ),
-        )
-        staging = path.rstrip("/") + f".staging-{batch_id}"
-        merged.write.mode("overwrite").parquet(staging)
-        fs.delete(state, True)
-        fs.rename(jvm.org.apache.hadoop.fs.Path(staging), state)
-
-    return process
 
 
 def near_dup_filter_stream(

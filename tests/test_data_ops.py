@@ -16,12 +16,10 @@ from datapipeline_spark.dedup import (
     simhash,
     word_shingles,
 )
-from datapipeline_spark.dedup.simhash import simhash_near_pairs
 from datapipeline_spark.multimodal import (
     decode_media,
     extract_features,
     fake_media_table,
-    frame_sample,
 )
 from datapipeline_spark.similarity import (
     brute_force_knn,
@@ -82,8 +80,6 @@ def test_simhash_similar_docs_close(docs):
     ham01 = bin(vals[0] ^ vals[1]).count("1")
     ham02 = bin(vals[0] ^ vals[2]).count("1")
     assert ham01 < ham02  # near-dup closer than unrelated
-    pairs = {(r["id_a"], r["id_b"]) for r in simhash_near_pairs(sig, max_hamming=0).collect()}
-    assert (0, 3) in pairs
 
 
 def test_simhash_null_text_contract(spark):
@@ -225,10 +221,6 @@ def test_multimodal_pipeline(spark):
 
     feats = extract_features(media, dim=16).collect()
     assert len(feats) == 12 and all(len(r["feature"]) == 16 for r in feats)
-
-    frames = frame_sample(media, every_n=8)
-    fr = frames.collect()
-    assert len(fr) > 0 and all(r["frame_idx"] % 8 == 0 for r in fr)
 
     # codec="real" decodes PPM/PCM-WAV natively (tests/test_multimodal.py);
     # these synthetic sha-stream blobs are neither, so the real path raises
@@ -1268,10 +1260,7 @@ def test_sssp_weighted_path(spark):
 
 
 def test_k_anonymity_report_and_suppression(spark):
-    from datapipeline_spark.operators.privacy import (
-        k_anonymity_report,
-        suppress_small_classes,
-    )
+    from datapipeline_spark.operators.privacy import k_anonymity_report
 
     rows = (
         [("dk", 1, "red")] * 4
@@ -1289,9 +1278,6 @@ def test_k_anonymity_report_and_suppression(spark):
         ("dk", 2): (2, 1, 0, 0),
         ("se", 1): (5, 1, 1, 0),
     }
-    kept = suppress_small_classes(df, ["country", "band"], k=3)
-    assert kept.count() == 12  # exactly the (dk,2) pair dropped
-    assert kept.filter((F.col("country") == "dk") & (F.col("band") == 2)).count() == 0
 
 
 # -------------------------------------------------------------------- baskets
@@ -1628,26 +1614,6 @@ def test_greedy_max_coverage_picks(spark):
            for r in greedy_max_coverage(spark, df, "src", "item", k=4).collect()]
     # round1 tie a(3) vs c(3) -> 'a'; round2 c adds {4,5,6}=3; round3 b adds 0 -> stop
     assert got == [(1, "a", 3, 3), (2, "c", 3, 6)]
-
-
-def test_kaplan_meier_matches_hand_rolled(spark):
-    from datapipeline_spark.operators.survival import kaplan_meier, life_table
-
-    # durations with events (1) and censoring (0): classic toy example
-    obs = [(6, 1), (6, 1), (6, 0), (7, 1), (10, 0), (13, 1), (16, 0)]
-    df = spark.createDataFrame(obs, "t long, ev int")
-    lt = {r.t: (r.n_risk, r.d_events, r.c_censored)
-          for r in life_table(df, "t", "ev").collect()}
-    assert lt[6] == (7, 2, 1)   # all 7 at risk at t=6
-    assert lt[7] == (4, 1, 0)
-    assert lt[13] == (2, 1, 0)
-    km = {r.t: r.survival for r in kaplan_meier(df, "t", "ev").collect()}
-    # hand-rolled: S(6)=5/7, S(7)=5/7*3/4, S(13)=...*1/2
-    import math
-    assert math.isclose(km[6], 5 / 7, rel_tol=1e-12)
-    assert math.isclose(km[7], 5 / 7 * 3 / 4, rel_tol=1e-12)
-    assert math.isclose(km[10], km[7], rel_tol=0)   # censoring-only step: flat
-    assert math.isclose(km[13], 5 / 7 * 3 / 4 * 0.5, rel_tol=1e-12)
 
 
 def test_bucketed_value_rank_equals_global_window(spark):
@@ -2121,10 +2087,9 @@ def test_multi_value_rank_matches_per_metric_ranks(spark):
 
 
 class TestEditDistanceJoins:
-    """The two exact edit-distance join algorithms must equal the naive
-    blocked self-join bit-for-bit: PassJoin (segment pigeonhole, any k —
-    best on high-entropy strings) and SymDelete (deletion neighborhoods,
-    k<=2 — immune to shared constant prefixes)."""
+    """The exact edit-distance join, SymDelete (deletion neighborhoods,
+    k<=2 — immune to shared constant prefixes), must equal the naive
+    blocked self-join bit-for-bit."""
 
     def _brute(self, df, k):
         a = df.selectExpr("blk", "id AS id_a", "s AS sa")
@@ -2137,29 +2102,20 @@ class TestEditDistanceJoins:
             .select("blk", "id_a", "id_b", "dist")
         )
 
-    def _random_df(self, spark, seed, min_len=0):
+    def _random_df(self, spark, seed):
         import random
 
         rng = random.Random(seed)
         rows = [
-            (i, i % 3, "".join(rng.choice("abc") for _ in range(rng.randint(min_len, 12))))
+            (i, i % 3, "".join(rng.choice("abc") for _ in range(rng.randint(0, 12))))
             for i in range(300)
         ]
         return spark.createDataFrame(rows, "id: long, blk: int, s: string")
 
-    def test_passjoin_equals_brute(self, spark):
-        from datapipeline_spark.dedup.passjoin import edit_distance_join
-
-        df = self._random_df(spark, 7, min_len=1)
-        for k in (1, 2, 3):
-            got = sorted(map(tuple, edit_distance_join(df, "id", "s", k, ["blk"]).collect()))
-            want = sorted(map(tuple, self._brute(df, k).collect()))
-            assert got == want, k
-
     def test_symdelete_equals_brute_including_empty_strings(self, spark):
         from datapipeline_spark.dedup.symdelete import deletion_join
 
-        df = self._random_df(spark, 11, min_len=0)
+        df = self._random_df(spark, 11)
         for k in (1, 2):
             got = sorted(map(tuple, deletion_join(df, "id", "s", k, ["blk"]).collect()))
             want = sorted(map(tuple, self._brute(df, k).collect()))

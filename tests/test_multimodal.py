@@ -67,24 +67,3 @@ def test_fake_codec_still_available(spark):
     df = _media_df(spark, [("image", _ppm_bytes(8, 8))])
     row = decode_media(df, codec="fake").collect()[0]
     assert row.width is not None  # fake path unaffected
-
-
-def test_real_features_ppm_and_wav(spark):
-    from datapipeline_spark.multimodal.blobs import extract_real_features
-
-    df = _media_df(
-        spark,
-        [("image", _ppm_bytes(32, 32, seed=3)), ("audio", _wav_bytes(8000))],
-    )
-    got = {r.media_id: np.array(r.feature) for r in extract_real_features(df).collect()}
-    img, aud = got[0], got[1]
-    assert img.shape == (16,) and aud.shape == (16,)
-    # image: channel means in (0,1), histogram sums to ~1
-    assert np.all(img[:3] > 0) and np.all(img[:3] < 1)
-    assert abs(img[6:].sum() - 1.0) < 1e-5
-    # audio: sine wave has RMS ~ 0.43 and normalized band energies
-    assert 0.3 < aud[0] < 0.6
-    assert abs(aud[2:].sum() - 1.0) < 1e-5
-    # determinism
-    again = {r.media_id: np.array(r.feature) for r in extract_real_features(df).collect()}
-    assert np.array_equal(got[0], again[0]) and np.array_equal(got[1], again[1])

@@ -342,6 +342,48 @@ def test_unknown_stream_reference_fails(tmp_path):
         load_project(root)
 
 
+def test_source_parse_rejects_infinity_passes_nan(spark, tmp_path):
+    """±Inf raises at the parse boundary, naming the source and column,
+    for a JSONL `Infinity` constant and a CSV `inf` cell alike; NaN passes
+    through as a double (the operators treat it as missing)."""
+    from datapipeline_spark.plans import load_project
+    from datapipeline_spark.plans.compiler import load_source
+
+    root = tmp_path / "inf"
+    _write(root / "project.yaml", "schema_version: 3\nname: inf\n")
+    t0, t1 = "2024-01-01T00:00:00Z", "2024-01-01T01:00:00Z"
+    for sid, value in (("j.inf", "Infinity"), ("j.nan", "NaN")):
+        _write(
+            root / "data" / f"{sid}.jsonl",
+            f'{{"time": "{t0}", "value": 1.5}}\n{{"time": "{t1}", "value": {value}}}\n',
+        )
+        _write(
+            root / "sources" / f"{sid}.yaml",
+            f"id: {sid}\nparser: {{ entrypoint: core.temporal_record }}\n"
+            f"loader: {{ path: data/{sid}.jsonl, reader: {{ format: jsonl }} }}\n",
+        )
+    for sid, value in (("c.inf", "inf"), ("c.nan", "NaN")):
+        _write(root / "data" / f"{sid}.csv", f"time;value\n{t0};1.5\n{t1};{value}\n")
+        _write(
+            root / "sources" / f"{sid}.yaml",
+            f"id: {sid}\nparser: {{ entrypoint: core.temporal.csv }}\n"
+            f"loader: {{ path: data/{sid}.csv, reader: {{ format: csv }} }}\n",
+        )
+    defn = load_project(root)
+
+    def values(sid):
+        df = load_source(spark, defn.sources[sid], defn)
+        return [r.value for r in df.orderBy("time").collect()]
+
+    for sid in ("j.inf", "c.inf"):
+        msg = f"Infinite values are not allowed in source '{sid}' column 'value'"
+        with pytest.raises(Exception, match=msg):
+            values(sid)
+    for sid in ("j.nan", "c.nan"):
+        got = values(sid)
+        assert got[0] == 1.5 and math.isnan(got[1])
+
+
 def test_beyond_reference_transforms_in_yaml_grammar(spark):
     """ewma / rolling_corr are reachable from the declarative plan layer with
     the same per-stream transform shape as the reference grammar."""

@@ -160,51 +160,6 @@ def test_broadcast_stream_missing_match_raises(spark):
         broadcast_stream(primary, glob).collect()
 
 
-# ------------------------------------------------------- validation contracts
-
-
-def test_validate_stream_passes_clean(spark):
-    from datapipeline_spark.operators.validate import validate_stream
-
-    df = spark.createDataFrame(
-        [("a", "2024-01-01T00:00:00", 1.0), ("a", "2024-01-01T01:00:00", 2.0)],
-        "g string, time string, v double",
-    ).selectExpr("g", "cast(time as timestamp) time", "v")
-    assert validate_stream(df, ["g"]) is df
-
-
-def test_validate_stream_duplicate_keys(spark):
-    import pytest as _pytest
-
-    from datapipeline_spark.operators.validate import ContractViolation, validate_stream
-
-    df = spark.createDataFrame(
-        [("a", "2024-01-01T00:00:00", 1.0), ("a", "2024-01-01T00:00:00", 2.0)],
-        "g string, time string, v double",
-    ).selectExpr("g", "cast(time as timestamp) time", "v")
-    with _pytest.raises(ContractViolation, match="duplicate key"):
-        validate_stream(df, ["g"])
-
-
-def test_validate_stream_infinity_and_null_time(spark):
-    import pytest as _pytest
-
-    from datapipeline_spark.operators.validate import ContractViolation, validate_stream
-
-    inf_df = spark.createDataFrame(
-        [("a", "2024-01-01T00:00:00", float("inf"))],
-        "g string, time string, v double",
-    ).selectExpr("g", "cast(time as timestamp) time", "v")
-    with _pytest.raises(ContractViolation, match="infinite"):
-        validate_stream(inf_df, ["g"])
-
-    null_t = spark.createDataFrame(
-        [("a", None, 1.0)], "g string, time timestamp, v double"
-    )
-    with _pytest.raises(ContractViolation, match="null time"):
-        validate_stream(null_t, ["g"])
-
-
 class TestAnalyticsQueries:
     """Hand-computed golden values for the event-analytics queries (their
     oracles check engine parity; these pin the intended semantics)."""

@@ -12,7 +12,6 @@ from datapipeline_spark.sources import (
     read_csv,
     read_json,
     read_jsonl,
-    temporal_csv,
     time_ticks,
 )
 
@@ -35,27 +34,6 @@ def test_read_csv_duplicate_header_rejected(spark, tmp_path):
 def test_read_csv_bad_delimiter(spark):
     with pytest.raises(ValueError, match="single character"):
         read_csv(spark, "/nonexistent", delimiter=";;")
-
-
-def test_temporal_csv_decimal_comma(spark, tmp_path):
-    p = tmp_path / "el.csv"
-    p.write_text(
-        'HourUTC;PriceArea;SpotPriceDKK\n'
-        '2022-01-01 03:00;DK1;124,51\n'
-        '2022-01-01 04:00;DK1;"1.234,56"\n'
-    )
-    df = temporal_csv(
-        spark,
-        str(p),
-        time_field="HourUTC",
-        time_format="yyyy-MM-dd HH:mm",
-        value_fields={"price": "SpotPriceDKK"},
-        attrs=["PriceArea"],
-        decimal=",",
-    )
-    rows = {r["time"].hour: r for r in df.collect()}
-    assert rows[3]["price"] == 124.51
-    assert rows[3]["PriceArea"] == "DK1"
 
 
 def test_gzip_jsonl_roundtrip(spark, tmp_path):
@@ -239,54 +217,6 @@ def test_ensure_bucketed_table_reregisters_without_rewrite(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS eb_right")
 
 
-def test_write_pickle_roundtrip_atomic(spark, tmp_path):
-    import pickle
-
-    from datapipeline_spark.io import write_pickle
-
-    path = str(tmp_path / "out.pkl")
-    df = spark.range(5).selectExpr("id", "id * 1.5 AS v", "concat('r', id) AS s")
-    n = write_pickle(df, path)
-    assert n == 5
-    assert not os.path.exists(path + ".tmp")  # atomic rename, no temp left
-    items = []
-    with open(path, "rb") as fh:
-        while True:
-            try:
-                items.append(pickle.load(fh))
-            except EOFError:
-                break
-    assert len(items) == 5
-    assert {it["id"] for it in items} == set(range(5))
-    assert items[0].keys() == {"id", "v", "s"}
-    with pytest.raises(FileExistsError):
-        write_pickle(df, path, overwrite=False)
-
-
-def test_write_stdout_jsonl_and_txt(spark):
-    import io as _io
-    import json
-
-    from datapipeline_spark.io import write_stdout
-
-    df = spark.range(3).selectExpr("id", "concat('x', id) AS s")
-    buf = _io.StringIO()
-    n = write_stdout(df, format="jsonl", stream=buf)
-    assert n == 3
-    lines = [json.loads(l) for l in buf.getvalue().strip().split("\n")]
-    assert {l["s"] for l in lines} == {"x0", "x1", "x2"}
-
-    buf = _io.StringIO()
-    n = write_stdout(df.select("s"), format="txt", limit=2, stream=buf)
-    assert n == 2
-    assert all(l.startswith("x") for l in buf.getvalue().strip().split("\n"))
-
-    with pytest.raises(ValueError, match="one"):
-        write_stdout(df, format="txt", stream=_io.StringIO())
-    with pytest.raises(ValueError, match="Unsupported"):
-        write_stdout(df, format="xml", stream=_io.StringIO())
-
-
 def test_orc_roundtrip(spark, tmp_path):
     from datapipeline_spark.io import write_orc
     from datapipeline_spark.sources import read_orc_glob
@@ -300,125 +230,3 @@ def test_orc_roundtrip(spark, tmp_path):
     # partition pruning reaches the ORC scan
     plan = back.filter("k = '1'")._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(k" in plan
-
-
-def test_compact_files(spark, tmp_path):
-    import os
-
-    from datapipeline_spark.io import compact_files
-
-    path = str(tmp_path / "frag.parquet")
-    # fragment: 24 tiny files
-    spark.range(10000).selectExpr("id", "id % 7 AS k").repartition(24).write.parquet(path)
-    n_before = sum(
-        1 for f in os.listdir(path) if f.endswith(".parquet")
-    )
-    assert n_before == 24
-    before = spark.read.parquet(path).groupBy().sum("id", "k").collect()
-    n_after = compact_files(spark, path, target_file_mb=128, sort_within_by=["k"])
-    assert n_after == 1  # tiny data -> one target-sized file
-    files = [f for f in os.listdir(path) if f.endswith(".parquet")]
-    assert len(files) == n_after
-    after = spark.read.parquet(path).groupBy().sum("id", "k").collect()
-    assert before == after
-
-
-def test_compact_files_recovers_interrupted_swap(spark, tmp_path):
-    """Crash between the two swap renames leaves the table at __old__;
-    the next invocation must restore it and complete a clean compaction
-    (no data stranded, no reader-visible residue)."""
-    import os
-
-    from datapipeline_spark.io import compact_files
-
-    path = str(tmp_path / "t")
-    spark.range(100).selectExpr("id AS k", "id * 2 AS v").repartition(8).write.parquet(path)
-    # simulate the torn state: path renamed away, staging left behind
-    os.rename(path, path + "__old__")
-    os.makedirs(path + "__compacting__")
-    with open(path + "__compacting__/garbage", "w") as f:
-        f.write("stale")
-
-    n = compact_files(spark, path, target_file_mb=128)
-    assert n == 1
-    assert not os.path.exists(path + "__old__")
-    assert not os.path.exists(path + "__compacting__")
-    assert spark.read.parquet(path).count() == 100
-
-
-def test_versioned_table_commit_timetravel_compact_vacuum(spark, tmp_path):
-    """Manifest-based table: atomic version commits, time travel, atomic
-    compaction (old versions stay readable), vacuum reclaims only
-    unreferenced data dirs."""
-    import os
-
-    from datapipeline_spark.io import (
-        compact_version,
-        current_version,
-        read_version,
-        vacuum,
-        write_version,
-    )
-
-    path = str(tmp_path / "vt")
-    v1 = write_version(spark, spark.range(0, 10).selectExpr("id", "id * 2 AS v"), path)
-    v2 = write_version(spark, spark.range(10, 15).selectExpr("id", "id * 2 AS v"), path)
-    assert (v1, v2) == (1, 2) and current_version(spark, path) == 2
-    assert read_version(spark, path).count() == 15
-    assert read_version(spark, path, 1).count() == 10  # time travel
-
-    v3 = compact_version(spark, path)
-    assert v3 == 3 and read_version(spark, path).count() == 15
-    assert read_version(spark, path, 2).count() == 15  # old version intact
-
-    # overwrite starts a fresh file list
-    v4 = write_version(
-        spark, spark.range(100, 103).selectExpr("id", "id AS v"), path, mode="overwrite"
-    )
-    assert read_version(spark, path).count() == 3
-
-    # grace_minutes=0: the test's dirs are seconds old; production default
-    # (60 min) would skip them to protect concurrent in-flight writers
-    removed = vacuum(spark, path, keep_last=2, grace_minutes=0)  # keeps v3, v4
-    assert removed >= 1
-    assert read_version(spark, path, 4).count() == 3
-    assert read_version(spark, path, 3).count() == 15
-    import pytest
-
-    with pytest.raises(Exception):
-        read_version(spark, path, 1)  # vacuumed away
-
-    # a crashed commit leaves only a tmp manifest — invisible to readers,
-    # reclaimed by vacuum; a PUBLISHED vN manifest is a committed version
-    # that is never deleted or superseded: the next writer serializes
-    # after it instead of clobbering it (no lost writes)
-    man_dir = os.path.join(path, "_manifests")
-    with open(os.path.join(man_dir, ".tmp-deadbeef.json"), "w") as f:
-        f.write('{"version": 99, "mode": "append", "dirs": []}')
-    assert current_version(spark, path) == 4  # tmp is invisible
-    with open(os.path.join(man_dir, "v00000005.json"), "w") as f:
-        f.write('{"version": 5, "mode": "append", "dirs": []}')
-    assert current_version(spark, path) == 5  # committed the instant it appears
-    v6 = write_version(spark, spark.range(1).selectExpr("id", "id AS v"), path)
-    assert v6 == 6 and read_version(spark, path).count() == 1
-    assert os.path.exists(os.path.join(man_dir, "v00000005.json"))  # untouched
-    vacuum(spark, path, keep_last=2, grace_minutes=0)
-    assert not os.path.exists(os.path.join(man_dir, ".tmp-deadbeef.json"))
-    # and with the default grace period a FRESH unreferenced dir survives
-    with open(os.path.join(man_dir, ".tmp-inflight.json"), "w") as f:
-        f.write('{}')
-    vacuum(spark, path, keep_last=2)
-    assert os.path.exists(os.path.join(man_dir, ".tmp-inflight.json"))
-    os.remove(os.path.join(man_dir, ".tmp-inflight.json"))
-
-
-def test_versioned_table_schema_evolution(spark, tmp_path):
-    from datapipeline_spark.io import read_version, write_version
-
-    path = str(tmp_path / "evo")
-    write_version(spark, spark.range(3).selectExpr("id"), path)
-    write_version(spark, spark.range(3, 5).selectExpr("id", "id * 2 AS extra"), path)
-    df = read_version(spark, path)
-    assert set(df.columns) == {"id", "extra"}
-    rows = {r.id: r.extra for r in df.collect()}
-    assert rows[1] is None and rows[4] == 8  # old files null-fill new column

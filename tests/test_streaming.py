@@ -52,17 +52,6 @@ def test_rolling_mean_stream(spark, tmp_path):
     assert b == [10.0, 10.5, 11.5, 12.5]
 
 
-def test_sequence_windows_stream(spark, tmp_path):
-    from datapipeline_spark.streaming import sequence_windows_stream, stream_jsonl_source
-
-    src = stream_jsonl_source(spark, _feed(tmp_path, _rows(5)), SCHEMA)
-    sdf = sequence_windows_stream(src, "value", size=3, entity_keys=["loc"], stride=2)
-    got = _run(sdf, ["loc", "time"])
-    a = [(t.hour, seq) for t, loc, seq in got if loc == "a"]
-    # full windows at n=3 (hours 0-2) and n=5 (hours 2-4); stride 2
-    assert a == [(2, [0.0, 1.0, 2.0]), (4, [2.0, 3.0, 4.0])]
-
-
 def test_cadence_assembly_stream(spark, tmp_path):
     from datapipeline_spark.streaming import cadence_assembly_stream, stream_jsonl_source
 
@@ -232,45 +221,6 @@ def test_stream_static_enrich_matches_batch(spark):
     assert a == b and len(a) > 0
 
 
-def test_idempotent_batch_sink_exactly_once(spark, tmp_path):
-    """foreachBatch sink: at-least-once replays of the same batch_id commit
-    exactly once (idempotence via the _SUCCESS marker), and the sink output
-    reads back equal to the batch content."""
-    import os
-
-    from datapipeline_spark.streaming import idempotent_batch_sink
-
-    src = str(tmp_path / "src")
-    spark.range(100).selectExpr("id", "id * 2 AS v").coalesce(1).write.parquet(src)
-    schema = "id long, v long"
-    stream = spark.readStream.schema(schema).parquet(src)
-
-    out = str(tmp_path / "sink")
-    process = idempotent_batch_sink(out)
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120)
-
-    got = spark.read.parquet(out)
-    assert got.count() == 100
-    assert sorted(r["v"] for r in got.collect()) == [2 * i for i in range(100)]
-
-    # simulate the at-least-once replay: same batch_id, same data
-    batch_dirs = [d for d in os.listdir(out) if d.startswith("batch_id=")]
-    assert len(batch_dirs) == 1
-    replay_id = int(batch_dirs[0].split("=")[1])
-    process(spark.read.parquet(src), replay_id)  # must be a no-op
-    assert spark.read.parquet(out).count() == 100
-
-    # a NEW batch id commits normally
-    process(spark.range(5).selectExpr("id", "id AS v"), replay_id + 1)
-    assert spark.read.parquet(out).count() == 105
-
-
 def test_multi_microbatch_equals_single_batch(spark, tmp_path):
     """State carries correctly across micro-batch boundaries: processing the
     source one file per trigger (3 micro-batches) must produce the same
@@ -357,57 +307,6 @@ def test_ewma_stream_matches_batch_bit_exact(spark, tmp_path):
     assert got == want  # bit-exact, no tolerance
 
 
-def test_incremental_rollup_fold_equals_one_shot(spark, tmp_path):
-    """Maintaining the per-(user, day) rollup one micro-batch at a time must
-    equal aggregating everything at once — the continuous-aggregate
-    refresh invariant (all counters associative integers)."""
-    from pyspark.sql import functions as F
-
-    from datapipeline_spark.streaming.ops import incremental_rollup_sink
-
-    src = str(tmp_path / "src")
-    state = str(tmp_path / "rollup")
-    rows = [
-        (i % 9, f"2024-01-{1 + i % 5:02d} 0{i % 8}:00:00", (i * 7) % 100 / 4.0)
-        for i in range(200)
-    ]
-    df = (
-        spark.createDataFrame(rows, "user_id long, ts string, v double")
-        .selectExpr(
-            "user_id",
-            "CAST(ts AS TIMESTAMP) AS time",
-            "CAST(round(v * 100) AS BIGINT) AS v100",
-        )
-        .withColumn("day", F.date_trunc("day", F.col("time")))
-        .withColumn("n", F.lit(1).cast("long"))
-        .select("user_id", "day", "n", "v100")
-    )
-    df.repartition(4).write.parquet(src)  # 4 files -> 4 micro-batches
-
-    stream = (
-        spark.readStream.schema("user_id long, day timestamp, n long, v100 long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            incremental_rollup_sink(state, ["user_id", "day"], ["n", "v100"])
-        )
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(180)
-
-    want = sorted(
-        map(tuple, df.groupBy("user_id", "day").agg(
-            F.sum("n").alias("n"), F.sum("v100").alias("v100")
-        ).collect())
-    )
-    got = sorted(map(tuple, spark.read.parquet(state).collect()))
-    assert got == want and len(got) > 0
-
-
 def test_profile_stream_fold_equals_one_shot(spark, tmp_path):
     """profile_stream's applyInPandasWithState fold: folding the source
     over 3 micro-batches must end at the same per-key profile as one
@@ -454,47 +353,6 @@ def test_profile_stream_fold_equals_one_shot(spark, tmp_path):
     assert len(merged) == 5
     for c in ["n_events", "total_cents", "min_value", "max_value"]:
         assert (merged[c] == merged[f"{c}_want"]).all(), c
-
-
-def test_expectations_sink_fold_equals_one_shot(spark, tmp_path):
-    """Streaming DQ ledger: folding per-batch expectation reports over 3
-    micro-batches ends at exactly the one-shot batch report (associative
-    integer counters; ppm recomputed from folded integers)."""
-    from datapipeline_spark.operators.expect import Expectation, expectation_report
-    from datapipeline_spark.streaming import expectations_sink
-
-    rules = [
-        Expectation("non_neg", "v >= 0", "warn"),
-        Expectation("present", "v IS NOT NULL", "warn"),
-    ]
-    src = str(tmp_path / "src")
-    ledger = str(tmp_path / "ledger")
-    rows = [(i, float(i - 10) if i % 4 else None) for i in range(30)]
-    df = spark.createDataFrame(rows, "id long, v double")
-    df.repartition(3).write.parquet(src)
-
-    stream = (
-        spark.readStream.schema("id long, v double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(expectations_sink(ledger, rules))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120)
-
-    got = {
-        r.rule: (r.n_rows, r.n_violations, r.violation_ppm)
-        for r in spark.read.parquet(ledger).collect()
-    }
-    want = {
-        r.rule: (r.n_rows, r.n_violations, r.violation_ppm)
-        for r in expectation_report(df, rules).collect()
-    }
-    assert got == want
 
 
 def test_near_dup_filter_stream_keeps_first_and_passes_sigless(spark, tmp_path):
@@ -587,43 +445,6 @@ def test_cusum_stream_matches_batch_across_batches(spark, tmp_path):
     assert q.awaitTermination(180)
     got = {(r.user_id, r.time): r.c for r in spark.table("cusum_stream_t").collect()}
     assert got == want and any(v == 0 for v in want.values())
-
-
-def test_versioned_sink_exactly_once_across_replay(spark, tmp_path):
-    """Each micro-batch commits as a table version with its batch_id in the
-    manifest; re-delivering a batch (restart replay) is a no-op, so the
-    table holds exactly one copy of every row."""
-    from datapipeline_spark.io import manifest_info, read_version, versioned_sink
-
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "table")
-    import time as _time
-
-    for lo, hi in ((0, 5), (5, 9)):
-        spark.range(lo, hi).selectExpr("id", "id * 10 AS v").coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        _time.sleep(1.1)
-
-    sink = versioned_sink(out)
-    stream = (
-        spark.readStream.schema("id long, v long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = stream.writeStream.foreachBatch(sink).trigger(availableNow=True).start()
-    assert q.awaitTermination(180)
-    assert read_version(spark, out).count() == 9
-    info = manifest_info(spark, out)
-    assert info["batch_id"] == 1 and info["version"] == 2
-
-    # simulate a replay of the last batch: identical batch_id must be skipped
-    replay = spark.range(5, 9).selectExpr("id", "id * 10 AS v")
-    sink(replay, 1)
-    assert read_version(spark, out).count() == 9  # no duplicates
-    # a genuinely new batch still commits
-    sink(spark.range(9, 10).selectExpr("id", "id * 10 AS v"), 2)
-    assert read_version(spark, out).count() == 10
 
 
 def test_streaming_hll_equals_batch(spark, tmp_path):
