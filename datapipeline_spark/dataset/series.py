@@ -67,16 +67,26 @@ def encode_component_expr(field: str, col: Column, dtype) -> Column:
     return F.concat(prefix, value)
 
 
-def encode_series_id_expr(base_id: str, df: DataFrame, fields: Sequence[str]) -> Column:
-    """series_id column: base, or base__<suffix components joined by '|'>."""
+def _check_base_id(base_id: str) -> None:
     if "__" in base_id:
         raise ValueError("series base id must not contain reserved separator '__'")
-    if not fields:
-        return F.lit(base_id)
+
+
+def series_suffix_expr(df: DataFrame, fields: Sequence[str]) -> Column:
+    """The series-id suffix of a row: its `@field:value` components joined
+    by '|'."""
     comps = [
         encode_component_expr(f, F.col(f), df.schema[f].dataType) for f in fields
     ]
-    return F.concat(F.lit(base_id + "__"), F.concat_ws("|", *comps))
+    return F.concat_ws("|", *comps)
+
+
+def encode_series_id_expr(base_id: str, df: DataFrame, fields: Sequence[str]) -> Column:
+    """series_id column: base, or base__<suffix components joined by '|'>."""
+    _check_base_id(base_id)
+    if not fields:
+        return F.lit(base_id)
+    return F.concat(F.lit(base_id + "__"), series_suffix_expr(df, fields))
 
 
 def project_series(
@@ -101,6 +111,52 @@ def project_series(
         F.col(time_field).alias("time"),
         *[F.col(k) for k in entity_keys],
         F.col(value_field).alias("value"),
+    )
+
+
+def project_stream_series(
+    df: DataFrame,
+    values: Sequence[tuple[str, str]],
+    partition_by: Sequence[str] = (),
+    entity_keys: Sequence[str] = (),
+) -> DataFrame:
+    """Project several fields of ONE stream into long series rows in one
+    pass over the stream: ``values`` pairs each base id with its value
+    field (a field may serve two ids). The stream's plan appears once, so
+    its transform chain runs once, where a union of one
+    ``project_series`` per field would repeat it per field.
+
+    Each stream row selects time, the keys, its series-id suffix (encoded
+    once per row, not per field) and the fields under positional aliases;
+    one ``inline(array(struct(base_id, value)…))`` then emits a long row
+    per (stream row, base id). The array widens the value types by the
+    same rule as a union of the per-field projections.
+    Output: (series_id, time, *entity_keys, value, base_id).
+    """
+    for base_id, _ in values:
+        _check_base_id(base_id)
+    leftover = [f for f in partition_by if f not in entity_keys]
+    suffix = ["__suffix__"] if leftover else []
+    rows = df.select(
+        "time",
+        *entity_keys,
+        *[series_suffix_expr(df, leftover).alias(c) for c in suffix],
+        *[F.col(field).alias(f"__v{i}__") for i, (_, field) in enumerate(values)],
+    )
+    pairs = F.array(
+        *[
+            F.struct(F.lit(base_id).alias("base_id"), F.col(f"__v{i}__").alias("value"))
+            for i, (base_id, _) in enumerate(values)
+        ]
+    )
+    long_df = rows.select("time", *entity_keys, *suffix, F.inline(pairs))
+    sid = (
+        F.concat(F.col("base_id"), F.lit("__"), F.col("__suffix__"))
+        if leftover
+        else F.col("base_id")
+    )
+    return long_df.select(
+        sid.alias("series_id"), "time", *entity_keys, "value", "base_id"
     )
 
 

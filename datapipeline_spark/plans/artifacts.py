@@ -10,6 +10,18 @@ The skip logic hashes **configs and file stats, never data**, so it ports
 unchanged; each producer writes Parquet plus a JSON manifest carrying the
 fingerprint. The series and scaler producers share the staged series frame
 (``CompiledProject.series``), so the stream transforms run once for both.
+
+Read-back rule: an artifact is fresh when its manifest carries the
+fingerprint the current configs and source-file stats hash to (with its
+dependencies' fingerprints). ``build_artifacts`` skips fresh artifacts
+without reading them, and dataset builds read the fresh series and scaler
+artifacts instead of re-running the stream transforms (``fresh_frame``;
+the reference's dataset pipeline reads the series artifact the same way).
+Its limit is the reference's: the fingerprint covers configs and file
+stats, not code, so a change to an operator or a registered mapper,
+parser or loader needs an ``artifact_revision`` bump in project.yaml. A
+dataset reading a source whose data the fingerprint cannot see (an
+``http`` or entry-point loader) always computes.
 """
 
 from __future__ import annotations
@@ -69,19 +81,29 @@ def topological_order(keys: set[str]) -> list[str]:
 # --------------------------------------------------------------------------- #
 
 
+def _files(path: Path) -> list[Path]:
+    """``path``, or every file under it (recursively, sorted) when it is a
+    directory: a Spark-written parquet directory whose part file is
+    rewritten in place must change the snapshot."""
+    if path.is_dir():
+        return sorted(f for f in path.rglob("*") if f.is_file())
+    return [path]
+
+
 def _source_snapshot(compiled: CompiledProject, source_id: str) -> str:
     """sha256 over the source config + local file (path, size, mtime_ns)
-    stats (reference fingerprints.py `_hash_source_inputs`)."""
+    stats (reference fingerprints.py `_hash_source_inputs`), taken for
+    every file under a directory path or glob match."""
     defn = compiled.definition
     cfg = defn.sources[source_id]
     h = hashlib.sha256()
     h.update(json.dumps(cfg.model_dump(mode="json"), sort_keys=True).encode())
     if not cfg.is_synthetic and cfg.loader.transport == "fs":
         path = Path(defn.data_path(cfg.loader.path))
-        files = sorted(path.parent.glob(path.name)) if any(
+        matches = sorted(path.parent.glob(path.name)) if any(
             ch in path.name for ch in "*?["
         ) else ([path] if path.exists() else [])
-        for f in files:
+        for f in (f for match in matches for f in _files(match)):
             st = f.stat()
             h.update(f"{f}|{st.st_size}|{st.st_mtime_ns}".encode())
     return h.hexdigest()
@@ -116,6 +138,12 @@ def _stream_closure(compiled: CompiledProject, stream_id: str) -> tuple[list[str
     return sorted(streams), sorted(set(sources))
 
 
+def _dataset_streams(compiled: CompiledProject) -> list[str]:
+    cfg = compiled.definition.dataset
+    specs: list[FeatureSpec] = [*cfg.features, *cfg.targets] if cfg else []
+    return sorted({spec.stream for spec in specs})
+
+
 def artifact_fingerprint(
     compiled: CompiledProject, key: str, dependency_hashes: dict[str, str]
 ) -> str:
@@ -124,16 +152,13 @@ def artifact_fingerprint(
     h = hashlib.sha256()
     h.update(f"revision={defn.project.artifact_revision}|key={key}".encode())
     h.update(json.dumps(dependency_hashes, sort_keys=True).encode())
-    specs: list[FeatureSpec] = [*cfg.features, *cfg.targets] if cfg else []
-    stream_ids: set[str] = set()
-    for spec in specs:
+    for spec in [*cfg.features, *cfg.targets] if cfg else []:
         h.update(json.dumps(spec.model_dump(mode="json"), sort_keys=True).encode())
-        stream_ids.add(spec.stream)
     if cfg is not None:
         h.update(json.dumps(cfg.sample.model_dump(mode="json"), sort_keys=True).encode())
         if key == SCALER and cfg.split is not None:
             h.update(json.dumps(cfg.split.model_dump(mode="json"), sort_keys=True).encode())
-    for sid in sorted(stream_ids):
+    for sid in _dataset_streams(compiled):
         streams, sources = _stream_closure(compiled, sid)
         for s in streams:
             h.update(
@@ -145,6 +170,29 @@ def artifact_fingerprint(
         for src in sources:
             h.update(_source_snapshot(compiled, src).encode())
     return h.hexdigest()
+
+
+def _fingerprints(compiled: CompiledProject, keys: set[str]) -> dict[str, str]:
+    """key → fingerprint for ``keys`` and everything they depend on, in
+    topological order (each key hashes its dependencies' fingerprints)."""
+    hashes: dict[str, str] = {}
+    for key in topological_order(keys):
+        hashes[key] = artifact_fingerprint(
+            compiled, key, {d: hashes[d] for d in DAG[key]}
+        )
+    return hashes
+
+
+def _fingerprint_sees_sources(compiled: CompiledProject) -> bool:
+    """Whether every source the dataset reads is a local file loader, the
+    only kind whose data the fingerprint snapshots. An ``http`` or
+    entry-point loader can return new data under an unchanged fingerprint."""
+    defn = compiled.definition
+    return all(
+        not defn.sources[src].is_synthetic and defn.sources[src].loader.transport == "fs"
+        for sid in _dataset_streams(compiled)
+        for src in _stream_closure(compiled, sid)[1]
+    )
 
 
 # --------------------------------------------------------------------------- #
@@ -257,47 +305,62 @@ class ArtifactStore:
         return target
 
 
+def _as_store(
+    compiled: CompiledProject, store: ArtifactStore | str | Path | None
+) -> ArtifactStore:
+    if store is None:
+        defn = compiled.definition
+        return ArtifactStore(defn.root / defn.project.paths.artifacts)
+    return store if isinstance(store, ArtifactStore) else ArtifactStore(store)
+
+
+def _is_fresh(store: ArtifactStore, key: str, fingerprint: str) -> bool:
+    """The one freshness rule: the artifact's manifest carries
+    ``fingerprint``."""
+    manifest = store.manifest(key)
+    return manifest is not None and manifest.get("fingerprint") == fingerprint
+
+
+def fresh_frame(compiled: CompiledProject, key: str) -> DataFrame | None:
+    """The artifact's parquet in the project's artifacts directory when it
+    is fresh (the rule ``build_artifacts`` skips on), else None; dataset
+    builds read it in place of recomputing. None as well when the dataset
+    reads a source the fingerprint cannot see. See the module docstring
+    for the rule's limit."""
+    if not _fingerprint_sees_sources(compiled):
+        return None
+    store = _as_store(compiled, None)
+    if not _is_fresh(store, key, _fingerprints(compiled, {key})[key]):
+        return None
+    return store.read(compiled, key)
+
+
 def build_artifacts(
     compiled: CompiledProject,
     store: ArtifactStore | str | Path | None = None,
     keys: set[str] | None = None,
     force: bool = False,
 ) -> dict[str, BuildResult]:
-    """Topological, fingerprint-skipped build (reference executor:95-205)."""
-    if store is None:
-        store = ArtifactStore(
-            compiled.definition.root / compiled.definition.project.paths.artifacts
-        )
-    elif not isinstance(store, ArtifactStore):
-        store = ArtifactStore(store)
-
+    """Topological, fingerprint-skipped build (reference executor:95-205).
+    Only a producer that runs reads its dependency back from the store, so
+    a build whose artifacts are all fresh runs no Spark job."""
+    store = _as_store(compiled, store)
     if keys is None:
         keys = {SERIES, METADATA, COVERAGE_STATS, TICKS}
         if dataset_requires_scaler(compiled):
             keys.add(SCALER)
-    results: dict[str, BuildResult] = {}
-    hashes: dict[str, str] = {}
-    frames: dict[str, DataFrame] = {}
-
     producers: dict[str, Callable[[], DataFrame]] = {
         SERIES: compiled.series,
-        METADATA: lambda: _build_metadata(compiled, frames[SERIES]),
-        COVERAGE_STATS: lambda: _build_coverage(compiled, frames[METADATA]),
+        METADATA: lambda: _build_metadata(compiled, store.read(compiled, SERIES)),
+        COVERAGE_STATS: lambda: _build_coverage(compiled, store.read(compiled, METADATA)),
         SCALER: lambda: _build_scaler(compiled),
         TICKS: lambda: _build_ticks(compiled),
     }
-
-    for key in topological_order(keys):
-        deps = {d: hashes[d] for d in DAG[key]}
-        fp = artifact_fingerprint(compiled, key, deps)
-        hashes[key] = fp
-        manifest = store.manifest(key)
-        if not force and manifest is not None and manifest.get("fingerprint") == fp:
+    results: dict[str, BuildResult] = {}
+    for key, fp in _fingerprints(compiled, keys).items():
+        if not force and _is_fresh(store, key, fp):
             results[key] = BuildResult(key, store.root / key, fp, skipped=True)
-            frames[key] = store.read(compiled, key)
             continue
-        df = producers[key]()
-        path = store.write(key, df, fp)
-        frames[key] = store.read(compiled, key)
+        path = store.write(key, producers[key](), fp)
         results[key] = BuildResult(key, path, fp, skipped=False)
     return results

@@ -15,9 +15,8 @@ from dataclasses import dataclass, field
 from typing import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import DoubleType, FloatType
 
-from datapipeline_spark.functions.values import no_infinity
+from datapipeline_spark.functions.values import holds_float, no_infinity
 from datapipeline_spark.operators.align import align_streams, broadcast_stream
 from datapipeline_spark.operators.record import (
     collapse,
@@ -66,9 +65,10 @@ def load_source(
     """Loader + parser for one source (reference sources/source.py:12-30).
 
     The parsed frame is the one parse boundary for ±Inf: every float/double
-    column raises at execution time on an infinite value (the reference
-    rejects it in domain/value.py:12-14). NaN passes through; the operators
-    treat it as missing."""
+    value raises at execution time on an infinite value, at top level, in
+    an array or in a struct field (the reference rejects it in
+    domain/value.py:12-14). NaN passes through; the operators treat it as
+    missing."""
     from datapipeline_spark.sources import readers
 
     if isinstance(cfg.loader, EntryPoint):
@@ -113,14 +113,12 @@ def load_source(
     if cfg.parser is not None:
         parser_fn = registry.resolve("parser", cfg.parser.entrypoint)
         df = parser_fn(df, cfg.parser.args)
-    floats = [
-        f.name for f in df.schema.fields if isinstance(f.dataType, (FloatType, DoubleType))
-    ]
-    if not floats:
-        return df
-    return df.withColumns(
-        {c: no_infinity(df[c], f"source {cfg.id!r} column {c!r}") for c in floats}
-    )
+    guarded = {
+        f.name: no_infinity(df[f.name], f"source {cfg.id!r} column {f.name!r}", f.dataType)
+        for f in df.schema.fields
+        if holds_float(f.dataType)
+    }
+    return df.withColumns(guarded) if guarded else df
 
 
 def apply_transform(
@@ -260,10 +258,13 @@ class CompiledProject:
     _series: DataFrame | None = None
 
     def series(self) -> DataFrame:
-        """The dataset's scalar long series frame, staged once behind a lazy
-        localCheckpoint (the reference's series cache): assembly, the scaler
-        fit and the series artifact read it instead of re-running the stream
-        transforms. Its blocks live as long as this object's frames."""
+        """The dataset's scalar long series frame, computed from the streams
+        and staged once behind a lazy localCheckpoint (the reference's
+        series cache): the series and scaler artifacts and a build without
+        fresh artifacts read it instead of re-running the stream transforms.
+        A build whose series artifact is fresh reads that parquet instead
+        (``artifacts.fresh_frame``; the fingerprint covers configs and file
+        stats, not code). Its blocks live as long as this object's frames."""
         if self._series is None:
             from datapipeline_spark.plans.dataset_build import scalar_series
 

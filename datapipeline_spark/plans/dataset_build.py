@@ -5,13 +5,18 @@ Reference lifecycle (pipelines/dataset/pipeline.py:69-246): assemble samples
 from the series artifact, label splits, fit/apply leakage-free per-fold
 scalers, run the fixed postprocess order, route folds.
 
-Spark computes each stream's transforms once per compiled project and the
-pivot once per build, because two frames sit behind lazy localCheckpoints:
-the scalar series frame (``CompiledProject.series``; read by the id scan,
-window clip, pivot and scaler fit) and the wide sample table after its last
-shuffle (the lattice), so postprocess, labels, scaling and every fold/role
-write are narrow work over one materialization. Staged blocks live as long
-as the DataFrames that own them.
+Spark runs each stream's transforms at most once per compiled project and
+the pivot once per build. The scalar series frame projects every stream
+once for all of its specs (``scalar_series``). A build reads the series and
+scaler artifacts when they are fresh (``artifacts.fresh_frame``: configs
+and source-file stats unchanged since ``build_artifacts`` wrote them; code
+changes are not seen, as with the reference's ``artifact_revision``), and
+otherwise the series frame staged behind a lazy localCheckpoint
+(``CompiledProject.series``; read by the id scan, window clip, pivot and
+scaler fit). The wide sample table after its last shuffle (the lattice)
+sits behind a second one, so postprocess, labels, scaling and every
+fold/role write are narrow work over one materialization. Staged blocks
+live as long as the DataFrames that own them.
 
 Each dataset rule has one owner in ``datapipeline_spark.dataset`` that this
 module calls rather than restates: ``fit_scaler``/``apply_scaler`` fit and
@@ -38,7 +43,7 @@ from datapipeline_spark.dataset.postprocess import (
 )
 from datapipeline_spark.dataset.sample import assemble_samples, rectangular_samples
 from datapipeline_spark.dataset.scaler import apply_scaler, fit_scaler
-from datapipeline_spark.dataset.series import project_series
+from datapipeline_spark.dataset.series import project_series, project_stream_series
 from datapipeline_spark.dataset.split import (
     hash_split_label,
     route_folds,
@@ -46,6 +51,7 @@ from datapipeline_spark.dataset.split import (
 )
 from datapipeline_spark.functions.time import floor_time_expr, parse_datetime_utc
 from datapipeline_spark.operators.window import sequence_windows
+from datapipeline_spark.plans.artifacts import SCALER, SERIES, fresh_frame
 from datapipeline_spark.plans.compiler import CompiledProject
 from datapipeline_spark.plans.config import DatasetConfig, FeatureSpec
 
@@ -57,7 +63,9 @@ def _long_frame(
     compiled: CompiledProject, spec: FeatureSpec, entity_keys: Sequence[str]
 ) -> DataFrame:
     """One feature/target → long series rows (series_id, time, *keys, value,
-    base_id). Sequence specs window the field into arrays first."""
+    base_id). Sequence specs window the field into arrays first; the build
+    uses it for those, and scalar specs project per stream in
+    ``scalar_series``."""
     df = compiled.stream(spec.stream)
     partition_by = compiled.partition_by(spec.stream)
     field = spec.field
@@ -82,20 +90,32 @@ def _long_frame(
 
 
 def scalar_series(compiled: CompiledProject) -> DataFrame:
-    """Long rows of every scalar feature/target, unioned: the frame
+    """Long rows of every scalar feature/target: the frame
     ``CompiledProject.series`` stages and the series artifact writes
-    (reference operations/artifacts/series.py:71-150). Sequence arrays do
-    not union with scalars; they assemble from their own long frames."""
+    (reference operations/artifacts/series.py:71-150). Each stream is
+    projected once for all of its specs (``project_stream_series``), so its
+    transform chain appears once in the plan; the per-stream frames are
+    unioned. Sequence arrays do not union with scalars; they assemble from
+    their own long frames."""
     cfg = _dataset(compiled)
     keys = list(cfg.sample.keys)
-    longs = [
-        _long_frame(compiled, spec, keys)
-        for spec in [*cfg.features, *cfg.targets]
-        if spec.sequence is None
-    ]
-    if not longs:
+    by_stream: dict[str, list[tuple[str, str]]] = {}
+    for spec in [*cfg.features, *cfg.targets]:
+        if spec.sequence is None:
+            by_stream.setdefault(spec.stream, []).append((spec.id, spec.field))
+    if not by_stream:
         raise ValueError("dataset has no scalar series")
-    return _union_all(longs)
+    return _union_all(
+        [
+            project_stream_series(
+                compiled.stream(stream_id),
+                values,
+                partition_by=compiled.partition_by(stream_id),
+                entity_keys=keys,
+            )
+            for stream_id, values in by_stream.items()
+        ]
+    )
 
 
 def _dataset(compiled: CompiledProject) -> DatasetConfig:
@@ -247,13 +267,25 @@ def _window_clip(wide, cadence, longs: Sequence[DataFrame], window_mode: str):
 def _build(compiled: CompiledProject, cfg: DatasetConfig) -> DatasetBuild:
     """``cfg`` is the project's dataset config, possibly with postprocess or
     split stripped (the preview stages); features, targets and sample keys
-    are the project's, which is what ``compiled.series()`` stages."""
+    are the project's, which is what ``compiled.series()`` stages and the
+    series artifact holds. The scaler artifact is read only for the
+    project's own config."""
     keys = list(cfg.sample.keys)
     cadence = cfg.sample.cadence
 
     specs = [(s, "feature") for s in cfg.features] + [(s, "target") for s in cfg.targets]
     seq_specs = [s for s, _ in specs if s.sequence is not None]
-    series = compiled.series() if len(seq_specs) < len(specs) else None
+    series = scaler_stats = None
+    if len(seq_specs) < len(specs):
+        series = fresh_frame(compiled, SERIES)
+        if series is None:
+            series = compiled.series()
+        # a stripped config (the samples preview drops the split) fits its
+        # own statistics
+        if cfg is compiled.definition.dataset:
+            scaler_stats = fresh_frame(compiled, SCALER)
+        if scaler_stats is None:
+            scaler_stats = fit_split_scaler(series, cfg)
     seq_longs = [_long_frame(compiled, s, keys) for s in seq_specs]
 
     col_base: dict[str, str] = {}
@@ -362,6 +394,6 @@ def _build(compiled: CompiledProject, cfg: DatasetConfig) -> DatasetBuild:
         feature_columns=sorted(feature_cols),
         target_columns=sorted(target_cols),
         column_base=col_base,
-        scaler_stats=fit_split_scaler(series, cfg) if series is not None else None,
+        scaler_stats=scaler_stats,
         fold_plan=fold_plan(cfg),
     )

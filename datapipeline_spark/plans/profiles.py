@@ -178,6 +178,15 @@ def _run_serve(
     )
     from datapipeline_spark.plans.dataset_build import build_dataset
 
+    # reference orchestration.py:60-91 — serve hydrates the artifact DAG
+    # (AUTO = fingerprint skip, FORCE = rebuild) BEFORE the dataset build,
+    # which reads the fresh series and scaler artifacts: a FORCE rewrite
+    # after the build would delete files its lazy frames still read
+    modes = {p.artifact_mode for p in profs}
+    if modes & {"AUTO", "FORCE"}:
+        from datapipeline_spark.plans.artifacts import build_artifacts
+
+        build_artifacts(compiled, force="FORCE" in modes)
     build = build_dataset(compiled)
     run_id = run_id or _dt.datetime.now(_dt.timezone.utc).strftime("%Y%m%dT%H%M%SZ")
     results: list[ProfileResult] = []
@@ -188,12 +197,6 @@ def _run_serve(
             log4j = {"CRITICAL": "FATAL", "WARNING": "WARN"}
             level = p.observability.logging.level
             compiled.spark.sparkContext.setLogLevel(log4j.get(level, level))
-        if p.artifact_mode in ("AUTO", "FORCE"):
-            # reference orchestration.py:60-91 — serve hydrates the artifact
-            # DAG before serving (AUTO = fingerprint skip, FORCE = rebuild)
-            from datapipeline_spark.plans.artifacts import build_artifacts
-
-            build_artifacts(compiled, force=(p.artifact_mode == "FORCE"))
         for output_id, df in _serve_frames(compiled, p, build).items():
             if p.limit:
                 df = df.limit(p.limit)

@@ -384,6 +384,41 @@ def test_source_parse_rejects_infinity_passes_nan(spark, tmp_path):
         assert got[0] == 1.5 and math.isnan(got[1])
 
 
+def test_source_parse_rejects_nested_infinity(spark, tmp_path):
+    """±Inf inside an array<double> element or a struct field raises,
+    naming the source and the column path; nested NaN and NULL arrays or
+    structs pass."""
+    from datapipeline_spark.plans import load_project
+    from datapipeline_spark.plans.compiler import load_source
+
+    root = tmp_path / "nested_inf"
+    _write(root / "project.yaml", "schema_version: 3\nname: nested_inf\n")
+    rows_of = {
+        "vec.inf": '{"vec": [1.0, Infinity], "s": {"x": 1.0}}',
+        "s.inf": '{"vec": [1.0], "s": {"x": -Infinity}}',
+        "ok": '{"vec": [NaN, 2.0], "s": {"x": NaN}}\n{"vec": null, "s": null}',
+    }
+    for sid, text in rows_of.items():
+        _write(root / "data" / f"{sid}.jsonl", text + "\n")
+        _write(
+            root / "sources" / f"{sid}.yaml",
+            f"id: {sid}\nloader: {{ path: data/{sid}.jsonl, reader: {{ format: jsonl }} }}\n",
+        )
+    defn = load_project(root)
+
+    def collect(sid):
+        return load_source(spark, defn.sources[sid], defn).collect()
+
+    for sid, path in (("vec.inf", "'vec' element"), ("s.inf", "'s' field 'x'")):
+        msg = f"Infinite values are not allowed in source '{sid}' column {path}"
+        with pytest.raises(Exception, match=msg):
+            collect(sid)
+    got = sorted(collect("ok"), key=lambda r: r.vec is None)
+    assert math.isnan(got[0].vec[0]) and got[0].vec[1] == 2.0
+    assert math.isnan(got[0].s.x)
+    assert got[1].vec is None and got[1].s is None
+
+
 def test_beyond_reference_transforms_in_yaml_grammar(spark):
     """ewma / rolling_corr are reachable from the declarative plan layer with
     the same per-stream transform shape as the reference grammar."""
