@@ -74,7 +74,9 @@ def iter_samples(
     limit: int | None = None,
 ) -> Iterator[dict]:
     """Stream sample rows as dicts (reference iter_samples, ml.py:137-146).
-    `toLocalIterator` keeps one partition on the driver at a time."""
+    `toLocalIterator` keeps one partition on the driver at a time.
+    ``fold``/``role`` pick one output (None: every fold and role);
+    ``limit`` caps the rows (None: all)."""
     df = dataset_frame(spark, project_dir, fold, role)
     if limit is not None:
         df = df.limit(limit)
@@ -108,6 +110,9 @@ def iter_model_batches(
     `toLocalIterator` (one partition on the driver at a time) and are
     packed row by row into `(batch, n)` NumPy arrays on the driver; a
     fixed-length sequence column contributes `len` matrix columns.
+    ``fold``/``role`` pick one output (None: all), ``batch_size`` bounds
+    the rows per batch, and ``strict_finite=False`` passes missing
+    values (as NaN) and infinities through where the default raises.
     """
     import numpy as np
 

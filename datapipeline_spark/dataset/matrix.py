@@ -12,7 +12,6 @@ already-aggregated matrix is collected for rendering.
 from __future__ import annotations
 
 from html import escape
-from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -27,9 +26,9 @@ PRESENT = "present"
 def availability_statuses(
     series: DataFrame,
     cadence: str,
-    series_ids: Sequence[str] | None = None,
 ) -> DataFrame:
-    """(bucket, series_id, status) over the dense bucket × id lattice.
+    """(bucket, series_id, status) over the dense bucket × id lattice; the
+    id axis is every series_id the rows carry.
 
     present > null within a bucket (any observed value marks the cell
     present, like the reference's per-cell upgrade logic); lattice cells with
@@ -59,12 +58,7 @@ def availability_statuses(
         .select(F.explode(F.sequence("lo", "hi", F.lit(step))).alias("s"))
         .select(F.timestamp_seconds("s").alias("bucket"))
     )
-    if series_ids is None:
-        ids = cells.select("series_id").distinct()
-    else:
-        ids = series.sparkSession.createDataFrame(
-            [(s,) for s in series_ids], "series_id string"
-        )
+    ids = cells.select("series_id").distinct()
     lattice = buckets.crossJoin(F.broadcast(ids))
     return (
         lattice.join(cells, ["bucket", "series_id"], "left")
@@ -85,7 +79,8 @@ def collect_matrix(
 ) -> tuple[list, list[str], dict]:
     """Bounded driver-side matrix: (sorted buckets, sorted ids,
     {(bucket, id): status}). Raises if the matrix exceeds `max_cells`
-    (reference matrix.py:106-112 guard)."""
+    (reference matrix.py:106-112 guard); callers keep the default, tests
+    lower it to reach the raise at small data."""
     rows = statuses.limit(max_cells + 1).collect()
     if len(rows) > max_cells:
         raise ValueError(

@@ -56,23 +56,21 @@ def select_columns_by_coverage(
 def conform_columns(
     df: DataFrame,
     contract: Sequence[tuple[str, str, int | None]],
-    strict: bool = True,
 ) -> DataFrame:
     """Order/materialize columns per the metadata contract
     (reference transforms/vector/conform.py:10-75): each entry is
     (name, kind 'scalar'|'list', list_len). Absent columns materialize as
-    null / [null]*len; unknown data columns are rejected when strict."""
+    null / [null]*len; unknown data columns are rejected."""
     contract_names = [name for name, _, _ in contract]
     key_cols = [c for c in df.columns if c not in contract_names]
-    if strict:
-        # every non-key column must be in the contract
-        unknown = [
-            c
-            for c in df.columns
-            if c not in contract_names and (c.startswith("feature") or c.startswith("target"))
-        ]
-        if unknown:
-            raise ValueError(f"conform: unknown columns {unknown}")
+    # every non-key column must be in the contract
+    unknown = [
+        c
+        for c in df.columns
+        if c not in contract_names and (c.startswith("feature") or c.startswith("target"))
+    ]
+    if unknown:
+        raise ValueError(f"conform: unknown columns {unknown}")
     cols: list[Column] = [F.col(c) for c in key_cols]
     for name, kind, list_len in contract:
         if name in df.columns:

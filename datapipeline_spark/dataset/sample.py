@@ -32,7 +32,6 @@ def assemble_samples(
     cadence: str,
     entity_keys: Sequence[str] = (),
     series_ids: Sequence[str] | None = None,
-    on_multiple: str = "last",
     sequence_ids: Sequence[str] = (),
     max_discovered_ids: int = MAX_DISCOVERED_SERIES_IDS,
 ) -> DataFrame:
@@ -41,9 +40,10 @@ def assemble_samples(
     - `series_ids`: explicit pivot list (recommended — static plan). None
       triggers a distinct scan (fine interactively, avoid at scale), bounded
       by `max_discovered_ids` — exceeding it raises rather than compiling an
-      unboundedly wide plan.
-    - `on_multiple`: per (bucket, entity, id) bucket collision policy:
-      'last' (by time — reference collapse-into-bucket), 'first', 'error'.
+      unboundedly wide plan (tests lower it to reach the raise at small
+      data; callers keep MAX_DISCOVERED_SERIES_IDS).
+    - A (bucket, entity, id) bucket holding several values keeps the last
+      by time (the reference collapses into the bucket).
     - `sequence_ids`: ids whose bucketed values become ordered lists
       (SeriesSequence semantics) instead of scalars.
     Output: sample.time (bucket start), entity keys, one column per id.
@@ -65,17 +65,7 @@ def assemble_samples(
         series_ids = [r[0] for r in probe]
 
     scalar_ids = [s for s in series_ids if s not in sequence_ids]
-    if on_multiple == "last":
-        scalar_agg = F.max_by(F.col("value"), F.col("time"))
-    elif on_multiple == "first":
-        scalar_agg = F.min_by(F.col("value"), F.col("time"))
-    elif on_multiple == "error":
-        scalar_agg = F.when(
-            F.count(F.lit(1)) > 1,
-            F.raise_error(F.lit("assemble_samples: duplicate value in bucket")),
-        ).otherwise(F.first("value"))
-    else:
-        raise ValueError(f"on_multiple must be last|first|error, got {on_multiple!r}")
+    scalar_agg = F.max_by(F.col("value"), F.col("time"))
 
     aggs = {}
     for sid in scalar_ids:

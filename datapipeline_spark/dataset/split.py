@@ -95,8 +95,6 @@ def stratified_exact_split(
     fractions_ppm: Sequence[tuple[str, int]],
     seed: str = "split",
     out: str = "split",
-    hash_bits: int = 52,
-    bucket_bits: int = 8,
 ) -> DataFrame:
     """EXACT stratified split: within every stratum, split sizes are the
     integer cumulative-floor of the requested fractions — not merely
@@ -117,10 +115,6 @@ def stratified_exact_split(
     total = sum(p for _, p in fractions_ppm)
     if total != 1_000_000:
         raise ValueError(f"fractions_ppm must sum to 1000000, got {total}")
-    if hash_bits <= bucket_bits:
-        raise ValueError("hash_bits must exceed bucket_bits")
-    if hash_bits != 52:
-        raise ValueError("hash_bits is fixed at 52 (hash52_seeded contract)")
     # dual-mode (functions/hashing.py): oracle = sha256 prefix (replayable
     # in SQL), fast = xxhash64. The split COUNTS are identical either way —
     # the cumulative-floor cuts depend only on each stratum's size — so the
@@ -128,9 +122,9 @@ def stratified_exact_split(
     from datapipeline_spark.functions.hashing import hash52_seeded
 
     h = hash52_seeded(seed, [F.col(c) for c in id_cols])
-    shift = hash_bits - bucket_bits
+    # the top 8 of hash52_seeded's 52 bits pick one of 256 buckets
     b = df.withColumn("__h__", h).withColumn(
-        "__bucket__", F.shiftright(F.col("__h__"), shift).cast("int")
+        "__bucket__", F.shiftright(F.col("__h__"), 52 - 8).cast("int")
     )
     counts = b.groupBy(*strata_cols, "__bucket__").agg(
         F.count(F.lit(1)).alias("__c__")

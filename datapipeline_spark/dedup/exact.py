@@ -18,16 +18,15 @@ def text_fingerprints(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def exact_dedup(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", keep: str = "min"
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """One row per distinct content: representative id (min/max), group size.
+    """One row per distinct content: representative id (the min), group size.
 
     Returns (fingerprint, rep_id, n_dupes); join back on fingerprint to
     filter the corpus.
     """
-    rep = F.min(id_col) if keep == "min" else F.max(id_col)
     return (
         text_fingerprints(df, text_col)
         .groupBy("fingerprint")
-        .agg(rep.alias("rep_id"), F.count(F.lit(1)).alias("n_dupes"))
+        .agg(F.min(id_col).alias("rep_id"), F.count(F.lit(1)).alias("n_dupes"))
     )

@@ -12,7 +12,7 @@ constants, so signatures are bit-identical.
 
 Scale: the candidate join is the only quadratic-risk step and it is bounded
 by band-bucket size; banding keeps buckets tiny for non-duplicates, and a
-bucket-size cap (`max_bucket`) drops degenerate buckets (boilerplate) the
+bucket-size cap (MAX_BUCKET) drops degenerate buckets (boilerplate) the
 same way production dedup pipelines do.
 """
 
@@ -26,6 +26,9 @@ from pyspark.sql import functions as F
 
 HASH_HEX_LEN = 12  # 48-bit base hash: products with a<2^15 stay in int64
 MOD = (1 << 31) - 1
+#: LSH buckets with more members are dropped before any pair forms; the
+#: SQL oracle (queries_data._lsh_pairs_ctes) gates at the same 1000
+MAX_BUCKET = 1000
 
 # Parsed-Column memos (round-7 opt): the permutation-min aggregates and the
 # band-explode expression are pure functions of the MinHash parameters, but
@@ -155,14 +158,13 @@ def lsh_candidate_pairs(
     id_col: str,
     params: MinHashParams = MinHashParams(),
     bands: int = 4,
-    max_bucket: int = 1000,
 ) -> DataFrame:
     """Band the signature, bucket the ids, emit candidate (id_a < id_b)
     pairs from each bucket's sorted member list IN-ROW (the basket-pair
     pattern — one groupBy instead of a bucket-keyed self-join plus a
     separate count gate, which consumed the banded subtree three times).
 
-    rows_per_band = num_hashes // bands. Buckets larger than `max_bucket`
+    rows_per_band = num_hashes // bands. Buckets larger than MAX_BUCKET
     are dropped by the in-row size gate BEFORE any pair materializes
     (degenerate boilerplate guard — prevents the quadratic blowup that
     would otherwise dominate at corpus scale; the aggregation buffer holds
@@ -195,9 +197,7 @@ def lsh_candidate_pairs(
     )
     from datapipeline_spark.functions.pairs import inrow_pairs
 
-    return inrow_pairs(
-        banded, ["band", "sig"], id_col, max_group_size=max_bucket
-    ).distinct()
+    return inrow_pairs(banded, ["band", "sig"], id_col, MAX_BUCKET).distinct()
 
 
 def jaccard_pairs(

@@ -198,8 +198,9 @@ def ppjoin_pairs(
     """End-to-end exact similarity join: shingle → prefix-filter candidates
     → candidate-bounded exact jaccard. Returns exactly the brute-force
     all-pairs result (id_a, id_b, jaccard >= threshold) with a bounded plan.
-    `max_prefix_group`/`on_exceed` engage the degenerate-corpus guard — see
-    `prefix_filter_candidates`."""
+    The registry queries use 0.5; the property test sweeps ``threshold``
+    against brute force. `max_prefix_group`/`on_exceed` engage the
+    degenerate-corpus guard — see `prefix_filter_candidates`."""
     from datapipeline_spark.dedup.minhash import word_shingles
 
     # the shingle stream feeds the document-frequency aggregate, the

@@ -25,39 +25,33 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def deletion_variants(s: str = "__s__", k: int = 2) -> Column:
-    """Array of all distinct strings from deleting <= k chars of `s`
-    (SQL column name), k in {1, 2}."""
-    if k not in (1, 2):
-        raise ValueError("symmetric-delete join supports k in {1, 2}")
+def deletion_variants(s: str = "__s__") -> Column:
+    """Array of all distinct strings from deleting <= 2 chars of `s`
+    (SQL column name)."""
     one = (
         f"transform(sequence(1, length({s})),"
         f" i -> concat(substring({s}, 1, i - 1), substring({s}, i + 1, length({s}))))"
     )
-    parts = [f"array({s})", one]
-    if k == 2:
-        two = (
-            f"CASE WHEN length({s}) >= 2 THEN flatten(transform(sequence(1, length({s}) - 1),"
-            f" i -> transform(sequence(i + 1, length({s})),"
-            f" j -> concat(substring({s}, 1, i - 1),"
-            f" substring({s}, i + 1, j - i - 1),"
-            f" substring({s}, j + 1, length({s}))))))"
-            f" ELSE array() END"
-        )
-        parts.append(two)
-    return F.expr(f"array_distinct(concat({', '.join(parts)}))")
+    two = (
+        f"CASE WHEN length({s}) >= 2 THEN flatten(transform(sequence(1, length({s}) - 1),"
+        f" i -> transform(sequence(i + 1, length({s})),"
+        f" j -> concat(substring({s}, 1, i - 1),"
+        f" substring({s}, i + 1, j - i - 1),"
+        f" substring({s}, j + 1, length({s}))))))"
+        f" ELSE array() END"
+    )
+    return F.expr(f"array_distinct(concat(array({s}), {one}, {two}))")
 
 
 def deletion_join(
     df: DataFrame,
     id_col: str,
     str_col: str,
-    k: int = 2,
     block_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """All pairs (id_a < id_b) within a block with levenshtein <= k
-    (k in {1, 2}). Output: ``block_cols + (id_a, id_b, dist)`` — exactly
-    the naive ``a JOIN b ON block AND id_a < id_b WHERE lev <= k``.
+    """All pairs (id_a < id_b) within a block with levenshtein <= 2.
+    Output: ``block_cols + (id_a, id_b, dist)`` — exactly the naive
+    ``a JOIN b ON block AND id_a < id_b WHERE lev <= 2``.
 
     Plan: one explode to (block, variant, (id, s)), then IN-ROW pair
     generation per (block, variant) bucket (one collect_set groupBy +
@@ -104,7 +98,7 @@ def deletion_join(
     exploded = base.select(
         *bc,
         F.struct("__id__", "__s__").alias("__m__"),
-        F.explode(deletion_variants("__s__", k)).alias("__v__"),
+        F.explode(deletion_variants("__s__")).alias("__v__"),
     )
     buckets = exploded.groupBy(*bc, "__v__").agg(
         F.sort_array(F.collect_set("__m__")).alias("__ms__")
@@ -132,7 +126,7 @@ def deletion_join(
         # candidate pair. (__sa__, __sb__) are functionally dependent on
         # the ids, so including them cannot change the distinct set.
         .distinct()
-        .withColumn("dist", F.levenshtein("__sa__", "__sb__", k).cast("long"))
+        .withColumn("dist", F.levenshtein("__sa__", "__sb__", 2).cast("long"))
         .filter(F.col("dist") >= 0)
         .select(*bc, "id_a", "id_b", "dist")
     )

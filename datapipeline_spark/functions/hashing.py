@@ -1,7 +1,8 @@
 """Dual-mode hashing for hash-defined operators (HLL registers,
 rendezvous placement).
 
-Two modes, resolved per call (arg > $SPARK_GRAFT_HASH_MODE > "oracle"):
+Two modes, resolved per call ($SPARK_GRAFT_HASH_MODE, else "oracle"; only
+keyed_hash48 also takes an explicit mode, which the shard operators pass):
 
 - ``oracle`` (default): md5-prefix integer hashes. md5 is the one hash
   both Spark and ANSI-SQL engines compute bit-identically, so an oracle
@@ -41,17 +42,17 @@ def resolve_hash_mode(mode: str | None = None) -> str:
     return m
 
 
-def hash60(col: Column, mode: str | None = None) -> Column:
+def hash60(col: Column) -> Column:
     """60-bit non-negative integer hash of a column (HLL register space).
 
     oracle: first 15 md5 hex chars of the string form (engine-neutral).
     fast: xxhash64 masked to 60 bits (sign bit and top nibble dropped)."""
-    if resolve_hash_mode(mode) == "fast":
+    if resolve_hash_mode() == "fast":
         return F.xxhash64(col).bitwiseAND(F.lit((1 << 60) - 1))
     return F.conv(F.substring(F.md5(col.cast("string")), 1, 15), 16, 10).cast("long")
 
 
-def hash52_seeded(seed: str, cols, mode: str | None = None) -> Column:
+def hash52_seeded(seed: str, cols) -> Column:
     """52-bit non-negative uniform hash of (seed, col...) — the stratified
     split's rank key. oracle: sha256("seed|c1|c2|…") first-13-hex-chars
     (bit-exact replayable in DuckDB); fast: xxhash64 over (seed, cols)
@@ -59,7 +60,7 @@ def hash52_seeded(seed: str, cols, mode: str | None = None) -> Column:
     are identical in either mode (cuts depend only on the stratum size);
     only which row lands in which label moves — same contract as the
     HLL/rendezvous dual-mode precedent above."""
-    if resolve_hash_mode(mode) == "fast":
+    if resolve_hash_mode() == "fast":
         return F.xxhash64(F.lit(seed), *cols).bitwiseAND(F.lit((1 << 52) - 1))
     return F.conv(
         F.substring(

@@ -10,7 +10,7 @@ streaming Generates explode the (a < b) pairs under whole-stage codegen.
 Compared to the group-keyed self-join + separate count-gate this
 replaces: one exchange instead of three consumers of the upstream
 subtree, and the worst-case fan-out is bounded by ``max_group_size`` per
-group independent of skew.
+group independent of skew. MinHash LSH (dedup/minhash.py) is the caller.
 """
 
 from __future__ import annotations
@@ -25,9 +25,9 @@ def inrow_pairs(
     df: DataFrame,
     group_cols: Sequence[str],
     member_col: str,
+    max_group_size: int,
     out_a: str = "id_a",
     out_b: str = "id_b",
-    max_group_size: int | None = None,
 ) -> DataFrame:
     """(a < b) member pairs per group, generated in-row.
 
@@ -41,27 +41,8 @@ def inrow_pairs(
     buckets = df.groupBy(*group_cols).agg(
         F.sort_array(F.collect_set(member_col)).alias("__members__")
     )
-    return pairs_from_sets(
-        buckets, "__members__", out_a=out_a, out_b=out_b,
-        max_group_size=max_group_size,
-    )
-
-
-def pairs_from_sets(
-    buckets: DataFrame,
-    members_col: str,
-    out_a: str = "id_a",
-    out_b: str = "id_b",
-    max_group_size: int | None = None,
-) -> DataFrame:
-    """The explode half of ``inrow_pairs``, for callers that already hold
-    per-group SORTED DISTINCT member arrays (e.g. a pruned re-collect that
-    rides an existing group-keyed partitioning — frequent_pairs). Same
-    gate + (a < b) streaming-Generate contract."""
-    size_ok = F.size(members_col) >= 2
-    if max_group_size is not None:
-        size_ok = size_ok & (F.size(members_col) <= max_group_size)
-    ms = F.col(members_col)
+    ms = F.col("__members__")
+    size_ok = (F.size(ms) >= 2) & (F.size(ms) <= max_group_size)
     return (
         buckets.filter(size_ok)
         .select(ms, F.posexplode(ms).alias("__i__", out_a))

@@ -48,68 +48,22 @@ def write_parquet(
     df: DataFrame,
     path: str,
     mode: str = "overwrite",
-    partition_by: Sequence[str] = (),
     compression: str = "zstd",
 ) -> None:
-    w = df.write.mode(mode).option("compression", compression)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
+    df.write.mode(mode).option("compression", compression).parquet(path)
 
 
 def write_orc(
     df: DataFrame,
     path: str,
     mode: str = "overwrite",
-    partition_by: Sequence[str] = (),
     compression: str = "zstd",
 ) -> None:
     """ORC sink (beyond the reference's jsonl/csv/parquet/pickle set —
     io/factory.py:17-66): the other columnar lake format, read-compatible
     with Hive/Trino/Presto warehouses. Same distributed commit protocol as
     the parquet sink."""
-    w = df.write.mode(mode).option("compression", compression)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.orc(path)
-
-
-def write_table(
-    df: DataFrame,
-    path: str,
-    partition_by: Sequence[str] = (),
-    mode: str = "overwrite",
-    overwrite_partitions: bool = False,
-    sort_by: Sequence[str] = (),
-    max_records_per_file: int | None = None,
-    compression: str = "zstd",
-) -> None:
-    """Partitioned parquet table sink for the 100 TB posture.
-
-    - ``partition_by``: hive-style directory partitioning, so downstream
-      reads prune partitions from the predicate alone.
-    - ``overwrite_partitions=True``: dynamic partition overwrite — an
-      incremental backfill replaces ONLY the partitions present in ``df``
-      (idempotent re-runs of one day/hour never touch the rest of the
-      table). Plain ``mode="overwrite"`` without it replaces the whole
-      table.
-    - ``sort_by``: sortWithinPartitions before write → clustered row
-      groups, so parquet min/max statistics skip pages on range predicates.
-    - ``max_records_per_file`` bounds output file size (small-file control
-      comes from AQE coalescing upstream; this caps the other extreme).
-    """
-    if sort_by:
-        df = df.sortWithinPartitions(*sort_by)
-    w = df.write.mode(mode).option("compression", compression)
-    if overwrite_partitions:
-        if not partition_by:
-            raise ValueError("overwrite_partitions requires partition_by")
-        w = w.option("partitionOverwriteMode", "dynamic")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    if max_records_per_file is not None:
-        w = w.option("maxRecordsPerFile", str(max_records_per_file))
-    w.parquet(path)
+    df.write.mode(mode).option("compression", compression).orc(path)
 
 
 def write_bucketed_table(
@@ -223,7 +177,6 @@ def run_output_path(
     fold: str | None = None,
     role: str | None = None,
     ext: str = "parquet",
-    update_latest: bool = True,
 ) -> str:
     """`<root>/runs/<run_id>/dataset/<profile>[.<fold>.<role>].<ext>` +
     `latest` symlink (reference io/output.py:61-70,94-160)."""
@@ -231,14 +184,13 @@ def run_output_path(
     name = ".".join(parts) + f".{ext}"
     run_dir = os.path.join(root, "runs", run_id, "dataset")
     os.makedirs(run_dir, exist_ok=True)
-    if update_latest:
-        latest = os.path.join(root, "runs", "latest")
-        tmp = latest + ".tmp"
-        try:
-            if os.path.islink(tmp) or os.path.exists(tmp):
-                os.remove(tmp)
-            os.symlink(run_id, tmp)
-            os.replace(tmp, latest)
-        except OSError:
-            pass  # filesystems without symlink support
+    latest = os.path.join(root, "runs", "latest")
+    tmp = latest + ".tmp"
+    try:
+        if os.path.islink(tmp) or os.path.exists(tmp):
+            os.remove(tmp)
+        os.symlink(run_id, tmp)
+        os.replace(tmp, latest)
+    except OSError:
+        pass  # filesystems without symlink support
     return os.path.join(run_dir, name)

@@ -36,7 +36,6 @@ def assert_unique_keys(df: DataFrame, keys: Sequence[str], context: str = "align
 def align_streams(
     streams: Mapping[str, DataFrame],
     partition_by: Sequence[str],
-    value_fields: Mapping[str, Sequence[str]] | None = None,
     time_field: str = TIME,
     validate: bool = False,
 ) -> DataFrame:
@@ -46,6 +45,10 @@ def align_streams(
     `<name>_` (the reference hands the record tuple to a combine fn —
     pipelines/stream/pipeline.py:98-119; here the combine is any column
     expression over the prefixed columns).
+
+    ``validate=True`` first runs assert_unique_keys on every stream (one
+    aggregate job each) and raises on a duplicate `(partition, time)`, the
+    reference's error; the default trusts the inputs and runs no job.
     """
     if len(streams) < 2:
         raise ValueError("align requires >= 2 streams")
@@ -54,8 +57,7 @@ def align_streams(
     for name, df in streams.items():
         if validate:
             assert_unique_keys(df, keys, context=f"align[{name}]")
-        fields = value_fields.get(name) if value_fields else None
-        payload = [c for c in df.columns if c not in keys and (fields is None or c in fields)]
+        payload = [c for c in df.columns if c not in keys]
         projected = df.select(*keys, *[F.col(c).alias(f"{name}_{c}") for c in payload])
         out = projected if out is None else out.join(projected, on=keys, how="inner")
     assert out is not None
@@ -65,19 +67,16 @@ def align_streams(
 def broadcast_stream(
     primary: DataFrame,
     global_df: DataFrame,
-    value_fields: Sequence[str] | None = None,
-    time_field: str = TIME,
     prefix: str = "g_",
-    strict: bool = True,
     stage: bool = False,
 ) -> DataFrame:
     """Attach a finite global stream to each primary record by exact `time`.
 
     Broadcast hash join (`F.broadcast`): the global side ships once to every
     executor — identical memory shape to the reference's in-process index
-    (broadcast.py:16-37) but distributed. With ``strict`` a missing match
-    raises at execution time (reference: missing match = error,
-    broadcast.py:43-57); unused broadcast keys are ignored.
+    (broadcast.py:16-37) but distributed. A missing match raises at
+    execution time (reference: missing match = error, broadcast.py:43-57);
+    unused broadcast keys are ignored.
 
     ``stage`` stages the global side behind a (lazy) localCheckpoint before
     the broadcast. Use it whenever `global_df` DERIVES FROM `primary`
@@ -86,11 +85,9 @@ def broadcast_stream(
     probe side — and at 100 TB that is a full duplicate scan+shuffle of the
     input, not a doc-note.
     """
-    payload = [c for c in global_df.columns if c != time_field]
-    if value_fields is not None:
-        payload = [c for c in payload if c in value_fields]
+    payload = [c for c in global_df.columns if c != TIME]
     right = global_df.select(
-        time_field, *[F.col(c).alias(f"{prefix}{c}") for c in payload]
+        TIME, *[F.col(c).alias(f"{prefix}{c}") for c in payload]
     )
     marker = f"{prefix}__matched__"
     right = right.withColumn(marker, F.lit(True))
@@ -99,14 +96,12 @@ def broadcast_stream(
         # it materializes the staged side once; eager just paid the same
         # job earlier, at build time
         right = right.localCheckpoint(eager=False)
-    joined = primary.join(F.broadcast(right), on=time_field, how="left")
-    if strict:
-        # expressed as a filter so column pruning can't elide the check
-        guard = F.when(
-            F.col(marker).isNull(),
-            F.raise_error(
-                F.concat(F.lit("broadcast: no match for time "), F.col(time_field).cast("string"))
-            ),
-        ).otherwise(F.lit(True))
-        joined = joined.filter(guard)
-    return joined.drop(marker)
+    joined = primary.join(F.broadcast(right), on=TIME, how="left")
+    # expressed as a filter so column pruning can't elide the check
+    guard = F.when(
+        F.col(marker).isNull(),
+        F.raise_error(
+            F.concat(F.lit("broadcast: no match for time "), F.col(TIME).cast("string"))
+        ),
+    ).otherwise(F.lit(True))
+    return joined.filter(guard).drop(marker)

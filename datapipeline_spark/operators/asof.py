@@ -31,7 +31,6 @@ def asof_join(
     right: DataFrame,
     partition_by: Sequence[str],
     right_fields: Sequence[str] | None = None,
-    time_field: str = TIME,
     tolerance: str | None = None,
     suffix: str = "_asof",
 ) -> DataFrame:
@@ -45,7 +44,7 @@ def asof_join(
     """
     if right_fields is None:
         right_fields = [
-            c for c in right.columns if c not in (*partition_by, time_field)
+            c for c in right.columns if c not in (*partition_by, TIME)
         ]
     out_fields = [f + suffix for f in right_fields]
     left_cols = [c for c in left.columns]
@@ -58,18 +57,18 @@ def asof_join(
     )
     r_tagged = right.select(
         *[
-            F.col(c) if c in (*partition_by, time_field) else F.lit(None).cast(t).alias(c)
+            F.col(c) if c in (*partition_by, TIME) else F.lit(None).cast(t).alias(c)
             for c, t in left.dtypes
         ],
         F.lit(0).alias("__tag__"),
         *[F.col(f).alias(o) for f, o in zip(right_fields, out_fields)],
-        F.col(time_field).alias("__rtime__"),
+        F.col(TIME).alias("__rtime__"),
     )
     unioned = l_tagged.unionByName(r_tagged)
 
     w = (
         Window.partitionBy(*[F.col(c) for c in partition_by])
-        .orderBy(F.col(time_field), F.col("__tag__"))
+        .orderBy(F.col(TIME), F.col("__tag__"))
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     filled = unioned.select(
@@ -85,7 +84,7 @@ def asof_join(
         in_range = (
             F.col("__rtime__").isNotNull()
             & (
-                F.unix_micros(F.col(time_field)) - F.unix_micros(F.col("__rtime__"))
+                F.unix_micros(F.col(TIME)) - F.unix_micros(F.col("__rtime__"))
                 <= F.lit(horizon_us)
             )
         )
@@ -129,18 +128,15 @@ def top_k(
     k: int,
     order_by: Sequence[str],
     partition_by: Sequence[str] = (),
-    descending: bool = True,
-    out: str | None = "rank",
 ) -> DataFrame:
     """Top-k rows per partition by `order_by` (gap in the reference —
     SURVEY.md §2.4 notes it as absent). `row_number` over a window; Spark
     pushes a per-partition partial top-k below the shuffle
-    (WindowGroupLimit), so this does NOT sort whole partitions at scale."""
-    cols = [F.col(c).desc() if descending else F.col(c).asc() for c in order_by]
+    (WindowGroupLimit), so this does NOT sort whole partitions at scale.
+    Descending order; the 1-based position is column `rank`."""
+    cols = [F.col(c).desc() for c in order_by]
     w = Window.partitionBy(*[F.col(c) for c in partition_by]).orderBy(*cols)
     ranked = df.withColumn("__rank__", F.row_number().over(w)).filter(
         F.col("__rank__") <= k
     )
-    if out is None:
-        return ranked.drop("__rank__")
-    return ranked.withColumnRenamed("__rank__", out)
+    return ranked.withColumnRenamed("__rank__", "rank")

@@ -9,19 +9,15 @@ the Agrawal-Srikant 1994 a-priori family re-expressed as DataFrame joins:
 - pair generation is a CO-PARTITIONED self-join over the pruned distinct
   (basket, item) rows, *after* the infrequent items are pruned (the
   a-priori downward-closure: a pair can only be frequent if both members
-  are). One repartition(basket) exchange feeds the dedup, the prune, the
-  cap, and both join sides — everything downstream rides that
+  are). One repartition(basket) exchange feeds the dedup, the prune and
+  both join sides — everything downstream rides that
   partitioning, stays in whole-stage codegen, and never touches an
   ObjectHashAggregate (the round-7 profile found the per-row object
   buffers of the previous in-row collect_set form dominating its wall
   time; the self-join with exchange parity is 1.3x faster at sf0.1 and
-  spill-safe for huge baskets — rows, not one giant array, per basket);
-- an optional ``max_basket_items`` cap drops pathological baskets (a
-  basket with 10k items contributes 5*10^7 pairs on its own — standard
-  production guard, same spirit as the LSH max_bucket cap in
-  dedup/minhash.py). The cap is a window count over the same basket
-  partitioning (no exchange), applied BEFORE the join, so the quadratic
-  fan-out never materializes for a dropped basket.
+  spill-safe for huge baskets — rows, not one giant array, per basket).
+  There is no basket-size cap: a basket with 10k items contributes
+  5*10^7 pairs on its own.
 
 Confidence and lift are emitted as exact integer parts-per-million
 (DECIMAL(38) intermediates, so ``pair * n_baskets * 1e6`` cannot overflow
@@ -41,15 +37,13 @@ def frequent_pairs(
     item_col: str,
     min_item_support: int = 1,
     min_pair_support: int = 1,
-    max_basket_items: int | None = None,
 ) -> DataFrame:
     """Co-occurrence counts for item pairs (ia < ib) across baskets.
 
     A-priori pruned: items below ``min_item_support`` never enter the
-    basket collect. ``max_basket_items`` (when set) drops whole baskets
-    whose post-prune item count exceeds the cap, gated IN-ROW before the
-    pair explode — the worst-case explode fan-out is then
-    ``max_basket_items**2 / 2`` per basket, independent of data skew.
+    pair join. The registry query prunes at 5; the default 1 prunes
+    nothing (the form the property test checks against pure Python), and
+    tests pass 2-3 to reach the prune on a few rows.
 
     Plan (round-7 shape; same output, A/B'd 1.55 s -> 1.20 s at sf0.1):
     ONE repartition(basket) exchange feeds a fully CODEGEN pipeline — the
@@ -63,20 +57,15 @@ def frequent_pairs(
     previous in-row collect_set form spent most of its wall time in the
     object aggregate's per-row buffers (round-7 profile: the un-pruned
     collect_set+explode alone cost 1.0 s of the 1.5 s total).
-    ``max_basket_items`` keeps its never-materialize guarantee as a
-    window count over the SAME basket partitioning (no exchange), applied
-    before the join.
     """
     d0 = _basket_base(df, basket_col, item_col)
-    pairs, _ = _pairs_from_base(
-        d0, min_item_support, min_pair_support, max_basket_items
-    )
+    pairs, _ = _pairs_from_base(d0, min_item_support, min_pair_support)
     return pairs
 
 
 def _basket_base(df: DataFrame, basket_col: str, item_col: str) -> DataFrame:
     """The shared deduped (basket, item) base: ONE repartition(basket)
-    exchange that every downstream consumer (dedup, supports, prune, cap,
+    exchange that every downstream consumer (dedup, supports, prune,
     both self-join sides, basket totals) rides — consumers built from this
     same object produce byte-identical exchange subtrees, which AQE dedups
     into a single ReusedExchange at runtime."""
@@ -90,7 +79,6 @@ def _pairs_from_base(
     d0: DataFrame,
     min_item_support: int,
     min_pair_support: int,
-    max_basket_items: int | None,
 ) -> tuple[DataFrame, DataFrame]:
     """(pairs, all-item supports) from a `_basket_base` result. Supports
     are counted on the UNPRUNED base (true frequencies — the a-priori
@@ -102,12 +90,6 @@ def _pairs_from_base(
     if min_item_support > 1:
         keep = sup_all.filter(F.col("support") >= min_item_support)
         d = d.join(F.broadcast(keep.select("item")), "item", "left_semi")
-    if max_basket_items is not None:
-        from pyspark.sql import Window
-
-        d = d.withColumn(
-            "__n__", F.count(F.lit(1)).over(Window.partitionBy("basket"))
-        ).filter(F.col("__n__") <= max_basket_items).drop("__n__")
     a = d.select("basket", F.col("item").alias("ia"))
     b = d.select("basket", F.col("item").alias("ib"))
     pairs = (
@@ -122,9 +104,7 @@ def association_rules(
     df: DataFrame,
     basket_col: str,
     item_col: str,
-    min_item_support: int = 1,
     min_pair_support: int = 1,
-    max_basket_items: int | None = None,
 ) -> DataFrame:
     """Directed rules antecedent→consequent with exact integer metrics.
 
@@ -132,10 +112,10 @@ def association_rules(
     ``lift_ppm = ⌊pair·n / (sup(a)·sup(b)) * 1e6⌋`` computed in
     DECIMAL(38) integer arithmetic (exact in any accumulation order, no
     float drift between engines). ``n`` is the total basket count of the
-    FULL input (before any pruning) so support fractions are true
-    frequencies.
+    FULL input so support fractions are true frequencies. No item is
+    pruned (every item has support ≥ 1).
 
-    Plan: distinct → item supports (one exchange) → pruned pair self-join
+    Plan: distinct → item supports (one exchange) → pair self-join
     (basket-keyed exchange) → two broadcast joins against the tiny frequent
     -item support table → broadcast 1-row total. No shuffle is keyed on
     anything wider than (basket) or (item).
@@ -150,10 +130,8 @@ def association_rules(
     # direction flip is an IN-ROW explode of the two (antecedent,
     # consequent) orientations — single consumption, same rows.
     d0 = _basket_base(df, basket_col, item_col)
-    pairs, sup_all = _pairs_from_base(
-        d0, min_item_support, min_pair_support, max_basket_items
-    )
-    sup = sup_all.filter(F.col("support") >= min_item_support)
+    pairs, sup_all = _pairs_from_base(d0, 1, min_pair_support)
+    sup = sup_all.filter(F.col("support") >= 1)
     n = d0.agg(F.countDistinct("basket").cast("long").alias("n_baskets"))
     sa = sup.select(F.col("item").alias("ia"), F.col("support").alias("sup_a"))
     sb = sup.select(F.col("item").alias("ib"), F.col("support").alias("sup_b"))

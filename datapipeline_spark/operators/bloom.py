@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-M_BITS_DEFAULT = 1 << 18  # 256 Kbit = 4096 words; size for ~8k keys at <0.1% FP
+M_BITS = 1 << 18  # 256 Kbit = 4096 words; size for ~8k keys at <0.1% FP
 K_DEFAULT = 5
 
 
@@ -47,16 +47,12 @@ def _positions(key, m_bits: int, k: int) -> list[F.Column]:
     return [F.pmod(h1 + F.lit(i) * h2, F.lit(m_bits)) for i in range(k)]
 
 
-def bloom_build(
-    build: DataFrame, key: str, m_bits: int = M_BITS_DEFAULT, k: int = K_DEFAULT
-) -> list[int]:
-    """Aggregate the build side into a packed bitmap (list of m_bits/64
+def bloom_build(build: DataFrame, key: str, k: int = K_DEFAULT) -> list[int]:
+    """Aggregate the build side into a packed bitmap (list of M_BITS/64
     longs). One bit_or aggregation — partial combine caps the shuffle at
     m/64 rows per map task; the collect is the finished bitmap, bounded by
     m regardless of build cardinality."""
-    if m_bits % 64 != 0:
-        raise ValueError("m_bits must be a multiple of 64")
-    pos = F.explode(F.array(*_positions(F.col(key), m_bits, k))).alias("pos")
+    pos = F.explode(F.array(*_positions(F.col(key), M_BITS, k))).alias("pos")
     words = (
         build.select(pos)
         .select(
@@ -67,7 +63,7 @@ def bloom_build(
         .agg(F.bit_or("m").alias("bits"))
         .collect()
     )
-    out = [0] * (m_bits // 64)
+    out = [0] * (M_BITS // 64)
     for r in words:
         out[r.w] = r.bits
     return out
@@ -77,10 +73,10 @@ def bloom_filter_keys(
     probe: DataFrame,
     key: str,
     words: list[int],
-    m_bits: int = M_BITS_DEFAULT,
     k: int = K_DEFAULT,
 ) -> DataFrame:
-    """Map-side filter: keep probe rows whose key hits all k bits. Pure
+    """Map-side filter: keep probe rows whose key hits all k bits of the
+    bitmap ``words`` (bloom_build's, 64 bits per word). Pure
     JVM expressions against one packed-binary literal — no shuffle, no
     join.
 
@@ -107,7 +103,7 @@ def bloom_filter_keys(
     )
     bin_ = F.unbase64(F.lit(base64.b64encode(packed).decode()))
     pred = None
-    for pos in _positions(F.col(key), m_bits, k):
+    for pos in _positions(F.col(key), 64 * len(words), k):
         byte = F.ascii(
             F.decode(
                 F.substring(
@@ -127,17 +123,14 @@ def bloom_prefilter_join(
     build: DataFrame,
     probe_key: str,
     build_key: str,
-    m_bits: int = M_BITS_DEFAULT,
     k: int = K_DEFAULT,
-    how: str = "inner",
 ) -> DataFrame:
     """probe ⋈ build with the probe side Bloom-filtered before the join
     shuffle. Exactly equal to the plain join (no false negatives; the join
     removes false positives) — which is its oracle.
 
-    Inner joins only: pre-filtering the probe side would silently drop
-    unmatched probe rows under left/outer semantics, so any other `how`
-    is rejected rather than quietly wrong.
+    Inner join only: pre-filtering the probe side would drop unmatched
+    probe rows under left/outer semantics.
 
     Two-phase by design: the bitmap job is phase 1 of the algorithm (its
     cost shows up as construction time under rebuild-per-run benching —
@@ -146,11 +139,6 @@ def bloom_prefilter_join(
     7 and REJECTED: construction fell 0.9 -> 0.35 s but total rose
     1.4 -> 2.0 s — the BroadcastNestedLoopJoin breaks the probe scan's
     whole-stage codegen fusion, which costs more than the collect saved."""
-    if how not in ("inner",):
-        raise ValueError(
-            "bloom_prefilter_join only preserves semantics for how='inner' "
-            f"(got {how!r}): the probe-side pre-filter drops unmatched rows"
-        )
-    words = bloom_build(build, build_key, m_bits, k)
-    filtered = bloom_filter_keys(probe, probe_key, words, m_bits, k)
-    return filtered.join(build, filtered[probe_key] == build[build_key], how)
+    words = bloom_build(build, build_key, k)
+    filtered = bloom_filter_keys(probe, probe_key, words, k)
+    return filtered.join(build, filtered[probe_key] == build[build_key], "inner")

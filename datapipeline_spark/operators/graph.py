@@ -407,7 +407,9 @@ def label_propagation(
     Round 1 is FREE (in-row): with self-labels, every incoming vote is a
     singleton, so the most-frequent-min-tie winner is simply the SMALLEST
     neighbor id — ``array_min`` over the adjacency list, no join, no
-    shuffle. The loop then runs ``rounds - 1`` joined rounds.
+    shuffle. The loop then runs ``rounds - 1`` joined rounds. The
+    registry query runs 4 rounds; tests run 1-2 to pin single synchronous
+    updates on small graphs.
 
     Round-tax discipline (round-7 A/B, bit-identical labels): no lazy
     checkpoint for small fixed round counts — each checkpoint's `.rdd`

@@ -48,15 +48,15 @@ def interval_join(
     start_col: str = "start",
     end_col: str = "end",
     bucket: str = "1h",
-    how: str = "inner",
     max_buckets_per_interval: int = 10_000,
 ) -> DataFrame:
-    """Join ``facts`` rows to every interval containing them.
+    """Inner-join ``facts`` rows to every interval containing them, one
+    row per containing window; unmatched facts are dropped.
 
     ``facts.time_col`` ∈ [``start_col``, ``end_col``) — half-open, so
-    back-to-back windows never double-match a boundary fact. ``how`` is
-    ``inner`` (matching facts only, one row per containing window) or
-    ``left`` (keep unmatched facts with null interval columns).
+    back-to-back windows never double-match a boundary fact. The result
+    does not depend on ``bucket``, which only sizes the equi-join key
+    (tests compare widths against each other and a naive join).
 
     An interval spanning more than ``max_buckets_per_interval`` buckets
     fails fast with a clear error instead of silently exploding the
@@ -64,8 +64,6 @@ def interval_join(
     PER interval — the fix is a coarser ``bucket``, and the guard is how
     you find out).
     """
-    if how not in ("inner", "left"):
-        raise ValueError(f"interval_join supports inner/left, got {how!r}")
     width_us = parse_cadence_seconds(bucket) * 1_000_000
     keys = list(on)
 
@@ -106,19 +104,7 @@ def interval_join(
     in_window = (F.col(time_col) >= F.col(start_col)) & (
         F.col(time_col) < F.col(end_col)
     )
-    matched = f.join(iv, keys + ["__b__"], "inner").filter(in_window).drop("__b__")
-    if how == "inner":
-        return matched
-    # left: unmatched facts padded with null interval columns, one row each
-    # (both branches hang off the same shuffle; Spark reuses the exchange)
-    iv_cols = [c for c in intervals.columns if c not in keys]
-    unmatched = (
-        facts.join(matched.select(*facts.columns), facts.columns, "left_anti")
-        .select(*facts.columns)
-    )
-    for c in iv_cols:
-        unmatched = unmatched.withColumn(c, F.lit(None).cast(dict(intervals.dtypes)[c]))
-    return matched.unionByName(unmatched)
+    return f.join(iv, keys + ["__b__"], "inner").filter(in_window).drop("__b__")
 
 
 def interval_concurrency(

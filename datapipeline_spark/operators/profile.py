@@ -16,15 +16,13 @@ exact min/max in double — nothing here depends on partitioning.
 
 from __future__ import annotations
 
-from typing import Sequence
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType
 
 
-def profile_table(df: DataFrame, columns: Sequence[str] | None = None) -> DataFrame:
-    """Profile `columns` (default: all) in one aggregate pass.
+def profile_table(df: DataFrame) -> DataFrame:
+    """Profile every column in one aggregate pass.
 
     `n_distinct` counts distinct NON-NULL values (SQL count-distinct
     semantics). `min_num`/`max_num` are populated for numeric columns only
@@ -32,7 +30,7 @@ def profile_table(df: DataFrame, columns: Sequence[str] | None = None) -> DataFr
     collation/format parity across engines is not worth the ambiguity in a
     deterministic report.
     """
-    cols = list(columns) if columns is not None else list(df.columns)
+    cols = list(df.columns)
     types = {f.name: f.dataType for f in df.schema.fields}
     aggs = [F.count(F.lit(1)).alias("__n__")]
     for i, c in enumerate(cols):

@@ -62,7 +62,6 @@ def reservoir_per_key(
     id_cols: Sequence[str],
     n: int,
     seed: str = "rsv",
-    out: str | None = None,
 ) -> DataFrame:
     """Deterministic uniform sample of ``n`` rows per key — the batch twin
     of per-key reservoir sampling (Vitter 1985), derandomized the corpus-
@@ -78,15 +77,13 @@ def reservoir_per_key(
     task cross the wire — never the full key group.
 
     ``id_cols`` must uniquely identify rows within a key (total order, no
-    rank ties). ``out`` optionally keeps the 1-based rank column.
+    rank ties). The 1-based rank within the key is column ``pick``.
     """
     h = F.md5(
         F.concat_ws("|", F.lit(seed), *[F.col(c).cast("string") for c in id_cols])
     )
     w = Window.partitionBy(*key_cols).orderBy(h)
-    rank = out or "__rsv__"
-    res = df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= n)
-    return res if out else res.drop(rank)
+    return df.withColumn("pick", F.row_number().over(w)).filter(F.col("pick") <= n)
 
 
 def bucketed_value_rank(

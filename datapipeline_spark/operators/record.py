@@ -15,14 +15,14 @@ from datapipeline_spark.functions.time import floor_time_expr, shift_time_expr
 TIME = "time"
 
 
-def floor_time(df: DataFrame, cadence: str, field: str = TIME) -> DataFrame:
+def floor_time(df: DataFrame, cadence: str) -> DataFrame:
     """Floor `time` to cadence on the UTC lattice (reference transforms/time.py:12-21)."""
-    return df.withColumn(field, floor_time_expr(field, cadence))
+    return df.withColumn(TIME, floor_time_expr(TIME, cadence))
 
 
-def shift_time(df: DataFrame, timecode: str, field: str = TIME) -> DataFrame:
+def shift_time(df: DataFrame, timecode: str) -> DataFrame:
     """Add a signed duration to `time` (reference transforms/time.py:24-32)."""
-    return df.withColumn(field, shift_time_expr(field, timecode))
+    return df.withColumn(TIME, shift_time_expr(TIME, timecode))
 
 
 _DERIVE_OPS = {"add", "sub", "mul", "div"}
@@ -34,33 +34,34 @@ def derive(
     op: str,
     other: str | float | int,
     out: str | None = None,
-    strict_div: bool = False,
 ) -> DataFrame:
     """Binary arithmetic of a field with another field or a constant;
     null-propagating (reference transforms/stream/derive.py:16-68).
 
-    The reference raises on division by zero; with ``strict_div`` the plan
-    embeds a `raise_error` branch, otherwise div-by-0 yields null (Spark
-    non-ANSI semantics), matching SQL engines for oracle comparison.
+    Division by zero raises, as the reference does: the engine session
+    runs in ANSI mode, where `/` fails the query with `[DIVIDE_BY_ZERO]`.
     """
     if op not in _DERIVE_OPS:
         raise ValueError(f"Unsupported derive op: {op!r}")
     left = F.col(field)
     right = F.col(other) if isinstance(other, str) else F.lit(other)
-    if op == "div":
-        if strict_div:
-            right = F.when(
-                right == 0, F.raise_error(F.lit("derive: division by zero"))
-            ).otherwise(right)
-        expr = left / right
-    else:
-        expr = {"add": left + right, "sub": left - right, "mul": left * right}[op]
+    expr = {
+        "add": left + right,
+        "sub": left - right,
+        "mul": left * right,
+        "div": left / right,
+    }[op]
     return df.withColumn(out or field, expr)
 
 
 def log_op(df: DataFrame, field: str, out: str | None = None, strict: bool = False) -> DataFrame:
     """Natural log, domain x>0; missing passes through
-    (reference transforms/stream/logarithm.py:13-54)."""
+    (reference transforms/stream/logarithm.py:13-54).
+
+    ``strict=True`` raises on x ≤ 0 as the reference does; project
+    streams compile with it. The default keeps Spark's NULL for x ≤ 0,
+    the value the `derive_log` query's SQL oracle (DuckDB `ln`) is
+    compared against."""
     c = F.col(field)
     expr = F.log(c)
     if strict:
@@ -71,7 +72,9 @@ def log_op(df: DataFrame, field: str, out: str | None = None, strict: bool = Fal
 
 
 def log1p_op(df: DataFrame, field: str, out: str | None = None, strict: bool = False) -> DataFrame:
-    """Precise log1p, domain x>-1 (reference transforms/stream/logarithm.py:13-54)."""
+    """Precise log1p, domain x>-1 (reference transforms/stream/logarithm.py:13-54).
+    ``strict`` as in log_op: True raises on x ≤ -1 (project streams), the
+    default yields NULL there (the `derive_log` query)."""
     c = F.col(field)
     expr = F.log1p(c)
     if strict:
@@ -82,7 +85,7 @@ def log1p_op(df: DataFrame, field: str, out: str | None = None, strict: bool = F
     return df.withColumn(out or field, expr)
 
 
-def dedupe(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
+def dedupe(df: DataFrame) -> DataFrame:
     """Drop identical records (time + full payload equality).
 
     The reference drops *consecutive* identical records in the sorted stream
@@ -90,7 +93,7 @@ def dedupe(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
     full-row distinct, which Spark executes as a hash aggregate with map-side
     partial dedup — no global sort.
     """
-    return df.dropDuplicates(list(subset) if subset else None)
+    return df.dropDuplicates()
 
 
 def collapse(

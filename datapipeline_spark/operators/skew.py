@@ -74,21 +74,14 @@ def salted_join(
     keys: Sequence[str],
     salt: int = 8,
     seed: int = 42,
-    how: str = "inner",
 ) -> DataFrame:
-    """Join a skewed big side against a small side by exploding the small
-    side `salt`× — every hot key spreads over `salt` shuffle partitions.
-
-    Only big-side-preserving joins are sound: an unmatched small-side row
-    exists `salt` times after the explosion, so right/full outer joins would
-    emit duplicates.
+    """Inner-join a skewed big side against a small side by exploding the
+    small side `salt`× — every hot key spreads over `salt` shuffle
+    partitions. (A right or full outer join would be unsound: an
+    unmatched small-side row exists `salt` times after the explosion.)
     """
-    if how not in ("inner", "left", "left_semi", "leftsemi", "left_anti", "leftanti"):
-        raise ValueError(
-            f"salted_join supports inner/left/left_semi/left_anti, got {how!r}"
-        )
     spark = big.sparkSession
     salts = spark.range(salt).select(F.col("id").cast("int").alias(_SALT))
     big_s = big.withColumn(_SALT, (F.rand(seed) * salt).cast("int"))
     small_s = small.crossJoin(F.broadcast(salts))
-    return big_s.join(small_s, [*keys, _SALT], how).drop(_SALT)
+    return big_s.join(small_s, [*keys, _SALT], "inner").drop(_SALT)

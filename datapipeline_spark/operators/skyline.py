@@ -1,7 +1,7 @@
 """2D skyline (Pareto frontier) — maximal points under two criteria.
 
 Borzsony-Kossmann-Stocker 2001's skyline operator for the bi-criteria
-case (minimize x, maximize y by default; directions configurable): keep
+case (minimize x, maximize y; negate a column upstream to flip it): keep
 every row not dominated by another (q dominates p iff q.x <= p.x and
 q.y >= p.y with at least one strict). The reference engine has no
 skyline; this is the classic "best price/quality trade-offs" analytics
@@ -36,16 +36,14 @@ def skyline_2d(
     df: DataFrame,
     x_col: str,
     y_col: str,
-    minimize_x: bool = True,
-    maximize_y: bool = True,
     buckets: int = 256,
 ) -> DataFrame:
     """Rows of ``df`` on the Pareto frontier of (x, y). Columns pass
     through unchanged; x must be exact numeric (integer/decimal) so the
     bucket floor and RANGE frames are engine-exact."""
-    x = F.col(x_col) if minimize_x else -F.col(x_col)
-    y = F.col(y_col) if maximize_y else -F.col(y_col)
-    d = df.withColumns({"__x__": x.cast("long"), "__y__": y.cast("long")})
+    d = df.withColumns(
+        {"__x__": F.col(x_col).cast("long"), "__y__": F.col(y_col).cast("long")}
+    )
 
     rng = d.agg(
         F.min("__x__").alias("lo"), (F.max("__x__") + 1).alias("hi")

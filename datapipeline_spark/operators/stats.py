@@ -50,24 +50,27 @@ def _xsum(x: F.Column) -> F.Column:
     decimal. Bounds with b=31: |x| < 2^62 keeps |hi| < 2^31, so both
     Σhi and Σlo stay inside int64 for up to 2^32 (~4.3e9) rows per
     group; ANSI mode raises ARITHMETIC_OVERFLOW beyond, never silently
-    wrong (callers expose ``wide=True`` for the unbounded decimal path)."""
+    wrong (_widesum is the unbounded decimal path)."""
     lo = x.bitwiseAND(F.lit((1 << _XB) - 1))
     hi = F.shiftright(x, _XB)
     return F.sum(hi).cast(_D) * F.lit(1 << _XB).cast(_D) + F.sum(lo).cast(_D)
 
 
-def _sumprod(a: F.Column, b: F.Column, wide: bool) -> F.Column:
-    """Exact Σ(a·b) for integer columns. Narrow path (default): the per-row
-    product runs in native int64 — whole-stage-codegen multiply, ~10x
-    cheaper than decimal(38)'s BigDecimal path — and the accumulation is
-    the two-long _xsum, exact for |a·b| < 2^62 (|v| ≲ 2.1e9 when
-    squaring — cents-scale business values sit at ~1e7) and ≤ 2^32 rows
-    per group; ANSI mode raises ARITHMETIC_OVERFLOW on violation, never
-    silently wrong. ``wide=True`` multiplies AND accumulates in
-    decimal(38,0) — unbounded magnitude at the old per-row cost."""
-    if wide:
-        return F.sum(a.cast(_D) * b.cast(_D))
+def _sumprod(a: F.Column, b: F.Column) -> F.Column:
+    """Exact Σ(a·b) for integer columns. The per-row product runs in
+    native int64 — whole-stage-codegen multiply, ~10x cheaper than
+    decimal(38)'s BigDecimal path — and the accumulation is the two-long
+    _xsum, exact for |a·b| < 2^62 (|v| ≲ 2.1e9 when squaring —
+    cents-scale business values sit at ~1e7) and ≤ 2^32 rows per group;
+    ANSI mode raises ARITHMETIC_OVERFLOW on violation, never silently
+    wrong."""
     return _xsum(a.cast("long") * b.cast("long"))
+
+
+def _widesum(a: F.Column, b: F.Column) -> F.Column:
+    """Exact Σ(a·b) that multiplies AND accumulates in decimal(38,0):
+    unbounded magnitude at ~10x _sumprod's per-row cost."""
+    return F.sum(a.cast(_D) * b.cast(_D))
 
 
 def _rank2(groups: Sequence[str], col: str) -> tuple[F.Column, F.Column]:
@@ -92,15 +95,13 @@ def spearman_corr(
     y: str,
     groups: Sequence[str] = (),
     out: str = "spearman",
-    wide: bool = False,
 ) -> DataFrame:
     """Per-group Spearman rank correlation of ``x`` vs ``y`` (average ranks
     for ties). Output: groups + (n, <out>), corr rounded to 6 decimals.
 
-    Doubled ranks are ≤ 2n, so per-row rank PRODUCTS fit the _sumprod
-    narrow path up to ~1.0e9 rows per group (``wide=True`` lifts the
-    bound); the SUMS of those products reach 4n³ — past bigint at ~1.3M
-    rows per group (caught by the sf1 rehearsal, ANSI overflow) — so
+    Doubled ranks are ≤ 2n, so per-row rank PRODUCTS fit _sumprod's
+    int64 path up to ~1.0e9 rows per group; the SUMS of those products
+    reach 4n³ — past bigint at ~1.3M rows per group (caught by the sf1 rehearsal, ANSI overflow) — so
     accumulation is the exact two-long _xsum recombined in decimal(38,0),
     order- and partition-invariant.
 
@@ -115,9 +116,9 @@ def spearman_corr(
         F.count(F.lit(1)).cast("long").alias("n"),
         _xsum(rx).alias("sx"),
         _xsum(ry).alias("sy"),
-        _sumprod(rx, rx, wide).alias("sxx"),
-        _sumprod(ry, ry, wide).alias("syy"),
-        _sumprod(rx, ry, wide).alias("sxy"),
+        _sumprod(rx, rx).alias("sxx"),
+        _sumprod(ry, ry).alias("syy"),
+        _sumprod(rx, ry).alias("sxy"),
     )
     n, sx, sy, sxx, syy, sxy = [
         F.col(c).cast(_D) for c in ("n", "sx", "sy", "sxx", "syy", "sxy")
@@ -138,7 +139,6 @@ def hhi(
     value: str,
     groups: Sequence[str] = (),
     out: str = "hhi",
-    wide: bool = False,
 ) -> DataFrame:
     """Herfindahl-Hirschman concentration index per group: sum of squared
     value shares, in (1/n, 1]. ``value`` must be an exact-integer column
@@ -150,7 +150,7 @@ def hhi(
     a = df.groupBy(*gx).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         _xsum(F.col(value).cast("long")).alias("sv"),
-        _sumprod(F.col(value), F.col(value), wide).alias("svv"),
+        _sumprod(F.col(value), F.col(value)).alias("svv"),
     )
     ratio = F.col("svv").cast("double") / (F.col("sv") * F.col("sv")).cast("double")
     return a.select(
@@ -177,8 +177,9 @@ def pearson_corr(
     aggregate and the same correctly-rounded sqrt/divide chain as
     spearman_corr (which is this function on doubled ranks). Output:
     groups + (n, <out>) rounded to 6 decimals; NULL when either variance
-    is zero. Per-row products run in int64 (see _sumprod — |v| ≲ 3e9;
-    ``wide=True`` for unbounded magnitude).
+    is zero. Per-row products run in int64 (see _sumprod — |v| ≲ 3e9);
+    ``wide=True`` takes _widesum's decimal products instead, for series
+    whose magnitude grows with data volume (autocorr, cross_correlation).
 
     ``prereduce=True`` (round-7 opt, guide §2.3 partial aggregation):
     when the JOINT (x, y) value domain is small (categorical/quantized
@@ -205,13 +206,14 @@ def pearson_corr(
             F.sum(xd * yd * cd).alias("sxy"),
         )
     else:
+        sp = _widesum if wide else _sumprod
         a = df.groupBy(*gx).agg(
             F.count(F.lit(1)).cast("long").alias("n"),
             _xsum(xc).alias("sx"),
             _xsum(yc).alias("sy"),
-            _sumprod(xc, xc, wide).alias("sxx"),
-            _sumprod(yc, yc, wide).alias("syy"),
-            _sumprod(xc, yc, wide).alias("sxy"),
+            sp(xc, xc).alias("sxx"),
+            sp(yc, yc).alias("syy"),
+            sp(xc, yc).alias("sxy"),
         )
     n = F.col("n").cast(_D)
     num = (n * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
@@ -230,7 +232,6 @@ def autocorr(
     groups: Sequence[str] = (),
     order_by: str = "time",
     out: str = "acf",
-    wide: bool = False,
 ) -> DataFrame:
     """Per-group autocorrelation at ``lag``: Pearson correlation between
     the series and its lag-k self over the overlap rows (the standard
@@ -239,18 +240,18 @@ def autocorr(
     One window (group-keyed exchange + in-partition sort) then the
     pearson_corr aggregate. ``value`` must be an exact-integer column.
 
-    ``wide=True`` for series whose magnitude GROWS with data volume
-    (daily/periodic SUMS: 10x the rows is 10x the value, so the narrow
-    path's |v| ≲ 3e9 squaring bound eventually trips ANSI overflow —
-    observed at sf1 on daily revenue cents); per-row bounded inputs keep
-    the cheap int64-product path."""
+    Products take pearson_corr's ``wide=True`` decimal path: autocorr runs
+    on series whose magnitude GROWS with data volume (daily/periodic
+    SUMS: 10x the rows is 10x the value, so the int64 path's |v| ≲ 3e9
+    squaring bound trips ANSI overflow — observed at sf1 on daily
+    revenue cents)."""
     gx = list(groups)
     w = Window.partitionBy(*gx).orderBy(order_by)
     d = (
         df.select(*gx, F.col(value).alias("__y"), F.lag(value, lag).over(w).alias("__yl"))
         .filter(F.col("__yl").isNotNull())
     )
-    return pearson_corr(d, "__yl", "__y", gx, out=out, wide=wide)
+    return pearson_corr(d, "__yl", "__y", gx, out=out, wide=True)
 
 
 def chi_square(df: DataFrame, x: str, y: str) -> DataFrame:
@@ -318,7 +319,6 @@ def ols(
     x: str,
     y: str,
     groups: Sequence[str] = (),
-    wide: bool = False,
     prereduce: bool = False,
 ) -> DataFrame:
     """Per-group simple linear regression (OLS): slope, intercept, r2.
@@ -332,8 +332,7 @@ def ols(
     then slope = cov/var_x, intercept = (Σy − slope·Σx)/n and
     r² = cov²/(var_x·var_y) are short IEEE chains (+,−,*,/ are correctly
     rounded) so the rounded outputs hash-match a SQL oracle. Per-row
-    products run in int64 (see _sumprod; ``wide=True`` for unbounded
-    magnitude).
+    products run in int64 (see _sumprod).
 
     ``prereduce=True`` (round-7 opt, guide §2.3): for a LOW-CARDINALITY
     regressor x (categorical/quantized — y may stay continuous), first
@@ -349,7 +348,7 @@ def ols(
         g = df.groupBy(*gx, x).agg(
             F.count(F.lit(1)).cast("long").alias("__c"),
             _xsum(yc).alias("__gy"),
-            _sumprod(yc, yc, wide).alias("__gyy"),
+            _sumprod(yc, yc).alias("__gyy"),
         )
         xd, cd = xc.cast(_D), F.col("__c").cast(_D)
         a = g.groupBy(*gx).agg(
@@ -365,9 +364,9 @@ def ols(
             F.count(F.lit(1)).cast("long").alias("n"),
             _xsum(xc).alias("sx"),
             _xsum(yc).alias("sy"),
-            _sumprod(xc, xc, wide).alias("sxx"),
-            _sumprod(yc, yc, wide).alias("syy"),
-            _sumprod(xc, yc, wide).alias("sxy"),
+            _sumprod(xc, xc).alias("sxx"),
+            _sumprod(yc, yc).alias("syy"),
+            _sumprod(xc, yc).alias("sxy"),
         )
     n = F.col("n").cast(_D)
     cov = (n * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
@@ -590,7 +589,6 @@ def welch_ttest(
     value: str,
     side: str,
     groups: Sequence[str] = (),
-    wide: bool = False,
 ) -> DataFrame:
     """Per-group Welch's unequal-variance t-test on an exact-integer value
     column — the parametric companion to mann_whitney. One
@@ -602,17 +600,14 @@ def welch_ttest(
     those exact sums, so both outputs hash-match a SQL oracle. No sort,
     no join. Output: groups + (n0, n1, t, df_welch). Per-row squares run
     in int64 behind a when() gate — conditional-select, not a decimal
-    multiply per side (see _sumprod's bound; ``wide=True`` lifts it)."""
+    multiply per side (see _sumprod's bound)."""
     gx = list(groups)
     s = F.col(side).cast("long")
     y = F.col(value).cast("long")
-    yy = (y.cast(_D) * y.cast(_D)) if wide else (y * y)
+    yy = y * y
 
     def _side(expr, cond):
-        guarded = F.when(cond, expr).otherwise(F.lit(0))
-        if wide:
-            return F.sum(guarded.cast(_D))
-        return _xsum(guarded.cast("long"))
+        return _xsum(F.when(cond, expr).otherwise(F.lit(0)).cast("long"))
 
     a = df.groupBy(*gx).agg(
         F.sum(1 - s).cast("long").alias("n0"),
@@ -945,7 +940,6 @@ def cross_correlation(
     x: str,
     y: str,
     max_lag: int,
-    wide: bool = False,
 ) -> DataFrame:
     """Sample cross-correlation function between two integer series on a
     shared time grid: for each lag k ∈ [−max_lag, max_lag], the Pearson
@@ -954,8 +948,9 @@ def cross_correlation(
     generalization: one lag-exploded self-join on the (tiny, aggregated)
     series grid, then the exact-integer pearson_corr per lag. Overlap
     length shrinks by |k| — reported as n so consumers weigh the tails.
-    ``wide=True`` when the series are aggregates whose magnitude grows
-    with data volume (see autocorr)."""
+    Products take pearson_corr's ``wide=True`` decimal path: the series
+    are aggregates whose magnitude grows with data volume (see
+    autocorr)."""
     base = df.select(
         F.col(order_col).alias("o"),
         F.col(x).cast("long").alias("xv"),
@@ -975,7 +970,7 @@ def cross_correlation(
         shifted,
         lags["o"] + lags["lag"] == shifted["o2"],
     ).select("lag", "xv", "yl")
-    return pearson_corr(pairs, "xv", "yl", ["lag"], out="xcorr", wide=wide)
+    return pearson_corr(pairs, "xv", "yl", ["lag"], out="xcorr", wide=True)
 
 
 def theil_sen(
@@ -1034,7 +1029,6 @@ def ols2(
     x2: str,
     y: str,
     groups: Sequence[str] = (),
-    wide: bool = False,
     prereduce: bool = False,
 ) -> DataFrame:
     """Per-group TWO-regressor OLS (y ~ b1·x1 + b2·x2 + intercept) — the
@@ -1049,8 +1043,7 @@ def ols2(
     expression order is pinned identically in the oracle, so rounded
     coefficients hash-match (the pearson/ols discipline one matrix
     dimension up). Collinear regressors (det = 0) → NULL. Per-row
-    products run in int64 (see _sumprod; ``wide=True`` for unbounded
-    magnitude).
+    products run in int64 (see _sumprod).
 
     ``prereduce=True`` (round-7 opt, guide §2.3): for LOW-CARDINALITY
     regressors (categorical/quantized — y may stay continuous), first
@@ -1087,11 +1080,11 @@ def ols2(
             _xsum(c1).alias("s1"),
             _xsum(c2).alias("s2"),
             _xsum(cy).alias("sy"),
-            _sumprod(c1, c1, wide).alias("s11"),
-            _sumprod(c2, c2, wide).alias("s22"),
-            _sumprod(c1, c2, wide).alias("s12"),
-            _sumprod(c1, cy, wide).alias("s1y"),
-            _sumprod(c2, cy, wide).alias("s2y"),
+            _sumprod(c1, c1).alias("s11"),
+            _sumprod(c2, c2).alias("s22"),
+            _sumprod(c1, c2).alias("s12"),
+            _sumprod(c1, cy).alias("s1y"),
+            _sumprod(c2, cy).alias("s2y"),
         )
     n = F.col("n").cast(_D)
     m11 = (n * F.col("s11") - F.col("s1") * F.col("s1")).cast("double")

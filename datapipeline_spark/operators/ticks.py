@@ -22,7 +22,6 @@ def ensure_cadence(
     df: DataFrame,
     cadence: str,
     partition_by: Sequence[str] = (),
-    time_field: str = TIME,
 ) -> DataFrame:
     """Insert null-payload placeholder ticks at a fixed interval strictly
     *between* consecutive observed records of each partition
@@ -33,13 +32,13 @@ def ensure_cadence(
     no driver loop, no grid materialization, scales with the data.
     """
     step = parse_cadence_seconds(cadence)
-    w = canonical_window(partition_by, (time_field,))
-    prev_s = F.unix_timestamp(F.lag(time_field, 1).over(w))
-    cur_s = F.unix_timestamp(F.col(time_field))
+    w = canonical_window(partition_by, (TIME,))
+    prev_s = F.unix_timestamp(F.lag(TIME, 1).over(w))
+    cur_s = F.unix_timestamp(F.col(TIME))
 
     # ticks t = prev + k*step, k>=1, t < cur  (gap interior only)
     gaps = (
-        df.select(*partition_by, F.col(time_field), prev_s.alias("__prev_s__"), cur_s.alias("__cur_s__"))
+        df.select(*partition_by, F.col(TIME), prev_s.alias("__prev_s__"), cur_s.alias("__cur_s__"))
         .filter(F.col("__prev_s__").isNotNull() & (F.col("__cur_s__") - F.col("__prev_s__") > step))
         .select(
             *partition_by,
@@ -51,11 +50,11 @@ def ensure_cadence(
                 )
             ).alias("__tick_s__"),
         )
-        .select(*partition_by, F.timestamp_seconds(F.col("__tick_s__")).alias(time_field))
+        .select(*partition_by, F.timestamp_seconds(F.col("__tick_s__")).alias(TIME))
     )
-    payload_cols = [c for c in df.columns if c not in (*partition_by, time_field)]
+    payload_cols = [c for c in df.columns if c not in (*partition_by, TIME)]
     placeholders = gaps.select(
-        *[F.col(c) for c in (*partition_by, time_field)],
+        *[F.col(c) for c in (*partition_by, TIME)],
         *[F.lit(None).cast(df.schema[c].dataType).alias(c) for c in payload_cols],
     )
     return df.unionByName(placeholders.select(*df.columns))

@@ -26,10 +26,10 @@ def _parse_dt(value: Any) -> Any:
     return value
 
 
-def where_predicate(field: str, op: str, value: Any, time_field: str = "time") -> Column:
+def where_predicate(field: str, op: str, value: Any) -> Column:
     if op not in _OPS:
         raise ValueError(f"Unsupported where op: {op!r}")
-    if field == time_field:
+    if field == "time":
         value = (
             [_parse_dt(v) for v in value] if isinstance(value, (list, tuple)) else _parse_dt(value)
         )
@@ -48,5 +48,5 @@ def where_predicate(field: str, op: str, value: Any, time_field: str = "time") -
     }[op]
 
 
-def where(df: DataFrame, field: str, op: str, value: Any, time_field: str = "time") -> DataFrame:
-    return df.filter(where_predicate(field, op, value, time_field))
+def where(df: DataFrame, field: str, op: str, value: Any) -> DataFrame:
+    return df.filter(where_predicate(field, op, value))

@@ -265,7 +265,6 @@ def sequence_windows(
     partition_by: Sequence[str] = (),
     out: str | None = None,
     order_by: Sequence[str] = (TIME,),
-    keep_partial: bool = False,
 ) -> DataFrame:
     """Sliding fixed-size windows per partition: each emitted row carries the
     trailing `size` values as an array; only rows where a full window is
@@ -285,9 +284,7 @@ def sequence_windows(
     rn = F.row_number().over(w_rank)
     keep = (rn >= size) & (((rn - size) % stride) == 0)
     out_df = df.withColumn(out or field, values).withColumn("__seq_keep__", keep)
-    if not keep_partial:
-        out_df = out_df.filter(F.col("__seq_keep__"))
-    return out_df.drop("__seq_keep__")
+    return out_df.filter(F.col("__seq_keep__")).drop("__seq_keep__")
 
 
 def ewma(
@@ -377,14 +374,16 @@ def interpolate_linear(
     df: DataFrame,
     field: str,
     partition_by: Sequence[str] = (),
-    out: str | None = None,
+    *,
+    out: str,
     order_by: Sequence[str] = (TIME,),
     round_digits: int = 6,
 ) -> DataFrame:
-    """Linear interpolation of interior nulls by event time — the missing
-    member of the gap-fill family (fill = trailing-window impute,
-    forward_fill = carry last; this one draws the line between the nearest
-    non-null neighbors). Leading/trailing nulls stay null (no extrapolation).
+    """Linear interpolation of interior nulls by event time into column
+    ``out`` — the missing member of the gap-fill family (fill =
+    trailing-window impute, forward_fill = carry last; this one draws the
+    line between the nearest non-null neighbors). Leading/trailing nulls
+    stay null (no extrapolation).
 
     Shape: two frames over ONE (partition, order) sort — a trailing
     last-non-null (value + its timestamp) and a leading first-non-null —
@@ -392,7 +391,6 @@ def interpolate_linear(
     differences divided in double, rounded to `round_digits`; observed
     values pass through bit-untouched.
     """
-    target = out or field
     time_col = order_by[0]
     w_back = canonical_window(partition_by, order_by).rowsBetween(
         Window.unboundedPreceding, -1
@@ -409,7 +407,7 @@ def interpolate_linear(
     ratio = (t_us - prev_t).cast("double") / (next_t - prev_t).cast("double")
     interp = F.round(prev_v + (next_v - prev_v) * ratio, round_digits)
     return df.withColumn(
-        target,
+        out,
         F.when(v.isNotNull(), F.col(field)).otherwise(
             F.when(prev_v.isNotNull() & next_v.isNotNull(), interp)
         ),

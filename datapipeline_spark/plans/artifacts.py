@@ -305,13 +305,10 @@ class ArtifactStore:
         return target
 
 
-def _as_store(
-    compiled: CompiledProject, store: ArtifactStore | str | Path | None
-) -> ArtifactStore:
-    if store is None:
-        defn = compiled.definition
-        return ArtifactStore(defn.root / defn.project.paths.artifacts)
-    return store if isinstance(store, ArtifactStore) else ArtifactStore(store)
+def _project_store(compiled: CompiledProject) -> ArtifactStore:
+    """The store under the project's configured artifacts path."""
+    defn = compiled.definition
+    return ArtifactStore(defn.root / defn.project.paths.artifacts)
 
 
 def _is_fresh(store: ArtifactStore, key: str, fingerprint: str) -> bool:
@@ -329,7 +326,7 @@ def fresh_frame(compiled: CompiledProject, key: str) -> DataFrame | None:
     for the rule's limit."""
     if not _fingerprint_sees_sources(compiled):
         return None
-    store = _as_store(compiled, None)
+    store = _project_store(compiled)
     if not _is_fresh(store, key, _fingerprints(compiled, {key})[key]):
         return None
     return store.read(compiled, key)
@@ -337,14 +334,14 @@ def fresh_frame(compiled: CompiledProject, key: str) -> DataFrame | None:
 
 def build_artifacts(
     compiled: CompiledProject,
-    store: ArtifactStore | str | Path | None = None,
     keys: set[str] | None = None,
     force: bool = False,
 ) -> dict[str, BuildResult]:
-    """Topological, fingerprint-skipped build (reference executor:95-205).
-    Only a producer that runs reads its dependency back from the store, so
-    a build whose artifacts are all fresh runs no Spark job."""
-    store = _as_store(compiled, store)
+    """Topological, fingerprint-skipped build (reference executor:95-205)
+    into the project's artifacts path. Only a producer that runs reads its
+    dependency back from the store, so a build whose artifacts are all
+    fresh runs no Spark job."""
+    store = _project_store(compiled)
     if keys is None:
         keys = {SERIES, METADATA, COVERAGE_STATS, TICKS}
         if dataset_requires_scaler(compiled):

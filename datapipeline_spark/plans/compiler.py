@@ -171,9 +171,9 @@ def apply_transform(
     if op == "forward_fill":
         return forward_fill(df, spec.field, partition_by, out=spec.to)
     if op == "log":
-        return log_op(df, spec.field, out=spec.to)
+        return log_op(df, spec.field, out=spec.to, strict=True)
     if op == "log1p":
-        return log1p_op(df, spec.field, out=spec.to)
+        return log1p_op(df, spec.field, out=spec.to, strict=True)
     if op == "derive":
         other = spec.right_field if spec.right_field is not None else spec.right_value
         return derive(df, spec.left, spec.operator, other, out=spec.to)

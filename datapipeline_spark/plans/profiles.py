@@ -46,10 +46,9 @@ def run_profiles(
     project_dir: str | Path,
     command: str,
     run_id: str | None = None,
-    only: str | None = None,
 ) -> list[ProfileResult]:
     defn = load_project(project_dir)
-    profs = select_profiles(defn, command, only)
+    profs = select_profiles(defn, command)
     if not profs:
         return []
     compiled = compile_project(spark, defn)

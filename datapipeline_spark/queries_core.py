@@ -1834,7 +1834,7 @@ def broadcast_center(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the global side derives from the primary: stage it so the hourly
     # collapse is computed once, not twice (4 FileScans -> 2)
     joined = ops.broadcast_stream(
-        h, glob, time_field="time", prefix="g_", strict=True, stage=True
+        h, glob, prefix="g_", stage=True
     )
     return joined.select(
         "user_id",
@@ -2107,7 +2107,6 @@ def topk_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
         3,
         order_by=["o_totalprice", "o_orderkey"],
         partition_by=["o_custkey"],
-        descending=True,
     )
     return ranked.select("o_custkey", "o_orderkey", "o_totalprice", "rank")
 

@@ -1946,9 +1946,7 @@ def fuzzy_match_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cost knob in blocked ER, and the operator's shape is identical at any
     # block subset
     scoped = c.filter(F.col("c_nationkey") < 5)
-    pairs = deletion_join(
-        scoped, "c_custkey", "c_name", k=2, block_cols=["c_nationkey"]
-    )
+    pairs = deletion_join(scoped, "c_custkey", "c_name", block_cols=["c_nationkey"])
     return pairs.select(
         F.col("id_a").alias("left_key"),
         F.col("id_b").alias("right_key"),
@@ -2562,9 +2560,9 @@ def q_hll_distinct_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         # in fast mode the xxhash64 projection is too cheap to justify the
         # round-robin exchange (A/B: spread cost > serial-hash cost there)
         li = spread(li)
-    partial = hll_registers(li, "l_orderkey", ["l_returnflag", "month"], p=10)
+    partial = hll_registers(li, "l_orderkey", ["l_returnflag", "month"])
     merged = hll_merge(partial, ["l_returnflag"])
-    return hll_estimate(merged, ["l_returnflag"], p=10)
+    return hll_estimate(merged, ["l_returnflag"])
 
 
 @query(
@@ -2676,7 +2674,7 @@ def q_hll_flag_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datapipeline_spark.sketch.hll import hll_overlap
 
     li = load_table(spark, sf_dir, "lineitem").select("l_returnflag", "l_orderkey")
-    return hll_overlap(li, "l_orderkey", "l_returnflag", "R", "A", p=10)
+    return hll_overlap(li, "l_orderkey", "l_returnflag", "R", "A")
 
 
 @query(
@@ -3297,10 +3295,10 @@ def q_acf7_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pearson aggregate over the overlap. The companion diagnostic to
     seasonal_naive_mae: the ACF says whether the lag-7 baseline is even
     plausible. Exact integer cents throughout; only the final
-    sqrt/divide chain is float. wide=True: daily cents GROW with data
-    volume (sf1's 10x daily sums squared trip the narrow int64 product's
-    ANSI overflow — caught by the sf1 oracle sweep), so the products run
-    in decimal(38,0) like the oracle's HUGEINT."""
+    sqrt/divide chain is float. Daily cents GROW with data volume (sf1's
+    10x daily sums squared trip an int64 product's ANSI overflow — caught
+    by the sf1 oracle sweep), so autocorr's products run in decimal(38,0)
+    like the oracle's HUGEINT."""
     from datapipeline_spark.operators.stats import autocorr
 
     daily = (
@@ -3313,7 +3311,7 @@ def q_acf7_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return autocorr(
-        daily, "cents", 7, ["o_orderpriority"], order_by="day", out="acf", wide=True
+        daily, "cents", 7, ["o_orderpriority"], order_by="day", out="acf"
     )
 
 
@@ -3766,7 +3764,6 @@ def q_reservoir_events_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["event_id"],
         n=3,
         seed="rsv",
-        out="pick",
     )
 
 
@@ -3834,9 +3831,7 @@ def q_frequent_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequent members). Round-7 plan: one repartition(basket) exchange
     feeds dedup, prune, and a co-partitioned codegen self-join — no
     ObjectHashAggregate, three exchanges total. The prune bounds the
-    quadratic stage by the post-prune basket width, and the optional
-    max_basket_items cap (exercised in pytest) gates oversized baskets
-    BEFORE any pair materializes — skew-independent."""
+    quadratic stage by the post-prune basket width."""
     from datapipeline_spark.operators.basket import frequent_pairs
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
@@ -4111,7 +4106,7 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datapipeline_spark.text.bpe import bpe_merges_df
 
     docs = load_table(spark, sf_dir, "documents")
-    return bpe_merges_df(spark, docs, "text", n_merges=24, min_pair_count=2)
+    return bpe_merges_df(spark, docs, "text", n_merges=24)
 
 
 _FD_COLS = ["o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"]
@@ -4573,7 +4568,7 @@ def q_entity_resolution_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # that went 10.3x at sf1: fixed blocking keys grow blocks linearly,
     # deletion variants keep the discriminating content in the join key).
     cand = deletion_join(
-        scoped, "c_custkey", "c_name", k=2, block_cols=["c_nationkey"]
+        scoped, "c_custkey", "c_name", block_cols=["c_nationkey"]
     ).select("id_a", "id_b")
     a = c.alias("a")
     b = c.select("c_custkey", "c_name", "c_acctbal", "c_mktsegment").alias("b")
@@ -6126,9 +6121,9 @@ def q_hll_sliding_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         F.date_trunc("day", F.col("ts")).alias("day"), "user_id"
     )
-    partial = hll_registers(ev, "user_id", ["day"], p=10)
+    partial = hll_registers(ev, "user_id", ["day"])
     merged = hll_sliding_merge(partial, "day", window_days=7)
-    return hll_estimate(merged, ["day"], p=10)
+    return hll_estimate(merged, ["day"])
 
 
 @query(
@@ -6545,10 +6540,10 @@ def q_xcorr_value_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         "xv",
         "yv",
     )
-    # wide=True: daily value-cents grow with data volume (same scale
-    # posture as acf7_daily_revenue — aggregate-built series square past
-    # int64 at ~100x sf0.1)
-    return cross_correlation(daily, "o", "xv", "yv", max_lag=7, wide=True)
+    # daily value-cents grow with data volume (same scale posture as
+    # acf7_daily_revenue — aggregate-built series square past int64 at
+    # ~100x sf0.1); cross_correlation's products run in decimal(38,0)
+    return cross_correlation(daily, "o", "xv", "yv", max_lag=7)
 
 
 @query(

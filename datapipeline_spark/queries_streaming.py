@@ -758,11 +758,11 @@ def streaming_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     staging = _staged_events(spark, sf_dir)
     sdf = _stream_of(spark, staging)
     regs = hll_registers(
-        sdf.select("event_type", "user_id"), "user_id", ["event_type"], p=10
+        sdf.select("event_type", "user_id"), "user_id", ["event_type"]
     )
     name = "stream_hll_" + hashlib.sha256(staging.encode()).hexdigest()[:8]
     _run_to_memory(regs, name, "complete")
-    return hll_estimate(spark.table(name), ["event_type"], p=10)
+    return hll_estimate(spark.table(name), ["event_type"])
 
 
 @query(

@@ -29,6 +29,9 @@ cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 #: decimal places of every cosine score before ranking or thresholding
 SCORE_DIGITS = 4
+#: lsh_similar_pairs skips buckets with more members (its SQL oracle,
+#: queries_data._lsh_similar_pairs_sql, gates at the same 1000)
+MAX_BUCKET = 1000
 
 #: the sign-LSH signature column `random_hyperplane_signature` adds
 _SIG = "rh_sig"
@@ -354,7 +357,7 @@ def ivf_knn(
     inverted lists and exact-cosine re-ranks only those candidates.
 
     Scale shape: corpus assignment is a map stage (then ideally persisted
-    partitioned by centroid_id via write_table); the probe join is an
+    hive-partitioned by centroid_id); the probe join is an
     equi-join on centroid_id with the tiny exploded query side broadcast —
     the corpus never shuffles. `nprobe = n_centroids` degenerates to exact
     brute force (useful as a correctness gate)."""
@@ -400,13 +403,12 @@ def lsh_similar_pairs(
     planes: int = 16,
     bands: int = 4,
     seed: int = 42,
-    max_bucket: int = 1000,
 ) -> DataFrame:
     """Sign-LSH-blocked cosine pairs — the 100 TB form of the pair surface.
 
     Each vector is banded into one (band, bucket) row per band, and every
     bucket scores its own (id_a < id_b) pairs in one grouped-map call;
-    buckets larger than `max_bucket` are skipped BEFORE any pair
+    buckets larger than MAX_BUCKET are skipped BEFORE any pair
     materializes (degenerate-region guard, mirroring the MinHash path).
 
     Deterministic end-to-end: the hyperplanes are seed-derived literals, so
@@ -426,7 +428,7 @@ def lsh_similar_pairs(
     # `bands` times, and Σ C(|bucket|, 2) ≥ Σ |bucket| whenever buckets
     # average ≥ 3 members, so the in-bucket form moves strictly fewer
     # bytes in exactly the dense-bucket regime where pair scoring gets
-    # expensive; per-group memory is bounded by the `max_bucket` cap
+    # expensive; per-group memory is bounded by the MAX_BUCKET cap
     # (≤ cap × dim doubles). The raw `_cosine_rows` score is returned and
     # Spark applies the SAME F.round as the pair form; pairs appearing in
     # several buckets carry identical scores, so the trailing distinct is
@@ -439,7 +441,7 @@ def lsh_similar_pairs(
              "id_b": pd.Series(dtype="int64"),
              "__raw__": pd.Series(dtype="float64")}
         )
-        if len(pdf) < 2 or len(pdf) > max_bucket:
+        if len(pdf) < 2 or len(pdf) > MAX_BUCKET:
             return empty
         keep = np.flatnonzero(_lengths(pdf["__v__"]) == dim)
         if len(keep) < 2:

@@ -37,7 +37,9 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-P_DEFAULT = 10
+#: register-index bits: 2^10 = 1024 registers per group (~3.3% standard
+#: error); the registry's SQL oracles replay the same p
+P = 10
 _HASH_BITS = 60  # 15 md5 hex chars / masked xxhash64 — inside signed bigint
 
 
@@ -53,24 +55,19 @@ def hll_registers(
     df: DataFrame,
     key: str,
     groups: Sequence[str] = (),
-    p: int = P_DEFAULT,
-    hash_col: F.Column | None = None,
-    hash_mode: str | None = None,
 ) -> DataFrame:
     """Per-group HLL register state: ``groups + (reg, rho)`` with at most
-    ``2**p`` register rows per group. One aggregation, map-side combined.
+    ``2**P`` register rows per group. One aggregation, map-side combined.
 
-    Hashing is dual-mode (functions/hashing.hash60): ``oracle`` (default)
-    uses the md5-prefix hash an ANSI-SQL oracle replays bit-exactly;
-    ``fast`` uses codegen-native xxhash64 masked to 60 bits — identical
-    sketch semantics and accuracy, ~10x cheaper per row, but a DIFFERENT
-    register state (merge sketches of one mode only). ``hash_col``
-    overrides both with a caller-supplied 60-bit column."""
+    Hashing is dual-mode (functions/hashing.hash60, chosen by
+    $SPARK_GRAFT_HASH_MODE): ``oracle`` (default) uses the md5-prefix hash
+    an ANSI-SQL oracle replays bit-exactly; ``fast`` uses codegen-native
+    xxhash64 masked to 60 bits — identical sketch semantics and accuracy,
+    ~10x cheaper per row, but a DIFFERENT register state (merge sketches
+    of one mode only)."""
     from datapipeline_spark.functions.hashing import hash60
 
-    if not 4 <= p <= 16:
-        raise ValueError(f"p must be in [4, 16], got {p}")
-    rem_bits = _HASH_BITS - p
+    rem_bits = _HASH_BITS - P
     mask = (1 << rem_bits) - 1
     rho_max = rem_bits + 1
     rem = F.col("__h").bitwiseAND(F.lit(mask))
@@ -80,14 +77,7 @@ def hll_registers(
         .cast("int")
     )
     return (
-        df.select(
-            *groups,
-            (
-                hash_col
-                if hash_col is not None
-                else hash60(F.col(key), hash_mode)
-            ).alias("__h"),
-        )
+        df.select(*groups, hash60(F.col(key)).alias("__h"))
         .select(*groups, F.shiftright(F.col("__h"), rem_bits).alias("reg"), rho.alias("rho"))
         .groupBy(*groups, "reg")
         .agg(F.max("rho").alias("rho"))
@@ -100,15 +90,13 @@ def hll_merge(registers: DataFrame, groups: Sequence[str] = ()) -> DataFrame:
     return registers.groupBy(*groups, "reg").agg(F.max("rho").alias("rho"))
 
 
-def hll_estimate(
-    registers: DataFrame, groups: Sequence[str] = (), p: int = P_DEFAULT
-) -> DataFrame:
+def hll_estimate(registers: DataFrame, groups: Sequence[str] = ()) -> DataFrame:
     """Collapse register state to one row per group:
     ``n_registers`` (occupied), ``scaled_harmonic`` (exact bigint
     ``S * 2^rho_max``, empty registers contributing ``2^rho_max`` each),
     and ``est_raw`` (the uncorrected HLL estimate, bit-deterministic)."""
-    m = 1 << p
-    rho_max = _HASH_BITS - p + 1
+    m = 1 << P
+    rho_max = _HASH_BITS - P + 1
     agg = registers.groupBy(*groups).agg(
         F.count(F.lit(1)).cast("long").alias("n_registers"),
         F.expr(f"sum(shiftleft(1L, {rho_max} - rho))").cast("long").alias("__sp"),
@@ -120,17 +108,17 @@ def hll_estimate(
         *groups,
         "n_registers",
         scaled.alias("scaled_harmonic"),
-        (F.lit(alpha_numerator(p)) / scaled.cast("double")).alias("est_raw"),
+        (F.lit(alpha_numerator(P)) / scaled.cast("double")).alias("est_raw"),
     )
 
 
-def corrected_estimate(n_registers: int, scaled_harmonic: int, p: int = P_DEFAULT) -> float:
+def corrected_estimate(n_registers: int, scaled_harmonic: int) -> float:
     """Driver-side bias correction (Flajolet small-range rule): linear
     counting when the raw estimate <= 2.5m and empty registers remain.
     Kept out of the distributed plan because ``ln`` is not bit-stable
     across libm implementations (cross-engine oracle would flap)."""
-    m = 1 << p
-    est = alpha_numerator(p) / scaled_harmonic
+    m = 1 << P
+    est = alpha_numerator(P) / scaled_harmonic
     zeros = m - n_registers
     if est <= 2.5 * m and zeros > 0:
         return m * math.log(m / zeros)
@@ -143,7 +131,6 @@ def hll_overlap(
     flag_col: str,
     flag_a: str,
     flag_b: str,
-    p: int = P_DEFAULT,
 ) -> DataFrame:
     """Sketch algebra: distinct-count estimates for two key sets, their
     union (register max-merge — exact sketch semantics), and their
@@ -155,15 +142,15 @@ def hll_overlap(
     Intersection error grows with |A∪B|/|A∩B| (inclusion-exclusion
     amplifies the union's relative error) — standard HLL-algebra caveat."""
     two = df.filter(F.col(flag_col).isin(flag_a, flag_b))
-    regs = hll_registers(two, key, [flag_col], p)
-    each = hll_estimate(regs, [flag_col], p)
+    regs = hll_registers(two, key, [flag_col])
+    each = hll_estimate(regs, [flag_col])
     a = each.filter(F.col(flag_col) == flag_a).select(
         F.col("scaled_harmonic").alias("sh_a"), F.col("est_raw").alias("est_a")
     )
     b = each.filter(F.col(flag_col) == flag_b).select(
         F.col("scaled_harmonic").alias("sh_b"), F.col("est_raw").alias("est_b")
     )
-    u = hll_estimate(hll_merge(regs, []), [], p).select(
+    u = hll_estimate(hll_merge(regs, [])).select(
         F.col("scaled_harmonic").alias("sh_union"), F.col("est_raw").alias("est_union")
     )
     return (

@@ -82,6 +82,8 @@ def heavy_hitters(
     ``df``: the O(k)-memory candidate sweep, then a broadcast-semi-pruned
     exact recount — never a full-domain groupBy. The result is exact and
     partition-invariant despite the sketch phase (see module docstring).
+    The registry query keeps k=200 counters; tests use k of 3-4 to reach
+    the eviction on a few rows.
     """
     cand = mg_candidates(df, key_col, k)
     exact = (

@@ -176,7 +176,6 @@ def http_source(
     headers: Mapping[str, str] | None = None,
     params: Mapping[str, str] | None = None,
     timeout: float = 30.0,
-    staging_dir: str | None = None,
     **read_kwargs,
 ) -> DataFrame:
     """Driver-side HTTP GET → staging file → distributed read
@@ -189,7 +188,7 @@ def http_source(
         sep = "&" if "?" in url else "?"
         url = url + sep + urllib.parse.urlencode(params)
     req = urllib.request.Request(url, headers=dict(headers or {}))
-    staging_dir = staging_dir or tempfile.mkdtemp(prefix="http_source_")
+    staging_dir = tempfile.mkdtemp(prefix="http_source_")
     suffix = {"jsonl": ".jsonl", "json": ".json", "csv": ".csv"}.get(format, ".dat")
     staged = os.path.join(staging_dir, "payload" + suffix)
     with urllib.request.urlopen(req, timeout=timeout) as resp, open(staged, "wb") as out:

@@ -36,14 +36,10 @@ def stream_jsonl_source(
     spark: SparkSession,
     path: str,
     schema: str,
-    max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """File-based streaming source (new files under `path` become batches).
     Schema is mandatory — streaming reads never infer (plan stability)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.json(path)
+    return spark.readStream.schema(schema).json(path)
 
 
 def dedupe_stream(
@@ -91,11 +87,11 @@ def rolling_mean_stream(
     field: str,
     window: int,
     entity_keys: Sequence[str],
-    min_samples: int = 1,
-    time_field: str = "time",
     watermark: str = "1 hour",
     out: str = "rolling_mean",
-    order_cols: Sequence[str] | None = None,
+    *,
+    min_samples: int,
+    order_cols: Sequence[str],
 ) -> DataFrame:
     """Per-key trailing `window`-row mean over event-time order — the
     streaming form of operators/window.rolling (reference
@@ -103,11 +99,12 @@ def rolling_mean_stream(
     `applyInPandasWithState`: state = last `window` values per key, exactly
     the reference's per-partition generator state made distributed/durable.
 
-    Rows within one micro-batch are processed in event-time order; across
-    batches arrival order applies (use watermarked sources for discipline).
+    Rows within one micro-batch are processed in ``order_cols`` order
+    (the registry query breaks time ties by event_id); across batches
+    arrival order applies (use watermarked sources for discipline).
     """
     payload = [c for c in sdf.columns]
-    sort_cols = list(order_cols) if order_cols else [time_field]
+    sort_cols = list(order_cols)
     out_schema = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in sdf.schema.fields
     ) + f", `{out}` double"
@@ -292,9 +289,9 @@ def ewma_stream(
     window: int,
     entity_keys: Sequence[str],
     decay: float = 0.5,
-    time_field: str = "time",
     out: str = "ewma",
-    order_cols: Sequence[str] | None = None,
+    *,
+    order_cols: Sequence[str],
 ) -> DataFrame:
     """Per-key truncated EWMA over event-time order — the streaming form of
     operators/window.ewma, via `applyInPandasWithState` (state = last
@@ -303,7 +300,7 @@ def ewma_stream(
     0.0), so with decay 0.5 (exact powers of two) streaming == batch
     bit-for-bit — asserted in tests/test_streaming.py."""
     payload = [c for c in sdf.columns]
-    sort_cols = list(order_cols) if order_cols else [time_field]
+    sort_cols = list(order_cols)
     out_schema = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in sdf.schema.fields
     ) + f", `{out}` double"
@@ -405,7 +402,6 @@ def near_dup_filter_stream(
     watermark: str = "1 hour",
     time_field: str = "time",
     shingle_words: int = 2,
-    params=None,
 ) -> DataFrame:
     """Ingest-time streaming near-dup filter: per-ROW minhash signature
     (dedup/minhash.row_minhash — a pure map, legal in append mode where a
@@ -420,7 +416,7 @@ def near_dup_filter_stream(
     from datapipeline_spark.dedup.minhash import MinHashParams, row_minhash
 
     sig = row_minhash(
-        sdf, text_col, params or MinHashParams(), shingle_words, out="minhash_sig"
+        sdf, text_col, MinHashParams(), shingle_words, out="minhash_sig"
     ).withWatermark(time_field, watermark)
     # Split, don't fabricate a key: routing signature-less rows through the
     # dedup with any shared fallback key (e.g. '∅'+event-time) would
@@ -441,9 +437,9 @@ def cusum_stream(
     entity_keys: Sequence[str],
     slack: float = 0.0,
     scale: int = 100,
-    time_field: str = "time",
     out: str = "cusum",
-    order_cols: Sequence[str] | None = None,
+    *,
+    order_cols: Sequence[str],
 ) -> DataFrame:
     """Per-key streaming CUSUM — the streaming form of
     operators/window.cusum, via `applyInPandasWithState`.
@@ -456,7 +452,7 @@ def cusum_stream(
     accumulate as integers at `scale` units per 1.0.
     """
     payload = [c for c in sdf.columns]
-    sort_cols = list(order_cols) if order_cols else [time_field]
+    sort_cols = list(order_cols)
     out_schema = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in sdf.schema.fields
     ) + f", `{out}` bigint"
@@ -502,8 +498,8 @@ def holt_stream(
     entity_keys: Sequence[str],
     alpha: float = 0.5,
     beta: float = 0.5,
-    time_field: str = "time",
-    order_cols: Sequence[str] | None = None,
+    *,
+    order_cols: Sequence[str],
 ) -> DataFrame:
     """Per-key Holt linear-trend fold over event-time order — the streaming
     form of operators/holt.holt_linear, via `applyInPandasWithState`. State
@@ -513,7 +509,7 @@ def holt_stream(
     identical IEEE double operations as the batch JVM array fold, so with
     α=β=½ (exact power-of-two scalings) streaming == batch bit-for-bit."""
     payload = [c for c in sdf.columns]
-    sort_cols = list(order_cols) if order_cols else [time_field]
+    sort_cols = list(order_cols)
     out_schema = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in sdf.schema.fields
     ) + ", `level` double, `trend` double"
@@ -560,19 +556,19 @@ def hampel_stream(
     field: str,
     window: int,
     entity_keys: Sequence[str],
-    k: int = 3,
-    min_samples: int = 3,
-    time_field: str = "time",
-    order_cols: Sequence[str] | None = None,
+    *,
+    order_cols: Sequence[str],
 ) -> DataFrame:
     """Per-key streaming Hampel repair — the streaming form of
     operators/window.hampel via `applyInPandasWithState`: state is the
     last ``window − 1`` integer values (bounded buffer, like
     ewma_stream). Lower median / lower MAD over the trailing frame are
     pure integer selections, so streaming output EQUALS the batch
-    operator row for row — no float folds at all."""
+    operator row for row — no float folds at all. A value is repaired
+    when it lies more than 3 MADs from the median of a frame of at least
+    3 values (the batch operator's k=3, min_samples=3)."""
     payload = [c for c in sdf.columns]
-    sort_cols = list(order_cols) if order_cols else [time_field]
+    sort_cols = list(order_cols)
     out_schema = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in sdf.schema.fields
     ) + ", `hampel` bigint"
@@ -595,7 +591,7 @@ def hampel_stream(
                 med = frame[(n + 1) // 2 - 1]
                 mad = sorted(abs(x - med) for x in frame)[(n + 1) // 2 - 1]
                 res.append(
-                    med if n >= min_samples and abs(v - med) > k * mad else v
+                    med if n >= 3 and abs(v - med) > 3 * mad else v
                 )
             pdf = pdf.copy()
             pdf["hampel"] = pd.Series(res, index=pdf.index, dtype="int64")

@@ -94,8 +94,9 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
 
 
-def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
-    """Round-robin rebalance before a compute-heavy map stage.
+def spread(df: DataFrame) -> DataFrame:
+    """Round-robin rebalance into `defaultParallelism` partitions before a
+    compute-heavy map stage.
 
     Scan parallelism is bounded by file splits, and a parquet file is not
     splittable below the row group — the single-row-group test tables
@@ -118,5 +119,4 @@ def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
     compute-heavy stages: vector folds, levenshtein residuals, per-doc-keyed
     signatures.
     """
-    n = partitions or df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n)
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)

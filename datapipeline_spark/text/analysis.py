@@ -196,12 +196,11 @@ def winnow_fingerprints(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    k: int = 8,
-    window: int = 4,
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer et al., SIGMOD 2003):
-    polynomial rolling hash over k-grams, keep the min hash of each sliding
-    window (rightmost on ties) → sparse position-robust fingerprint set.
+    polynomial rolling hash over 8-grams, keep the min hash of each sliding
+    4-hash window (rightmost on ties) → sparse position-robust fingerprint
+    set.
 
     Arrow-batched mapInPandas: documents are independent, so this
     parallelizes perfectly across partitions, and within a document the
@@ -218,6 +217,7 @@ def winnow_fingerprints(
     from numpy.lib.stride_tricks import sliding_window_view
 
     B, M = 257, (1 << 31) - 1
+    k, window = 8, 4  # k-gram length, hashes per window
     out_schema = f"{id_col} long, fingerprint long, pos int"
     # B^(k-1-j) mod M for j in 0..k-1; products code*pow < 2^21 * 2^31 and
     # the k-term sum of residues < k * 2^31 both fit comfortably in int64.

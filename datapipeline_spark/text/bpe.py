@@ -109,12 +109,11 @@ def learn_bpe_merges(
     docs: DataFrame,
     text_col: str,
     n_merges: int,
-    min_pair_count: int = 2,
-    checkpoint_every: int = 4,
 ) -> list[tuple[int, str, str, int]]:
     """Learn up to ``n_merges`` merge rules; returns
     ``[(rank, left, right, pair_count), ...]`` in learned order. Stops
-    early when no pair reaches ``min_pair_count``."""
+    early when no pair occurs at least twice. The word table is
+    checkpointed every 4 merges to keep the plan bounded."""
     wf = word_freq_table(docs, text_col).withColumn(
         "symbols", _initial_symbols(F.col("word"))
     )
@@ -127,12 +126,12 @@ def learn_bpe_merges(
             .limit(1)
             .collect()
         )
-        if not top or top[0]["cnt"] < min_pair_count:
+        if not top or top[0]["cnt"] < 2:
             break
         a, b, cnt = top[0]["a"], top[0]["b"], int(top[0]["cnt"])
         rules.append((rank, a, b, cnt))
         wf = wf.withColumn("symbols", _merge_expr(a, b))
-        if rank % checkpoint_every == 0:
+        if rank % 4 == 0:
             wf = wf.localCheckpoint(eager=True)
     return rules
 
@@ -142,10 +141,9 @@ def bpe_merges_df(
     docs: DataFrame,
     text_col: str,
     n_merges: int,
-    min_pair_count: int = 2,
 ) -> DataFrame:
     """The learned rules as a DataFrame (rank, left, right, pair_count)."""
-    rules = learn_bpe_merges(docs, text_col, n_merges, min_pair_count)
+    rules = learn_bpe_merges(docs, text_col, n_merges)
     return spark.createDataFrame(
         rules, "rank int, left string, right string, pair_count long"
     )

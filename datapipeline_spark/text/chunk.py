@@ -41,6 +41,7 @@ def chunk_documents(
 
     Returns (id_col, chunk_idx, chunk_text, n_tokens) with one row per
     window; `size - stride` tokens of overlap between consecutive chunks.
+    The registry uses 64-token chunks; tests chunk a few words at size 4.
     """
     if size < 1 or stride < 1:
         raise ValueError("size and stride must be >= 1")

@@ -34,7 +34,8 @@ def contrastive_pairs(
     neg_doc_id, neg_chunk_idx). Chunks are non-overlapping (stride =
     size — overlap would leak anchor tokens into the positive). Anchors
     need both a following chunk (positive) and a different-doc hash
-    neighbor (negative)."""
+    neighbor (negative). ``chunk_size`` is 64 tokens in the registry;
+    tests use 8 so short documents still form anchors."""
     c = chunk_documents(
         df, id_col=id_col, text_col=text_col, size=chunk_size, stride=chunk_size
     ).select(id_col, "chunk_idx")

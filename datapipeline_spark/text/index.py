@@ -29,19 +29,18 @@ def build_inverted_index(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_df: int | None = 100,
-    lowercase: bool = True,
 ) -> DataFrame:
     """(term, df, doc_ids, tfs) — posting lists sorted by doc id.
 
     `df` is document frequency; `doc_ids[i]` and `tfs[i]` are aligned.
-    Terms are whitespace tokens (optionally lowercased); empty tokens are
-    dropped. `max_df=None` disables the stop-word cap (bounded corpora
-    only — see module docstring for why the cap is the 100 TB contract).
+    Terms are lowercased whitespace tokens; empty tokens are dropped.
+    `max_df=None` disables the stop-word cap (bounded corpora only — see
+    module docstring for why the cap is the 100 TB contract); tests pass
+    None and 2 to see the cap off and engaged on a few documents.
     """
     tok = F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("term")
     toks = docs.select(F.col(id_col).alias("__doc__"), tok).filter(F.col("term") != "")
-    if lowercase:
-        toks = toks.withColumn("term", F.lower(F.col("term")))
+    toks = toks.withColumn("term", F.lower(F.col("term")))
     tf = toks.groupBy("term", "__doc__").agg(F.count(F.lit(1)).alias("tf"))
     postings = tf.groupBy("term").agg(
         F.sort_array(
@@ -66,7 +65,6 @@ def bm25_scores(
     k1: float = 1.2,
     b: float = 0.75,
     round_digits: int = 4,
-    lowercase: bool = True,
 ) -> DataFrame:
     """BM25 relevance of every document for a bag of query terms —
     (doc_id, score, rank), Lucene-style idf = ln(1 + (N - df + 0.5)/(df + 0.5)).
@@ -86,11 +84,10 @@ def bm25_scores(
     """
     from pyspark.sql import Window
 
-    terms = [t.lower() for t in query_terms] if lowercase else list(query_terms)
+    terms = [t.lower() for t in query_terms]
     tok = F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("term")
     toks = docs.select(F.col(id_col).alias("__doc__"), tok).filter(F.col("term") != "")
-    if lowercase:
-        toks = toks.withColumn("term", F.lower(F.col("term")))
+    toks = toks.withColumn("term", F.lower(F.col("term")))
     lens = toks.groupBy("__doc__").agg(F.count(F.lit(1)).alias("dl"))
     stats = lens.agg(
         F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")

@@ -45,7 +45,8 @@ def pack_sequences(
     first_seq/last_seq = the seq_len-sized training sequences the document's
     tokens land in. Documents are independent of partition layout: the order
     key is content-free (seed | id), so the result is reproducible across
-    cluster sizes and reruns.
+    cluster sizes and reruns. The registry packs 2048-token sequences;
+    tests pack at 8-10 tokens to span several sequences on a few words.
     """
     if seq_len <= 0:
         raise ValueError(f"seq_len must be positive, got {seq_len}")

@@ -5,8 +5,10 @@ results, not build time) and easy to regress silently: operators/bloom.py
 once spent 22 s per invocation expanding a 4096-long bitmap into Py4J
 ``lit`` calls, and an F.expr rewrite of the LSH signature cost ~7 s of SQL
 parsing — both only detectable as wall time between ``fn(spark, sf)`` being
-called and the DataFrame coming back. This test calls every registry entry
-at sf0.001 and fails on any construction slower than its budget.
+called and the DataFrame coming back. This test reads the one sweep of
+every registry entry at sf0.001 (conftest ``registry_builds``, which the
+plan invariants share) and fails on any construction slower than its
+budget.
 
 Budgets: 8 s default. Isolated constructions run in well under 1 s, but a
 FULL-REGISTRY sweep accumulates 250+ analyzed plans in one driver and the
@@ -52,13 +54,13 @@ EAGER_BUDGET_S = {
 }
 
 
-def test_every_registry_query_constructs_within_budget(spark):
+def test_every_registry_query_constructs_within_budget(spark, registry_builds):
     import __spark_entry__ as entry
 
     qs = entry.queries()
-    # JVM/session warm-up so the first measured query doesn't pay it
-    spark.range(10).count()
-    next(iter(qs.values()))(spark, SF)
+    builds = registry_builds(SF)
+    failed = {n: err for n, (took, err) in builds.items() if took is None}
+    assert not failed, failed
 
     def _budget(name: str) -> float:
         # streaming queries build file-source listings + schema plumbing at
@@ -71,10 +73,7 @@ def test_every_registry_query_constructs_within_budget(spark):
         qs[name](spark, SF)
         return time.time() - t0
 
-    suspects: list[str] = []
-    for name in qs:
-        if _measure(name) > _budget(name):
-            suspects.append(name)
+    suspects = [n for n, (took, _) in builds.items() if took > _budget(n)]
     # a full-suite session (450+ tests, hundreds of analyzed plans) can
     # transiently slow a construction 3-5x; a REGRESSION reproduces, a
     # GC/driver blip does not — re-measure suspects (min of 2) before failing

@@ -133,8 +133,8 @@ def test_lang_scores(spark):
 
 
 def test_winnow_fingerprints_deterministic(docs):
-    fp1 = sorted(tuple(r) for r in winnow_fingerprints(docs, k=4, window=3).collect())
-    fp2 = sorted(tuple(r) for r in winnow_fingerprints(docs, k=4, window=3).collect())
+    fp1 = sorted(tuple(r) for r in winnow_fingerprints(docs).collect())
+    fp2 = sorted(tuple(r) for r in winnow_fingerprints(docs).collect())
     assert fp1 == fp2 and len(fp1) > 0
     by_doc = {}
     for doc_id, fp, pos in fp1:
@@ -863,11 +863,6 @@ def test_bloom_prefilter_no_false_negatives_and_join_equivalence(spark):
     a = bloom_prefilter_join(probe, build, "pk", "bk").select("pk")
     b = probe.join(build, probe.pk == build.bk).select("pk")
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    # non-inner joins would silently drop unmatched probe rows — rejected
-    import pytest
-
-    with pytest.raises(ValueError, match="inner"):
-        bloom_prefilter_join(probe, build, "pk", "bk", how="left")
 
 
 def test_bloom_filter_is_map_side_only(spark):
@@ -949,13 +944,15 @@ def test_hashed_features_partition_invariant_and_tf_exact(spark):
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
 
 
-def test_hll_custom_hash_col(spark):
+def test_hll_custom_hash_col(spark, monkeypatch):
+    """The xxhash64 register hash (fast mode) estimates 50k distinct keys
+    within 10%."""
     from datapipeline_spark.sketch.hll import corrected_estimate, hll_estimate, hll_registers
 
+    monkeypatch.setenv("SPARK_GRAFT_HASH_MODE", "fast")
     d = spark.range(50_000).select(F.col("id").alias("k"))
-    h = F.xxhash64(F.col("k"), F.lit(7)).bitwiseAND(F.lit((1 << 60) - 1))
-    r = hll_estimate(hll_registers(d, "k", p=10, hash_col=h), p=10).collect()[0]
-    c = corrected_estimate(r.n_registers, r.scaled_harmonic, p=10)
+    r = hll_estimate(hll_registers(d, "k")).collect()[0]
+    c = corrected_estimate(r.n_registers, r.scaled_harmonic)
     assert abs(c - 50_000) / 50_000 < 0.1
 
 
@@ -1202,24 +1199,28 @@ def test_pearson_and_autocorr_known_values(spark):
 
 
 def test_autocorr_wide_survives_aggregate_scale_magnitudes(spark):
-    """Red-on-revert for the sf1 overflow: series values beyond the narrow
-    path's |v| ≲ 3e9 squaring bound (daily SUMS grow with data volume)
-    must raise ANSI ARITHMETIC_OVERFLOW on the int64-product path — never
-    silently wrap — and compute exactly on wide=True's decimal path."""
+    """Red-on-revert for the sf1 overflow: series values beyond the
+    int64 path's |v| ≲ 3e9 squaring bound (daily SUMS grow with data
+    volume) must raise ANSI ARITHMETIC_OVERFLOW on pearson_corr's
+    int64-product path — never silently wrap — and autocorr, which takes
+    the decimal path, must compute them exactly."""
     import math
 
     import pytest
 
-    from datapipeline_spark.operators.stats import autocorr
+    from datapipeline_spark.operators.stats import autocorr, pearson_corr
 
     # magnitudes ~5e9: v*v ~ 2.5e19 > 2^63
     xs = [5_000_000_000 + (t % 7) * 400_000_000 for t in range(20)]
     s = spark.createDataFrame(
         [(t, v) for t, v in enumerate(xs)], "time long, v long"
     )
+    pairs = spark.createDataFrame(
+        list(zip(xs[:-7], xs[7:])), "yl long, y long"
+    )
     with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
-        autocorr(s, "v", 7).collect()
-    got = autocorr(s, "v", 7, wide=True).collect()[0]
+        pearson_corr(pairs, "yl", "y").collect()
+    got = autocorr(s, "v", 7).collect()[0]
     # exact python reference (arbitrary-precision ints, one float chain)
     y = xs[7:]
     yl = xs[:-7]
@@ -1306,14 +1307,13 @@ def test_frequent_pairs_apriori_prune_and_basket_cap(spark):
     rows = [(1, "a"), (1, "b"), (1, "c"), (2, "a"), (2, "b"), (3, "a"),
             (3, "c"), (4, "b"), (4, "b"), (5, "d")]
     df = spark.createDataFrame(rows, "o long, it string")
-    # support>=2 prunes d; cap=2 drops basket 1 (3 frequent items)
+    # support>=3 keeps a (baskets 1-3) and b (1, 2, 4); c (2) and d (1)
+    # never enter the pair join
     got = {
         (r.ia, r.ib): r.pair_support
-        for r in frequent_pairs(
-            df, "o", "it", min_item_support=2, max_basket_items=2
-        ).collect()
+        for r in frequent_pairs(df, "o", "it", min_item_support=3).collect()
     }
-    assert got == {("a", "b"): 1, ("a", "c"): 1}
+    assert got == {("a", "b"): 2}
     # duplicate (4,'b') rows count once: presence, not multiplicity
     full = {
         (r.ia, r.ib): r.pair_support
@@ -1360,28 +1360,18 @@ def test_negative_samples_fixed_k_and_labeling(spark):
 def test_skyline_2d_matches_brute_force(spark):
     from datapipeline_spark.operators.skyline import skyline_2d
 
-    import itertools, random
+    import random
     rng = random.Random(7)
     pts = [(rng.randrange(0, 40), rng.randrange(0, 40)) for _ in range(300)]
     pts += [pts[0], pts[1]]  # exact duplicates both survive
     df = spark.createDataFrame(pts, "x long, y long")
 
-    def brute(mx, my):
-        def better(q, p):
-            qx, qy = (q[0], q[1]) if mx else (-q[0], q[1])
-            px, py = (p[0], p[1]) if mx else (-p[0], p[1])
-            qy, py = (qy, py) if my else (-qy, -py)
-            return qx <= px and qy >= py and (qx < px or qy > py)
-        return sorted(p for p in pts if not any(better(q, p) for q in pts))
+    def better(q, p):  # q dominates p: minimize x, maximize y
+        return q[0] <= p[0] and q[1] >= p[1] and (q[0] < p[0] or q[1] > p[1])
 
-    for mx, my in itertools.product([True, False], repeat=2):
-        got = sorted(
-            (r.x, r.y)
-            for r in skyline_2d(
-                df, "x", "y", minimize_x=mx, maximize_y=my, buckets=8
-            ).collect()
-        )
-        assert got == brute(mx, my), (mx, my)
+    want = sorted(p for p in pts if not any(better(q, p) for q in pts))
+    got = sorted((r.x, r.y) for r in skyline_2d(df, "x", "y", buckets=8).collect())
+    assert got == want
 
 
 def test_interval_concurrency_sweep(spark):
@@ -1463,7 +1453,7 @@ def test_bpe_merges_match_python_reference(spark):
         "thinking about the things they think through",
     ]
     docs = spark.createDataFrame([(t,) for t in texts], "text string")
-    got = learn_bpe_merges(docs, "text", 12, min_pair_count=2)
+    got = learn_bpe_merges(docs, "text", 12)
     assert got == _python_bpe(texts, 12)
     # applying the learned merges re-tokenizes deterministically
     m = [(a, b) for _, a, b, _ in got]
@@ -2006,7 +1996,7 @@ def test_rendezvous_assign_balanced_and_deterministic(spark):
     assert {r["k"]: r["shard"] for r in a} == {r["k"]: r["shard"] for r in b}
 
 
-def test_dual_mode_hashing_balance_and_movement(spark):
+def test_dual_mode_hashing_balance_and_movement(spark, monkeypatch):
     """functions/hashing.py dual modes: the fast (xxhash64) and oracle
     (md5) score families must BOTH give near-uniform rendezvous placement
     and both obey the minimal-movement law exactly; HLL register states
@@ -2035,14 +2025,15 @@ def test_dual_mode_hashing_balance_and_movement(spark):
         assert rows[8]["moved_in"] == rows[8]["n_after"] > 0
 
     d = spark.range(3000).select(F.col("id").alias("key"))
+    regs = {}
     for mode in ("oracle", "fast"):
-        est = hll_estimate(hll_registers(d, "key", p=10, hash_mode=mode), p=10).collect()[0]
-        c = corrected_estimate(est["n_registers"], est["scaled_harmonic"], p=10)
+        monkeypatch.setenv("SPARK_GRAFT_HASH_MODE", mode)
+        est = hll_estimate(hll_registers(d, "key")).collect()[0]
+        c = corrected_estimate(est["n_registers"], est["scaled_harmonic"])
         assert abs(c - 3000) < 3000 * 0.15, (mode, c)
+        regs[mode] = sorted(map(tuple, hll_registers(d, "key").collect()))
     # the two modes are DIFFERENT hash families: register states differ
-    ro = sorted(map(tuple, hll_registers(d, "key", p=10, hash_mode="oracle").collect()))
-    rf = sorted(map(tuple, hll_registers(d, "key", p=10, hash_mode="fast").collect()))
-    assert ro != rf
+    assert regs["oracle"] != regs["fast"]
 
 
 def test_hash_mode_env_resolution(spark, monkeypatch):
@@ -2062,7 +2053,7 @@ def test_hash_mode_env_resolution(spark, monkeypatch):
     with _pytest.raises(ValueError):
         resolve_hash_mode("bogus")
     # fast hash60 stays in [0, 2^60): safe for the HLL register split
-    row = spark.range(5).select(hash60(SF.col("id"), "fast").alias("h")).collect()
+    row = spark.range(5).select(hash60(SF.col("id")).alias("h")).collect()
     assert all(0 <= r["h"] < (1 << 60) for r in row)
 
 
@@ -2116,14 +2107,9 @@ class TestEditDistanceJoins:
         from datapipeline_spark.dedup.symdelete import deletion_join
 
         df = self._random_df(spark, 11)
-        for k in (1, 2):
-            got = sorted(map(tuple, deletion_join(df, "id", "s", k, ["blk"]).collect()))
-            want = sorted(map(tuple, self._brute(df, k).collect()))
-            assert got == want, k
-        import pytest
-
-        with pytest.raises(ValueError):
-            deletion_join(df, "id", "s", 3, ["blk"])
+        got = sorted(map(tuple, deletion_join(df, "id", "s", ["blk"]).collect()))
+        want = sorted(map(tuple, self._brute(df, 2).collect()))
+        assert got == want
 
     def test_symdelete_null_blocks_never_pair(self, spark):
         """NULL block keys match nothing under the naive join's equality
@@ -2141,9 +2127,9 @@ class TestEditDistanceJoins:
         ]
         df = spark.createDataFrame(rows, "id: long, blk: int, s: string")
         got = sorted(
-            map(tuple, deletion_join(df, "id", "s", 1, ["blk"]).collect())
+            map(tuple, deletion_join(df, "id", "s", ["blk"]).collect())
         )
-        want = sorted(map(tuple, self._brute(df, 1).collect()))
+        want = sorted(map(tuple, self._brute(df, 2).collect()))
         assert got == want == [(1, 2, 3, 1)]
 
     def test_symdelete_beats_constant_prefix_blocks(self, spark):
@@ -2154,6 +2140,6 @@ class TestEditDistanceJoins:
 
         rows = [(i, 0, f"Customer#{i:09d}") for i in range(500)]
         df = spark.createDataFrame(rows, "id: long, blk: int, s: string")
-        got = sorted(map(tuple, deletion_join(df, "id", "s", 2, ["blk"]).collect()))
+        got = sorted(map(tuple, deletion_join(df, "id", "s", ["blk"]).collect()))
         want = sorted(map(tuple, self._brute(df, 2).collect()))
         assert got == want

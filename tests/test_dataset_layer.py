@@ -193,7 +193,7 @@ def test_postprocess_coverage_select_conform_drop(spark):
     assert kept == ["f1", "f3"] and "f2" not in kept_df.columns
 
     conformed = conform_columns(
-        kept_df, [("f1", "scalar", None), ("f9", "scalar", None), ("f3", "list", 2)], strict=False
+        kept_df, [("f1", "scalar", None), ("f9", "scalar", None), ("f3", "list", 2)]
     )
     assert conformed.columns == ["f1", "f9", "f3"]
     assert conformed.collect()[0]["f9"] is None

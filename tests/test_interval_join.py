@@ -65,20 +65,6 @@ def test_bucket_width_invariance(facts, windows):
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
-def test_left_keeps_unmatched(facts, windows):
-    out = interval_join(facts, windows, ["k"], bucket="30m", how="left")
-    rows = {r.id: r.win for r in out.collect()}
-    assert rows[4] is None and rows[5] is None
-    assert rows[3] is None  # boundary fact (time == end) is unmatched
-    assert len(out.collect()) == 4 + 3  # 4 matches + 3 unmatched facts
-    assert out.filter("id = 6").count() == 2
-
-
-def test_bad_how_raises(facts, windows):
-    with pytest.raises(ValueError):
-        interval_join(facts, windows, ["k"], how="full")
-
-
 def test_pathological_interval_fails_fast(spark, facts):
     wide = spark.createDataFrame(
         [("a", datetime(2020, 1, 1), datetime(2025, 1, 1), 1)],

@@ -141,7 +141,7 @@ def test_availability_matrix(spark):
         ],
         "series_id string, time timestamp, value double",
     )
-    st = availability_statuses(series, "1h", series_ids=["s1", "s2"])
+    st = availability_statuses(series, "1h")
     buckets, ids, grid = collect_matrix(st)
     assert ids == ["s1", "s2"] and len(buckets) == 2
     assert grid[(buckets[0], "s1")] == "present"  # null in-bucket upgraded

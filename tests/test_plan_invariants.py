@@ -10,9 +10,11 @@ scale-killers that must never appear anywhere:
 - no row-at-a-time Python UDFs (BatchEvalPython); Python only ever enters
   through Arrow-batched nodes (mapInPandas / ArrowEvalPython).
 
-Runs at sf0.001 and only compiles plans (no execution), so the whole sweep
-is cheap. If a future query legitimately needs one of these shapes, add it
-to the explicit allowlist with a comment saying why.
+Runs at sf0.001 and only compiles plans (no execution): the plans come
+from the one registry sweep the construction-time test also reads
+(conftest ``registry_builds``). If a future query legitimately needs one
+of these shapes, add it to the explicit allowlist with a comment saying
+why.
 """
 
 from __future__ import annotations
@@ -20,7 +22,6 @@ from __future__ import annotations
 import pytest
 
 import bench
-import __spark_entry__ as entry
 
 SF = "/root/testdata/sf0.001"
 
@@ -28,20 +29,9 @@ ALLOW_RANGE_PARTITION: set[str] = set()  # none today; keep it that way
 ALLOW_CARTESIAN: set[str] = set()
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 @pytest.fixture(scope="module")
-def plans(spark):
-    qs = entry.queries()
-    out = {}
-    for name in bench.HEADLINE:
-        fn = qs.get(name)
-        if fn is None:
-            continue
-        out[name] = _plan(fn(spark, SF))
-    return out
+def plans(all_plans):
+    return {name: all_plans[name] for name in bench.HEADLINE if name in all_plans}
 
 
 def test_headline_set_is_registered(plans):
@@ -125,18 +115,13 @@ def _global_window_offences(plan: str) -> list[str]:
 
 
 @pytest.fixture(scope="module")
-def all_plans(spark):
-    qs = entry.queries()
-    out, failed = {}, []
-    for name, fn in qs.items():
-        try:
-            out[name] = _plan(fn(spark, SF))
-        except Exception:
-            failed.append(name)
+def all_plans(registry_builds):
+    builds = registry_builds(SF)
+    failed = sorted(n for n, (took, _) in builds.items() if took is None)
     # every registry entry must compile to a physical plan (streaming
     # queries included — they return batch frames by contract)
     assert not failed, failed
-    return out
+    return {name: plan for name, (_, plan) in builds.items()}
 
 
 def test_no_data_sized_global_window(all_plans):

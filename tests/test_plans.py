@@ -634,3 +634,48 @@ map:
         assert "acme.double_linear" in MAPPERS  # memoized by discovery
     finally:
         MAPPERS.pop("acme.double_linear", None)  # keep registry clean
+
+
+def test_project_log_raises_on_domain_violation(spark):
+    """A project stream's log/log1p raises outside the domain, as the
+    reference's logarithm transform does (Spark's F.log gives NULL there);
+    NULL input still passes through."""
+    from datetime import datetime
+
+    from datapipeline_spark.plans.compiler import apply_transform
+    from datapipeline_spark.plans.config import TransformSpec
+
+    def run(op, values):
+        df = spark.createDataFrame(
+            [("A", datetime(2024, 1, 1, h), v) for h, v in enumerate(values)],
+            "part string, time timestamp, value double",
+        )
+        spec = TransformSpec(operation=op, field="value", to="out")
+        return [r.out for r in apply_transform(df, spec, ["part"]).orderBy("time").collect()]
+
+    assert run("log", [math.e, None]) == [pytest.approx(1.0), None]
+    assert run("log1p", [0.0, None]) == [0.0, None]
+    for op, bad in (("log", 0.0), ("log", -1.0), ("log1p", -1.0), ("log1p", -2.0)):
+        with pytest.raises(Exception, match="domain violation"):
+            run(op, [1.0, bad])
+
+
+def test_project_derive_div_by_zero_raises(spark):
+    """derive's division raises on a zero divisor: the session runs in ANSI
+    mode, where `/` fails with DIVIDE_BY_ZERO (the reference raises too)."""
+    from datetime import datetime
+
+    from datapipeline_spark.plans.compiler import apply_transform
+    from datapipeline_spark.plans.config import TransformSpec
+
+    def frame(b):
+        return spark.createDataFrame(
+            [("A", datetime(2024, 1, 1), 6.0, b)], "part string, time timestamp, a double, b double"
+        )
+
+    by_field = TransformSpec(operation="derive", left="a", operator="div", right_field="b", to="q")
+    by_value = TransformSpec(operation="derive", left="a", operator="div", right_value=0.0, to="q")
+    assert apply_transform(frame(2.0), by_field, ["part"]).collect()[0].q == 3.0
+    for spec in (by_field, by_value):
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            apply_transform(frame(0.0), spec, ["part"]).collect()

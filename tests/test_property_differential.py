@@ -723,16 +723,13 @@ def test_hll_registers_match_pure_python(spark, keys):
         1024 - len(expect_regs)
     ) * (1 << 51)
     df = spark.createDataFrame([(k,) for k in keys], "k long")
-    # pin the md5 mode explicitly: this transcription IS the md5 contract,
-    # and test order must not matter if something set $SPARK_GRAFT_HASH_MODE
-    regs = {
-        r.reg: r.rho
-        for r in hll_registers(df, "k", p=P, hash_mode="oracle").collect()
-    }
+    # pin the md5 mode: this transcription IS the md5 contract, and test
+    # order must not matter if something set $SPARK_GRAFT_HASH_MODE
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("SPARK_GRAFT_HASH_MODE", "oracle")
+        regs = {r.reg: r.rho for r in hll_registers(df, "k").collect()}
+        est = hll_estimate(hll_registers(df, "k")).collect()[0]
     assert regs == expect_regs
-    est = hll_estimate(
-        hll_registers(df, "k", p=P, hash_mode="oracle"), p=P
-    ).collect()[0]
     assert est.scaled_harmonic == scaled
 
 

@@ -68,16 +68,16 @@ def test_hll_accuracy_and_merge_associativity(spark):
     )
 
     d = spark.range(50_000).select(F.col("id").alias("k"), (F.col("id") % 4).alias("g"))
-    est = hll_estimate(hll_registers(d, "k", ["g"], p=10), ["g"], p=10)
+    est = hll_estimate(hll_registers(d, "k", ["g"]), ["g"])
     for r in est.collect():
-        c = corrected_estimate(r.n_registers, r.scaled_harmonic, p=10)
+        c = corrected_estimate(r.n_registers, r.scaled_harmonic)
         # m=1024 -> stderr ~3.3%; deterministic hash, observed max 2.9%
         assert abs(c - 12_500) / 12_500 < 0.05, (r.g, c)
 
     # per-"day" partial sketches merged == one direct pass, bit-exactly
-    part = hll_registers(d.withColumn("day", F.col("k") % 7), "k", ["g", "day"], p=10)
-    merged = hll_estimate(hll_merge(part, ["g"]), ["g"], p=10)
-    direct = hll_estimate(hll_registers(d, "k", ["g"], p=10), ["g"], p=10)
+    part = hll_registers(d.withColumn("day", F.col("k") % 7), "k", ["g", "day"])
+    merged = hll_estimate(hll_merge(part, ["g"]), ["g"])
+    direct = hll_estimate(hll_registers(d, "k", ["g"]), ["g"])
     assert merged.exceptAll(direct).count() == 0
     assert direct.exceptAll(merged).count() == 0
 
@@ -86,8 +86,8 @@ def test_hll_linear_counting_regime(spark):
     from datapipeline_spark.sketch.hll import corrected_estimate, hll_estimate, hll_registers
 
     d = spark.range(300).select(F.col("id").alias("k"))
-    r = hll_estimate(hll_registers(d, "k", p=10), p=10).collect()[0]
-    c = corrected_estimate(r.n_registers, r.scaled_harmonic, p=10)
+    r = hll_estimate(hll_registers(d, "k")).collect()[0]
+    c = corrected_estimate(r.n_registers, r.scaled_harmonic)
     # n << m: raw HLL is badly biased here, linear counting must kick in
     assert abs(c - 300) / 300 < 0.05
     assert r.n_registers < 1024
@@ -99,7 +99,7 @@ def test_hll_overlap_accuracy(spark):
     # A = [0, 30k), B = [20k, 50k): true intersection 10k, union 50k
     a = spark.range(0, 30_000).select(F.col("id").alias("k"), F.lit("a").alias("f"))
     b = spark.range(20_000, 50_000).select(F.col("id").alias("k"), F.lit("b").alias("f"))
-    r = hll_overlap(a.union(b), "k", "f", "a", "b", p=10).collect()[0]
+    r = hll_overlap(a.union(b), "k", "f", "a", "b").collect()[0]
     assert abs(r.est_a - 30_000) / 30_000 < 0.1
     assert abs(r.est_union - 50_000) / 50_000 < 0.1
     # inclusion-exclusion amplifies union error by |U|/|I| = 5x -> loose bound
@@ -182,11 +182,11 @@ def test_hll_sliding_merge_equals_direct_window_pass(spark):
         " AS day",
         "user_id",
     )
-    partial = hll_registers(df, "user_id", ["day"], p=6)
+    partial = hll_registers(df, "user_id", ["day"])
     got = {
         r["day"]: (r["n_registers"], r["scaled_harmonic"])
         for r in hll_estimate(
-            hll_sliding_merge(partial, "day", window_days=7), ["day"], p=6
+            hll_sliding_merge(partial, "day", window_days=7), ["day"]
         ).collect()
     }
     days = [r["day"] for r in df.select("day").distinct().collect()]
@@ -197,7 +197,7 @@ def test_hll_sliding_merge_equals_direct_window_pass(spark):
             & (F.col("day") > F.expr(f"timestamp'{d}' - INTERVAL 7 DAY"))
         )
         direct = hll_estimate(
-            hll_registers(window, "user_id", [], p=6), [], p=6
+            hll_registers(window, "user_id", []), []
         ).collect()[0]
         assert got[d] == (direct["n_registers"], direct["scaled_harmonic"])
 

@@ -90,47 +90,6 @@ def test_write_csv_parquet(spark, tmp_path):
     assert spark.read.parquet(str(tmp_path / "p")).count() == 1
 
 
-def test_write_table_dynamic_partition_overwrite(spark, tmp_path):
-    from datapipeline_spark.io.writers import write_table
-
-    path = str(tmp_path / "tbl")
-    base = spark.createDataFrame(
-        [("a", 1, 10.0), ("a", 2, 11.0), ("b", 1, 20.0)], "part string, k int, v double"
-    )
-    write_table(base, path, partition_by=["part"], sort_by=["k"])
-    assert spark.read.parquet(path).count() == 3
-
-    # incremental backfill of partition b only: a must be untouched
-    patch = spark.createDataFrame([("b", 9, 99.0)], "part string, k int, v double")
-    write_table(patch, path, partition_by=["part"], overwrite_partitions=True)
-    got = {(r["part"], r["k"], r["v"]) for r in spark.read.parquet(path).collect()}
-    assert got == {("a", 1, 10.0), ("a", 2, 11.0), ("b", 9, 99.0)}
-
-    # whole-table overwrite without the flag replaces everything
-    write_table(patch, path, partition_by=["part"])
-    assert spark.read.parquet(path).count() == 1
-
-    with pytest.raises(ValueError, match="partition_by"):
-        write_table(patch, path, overwrite_partitions=True)
-
-
-def test_write_table_partition_pruning(spark, tmp_path):
-    from datapipeline_spark.io.writers import write_table
-
-    path = str(tmp_path / "pruned")
-    df = spark.range(100).selectExpr("id % 4 AS part", "id AS k", "id * 1.0 AS v")
-    write_table(df, path, partition_by=["part"])
-    plan = (
-        spark.read.parquet(path)
-        .filter("part = 2")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    # partition filter handled by the file index, not a data-scan Filter
-    assert "PartitionFilters: [isnotnull(part" in plan
-
-
 def test_bucketed_join_eliminates_shuffle(spark, tmp_path):
     from datapipeline_spark.io.writers import write_bucketed_table
 
@@ -223,10 +182,13 @@ def test_orc_roundtrip(spark, tmp_path):
 
     df = spark.range(100).selectExpr("id", "id * 2 AS v", "CAST(id % 3 AS STRING) AS k")
     path = str(tmp_path / "t.orc")
-    write_orc(df, path, partition_by=["k"])
+    write_orc(df, path)
+    assert read_orc_glob(spark, path).count() == 100
+    # partition pruning reaches the ORC scan of a hive-partitioned table
+    path = str(tmp_path / "parts.orc")
+    df.write.partitionBy("k").orc(path)
     back = read_orc_glob(spark, path)
     assert back.count() == 100
     assert {r.v for r in back.filter("id < 3").collect()} == {0, 2, 4}
-    # partition pruning reaches the ORC scan
     plan = back.filter("k = '1'")._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(k" in plan

@@ -44,7 +44,9 @@ def test_rolling_mean_stream(spark, tmp_path):
     from datapipeline_spark.streaming import rolling_mean_stream, stream_jsonl_source
 
     src = stream_jsonl_source(spark, _feed(tmp_path, _rows(4)), SCHEMA)
-    sdf = rolling_mean_stream(src, "value", window=2, entity_keys=["loc"], min_samples=1)
+    sdf = rolling_mean_stream(
+        src, "value", window=2, entity_keys=["loc"], min_samples=1, order_cols=["time"]
+    )
     got = _run(sdf, ["loc", "time"])
     a = [(t.hour, rm) for t, loc, v, rm in got if loc == "a"]
     assert a == [(0, 0.0), (1, 0.5), (2, 1.5), (3, 2.5)]
@@ -92,7 +94,9 @@ def test_streaming_matches_batch_rolling(spark, tmp_path):
     rows = _rows(6)
     src = stream_jsonl_source(spark, _feed(tmp_path, rows), SCHEMA)
     got_stream = _run(
-        rolling_mean_stream(src, "value", window=3, entity_keys=["loc"], min_samples=1),
+        rolling_mean_stream(
+            src, "value", window=3, entity_keys=["loc"], min_samples=1, order_cols=["time"]
+        ),
         ["loc", "time"],
     )
     batch = spark.createDataFrame(
@@ -291,7 +295,7 @@ def test_ewma_stream_matches_batch_bit_exact(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    out = ewma_stream(stream, "v", window=6, entity_keys=["user_id"])
+    out = ewma_stream(stream, "v", window=6, entity_keys=["user_id"], order_cols=["time"])
     q = (
         out.writeStream.format("memory")
         .queryName("ewma_stream_t")
@@ -436,7 +440,7 @@ def test_cusum_stream_matches_batch_across_batches(spark, tmp_path):
         .parquet(src)
     )
     out = cusum_stream(
-        stream, "v", target=25.0, entity_keys=["user_id"], out="c"
+        stream, "v", target=25.0, entity_keys=["user_id"], out="c", order_cols=["time"]
     )
     q = (
         out.writeStream.format("memory").queryName("cusum_stream_t")
@@ -456,7 +460,7 @@ def test_streaming_hll_equals_batch(spark, tmp_path):
     d.coalesce(1).write.parquet(p)
     batch = spark.read.parquet(p)
     sdf = spark.readStream.schema("user_id bigint, event_type string").parquet(p)
-    regs = hll_registers(sdf, "user_id", ["event_type"], p=10)
+    regs = hll_registers(sdf, "user_id", ["event_type"])
     q = (
         regs.writeStream.format("memory")
         .queryName("t_stream_hll")
@@ -466,7 +470,7 @@ def test_streaming_hll_equals_batch(spark, tmp_path):
     )
     assert q.awaitTermination(120)
     got = sorted(map(tuple, spark.table("t_stream_hll").collect()))
-    want = sorted(map(tuple, hll_registers(batch, "user_id", ["event_type"], p=10).collect()))
+    want = sorted(map(tuple, hll_registers(batch, "user_id", ["event_type"]).collect()))
     assert got == want
 
 
@@ -505,7 +509,7 @@ def test_holt_stream_matches_batch_bit_exact(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    out = holt_stream(stream, "v", entity_keys=["user_id"])
+    out = holt_stream(stream, "v", entity_keys=["user_id"], order_cols=["time"])
     q = (
         out.writeStream.format("memory")
         .queryName("holt_stream_t")
@@ -557,7 +561,7 @@ def test_hampel_stream_matches_batch_exactly(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    out = hampel_stream(stream, "v", window=7, entity_keys=["user_id"])
+    out = hampel_stream(stream, "v", window=7, entity_keys=["user_id"], order_cols=["time"])
     q = (
         out.writeStream.format("memory")
         .queryName("hampel_stream_t")

@@ -288,7 +288,7 @@ def test_interpolate_single_exchange(spark):
         F.when(F.col("id") % 3 == 0, F.col("id").cast("double")).alias("v"),
     )
     plan = (
-        ops.interpolate_linear(df, "v", partition_by=["u"])
+        ops.interpolate_linear(df, "v", partition_by=["u"], out="vi")
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert len(re.findall(r"(?<!Broadcast)Exchange", plan)) == 1
