@@ -14,8 +14,10 @@ from __future__ import annotations
 from datetime import datetime
 from typing import Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from datapipeline_spark.operators.rank import prefix_scan
 
 TWO_53 = 1 << 53
 
@@ -107,10 +109,9 @@ def stratified_exact_split(
     unique within a stratum), and the stratum's rank space is cut at
     ``(n * cum_ppm) DIV 1e6``.
 
-    Scale: the per-stratum ranking uses the same two-phase bucket
-    decomposition as bucketed_global_rank — per-(stratum, hash-bucket)
-    counts, exclusive offsets over the (strata x 256)-row aggregate, rank
-    within (stratum, bucket) — so no stratum is ever sorted in one task.
+    Scale: the per-stratum rank and stratum size are one
+    operators/rank.prefix_scan over the hash's top 8 bits, so no stratum
+    is ever sorted in one task. A NULL stratum is a stratum of its own.
     """
     total = sum(p for _, p in fractions_ppm)
     if total != 1_000_000:
@@ -123,29 +124,13 @@ def stratified_exact_split(
 
     h = hash52_seeded(seed, [F.col(c) for c in id_cols])
     # the top 8 of hash52_seeded's 52 bits pick one of 256 buckets
-    b = df.withColumn("__h__", h).withColumn(
-        "__bucket__", F.shiftright(F.col("__h__"), 52 - 8).cast("int")
-    )
-    counts = b.groupBy(*strata_cols, "__bucket__").agg(
-        F.count(F.lit(1)).alias("__c__")
-    )
-    w_off = (
-        Window.partitionBy(*strata_cols)
-        .orderBy("__bucket__")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_tot = Window.partitionBy(*strata_cols)
-    offsets = counts.select(
-        *strata_cols,
-        "__bucket__",
-        F.coalesce(F.sum("__c__").over(w_off), F.lit(0)).alias("__off__"),
-        F.sum("__c__").over(w_tot).alias("__n__"),
-    )
-    w_in = Window.partitionBy(*strata_cols, "__bucket__").orderBy(
-        "__h__", *[F.col(c) for c in id_cols]
-    )
-    ranked = b.join(F.broadcast(offsets), [*strata_cols, "__bucket__"]).withColumn(
-        "__rank__", F.col("__off__") + F.row_number().over(w_in)
+    ranked = prefix_scan(
+        df.withColumn("__h__", h),
+        strata_cols,
+        F.shiftright(F.col("__h__"), 52 - 8).cast("int"),
+        ["__h__", *id_cols],
+        {"__rank__": None},
+        totals={"__n__": "__rank__"},
     )
     cum = 0
     expr = None
@@ -155,6 +140,4 @@ def stratified_exact_split(
         expr = F.when(cond, label) if expr is None else expr.when(cond, label)
     last = fractions_ppm[-1][0]
     expr = F.lit(last) if expr is None else expr.otherwise(F.lit(last))
-    return ranked.withColumn(out, expr).drop(
-        "__h__", "__bucket__", "__off__", "__n__", "__rank__"
-    )
+    return ranked.withColumn(out, expr).drop("__h__", "__n__", "__rank__")

@@ -130,8 +130,7 @@ def association_rules(
     # direction flip is an IN-ROW explode of the two (antecedent,
     # consequent) orientations — single consumption, same rows.
     d0 = _basket_base(df, basket_col, item_col)
-    pairs, sup_all = _pairs_from_base(d0, 1, min_pair_support)
-    sup = sup_all.filter(F.col("support") >= 1)
+    pairs, sup = _pairs_from_base(d0, 1, min_pair_support)
     n = d0.agg(F.countDistinct("basket").cast("long").alias("n_baskets"))
     sa = sup.select(F.col("item").alias("ia"), F.col("support").alias("sup_a"))
     sb = sup.select(F.col("item").alias("ib"), F.col("support").alias("sup_b"))

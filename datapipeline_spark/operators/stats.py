@@ -30,6 +30,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from datapipeline_spark.operators.rank import prefix_scan
+
 _D = "decimal(38,0)"
 
 #: hi/lo split point for _xsum: both partial sums stay in int64 for
@@ -446,61 +448,31 @@ def ks_test(
     statistic is one IEEE division at the end and hash-matches a SQL
     oracle.
 
-    Scale posture: cumulative counts over the value order come from the
-    same two-phase monotone-bucket scheme as operators/rank.py — the
-    value's high bits (``value >> bucket_shift``) form a monotone prefix
-    of the order, per-bucket totals give exclusive offsets via a bounded
-    window (≤ one row per non-empty bucket), and in-bucket cumsums run
+    Scale posture: cumulative counts over the value order and the grand
+    totals are one operators/rank.prefix_scan with the value's high bits
+    (``value >> bucket_shift``) as the bucket, so in-bucket cumsums run
     with executor parallelism. Never a single-partition row window (the
     oracle, engine-tiny, is allowed one). Output: one row —
     (n0, n1, d_num, ks)."""
     g = (
-        # the IsNotNull is semantically a no-op (value is non-negative per
-        # contract) but must be stated HERE, below the aggregate: the inner
-        # join infers IsNotNull on its bucket key and the optimizer pushes
-        # it through shiftright to IsNotNull(value) BELOW the probe side's
-        # partial aggregate — without the same filter on the shared subtree
-        # the two groupBy(v) exchanges are not canonically identical and
-        # AQE re-scans instead of reusing the shuffle
+        # a NULL value is no sample: dropped here, below the aggregate,
+        # or prefix_scan would keep its group and rank it first
         df.filter(F.col(value).isNotNull())
         .groupBy(F.col(value).alias("v"))
         .agg(
             F.sum(1 - F.col(side).cast("long")).alias("d0"),
             F.sum(F.col(side).cast("long")).alias("d1"),
         )
-        # the bucket id keeps v's integral type: an int cast would raise
-        # (ANSI) or wrap for v >= 2^(31 + bucket_shift)
-        .withColumn("__bucket__", F.shiftright(F.col("v"), bucket_shift))
     )
-    per_bucket = g.groupBy("__bucket__").agg(
-        F.sum("d0").alias("t0"), F.sum("d1").alias("t1")
-    )
-    # exclusive prefix offsets AND the grand totals ride the same tiny
-    # (≤ one row per non-empty bucket) broadcast table — a whole-table
-    # window here costs nothing and removes the old third branch (a
-    # separate totals aggregate + crossJoin = one more full scan)
-    w_off = Window.orderBy("__bucket__").rowsBetween(Window.unboundedPreceding, -1)
-    w_all = Window.partitionBy()
-    offsets = per_bucket.select(
-        "__bucket__",
-        F.coalesce(F.sum("t0").over(w_off), F.lit(0)).alias("off0"),
-        F.coalesce(F.sum("t1").over(w_off), F.lit(0)).alias("off1"),
-        F.sum("t0").over(w_all).cast("long").alias("n0t"),
-        F.sum("t1").over(w_all).cast("long").alias("n1t"),
-    )
-    w_in = (
-        Window.partitionBy("__bucket__")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    j = (
-        g.join(F.broadcast(offsets), "__bucket__")
-        .select(
-            (F.col("off0") + F.sum("d0").over(w_in)).cast(_D).alias("cum0"),
-            (F.col("off1") + F.sum("d1").over(w_in)).cast(_D).alias("cum1"),
-            F.col("n0t"),
-            F.col("n1t"),
-        )
+    # the bucket keeps v's integral type: an int cast would raise (ANSI) or
+    # wrap for v >= 2^(31 + bucket_shift)
+    j = prefix_scan(
+        g,
+        [],
+        F.shiftright(F.col("v"), bucket_shift),
+        ["v"],
+        {"cum0": "d0", "cum1": "d1"},
+        totals={"n0t": "cum0", "n1t": "cum1"},
     )
     return (
         j.agg(
@@ -508,8 +480,8 @@ def ks_test(
             F.max("n1t").alias("n1"),
             F.max(
                 F.abs(
-                    F.col("cum0") * F.col("n1t").cast(_D)
-                    - F.col("cum1") * F.col("n0t").cast(_D)
+                    F.col("cum0").cast(_D) * F.col("n1t").cast(_D)
+                    - F.col("cum1").cast(_D) * F.col("n0t").cast(_D)
                 )
             ).alias("d_num"),
         )

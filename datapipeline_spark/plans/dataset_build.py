@@ -185,6 +185,14 @@ def fit_split_scaler(series: DataFrame, cfg: DatasetConfig) -> DataFrame | None:
 
 @dataclass
 class DatasetBuild:
+    """A built dataset: the sample frame, its columns and scaler statistics.
+
+    A build that reads fresh artifacts gets its series and ``scaler_stats``
+    from ``spark.read.parquet``, which marks every column nullable, so its
+    frames are all-nullable where a computed build's are not. Values and
+    the schemas of the served parquet outputs are the same either way.
+    """
+
     samples: DataFrame  # wide frame: time, *keys, one column per series id (+ label)
     feature_columns: list[str]
     target_columns: list[str]

@@ -360,9 +360,9 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GPT-style concat-and-chunk packing (text/pack.py): reproducible
     shuffled corpus order → global exclusive token scan → 2048-token
     training-sequence spans per document. The oracle runs the scan as one
-    global window; the Spark plan runs it as the two-phase bucket scan
-    (256-bucket totals broadcast + within-bucket window) — results must be
-    identical because token counts sum exactly in any order."""
+    global window; the Spark plan runs it as operators/rank.prefix_scan —
+    results must be identical because token counts sum exactly in any
+    order."""
     d = load_table(spark, sf_dir, "documents")
     return pack_sequences(d, seq_len=2048, seed=42)
 
@@ -1223,12 +1223,9 @@ def q_corpus_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reproducible global shuffle for training-example order: position =
     rank in seeded-hash order, independent of input layout.
 
-    Two-phase global rank with NO single-partition sort
-    (operators/rank.py bucketed_global_rank, same shape as text/pack.py):
-    the top 8 bits of the hash define 256 buckets that are a monotone
-    PREFIX of the (h, doc_id) sort order, so
-    ``global pos = broadcast bucket offset + rank within bucket`` —
-    the heavy window is partitioned and scales with executors."""
+    Global rank with NO single-partition sort (operators/rank.py
+    bucketed_global_rank, a prefix_scan over the hash's top 8 bits): the
+    heavy window is partitioned and scales with executors."""
     from datapipeline_spark.operators.rank import bucketed_global_rank
 
     d = load_table(spark, sf_dir, "documents")
@@ -1698,14 +1695,12 @@ def q_token_budget_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-source target; the doc crossing the boundary is kept, so the
     budget is a covered minimum).
 
-    The per-source exclusive token scan uses the same two-phase bucketed
-    shape as text/pack.py — per-(source, bucket) totals, cumulative bucket
-    offsets over a tiny broadcast frame, rank within (source, bucket) —
-    so NO per-source single-partition window exists: a 50 TB source scans
-    as 256 parallel buckets, and the result is exact integers, identical
-    to the naive per-source cumsum the oracle runs."""
-    from pyspark.sql import Window
-
+    The per-source exclusive token scan is an operators/rank.prefix_scan
+    grouped by source, like text/pack.py's, so NO per-source
+    single-partition window exists: a 50 TB source scans as 256 parallel
+    buckets, and the result is exact integers, identical to the naive
+    per-source cumsum the oracle runs."""
+    from datapipeline_spark.operators.rank import prefix_scan
     from datapipeline_spark.text.analysis import bpe_token_count
 
     d = bpe_token_count(load_table(spark, sf_dir, "documents")).select(
@@ -1715,33 +1710,18 @@ def q_token_budget_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         _sha_long("37|", F.col("doc_id")).alias("hs"),
         ((1 + _sha_long("mix|", F.col("source")) % 4) * 2000).alias("budget"),
     )
-    d = d.withColumn("__b__", F.shiftright(F.col("hs"), 44).cast("int"))
-    # phase 1: per-(source, bucket) token totals -> exclusive offsets over a
-    # frame bounded by sources x 256 rows (broadcast back)
-    totals = d.groupBy("source", "__b__").agg(F.sum("n_tokens").alias("__t__"))
-    w_off = (
-        Window.partitionBy("source")
-        .orderBy("__b__")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    out = prefix_scan(
+        d,
+        ["source"],
+        F.shiftright(F.col("hs"), 44).cast("int"),
+        ["hs", "doc_id"],
+        {"cum_before": "n_tokens"},
+        exclusive=True,
     )
-    offsets = totals.withColumn(
-        "__off__", F.coalesce(F.sum("__t__").over(w_off), F.lit(0))
-    ).select("source", "__b__", "__off__")
-    # phase 2: exclusive scan WITHIN each (source, bucket) partition
-    w_in = (
-        Window.partitionBy("source", "__b__")
-        .orderBy("hs", "doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    cum = F.coalesce("cum_before", F.lit(0))
+    return out.filter(cum < F.col("budget")).select(
+        "doc_id", "source", "n_tokens", cum.alias("cum_before")
     )
-    out = (
-        d.join(F.broadcast(offsets), ["source", "__b__"])
-        .withColumn(
-            "cum_before",
-            F.col("__off__") + F.coalesce(F.sum("n_tokens").over(w_in), F.lit(0)),
-        )
-        .filter(F.col("cum_before") < F.col("budget"))
-    )
-    return out.select("doc_id", "source", "n_tokens", "cum_before")
 
 
 @query(
@@ -3391,11 +3371,9 @@ def q_ks_price_urgent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample Kolmogorov-Smirnov distance between urgent and
     non-urgent order price distributions (operators/stats.ks_test):
     D = max|cum0·n1 − cum1·n0|/(n0·n1) with the maximized numerator an
-    exact decimal/HUGEINT integer. The Spark side's cumulative counts use
-    the two-phase monotone-bucket scheme (price high bits as the bucket
-    prefix) — per-bucket parallel cumsums + a bounded offsets window,
-    never a single-partition row window (the engine-tiny oracle is
-    allowed one)."""
+    exact decimal/HUGEINT integer. The Spark side's cumulative counts are
+    an operators/rank.prefix_scan over the price's high bits, never a
+    single-partition row window (the engine-tiny oracle is allowed one)."""
     from datapipeline_spark.operators.stats import ks_test
 
     d = load_table(spark, sf_dir, "orders").select(
@@ -4265,10 +4243,9 @@ def q_stratified_split_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     stratified_exact_split): per order-priority stratum the split sizes
     are the integer cumulative-floor of the fractions — every run, every
     engine, every partitioning — where hash_split_label is only
-    proportional in expectation. The per-stratum ranking is the two-phase
-    (stratum, hash-bucket) decomposition (counts → exclusive offsets over
-    the strata x 256 aggregate → within-bucket window), so no stratum is
-    ever a single-task sort; the oracle's one-window-per-stratum
+    proportional in expectation. The per-stratum ranking is an
+    operators/rank.prefix_scan over (stratum, hash bucket), so no stratum
+    is ever a single-task sort; the oracle's one-window-per-stratum
     formulation is the single-node equivalent of the same total order.
     Output is the per-(stratum, split) contingency — the exactness
     certificate itself."""
@@ -4702,10 +4679,9 @@ def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM customer segmentation (operators/rank.bucketed_value_rank —
     the retail-analytics classic; no reference analogue): recency /
     frequency / monetary per customer, each banded into equal-count
-    quintiles by the VALUE-ordered two-phase rank (monotone value-range
-    buckets from the broadcast min/max → exclusive bucket offsets →
-    within-bucket window) — three global ranks with NO single-task sort
-    anywhere, where the oracle's three row_number windows are the
+    quintiles by the VALUE-ordered two-phase rank (operators/rank
+    prefix_scan over value_buckets) — three global ranks with NO
+    single-task sort anywhere, where the oracle's three row_number windows are the
     single-node equivalent of the same (value, custkey) total orders.
     Band arithmetic is pure integer ((pos−1)·5 DIV n + 1).
 

@@ -87,7 +87,6 @@ def rolling_mean_stream(
     field: str,
     window: int,
     entity_keys: Sequence[str],
-    watermark: str = "1 hour",
     out: str = "rolling_mean",
     *,
     min_samples: int,
@@ -101,7 +100,8 @@ def rolling_mean_stream(
 
     Rows within one micro-batch are processed in ``order_cols`` order
     (the registry query breaks time ties by event_id); across batches
-    arrival order applies (use watermarked sources for discipline).
+    arrival order applies. Per-key state has no timeout: a key's last
+    `window` values stay in the state store for the life of the query.
     """
     payload = [c for c in sdf.columns]
     sort_cols = list(order_cols)

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from datapipeline_spark.operators.rank import prefix_scan, value_buckets
+
 
 def build_inverted_index(
     docs: DataFrame,
@@ -75,15 +77,11 @@ def bm25_scores(
     map-side-combinable aggregate over the corpus; N and avgdl arrive as a
     broadcast 1-row frame; df per query term is a tiny broadcast. Ranking
     order is (score desc, doc id asc) after `round_digits` rounding; a
-    stop-word query can match the whole corpus, so the rank rides the
-    two-phase monotone-bucket scheme (descending value-range buckets +
-    bounded 256-row offsets window + partitioned within-bucket window —
-    operators/rank.py's shape, value-range flavored like
-    operators/skyline.py because scores aren't hash-uniform) instead of a
-    single-partition row_number over the match set.
+    stop-word query can match the whole corpus, so the rank is an
+    operators/rank.prefix_scan over descending value-range buckets
+    (scores aren't hash-uniform) instead of a single-partition
+    row_number over the match set.
     """
-    from pyspark.sql import Window
-
     terms = [t.lower() for t in query_terms]
     tok = F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("term")
     toks = docs.select(F.col(id_col).alias("__doc__"), tok).filter(F.col("term") != "")
@@ -120,38 +118,19 @@ def bm25_scores(
         .groupBy("__doc__")
         .agg(F.sum("p9").alias("s9"))
     )
-    # two-phase global rank: bucket = monotone prefix of the (s9 desc)
-    # order via descending value-range buckets from the broadcast min/max
-    # (+1 in the divisor guards the all-equal-scores corpus: every row
-    # lands in bucket 0, still correct, just unpartitioned like any
-    # single-value sort would be); phase 1 = cumulative offsets over the
-    # ≤256-row bucket table (bounded global window, intentional); phase 2
-    # = within-bucket row_number + offset. Identical output to the naive
-    # global window.
     # the scored subtree (tf/lens/stats joins) is consumed by the range
     # aggregate, the bucket counts, and the final join — one lazy
     # checkpoint so it materializes once (single-consumption pattern)
     scored = scored.localCheckpoint(eager=False)
-    rng = F.broadcast(
-        scored.agg(F.min("s9").alias("__lo__"), F.max("s9").alias("__hi__"))
+    ranked = prefix_scan(
+        value_buckets(scored, "s9", [], 256, descending=True),
+        [],
+        F.col("__bucket__"),
+        [F.col("s9").desc(), "__doc__"],
+        {"rank": None},
     )
-    bkt = scored.crossJoin(rng).withColumn(
-        "__b__",
-        F.expr("CAST(((__hi__ - s9) * 256) DIV (__hi__ - __lo__ + 1) AS INT)"),
-    )
-    counts = bkt.groupBy("__b__").agg(F.count(F.lit(1)).alias("__c__"))
-    w_off = Window.orderBy("__b__").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.withColumn(
-        "__off__", F.coalesce(F.sum("__c__").over(w_off), F.lit(0))
-    ).select("__b__", "__off__")
-    w_in = Window.partitionBy("__b__").orderBy(F.col("s9").desc(), F.col("__doc__"))
-    return (
-        bkt.join(F.broadcast(offsets), "__b__")
-        .select(
-            F.col("__doc__").alias(id_col),
-            F.round(F.col("s9") / 1e9, round_digits).alias("score"),
-            (F.col("__off__") + F.row_number().over(w_in))
-            .cast("long")
-            .alias("rank"),
-        )
+    return ranked.select(
+        F.col("__doc__").alias(id_col),
+        F.round(F.col("s9") / 1e9, round_digits).alias("score"),
+        "rank",
     )

@@ -451,8 +451,10 @@ def test_bucketed_global_rank_matches_naive_window(spark):
 
     df = spark.range(5000).selectExpr(
         "id AS k",
-        # 52-bit deterministic hash, same convention as the query registry
-        "cast(conv(substring(sha2(cast(id AS string), 256), 1, 13), 16, 10) AS long) AS h",
+        # 52-bit deterministic hash, same convention as the query registry;
+        # every 97th hash is NULL and ranks first, as in the naive window
+        "CASE WHEN id % 97 = 0 THEN NULL ELSE"
+        " cast(conv(substring(sha2(cast(id AS string), 256), 1, 13), 16, 10) AS long) END AS h",
     )
     naive = df.select(
         "k", F.row_number().over(Window.orderBy("h", "k")).cast("long").alias("pos")
@@ -1524,6 +1526,7 @@ def test_stratified_exact_split_sizes_and_determinism(spark):
     from datapipeline_spark.dataset.split import stratified_exact_split
 
     rows = [(chr(97 + i % 3), i) for i in range(1000)]
+    rows += [(None, 1000 + i) for i in range(10)]  # a NULL stratum is a stratum
     df = spark.createDataFrame(rows, "stratum string, id long")
     fr = [("train", 800_000), ("val", 100_000), ("test", 100_000)]
     out = stratified_exact_split(df, ["stratum"], ["id"], fr)
@@ -1532,19 +1535,19 @@ def test_stratified_exact_split_sizes_and_determinism(spark):
         for r in out.groupBy("stratum", "split").agg(F.count("*").alias("n")).collect()
     }
     # strata: a=334, b=333, c=333 -> train floor(0.8n), val floor(0.9n)-train
-    for s_, n in (("a", 334), ("b", 333), ("c", 333)):
+    for s_, n in (("a", 334), ("b", 333), ("c", 333), (None, 10)):
         tr = n * 800000 // 1000000
         va = n * 900000 // 1000000 - tr
         assert counts[(s_, "train")] == tr
         assert counts[(s_, "val")] == va
         assert counts[(s_, "test")] == n - tr - va
     # repartitioning must not change a single assignment
-    a = sorted(map(tuple, out.select("stratum", "id", "split").collect()))
+    a = sorted(map(tuple, out.select("id", "stratum", "split").collect()))
     b2 = sorted(
         map(
             tuple,
             stratified_exact_split(df.repartition(13), ["stratum"], ["id"], fr)
-            .select("stratum", "id", "split")
+            .select("id", "stratum", "split")
             .collect(),
         )
     )
@@ -1612,7 +1615,8 @@ def test_bucketed_value_rank_equals_global_window(spark):
 
     import random
     rng = random.Random(11)
-    rows = [(rng.randrange(-50, 50), i) for i in range(500)]
+    # every 50th value is NULL and ranks first, as in the naive window
+    rows = [(None if i % 50 == 0 else rng.randrange(-50, 50), i) for i in range(500)]
     df = spark.createDataFrame(rows, "v long, id long")
     got = {r.id: r.pos for r in bucketed_value_rank(df, "v", ["id"], buckets=8).collect()}
     w = Window.orderBy("v", "id")
@@ -2060,15 +2064,16 @@ def test_hash_mode_env_resolution(spark, monkeypatch):
 def test_multi_value_rank_matches_per_metric_ranks(spark):
     """The fused melt/rank operator must be bit-identical to three
     independent bucketed_value_rank calls (same buckets, same total
-    order), including duplicate-heavy and negative values."""
+    order), including duplicate-heavy, negative and NULL values."""
     from datapipeline_spark.operators.rank import bucketed_value_rank, multi_value_rank
 
-    rows = [(i, (i * 7) % 13 - 6, (i * 3) % 5, i % 2) for i in range(200)]
+    rows = [(i, None if i % 17 == 0 else (i * 7) % 13 - 6, (i * 3) % 5, i % 2) for i in range(200)]
     df = spark.createDataFrame(rows, "id: long, a: long, b: long, c: long")
     long = multi_value_rank(df, ["a", "b", "c"], ["id"], buckets=8)
     got = {
         (r["id"], r["metric"]): r["pos"] for r in long.collect()
     }
+    assert len(got) == 3 * len(rows)
     for i, col in enumerate(["a", "b", "c"]):
         want = {
             r["id"]: r["pos"]

@@ -814,6 +814,61 @@ def test_ks_matches_pure_python(spark, data):
     assert abs(r.ks - best / (n0 * n1)) < 1e-6
 
 
+def _maybe(values):
+    return st.one_of(st.none(), values)
+
+
+@given(
+    rows=st.lists(
+        st.tuples(_maybe(st.integers(0, 2)), _maybe(st.integers(-40, 40)), _maybe(st.integers(0, 9))),
+        max_size=40,
+    ),
+    bucket=st.sampled_from(["hash", "range", "range_desc"]),
+    grouped=st.booleans(),
+    exclusive=st.booleans(),
+)
+@example(rows=[], bucket="range", grouped=True, exclusive=False)
+@example(rows=[(i % 2, 5, i) for i in range(9)], bucket="range", grouped=False, exclusive=False)
+@example(rows=[(None, 5, i) for i in range(6)], bucket="range_desc", grouped=True, exclusive=True)
+@example(rows=[(1, None, i) for i in range(4)] + [(None, 3, 1)], bucket="hash", grouped=True, exclusive=False)
+@settings(max_examples=25, deadline=None)
+def test_prefix_scan_matches_naive_window(spark, rows, bucket, grouped, exclusive):
+    """The two-phase scan equals the single window row for row — row numbers,
+    running sums (inclusive or exclusive) and group totals — and keeps every
+    row, with NULL group keys, NULL order values (their own bucket) and
+    NULL summed values; all-equal values put every row in one bucket."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from datapipeline_spark.operators.rank import prefix_scan, value_buckets
+
+    df = spark.createDataFrame(
+        [(i, *r) for i, r in enumerate(rows)], "id long, g long, v long, w long"
+    )
+    by = ["g"] if grouped else []
+    order = [F.col("v").desc() if bucket == "range_desc" else F.col("v"), F.col("id")]
+    w = Window.partitionBy(*by).orderBy(*order)
+    frame = w.rowsBetween(Window.unboundedPreceding, -1 if exclusive else 0)
+    naive = df.select(
+        "*",
+        (F.row_number().over(w) - int(exclusive)).alias("n_naive"),
+        F.sum("w").over(frame).alias("s_naive"),
+        F.count(F.lit(1)).over(Window.partitionBy(*by)).alias("nt_naive"),
+        F.sum("w").over(Window.partitionBy(*by)).alias("st_naive"),
+    )
+    if bucket == "hash":
+        b, col = naive, F.shiftright("v", 3)
+    else:
+        b = value_buckets(naive, "v", by, 4, descending=bucket == "range_desc")
+        col = F.col("__bucket__")
+    got = prefix_scan(
+        b, by, col, order, {"n": None, "s": "w"}, exclusive=exclusive, totals={"nt": "n", "st": "s"}
+    ).collect()
+    assert sorted(r.id for r in got) == list(range(len(rows)))
+    for r in got:
+        assert (r.n, r.s, r.nt, r.st) == (r.n_naive, r.s_naive, r.nt_naive, r.st_naive), r
+
+
 @given(
     st.lists(
         st.tuples(st.integers(0, 15), st.booleans()), min_size=4, max_size=80
