@@ -10,10 +10,10 @@ come off `toLocalIterator` as Python `Row`s, one partition on the driver at
 a time (with the next one prefetched), and batches are packed into NumPy
 arrays on the driver; no Arrow transfer is involved.
 
-Every call opens a fresh project. Its dataset build reads the series and
-scaler artifacts when they are fresh, as the reference's reads the series
-artifact, so a feed after ``build_artifacts`` does not re-run the stream
-transforms. Fresh means configs and source-file stats are unchanged since
+Every call opens a fresh project. Its dataset build reads the series,
+scaler and metadata artifacts when they are fresh, as the reference's reads
+the series artifact, so a feed after ``build_artifacts`` neither re-runs the
+stream transforms nor scans the series for its plan-time facts. Fresh means configs and source-file stats are unchanged since
 the artifacts were written; code changes are not seen (bump
 ``artifact_revision``), and sources behind an ``http`` or entry-point
 loader always compute (plans/artifacts.py).

@@ -6,6 +6,9 @@ length; CoverageStatsAccumulator (analysis/vector/coverage_stats.py:24-118)
 — per-column present/non-null counters over the wide sample table.
 
 Both are single aggregate passes in Spark; outputs are tiny artifact tables.
+``series_facts`` is the metadata artifact's row set: the counts and times
+plus the bucket multiplicity that decides each series' kind and list
+length, so a dataset build takes its plan-time facts from the artifact.
 """
 
 from __future__ import annotations
@@ -14,6 +17,8 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from datapipeline_spark.functions.time import floor_time_expr
 
 
 def collect_series_metadata(long_df: DataFrame, id_col: str = "series_id") -> DataFrame:
@@ -27,14 +32,56 @@ def collect_series_metadata(long_df: DataFrame, id_col: str = "series_id") -> Da
     )
 
 
+def series_facts(long_df: DataFrame, cadence: str, keys: Sequence[str]) -> DataFrame:
+    """``collect_series_metadata``'s columns plus the bucket multiplicity:
+    (series_id, n_rows, n_present, n_null, first_time, last_time, lo, hi), where
+    lo/hi are the fewest and most rows one (floored bucket, *keys) cell of
+    the series holds. hi > 1 makes it a list-kind series of length hi
+    (reference operations/artifacts/series.py:336-367; utils.py:54-82 wants
+    one length, so lo == hi). One aggregation grouped twice: per (bucket,
+    *keys, series_id), then per series_id; the floor is monotone, so the
+    floor of first_time is the series' first bucket."""
+    cells = long_df.groupBy(
+        floor_time_expr("time", cadence).alias("__b__"), *keys, "series_id"
+    ).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count("value").alias("present"),
+        F.min("time").alias("first"),
+        F.max("time").alias("last"),
+    )
+    return cells.groupBy("series_id").agg(
+        F.sum("n").alias("n_rows"),
+        F.sum("present").alias("n_present"),
+        (F.sum("n") - F.sum("present")).alias("n_null"),
+        F.min("first").alias("first_time"),
+        F.max("last").alias("last_time"),
+        F.min("n").alias("lo"),
+        F.max("n").alias("hi"),
+    )
+
+
+def combine_bounds(bounds, mode: str) -> tuple:
+    """Corpus window from per-id [first, last] pairs: union =
+    [min(first), max(last)], intersection = [max(first), min(last)]
+    (reference operations/artifacts/metadata.py:93-109). Pairs without a
+    time are skipped; (None, None) when none is left. Both modes are
+    associative, so the windows of disjoint id sets combine the same way."""
+    bounds = [(lo, hi) for lo, hi in bounds if lo is not None]
+    if not bounds:
+        return None, None
+    firsts, lasts = zip(*bounds)
+    if mode == "union":
+        return min(firsts), max(lasts)
+    return max(firsts), min(lasts)
+
+
 def window_bounds(
     long_df: DataFrame, id_col: str = "series_id", mode: str = "union"
 ) -> tuple:
-    """Corpus time window across ids from each id's [min, max] ``time``:
-    union = [min(first), max(last)], intersection = [max(first), min(last)]
-    (reference operations/artifacts/metadata.py:93-109). One grouped
-    aggregation over the tiny id domain, combined on the driver; (None, None)
-    when no id has a time. An empty intersection has start > end."""
+    """Corpus time window across ids from each id's [min, max] ``time``
+    (``combine_bounds``). One grouped aggregation over the tiny id domain,
+    combined on the driver; (None, None) when no id has a time. An empty
+    intersection has start > end."""
     if mode not in {"union", "intersection"}:
         raise ValueError(f"window mode must be union|intersection, got {mode!r}")
     rows = (
@@ -42,13 +89,7 @@ def window_bounds(
         .agg(F.min("time").alias("lo"), F.max("time").alias("hi"))
         .collect()
     )
-    bounds = [(r["lo"], r["hi"]) for r in rows if r["lo"] is not None]
-    if not bounds:
-        return None, None
-    firsts, lasts = zip(*bounds)
-    if mode == "union":
-        return min(firsts), max(lasts)
-    return max(firsts), min(lasts)
+    return combine_bounds([(r["lo"], r["hi"]) for r in rows], mode)
 
 
 def coverage_stats(wide_df: DataFrame, columns: Sequence[str]) -> DataFrame:

@@ -24,6 +24,14 @@ x (pass cents/scaled integers for float data, per the queries_core
 conventions); ties on x keep all co-located non-dominated duplicates
 (max-over-equal-x group must equal y), matching the NOT EXISTS dominance
 definition bit-for-bit — the oracle states that window logic directly.
+
+NULLs: a row with a NULL x is dropped before the range aggregate, so it is
+on no frontier and enters no other row's prefix. That is the oracle's
+answer: its RANGE frame gives a NULL-x row every row as prefix, the row
+itself included, so the strict ``m1 < y`` never holds (DuckDB 1.0 returns
+no NULL-x row), and NULLS LAST keeps it out of every non-NULL row's frame.
+A NULL y is never strictly greater than the prefix, so such a row is
+dropped too, and max() skips it.
 """
 
 from __future__ import annotations
@@ -43,7 +51,7 @@ def skyline_2d(
     bucket floor and RANGE frames are engine-exact."""
     d = df.withColumns(
         {"__x__": F.col(x_col).cast("long"), "__y__": F.col(y_col).cast("long")}
-    )
+    ).filter(F.col("__x__").isNotNull())
 
     rng = d.agg(
         F.min("__x__").alias("lo"), (F.max("__x__") + 1).alias("hi")

@@ -7,15 +7,23 @@ upstream artifact hashes, and artifacts/executor.py:95-205 skips fresh
 artifacts (AUTO) or rebuilds all (FORCE).
 
 The skip logic hashes **configs and file stats, never data**, so it ports
-unchanged; each producer writes Parquet plus a JSON manifest carrying the
-fingerprint. The series and scaler producers share the staged series frame
-(``CompiledProject.series``), so the stream transforms run once for both.
+unchanged. Each producer writes its rows plus a JSON manifest carrying the
+fingerprint and the producer's schema. The data-sized artifacts (series,
+ticks) are Parquet, read back under the manifest's schema, so no footer
+job infers it. The driver-sized ones (scaler, metadata, coverage_stats)
+hold at most one row per pivot column, which ``MAX_DISCOVERED_SERIES_IDS``
+caps; they are JSON rows, as the reference keeps its scaler
+(artifacts/scaler.py:16-88), and read back as a local relation, so
+reading and collecting them runs no Spark job. The series, scaler and
+ticks producers share the staged series frame (``CompiledProject.series``),
+so the stream transforms run once for all three.
 
 Read-back rule: an artifact is fresh when its manifest carries the
-fingerprint the current configs and source-file stats hash to (with its
-dependencies' fingerprints). ``build_artifacts`` skips fresh artifacts
-without reading them, and dataset builds read the fresh series and scaler
-artifacts instead of re-running the stream transforms (``fresh_frame``;
+fingerprint the configs and source-file stats hash to (with its
+dependencies' fingerprints), taken once per compiled project.
+``build_artifacts`` skips fresh artifacts without reading them, and dataset
+builds read the fresh series, scaler and metadata artifacts instead of
+re-running the stream transforms and the plan-time scans (``fresh_frame``;
 the reference's dataset pipeline reads the series artifact the same way).
 Its limit is the reference's: the fingerprint covers configs and file
 stats, not code, so a change to an operator or a registered mapper,
@@ -34,9 +42,10 @@ from functools import reduce
 from pathlib import Path
 from typing import Callable
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Row, SparkSession, functions as F
+from pyspark.sql.types import StructType, TimestampType
 
-from datapipeline_spark.dataset.metadata import collect_series_metadata
+from datapipeline_spark.dataset.metadata import series_facts
 from datapipeline_spark.operators.ticks import tick_grid
 from datapipeline_spark.plans.compiler import CompiledProject
 from datapipeline_spark.plans.config import FeatureSpec
@@ -55,6 +64,13 @@ DAG: dict[str, tuple[str, ...]] = {
     METADATA: (SERIES,),
     COVERAGE_STATS: (METADATA,),
 }
+
+#: the driver-sized artifacts, stored as JSON rows (see the module docstring)
+JSON_KEYS = frozenset({SCALER, METADATA, COVERAGE_STATS})
+
+#: the store's layout and the producers' row sets; hashed into every
+#: fingerprint, so artifacts written under an older layout are stale
+LAYOUT = 2
 
 
 def topological_order(keys: set[str]) -> list[str]:
@@ -150,7 +166,7 @@ def artifact_fingerprint(
     defn = compiled.definition
     cfg = defn.dataset
     h = hashlib.sha256()
-    h.update(f"revision={defn.project.artifact_revision}|key={key}".encode())
+    h.update(f"revision={defn.project.artifact_revision}|layout={LAYOUT}|key={key}".encode())
     h.update(json.dumps(dependency_hashes, sort_keys=True).encode())
     for spec in [*cfg.features, *cfg.targets] if cfg else []:
         h.update(json.dumps(spec.model_dump(mode="json"), sort_keys=True).encode())
@@ -174,13 +190,17 @@ def artifact_fingerprint(
 
 def _fingerprints(compiled: CompiledProject, keys: set[str]) -> dict[str, str]:
     """key → fingerprint for ``keys`` and everything they depend on, in
-    topological order (each key hashes its dependencies' fingerprints)."""
-    hashes: dict[str, str] = {}
+    topological order (each key hashes its dependencies' fingerprints).
+    Each key is hashed once per compiled project, like its staged series:
+    a dataset build that checks three artifacts stats the source files
+    once per key, not once per check."""
+    hashes = compiled._fingerprints
     for key in topological_order(keys):
-        hashes[key] = artifact_fingerprint(
-            compiled, key, {d: hashes[d] for d in DAG[key]}
-        )
-    return hashes
+        if key not in hashes:
+            hashes[key] = artifact_fingerprint(
+                compiled, key, {d: hashes[d] for d in DAG[key]}
+            )
+    return {key: hashes[key] for key in topological_order(keys)}
 
 
 def _fingerprint_sees_sources(compiled: CompiledProject) -> bool:
@@ -196,12 +216,17 @@ def _fingerprint_sees_sources(compiled: CompiledProject) -> bool:
 
 
 # --------------------------------------------------------------------------- #
-# producers — each writes parquet + manifest
+# producers — each returns the frame the store writes
 # --------------------------------------------------------------------------- #
 
 
 def _build_metadata(compiled: CompiledProject, series: DataFrame) -> DataFrame:
-    return collect_series_metadata(series)
+    """Per-series facts (``series_facts``) at the dataset's cadence and
+    sample keys, the ones a dataset build asks at plan time; the
+    fingerprint hashes ``sample`` for every key, so a changed cadence or
+    key set makes the artifact stale."""
+    sample = compiled.definition.dataset.sample
+    return series_facts(series, sample.cadence, list(sample.keys))
 
 
 def _build_coverage(compiled: CompiledProject, metadata: DataFrame) -> DataFrame:
@@ -230,13 +255,31 @@ def _build_scaler(compiled: CompiledProject) -> DataFrame:
 def _build_ticks(compiled: CompiledProject) -> DataFrame:
     """Per-partition dense tick grids at the sample cadence, one per stream
     used by the dataset (reference operations/artifacts/ticks.py:67-132).
-    Each grid is unique per (partition, time), so the union needs no dedupe."""
+    Each grid is unique per (partition, time), so the union needs no dedupe.
+
+    A stream's grid comes from the staged series frame filtered to one of
+    its base ids: ``project_stream_series`` filters no row, so every stream
+    row is there with its raw time, and the series and scaler producers
+    have already run the stream's transforms for it. Two kinds of stream
+    read the stream itself, re-running its transforms: one whose
+    ``partition_by`` is not contained in the sample keys (the fields left
+    over are encoded in the series-id suffix, not kept as columns), and one
+    with only sequence specs (the series frame holds scalar specs only)."""
     cfg = compiled.definition.dataset
     cadence = cfg.sample.cadence
+    specs = [*cfg.features, *cfg.targets]
+    scalar_base: dict[str, str] = {}
+    for spec in specs:
+        if spec.sequence is None:
+            scalar_base.setdefault(spec.stream, spec.id)
     grids = []
-    for stream_id in dict.fromkeys(s.stream for s in [*cfg.features, *cfg.targets]):
+    for stream_id in dict.fromkeys(s.stream for s in specs):
         partition_by = compiled.partition_by(stream_id)
-        grid = tick_grid(compiled.stream(stream_id), cadence, partition_by)
+        if stream_id in scalar_base and set(partition_by) <= set(cfg.sample.keys):
+            rows = compiled.series().filter(F.col("base_id") == scalar_base[stream_id])
+        else:
+            rows = compiled.stream(stream_id)
+        grid = tick_grid(rows, cadence, partition_by)
         grids.append(
             grid.select(
                 F.lit(stream_id).alias("stream_id"),
@@ -267,8 +310,40 @@ class BuildResult:
     skipped: bool
 
 
+def driver_rows(df: DataFrame) -> list[Row]:
+    """``df`` collected, with every timestamp column as microseconds since
+    the epoch: exact, and independent of the driver's time zone. Floats
+    come back as the JVM's doubles, which JSON holds exactly (``repr``
+    round-trips NaN, ±0.0, subnormals and ±Inf)."""
+    return df.select(
+        *[
+            F.unix_micros(df[f.name]).alias(f.name)
+            if isinstance(f.dataType, TimestampType)
+            else df[f.name]
+            for f in df.schema.fields
+        ]
+    ).collect()
+
+
+def _local_frame(spark: SparkSession, schema: StructType, rows: list[list]) -> DataFrame:
+    """A local relation of ``rows`` (as ``driver_rows`` encodes them) under
+    ``schema``: built from Arrow columns, so reading and collecting it
+    runs no Spark job."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
+
+
 class ArtifactStore:
-    """`<artifacts_dir>/<key>/` with `data.parquet/` + `manifest.json`."""
+    """`<artifacts_dir>/<key>/` with `manifest.json` (fingerprint, format,
+    the producer's schema) beside `data.json` (the ``JSON_KEYS``) or
+    `data.parquet/` (series, ticks)."""
 
     def __init__(self, root: str | Path) -> None:
         self.root = Path(root)
@@ -280,25 +355,39 @@ class ArtifactStore:
         return json.loads(p.read_text())
 
     def data_path(self, key: str) -> Path:
-        return self.root / key / "data.parquet"
+        return self.root / key / ("data.json" if key in JSON_KEYS else "data.parquet")
 
     def read(self, compiled: CompiledProject, key: str) -> DataFrame:
-        if self.manifest(key) is None:
+        """The artifact under its manifest's schema: a local relation for
+        the JSON artifacts, a Parquet scan (all-nullable, as file sources
+        are) for the others."""
+        manifest = self.manifest(key)
+        if manifest is None:
             raise FileNotFoundError(f"artifact {key!r} not built under {self.root}")
-        return compiled.spark.read.parquet(str(self.data_path(key)))
+        schema = StructType.fromJson(manifest["schema"])
+        path = self.data_path(key)
+        if key in JSON_KEYS:
+            return _local_frame(compiled.spark, schema, json.loads(path.read_text()))
+        return compiled.spark.read.schema(schema).parquet(str(path))
 
     def write(self, key: str, df: DataFrame, fingerprint: str) -> Path:
         target = self.root / key
         tmp = self.root / f".{key}.tmp"
         if tmp.exists():
             shutil.rmtree(tmp)
-        df.write.mode("overwrite").parquet(str(tmp / "data.parquet"))
-        (tmp / "manifest.json").write_text(
-            json.dumps(
-                {"key": key, "fingerprint": fingerprint, "format": "parquet"},
-                indent=2,
-            )
-        )
+        data = tmp / self.data_path(key).name
+        if key in JSON_KEYS:
+            tmp.mkdir(parents=True)
+            data.write_text(json.dumps([list(r) for r in driver_rows(df)]))
+        else:
+            df.write.mode("overwrite").parquet(str(data))
+        manifest = {
+            "key": key,
+            "fingerprint": fingerprint,
+            "format": "json" if key in JSON_KEYS else "parquet",
+            "schema": df.schema.jsonValue(),
+        }
+        (tmp / "manifest.json").write_text(json.dumps(manifest, indent=2))
         if target.exists():
             shutil.rmtree(target)
         tmp.rename(target)
@@ -319,11 +408,11 @@ def _is_fresh(store: ArtifactStore, key: str, fingerprint: str) -> bool:
 
 
 def fresh_frame(compiled: CompiledProject, key: str) -> DataFrame | None:
-    """The artifact's parquet in the project's artifacts directory when it
-    is fresh (the rule ``build_artifacts`` skips on), else None; dataset
-    builds read it in place of recomputing. None as well when the dataset
-    reads a source the fingerprint cannot see. See the module docstring
-    for the rule's limit."""
+    """The artifact in the project's artifacts directory when it is fresh
+    (the rule ``build_artifacts`` skips on), else None; dataset builds read
+    it in place of recomputing. None as well when the dataset reads a
+    source the fingerprint cannot see. See the module docstring for the
+    rule's limit."""
     if not _fingerprint_sees_sources(compiled):
         return None
     store = _project_store(compiled)

@@ -249,27 +249,44 @@ def apply_transform(
 
 @dataclass
 class CompiledProject:
-    """Memoized stream-id → DataFrame resolver over a loaded project."""
+    """Memoized stream-id → DataFrame resolver over a loaded project. Each
+    source is loaded once (``source``), so two streams over one source
+    share its parse and its schema inference; ``_fingerprints`` holds the
+    artifact fingerprints ``plans.artifacts`` takes once per project."""
 
     spark: SparkSession
     definition: ProjectDefinition
     _cache: dict[str, DataFrame] = field(default_factory=dict)
     _partitions: dict[str, list[str]] = field(default_factory=dict)
+    _sources: dict[str, DataFrame] = field(default_factory=dict)
+    _fingerprints: dict[str, str] = field(default_factory=dict)
     _series: DataFrame | None = None
 
     def series(self) -> DataFrame:
         """The dataset's scalar long series frame, computed from the streams
-        and staged once behind a lazy localCheckpoint (the reference's
-        series cache): the series and scaler artifacts and a build without
+        and staged once behind a localCheckpoint (the reference's series
+        cache): the series, scaler and ticks artifacts and a build without
         fresh artifacts read it instead of re-running the stream transforms.
-        A build whose series artifact is fresh reads that parquet instead
-        (``artifacts.fresh_frame``; the fingerprint covers configs and file
-        stats, not code). Its blocks live as long as this object's frames."""
+        ``eager=False`` defers only the final stage: under AQE, building
+        the checkpoint runs every shuffle map stage of the stream plans
+        (their stage jobs run inside this call), and the first action runs
+        the rest. A build whose series artifact is fresh reads that parquet
+        instead (``artifacts.fresh_frame``; the fingerprint covers configs
+        and file stats, not code). Its blocks live as long as this object's
+        frames."""
         if self._series is None:
             from datapipeline_spark.plans.dataset_build import scalar_series
 
             self._series = scalar_series(self).localCheckpoint(eager=False)
         return self._series
+
+    def source(self, source_id: str) -> DataFrame:
+        """The loaded and parsed source (``load_source``), once per project."""
+        if source_id not in self._sources:
+            self._sources[source_id] = load_source(
+                self.spark, self.definition.sources[source_id], self.definition
+            )
+        return self._sources[source_id]
 
     def partition_by(self, stream_id: str) -> list[str]:
         if stream_id not in self._partitions:
@@ -317,9 +334,7 @@ class CompiledProject:
             raise KeyError(f"unknown stream {stream_id!r}")
         frm = cfg.from_
         if isinstance(frm, SourceFrom):
-            df = load_source(
-                self.spark, self.definition.sources[frm.source], self.definition
-            )
+            df = self.source(frm.source)
             return df if point == "input" else self._map(df, cfg)
         if isinstance(frm, StreamFrom):
             return self.stream(frm.stream)
@@ -364,7 +379,7 @@ class CompiledProject:
     def _build(self, cfg: StreamConfig) -> tuple[DataFrame, list[str]]:
         frm = cfg.from_
         if isinstance(frm, SourceFrom):
-            df = load_source(self.spark, self.definition.sources[frm.source], self.definition)
+            df = self.source(frm.source)
             partition_by = list(cfg.partition_by)
             df = self._map(df, cfg)
         elif isinstance(frm, StreamFrom):

@@ -7,24 +7,28 @@ scalers, run the fixed postprocess order, route folds.
 
 Spark runs each stream's transforms at most once per compiled project and
 the pivot once per build. The scalar series frame projects every stream
-once for all of its specs (``scalar_series``). A build reads the series and
-scaler artifacts when they are fresh (``artifacts.fresh_frame``: configs
-and source-file stats unchanged since ``build_artifacts`` wrote them; code
-changes are not seen, as with the reference's ``artifact_revision``), and
-otherwise the series frame staged behind a lazy localCheckpoint
-(``CompiledProject.series``; read by the id scan, window clip, pivot and
-scaler fit). The wide sample table after its last shuffle (the lattice)
-sits behind a second one, so postprocess, labels, scaling and every
-fold/role write are narrow work over one materialization. Staged blocks
-live as long as the DataFrames that own them.
+once for all of its specs (``scalar_series``). A build reads the series,
+scaler and metadata artifacts when they are fresh (``artifacts.fresh_frame``:
+configs and source-file stats unchanged since ``build_artifacts`` wrote
+them; code changes are not seen, as with the reference's
+``artifact_revision``), and otherwise the series frame staged behind a
+localCheckpoint (``CompiledProject.series``; read by the facts scan, the
+pivot and the scaler fit). The plan-time facts (pivot ids, list lengths,
+the window bounds) are the metadata artifact's rows, or one collect of
+``series_facts`` when it is not fresh. The wide sample table after its
+last shuffle (the lattice) sits behind a second checkpoint, so
+postprocess, labels, scaling and every fold/role write are narrow work
+over one materialization. Staged blocks live as long as the DataFrames
+that own them.
 
 Each dataset rule has one owner in ``datapipeline_spark.dataset`` that this
 module calls rather than restates: ``fit_scaler``/``apply_scaler`` fit and
 apply the leakage-free scaler (``outputs()`` collects every fold's
 statistics once), ``route_folds`` routes labelled rows to fold/role outputs,
-and ``window_bounds`` computes the metadata window the samples are clipped
-to. The preview stages (``samples_preview``, ``postprocess_preview``) are
-defined here once for the API and the serve profiles.
+``series_facts`` holds the per-series facts, and ``combine_bounds`` the
+metadata window the samples are clipped to. The preview stages
+(``samples_preview``, ``postprocess_preview``) are defined here once for the
+API and the serve profiles.
 """
 
 from __future__ import annotations
@@ -35,8 +39,9 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
-from datapipeline_spark.dataset.metadata import window_bounds
+from datapipeline_spark.dataset.metadata import combine_bounds, series_facts, window_bounds
 from datapipeline_spark.dataset.postprocess import (
     drop_rows_by_coverage,
     select_columns_by_coverage,
@@ -49,9 +54,19 @@ from datapipeline_spark.dataset.split import (
     route_folds,
     time_split_label,
 )
-from datapipeline_spark.functions.time import floor_time_expr, parse_datetime_utc
+from datapipeline_spark.functions.time import (
+    floor_time_expr,
+    parse_cadence_seconds,
+    parse_datetime_utc,
+)
 from datapipeline_spark.operators.window import sequence_windows
-from datapipeline_spark.plans.artifacts import SCALER, SERIES, fresh_frame
+from datapipeline_spark.plans.artifacts import (
+    METADATA,
+    SCALER,
+    SERIES,
+    driver_rows,
+    fresh_frame,
+)
 from datapipeline_spark.plans.compiler import CompiledProject
 from datapipeline_spark.plans.config import DatasetConfig, FeatureSpec
 
@@ -187,10 +202,13 @@ def fit_split_scaler(series: DataFrame, cfg: DatasetConfig) -> DataFrame | None:
 class DatasetBuild:
     """A built dataset: the sample frame, its columns and scaler statistics.
 
-    A build that reads fresh artifacts gets its series and ``scaler_stats``
-    from ``spark.read.parquet``, which marks every column nullable, so its
-    frames are all-nullable where a computed build's are not. Values and
-    the schemas of the served parquet outputs are the same either way.
+    A build that reads fresh artifacts gets ``scaler_stats`` from the JSON
+    scaler artifact under the producer's own schema, nullability included.
+    Its series frame is the parquet artifact read under the recorded
+    schema, which Spark still marks all-nullable, as it does every file
+    source, so the samples are all-nullable where a computed build's are
+    not. Values and the schemas of the served parquet outputs are the same
+    either way.
     """
 
     samples: DataFrame  # wide frame: time, *keys, one column per series id (+ label)
@@ -250,21 +268,37 @@ _WINDOW = {
 }
 
 
-def _window_clip(wide, cadence, longs: Sequence[DataFrame], window_mode: str):
+def _window_clip(wide, cadence, facts, seq_longs: Sequence[DataFrame], window_mode: str):
     """Clip samples to the metadata window (reference operations/artifacts/
     metadata.py:36-108; serve applies it, default mode 'intersection') over
-    the [min, max] observed ROW bucket of each id. All ranges come from ONE
-    grouped aggregation over the unioned slim long frames (the staged scalar
-    series plus any sequence frames; partial agg map-side, one shuffle on
-    the tiny id domain)."""
+    the [min, max] observed ROW bucket of each id. The scalar series' ranges
+    come from the facts rows (microseconds): the floor is monotone, so the
+    floor of an id's first time is its first bucket, and a base id's range
+    is the union of its series' ranges. Sequence frames are not in the
+    facts; one grouped aggregation over their slim union gives their
+    window, and the two windows combine (their id sets are disjoint)."""
     id_col, mode = _WINDOW[window_mode]
-    slim = _union_all(
-        [
-            long_df.select(id_col, floor_time_expr("time", cadence).alias("time"))
-            for long_df in longs
-        ]
-    )
-    start, end = window_bounds(slim, id_col, mode)
+    per_id: dict[str, list] = {}
+    for r in facts:
+        rid = r["series_id"] if id_col == "series_id" else r["series_id"].split("__", 1)[0]
+        per_id.setdefault(rid, []).append((r["first_time"], r["last_time"]))
+    # floor commutes with min and max, so the window floors once
+    start, end = combine_bounds([combine_bounds(b, "union") for b in per_id.values()], mode)
+    step = parse_cadence_seconds(cadence) * 1_000_000
+
+    def bucket(us: int):
+        return TimestampType().fromInternal(us // step * step)
+
+    windows = [(None, None) if start is None else (bucket(start), bucket(end))]
+    if seq_longs:
+        slim = _union_all(
+            [
+                long_df.select(id_col, floor_time_expr("time", cadence).alias("time"))
+                for long_df in seq_longs
+            ]
+        )
+        windows.append(window_bounds(slim, id_col, mode))
+    start, end = combine_bounds(windows, mode)
     if start is None:
         return wide
     if start > end:
@@ -284,6 +318,7 @@ def _build(compiled: CompiledProject, cfg: DatasetConfig) -> DatasetBuild:
     specs = [(s, "feature") for s in cfg.features] + [(s, "target") for s in cfg.targets]
     seq_specs = [s for s, _ in specs if s.sequence is not None]
     series = scaler_stats = None
+    facts: list = []
     if len(seq_specs) < len(specs):
         series = fresh_frame(compiled, SERIES)
         if series is None:
@@ -294,30 +329,29 @@ def _build(compiled: CompiledProject, cfg: DatasetConfig) -> DatasetBuild:
             scaler_stats = fresh_frame(compiled, SCALER)
         if scaler_stats is None:
             scaler_stats = fit_split_scaler(series, cfg)
+        # the plan-time facts: the metadata artifact's rows (no Spark job),
+        # or one collect over the series frame. Only the columns the build
+        # reads are selected, so the collect aggregates nothing else
+        metadata = fresh_frame(compiled, METADATA)
+        if metadata is None:
+            metadata = series_facts(series, cadence, keys)
+        times = ["first_time", "last_time"] if cfg.metadata is not None else []
+        facts = driver_rows(metadata.select("series_id", "lo", "hi", *times))
     seq_longs = [_long_frame(compiled, s, keys) for s in seq_specs]
 
     col_base: dict[str, str] = {}
     wide: DataFrame | None = None
     list_conform: dict[str, int] = {}
     if series is not None:
-        # ---- ONE plan-time scan: the pivot ids are the series_ids of the
-        # bucket-multiplicity rows. A series whose buckets hold >1
-        # observation becomes a fixed-length list column, time-ordered within
-        # the bucket (reference operations/artifacts/series.py:336-367
-        # _assemble_values: len != 1 → list; artifacts/utils.py:54-82
-        # enforces ONE kind and ONE length per series).
-        mult = (
-            series.groupBy(
-                floor_time_expr("time", cadence).alias("__b__"), *keys, "series_id"
-            )
-            .agg(F.count(F.lit(1)).alias("n"))
-            .groupBy("series_id")
-            .agg(F.min("n").alias("lo"), F.max("n").alias("hi"))
-            .collect()
-        )
-        ids = sorted(r["series_id"] for r in mult)
-        multi_len = {r["series_id"]: r["hi"] for r in mult if r["hi"] > 1}
-        for r in mult:
+        # ---- the pivot ids are the series_ids of the facts. A series whose
+        # buckets hold >1 observation becomes a fixed-length list column,
+        # time-ordered within the bucket (reference operations/artifacts/
+        # series.py:336-367 _assemble_values: len != 1 → list;
+        # artifacts/utils.py:54-82 enforces ONE kind and ONE length per
+        # series).
+        ids = sorted(r["series_id"] for r in facts)
+        multi_len = {r["series_id"]: r["hi"] for r in facts if r["hi"] > 1}
+        for r in facts:
             if r["hi"] > 1 and r["lo"] != r["hi"]:
                 raise ValueError(
                     f"Series {r['series_id']!r} mixes bucket multiplicities "
@@ -353,8 +387,7 @@ def _build(compiled: CompiledProject, cfg: DatasetConfig) -> DatasetBuild:
 
     assert wide is not None
     if cfg.metadata is not None:
-        longs = ([series] if series is not None else []) + seq_longs
-        wide = _window_clip(wide, cadence, longs, cfg.metadata.window_mode)
+        wide = _window_clip(wide, cadence, facts, seq_longs, cfg.metadata.window_mode)
     # ---- rectangular key lattice (reference sample/input.py:37 rectangular
     # =True on every serve: pipelines/sample/keys.py:16-121 dense lattice) —
     # every cadence tick inside each sample key's observed [first, last]
@@ -372,7 +405,9 @@ def _build(compiled: CompiledProject, cfg: DatasetConfig) -> DatasetBuild:
         )
     # ---- stage the sample table after its last shuffle: the coverage scan
     # and every fold/role output below are narrow work over this one
-    # materialization instead of re-running the pivot and the lattice
+    # materialization instead of re-running the pivot and the lattice.
+    # Under AQE, building the checkpoint runs the shuffle map stages of the
+    # pivot and the lattice here; the first action runs only the last stage
     wide = wide.localCheckpoint(eager=False)
     kind_of = {s.id: k for s, k in specs}
     feature_cols = [c for c, b in col_base.items() if kind_of[b] == "feature"]

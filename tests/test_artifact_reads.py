@@ -174,6 +174,21 @@ def _reads_artifact(df, key: str) -> bool:
     )
 
 
+def _is_artifact_rows(df, root, key: str) -> bool:
+    """``df`` is the JSON artifact's rows, not a refit: a local relation
+    with no aggregate above it, holding exactly the rows of data.json."""
+    from datapipeline_spark.plans.artifacts import driver_rows
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    stored = json.loads((root / "build" / key / "data.json").read_text())
+    return (
+        "LocalTableScan" in plan
+        and "Aggregate" not in plan
+        and sorted(json.dumps(list(r)) for r in driver_rows(df))
+        == sorted(json.dumps(r) for r in stored)
+    )
+
+
 def _sorted_rows(m):
     return m[np.lexsort(m.T[::-1])]
 
@@ -196,7 +211,7 @@ def test_build_reads_fresh_artifacts(spark, project, monkeypatch):
     series, build, computed = _build_reading(spark, project, monkeypatch)
     assert not computed
     assert _reads_artifact(series, "series")
-    assert _reads_artifact(build.scaler_stats, "scaler")
+    assert _is_artifact_rows(build.scaler_stats, project, "scaler")
     np.testing.assert_array_equal(_feed(spark, project), feed)
 
 
@@ -349,3 +364,67 @@ def test_fresh_artifacts_run_no_spark_job(spark, project):
     sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
     assert all(r.skipped for r in results.values())
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+
+
+def _ticks_from_streams(compiled):
+    """The ticks artifact as every stream's own grid: the reference the
+    grids taken from the staged series frame must equal."""
+    from pyspark.sql import functions as F
+
+    from datapipeline_spark.operators.ticks import tick_grid
+
+    cfg = compiled.definition.dataset
+    grids = []
+    for stream_id in dict.fromkeys(s.stream for s in [*cfg.features, *cfg.targets]):
+        partition_by = compiled.partition_by(stream_id)
+        grid = tick_grid(compiled.stream(stream_id), cfg.sample.cadence, partition_by)
+        grids.append(
+            grid.select(
+                F.lit(stream_id).alias("stream_id"),
+                F.to_json(F.struct(*partition_by)) if partition_by else F.lit("{}"),
+                "time",
+            ).toDF("stream_id", "partition_json", "time")
+        )
+    return reduce(lambda a, b: a.unionByName(b), grids)
+
+
+def _parquet_project(spark, root):
+    """One parquet-directory source, a stream partitioned by the one
+    sample key, no transforms."""
+    spark.createDataFrame(
+        [(f"2024-01-01T{h:02d}:00:00Z", loc, float(h)) for h in range(4) for loc in "ab"],
+        "t string, loc string, value double",
+    ).selectExpr("to_timestamp(t) AS time", "loc", "value").coalesce(1).write.parquet(
+        str(root / "data" / "m.parquet")
+    )
+    _write(root / "project.yaml", "schema_version: 3\nname: pq\n")
+    _write(
+        root / "sources" / "m.yaml",
+        "id: src.m\nloader: { path: data/m.parquet, reader: { format: parquet } }\n",
+    )
+    _write(root / "streams" / "m.yaml", "id: s.m\nfrom: { source: src.m }\npartition_by: [loc]\n")
+    _write(
+        root / "dataset.yaml",
+        _dataset_yaml("  - { id: val, stream: s.m, field: value }\n", split=""),
+    )
+    return root
+
+
+def test_ticks_from_series_equal_ticks_from_streams(
+    spark, project, regression_project, tmp_path  # noqa: F811
+):
+    """Streams partitioned by sample keys take their grid from the staged
+    series frame, so the plan reads no source file; the regression
+    fixture's partition-suffixed and sequence-only streams read the
+    stream. Either way the ticks equal every stream's own grid."""
+    from datapipeline_spark.plans.artifacts import _build_ticks
+
+    pq = _parquet_project(spark, tmp_path / "pq")
+    for root in (project, pq, regression_project):
+        compiled = _compiled(spark, root)
+        ticks = _build_ticks(compiled)
+        _assert_same_frame(ticks, _ticks_from_streams(compiled))
+        assert ticks.count() > 0
+    assert not _build_ticks(_compiled(spark, project)).inputFiles()
+    assert _ticks_from_streams(_compiled(spark, project)).inputFiles()
+    assert _build_ticks(_compiled(spark, regression_project)).inputFiles()

@@ -5,8 +5,9 @@ change, FORCE rebuilds all)."""
 from __future__ import annotations
 
 import json
-import os
+import struct
 import time
+from datetime import datetime
 
 import pytest
 
@@ -219,3 +220,113 @@ transforms:
         ("02:00", None),
         ("03:00", 2.0),
     ]
+
+
+def test_series_facts_equal_metadata_and_multiplicity(spark):
+    """The facts rows are ``collect_series_metadata``'s plus the bucket
+    multiplicity a build used to collect on its own, for a scalar series
+    and a list-kind one (two readings per hourly bucket, some NULL)."""
+    from pyspark.sql import functions as F
+
+    from datapipeline_spark.dataset.metadata import collect_series_metadata, series_facts
+    from datapipeline_spark.functions.time import floor_time_expr
+
+    rows = [("s", loc, datetime(2024, 1, 1, h), float(h)) for h in range(4) for loc in "xy"]
+    rows += [
+        ("l", loc, datetime(2024, 1, 1, h, m), None if m and h == 1 else float(h))
+        for h in range(1, 4)
+        for m in (0, 30)
+        for loc in "xy"
+    ]
+    df = spark.createDataFrame(rows, "series_id string, loc string, time timestamp, value double")
+    mult = {
+        r["series_id"]: (r["lo"], r["hi"])
+        for r in df.groupBy(floor_time_expr("time", "1h").alias("__b__"), "loc", "series_id")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .groupBy("series_id")
+        .agg(F.min("n").alias("lo"), F.max("n").alias("hi"))
+        .collect()
+    }
+    meta_cols = ["n_rows", "n_present", "n_null", "first_time", "last_time"]
+    want = {
+        r["series_id"]: (*[r[c] for c in meta_cols], *mult[r["series_id"]])
+        for r in collect_series_metadata(df).collect()
+    }
+    facts = series_facts(df, "1h", ["loc"])
+    assert facts.columns == ["series_id", *meta_cols, "lo", "hi"]
+    got = {r["series_id"]: tuple(r)[1:] for r in facts.collect()}
+    assert got == want
+    assert got["s"][-2:] == (1, 1) and got["l"][-2:] == (2, 2)
+    assert got["l"][:3] == (12, 10, 2)
+
+
+def test_changed_cadence_makes_every_artifact_stale(spark, project):
+    """Every fingerprint hashes the sample block, so a new cadence rebuilds
+    the metadata, whose multiplicity depends on it: four hourly readings
+    per location fill two 2h buckets with two readings each."""
+    from datapipeline_spark.plans.artifacts import ArtifactStore, build_artifacts
+
+    compiled = _compiled(spark, project)
+    build_artifacts(compiled)
+    meta = ArtifactStore(project / "build").read(compiled, "metadata").collect()
+    assert [(r["lo"], r["hi"]) for r in meta] == [(1, 1)]
+    dataset = project / "dataset.yaml"
+    dataset.write_text(dataset.read_text().replace("cadence: 1h", "cadence: 2h"))
+    compiled = _compiled(spark, project)
+    results = build_artifacts(compiled)
+    assert not any(res.skipped for res in results.values())
+    meta = ArtifactStore(project / "build").read(compiled, "metadata").collect()
+    assert [(r["lo"], r["hi"]) for r in meta] == [(2, 2)]
+
+
+def _jobs(spark, group: str, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _bits(row) -> tuple:
+    return tuple(struct.pack(">d", v) if isinstance(v, float) else v for v in row)
+
+
+def test_json_artifacts_round_trip_bit_for_bit(spark, tmp_path):
+    """NaN, ±0.0, subnormals, ±1e308, ±Inf, NULL and microsecond UTC
+    timestamps come back bit for bit under the producer's schema,
+    nullability included, and reading and collecting run no Spark job.
+    The parquet artifacts read under the recorded schema with no footer
+    job."""
+    from types import SimpleNamespace
+
+    from pyspark.sql import functions as F
+
+    from datapipeline_spark.plans.artifacts import JSON_KEYS, ArtifactStore, driver_rows
+
+    values = [float("nan"), 0.0, -0.0, 5e-324, -2.5e-310, 1e308, -1e308, float("inf"), None]
+    micros = [0, -1, 1, 1_700_000_000_123_456, -62_135_596_800_000_000, None, 7, 8, 9]
+    df = spark.createDataFrame(
+        [(f"s{i}", v, i if i % 2 else None, t) for i, (v, t) in enumerate(zip(values, micros))],
+        "series_id string not null, mean double, n_obs long, t long",
+    ).select("series_id", "mean", "n_obs", F.timestamp_micros("t").alias("first_time"))
+    want = sorted(_bits(r) for r in driver_rows(df))
+    store = ArtifactStore(tmp_path / "build")
+    holder = SimpleNamespace(spark=spark)
+    for key in sorted(JSON_KEYS):
+        store.write(key, df, "fp")
+        assert store.manifest(key)["format"] == "json"
+        back, jobs = _jobs(spark, f"json-read-{key}", lambda: store.read(holder, key))
+        assert back.schema == df.schema
+        got, jobs_collect = _jobs(spark, f"json-collect-{key}", lambda: driver_rows(back))
+        assert sorted(_bits(r) for r in got) == want
+        assert jobs == jobs_collect == 0
+    store.write("series", df, "fp")
+    back, jobs = _jobs(spark, "parquet-read-series", lambda: store.read(holder, "series"))
+    assert jobs == 0
+    # a file source is all-nullable, whatever schema it is read under
+    assert [(f.name, f.dataType) for f in back.schema] == [(f.name, f.dataType) for f in df.schema]
+    assert all(f.nullable for f in back.schema)
+    assert sorted(_bits(r) for r in driver_rows(back)) == want

@@ -1376,6 +1376,49 @@ def test_skyline_2d_matches_brute_force(spark):
     assert got == want
 
 
+def test_skyline_2d_null_x_matches_oracle(spark):
+    """A NULL x neither empties the frontier nor joins it: on every frame
+    the rows equal what DuckDB returns for the skyline_parts oracle SQL,
+    whose RANGE frame puts a NULL-x row in its own prefix."""
+    from decimal import Decimal
+
+    import duckdb
+
+    from datapipeline_spark.operators.skyline import skyline_2d
+    from datapipeline_spark.queries_data import REGISTRY
+
+    oracle_sql = REGISTRY["skyline_parts"][1]
+
+    def oracle(rows):
+        con = duckdb.connect()
+        con.execute(
+            "CREATE TABLE part (p_partkey BIGINT, p_retailprice DECIMAL(15, 2), p_size BIGINT)"
+        )
+        con.executemany(
+            "INSERT INTO part VALUES (?, ?, ?)",
+            [(k, None if x is None else Decimal(x) / 100, y) for k, x, y in rows],
+        )
+        return sorted(con.execute(oracle_sql).fetchall())
+
+    def ours(rows):
+        df = spark.createDataFrame(rows, "p_partkey long, price_cents long, p_size long")
+        out = skyline_2d(df, "price_cents", "p_size", buckets=8)
+        return sorted(tuple(r) for r in out.collect())
+
+    frontier = [(1, 10, 5), (2, 20, 8)]
+    assert ours(frontier) == oracle(frontier) == frontier
+    for nulls in (
+        [(3, None, 9)],
+        [(3, None, 1)],
+        [(3, None, 9), (4, None, 3), (5, None, 9)],
+        [(3, None, None), (4, None, 7)],
+    ):
+        rows = frontier + nulls
+        assert ours(rows) == oracle(rows) == frontier, nulls
+    only_nulls = [(3, None, 1), (4, None, 2)]
+    assert ours(only_nulls) == oracle(only_nulls) == []
+
+
 def test_interval_concurrency_sweep(spark):
     from datapipeline_spark.operators.interval import interval_concurrency
 

@@ -169,3 +169,26 @@ def test_scaler_artifact_equals_build_stats(spark, tmp_path, split):
     # the folds see different train rows, so their statistics differ
     assert got[("f0", "val")]["n_obs"] < got[("f1", "val")]["n_obs"]
 
+
+
+def test_feed_over_fresh_artifacts_runs_few_jobs(spark, tmp_path):
+    """A feed after ``build_artifacts`` reads the series parquet under its
+    recorded schema and takes the scaler and the plan-time facts from the
+    JSON artifacts: no schema inference, facts or scaler collect is left,
+    only the sample table's stage jobs and the transfer."""
+    from datapipeline_spark import api
+    from datapipeline_spark.plans.artifacts import build_artifacts
+
+    root = _project(tmp_path / "proj", ROLES_SPLIT)
+    build_artifacts(_compiled(spark, root))
+    sc = spark.sparkContext
+    group = "feed-over-fresh-artifacts"
+    sc.setJobGroup(group, group)
+    try:
+        batches = list(
+            api.iter_model_batches(spark, root, fold="main", role="train", strict_finite=False)
+        )
+    finally:
+        sc.setJobGroup("", "")
+    assert sum(b.features.shape[0] for b in batches) == 2 * 24  # the 'early' day
+    assert _jobs_in_group(spark, group) <= 6
