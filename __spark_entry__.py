@@ -5,7 +5,8 @@
   (+ the large-scale training-data operators), each (spark, sf_dir) → DataFrame.
 - ``oracle_sql()``: matching DuckDB SQL with identical column names/values.
 
-The registries live in datapipeline_spark.queries_core / queries_data.
+The registry lives in datapipeline_spark.queries_core; queries_data,
+queries_dataset and queries_streaming register into it.
 """
 
 from __future__ import annotations
@@ -16,17 +17,14 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def _registry():
-    from datapipeline_spark.queries_core import REGISTRY as core
+    """Every registry query: each ``queries_*`` module registers into the
+    one ``queries_core.REGISTRY`` when it is imported."""
+    import datapipeline_spark.queries_data  # noqa: F401
+    import datapipeline_spark.queries_dataset  # noqa: F401
+    import datapipeline_spark.queries_streaming  # noqa: F401
+    from datapipeline_spark.queries_core import REGISTRY
 
-    merged = dict(core)
-    from datapipeline_spark.queries_data import REGISTRY as data
-    from datapipeline_spark.queries_dataset import REGISTRY as dataset
-    from datapipeline_spark.queries_streaming import REGISTRY as streaming
-
-    merged.update(data)
-    merged.update(dataset)
-    merged.update(streaming)
-    return merged
+    return REGISTRY
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -9,6 +9,8 @@ Both are single aggregate passes in Spark; outputs are tiny artifact tables.
 ``series_facts`` is the metadata artifact's row set: the counts and times
 plus the bucket multiplicity that decides each series' kind and list
 length, so a dataset build takes its plan-time facts from the artifact.
+The build also runs it over its sequence specs' long frames, and
+``combine_bounds`` turns the per-id times into the metadata window.
 """
 
 from __future__ import annotations
@@ -64,8 +66,8 @@ def combine_bounds(bounds, mode: str) -> tuple:
     """Corpus window from per-id [first, last] pairs: union =
     [min(first), max(last)], intersection = [max(first), min(last)]
     (reference operations/artifacts/metadata.py:93-109). Pairs without a
-    time are skipped; (None, None) when none is left. Both modes are
-    associative, so the windows of disjoint id sets combine the same way."""
+    time are skipped; (None, None) when none is left. An empty
+    intersection has first > last."""
     bounds = [(lo, hi) for lo, hi in bounds if lo is not None]
     if not bounds:
         return None, None
@@ -73,23 +75,6 @@ def combine_bounds(bounds, mode: str) -> tuple:
     if mode == "union":
         return min(firsts), max(lasts)
     return max(firsts), min(lasts)
-
-
-def window_bounds(
-    long_df: DataFrame, id_col: str = "series_id", mode: str = "union"
-) -> tuple:
-    """Corpus time window across ids from each id's [min, max] ``time``
-    (``combine_bounds``). One grouped aggregation over the tiny id domain,
-    combined on the driver; (None, None) when no id has a time. An empty
-    intersection has start > end."""
-    if mode not in {"union", "intersection"}:
-        raise ValueError(f"window mode must be union|intersection, got {mode!r}")
-    rows = (
-        long_df.groupBy(id_col)
-        .agg(F.min("time").alias("lo"), F.max("time").alias("hi"))
-        .collect()
-    )
-    return combine_bounds([(r["lo"], r["hi"]) for r in rows], mode)
 
 
 def coverage_stats(wide_df: DataFrame, columns: Sequence[str]) -> DataFrame:

@@ -10,13 +10,15 @@ The skip logic hashes **configs and file stats, never data**, so it ports
 unchanged. Each producer writes its rows plus a JSON manifest carrying the
 fingerprint and the producer's schema. The data-sized artifacts (series,
 ticks) are Parquet, read back under the manifest's schema, so no footer
-job infers it. The driver-sized ones (scaler, metadata, coverage_stats)
-hold at most one row per pivot column, which ``MAX_DISCOVERED_SERIES_IDS``
-caps; they are JSON rows, as the reference keeps its scaler
-(artifacts/scaler.py:16-88), and read back as a local relation, so
-reading and collecting them runs no Spark job. The series, scaler and
-ticks producers share the staged series frame (``CompiledProject.series``),
-so the stream transforms run once for all three.
+job infers it. The driver-sized ones are JSON rows: metadata and
+coverage_stats hold one row per series id, and scaler one per fold and
+series id. A dataset build refuses more series ids than
+``dataset_build.MAX_PIVOT_COLUMNS``. They are kept as the reference keeps
+its scaler (artifacts/scaler.py:16-88), and read back as a local
+relation, so reading and collecting them runs no Spark job. The series,
+scaler and ticks producers share the staged series frame
+(``CompiledProject.series``), so the stream transforms run once for all
+three.
 
 Read-back rule: an artifact is fresh when its manifest carries the
 fingerprint the configs and source-file stats hash to (with its

@@ -13,13 +13,16 @@ configs and source-file stats unchanged since ``build_artifacts`` wrote
 them; code changes are not seen, as with the reference's
 ``artifact_revision``), and otherwise the series frame staged behind a
 localCheckpoint (``CompiledProject.series``; read by the facts scan, the
-pivot and the scaler fit). The plan-time facts (pivot ids, list lengths,
-the window bounds) are the metadata artifact's rows, or one collect of
-``series_facts`` when it is not fresh. The wide sample table after its
-last shuffle (the lattice) sits behind a second checkpoint, so
-postprocess, labels, scaling and every fold/role write are narrow work
-over one materialization. Staged blocks live as long as the DataFrames
-that own them.
+pivot and the scaler fit). The plan-time facts of every pivot column (its
+id, list length and time range) come from one collect: the metadata
+artifact's rows or ``series_facts`` over the series frame, unioned with
+``series_facts`` over the sequence specs' long frames. The build takes the
+pivot ids and the metadata window from these rows and refuses more than
+``MAX_PIVOT_COLUMNS`` of them. The wide sample table after its last
+shuffle (the lattice) sits behind a second checkpoint, so postprocess,
+labels, scaling and every fold/role write are narrow work over one
+materialization. Staged blocks live as long as the DataFrames that own
+them.
 
 Each dataset rule has one owner in ``datapipeline_spark.dataset`` that this
 module calls rather than restates: ``fit_scaler``/``apply_scaler`` fit and
@@ -41,7 +44,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampType
 
-from datapipeline_spark.dataset.metadata import combine_bounds, series_facts, window_bounds
+from datapipeline_spark.dataset.metadata import combine_bounds, series_facts
 from datapipeline_spark.dataset.postprocess import (
     drop_rows_by_coverage,
     select_columns_by_coverage,
@@ -54,11 +57,7 @@ from datapipeline_spark.dataset.split import (
     route_folds,
     time_split_label,
 )
-from datapipeline_spark.functions.time import (
-    floor_time_expr,
-    parse_cadence_seconds,
-    parse_datetime_utc,
-)
+from datapipeline_spark.functions.time import parse_cadence_seconds, parse_datetime_utc
 from datapipeline_spark.operators.window import sequence_windows
 from datapipeline_spark.plans.artifacts import (
     METADATA,
@@ -73,33 +72,34 @@ from datapipeline_spark.plans.config import DatasetConfig, FeatureSpec
 LABEL = "__split__"
 ROLES = ("train", "validation", "test")
 
+#: Most pivot columns one build emits. A pivot is one output column per
+#: series id, so the id set must be configuration-scale (the reference lists
+#: its features in YAML), never data-scale; a wider build fails fast
+#: instead of compiling a plan of that width.
+MAX_PIVOT_COLUMNS = 10_000
 
-def _long_frame(
+
+def _sequence_series(
     compiled: CompiledProject, spec: FeatureSpec, entity_keys: Sequence[str]
 ) -> DataFrame:
-    """One feature/target → long series rows (series_id, time, *keys, value,
-    base_id). Sequence specs window the field into arrays first; the build
-    uses it for those, and scalar specs project per stream in
-    ``scalar_series``."""
-    df = compiled.stream(spec.stream)
+    """One sequence spec → long series rows (series_id, time, *keys, value,
+    base_id) whose value is the field windowed into arrays. Scalar specs
+    project per stream in ``scalar_series``."""
     partition_by = compiled.partition_by(spec.stream)
-    field = spec.field
-    if spec.sequence is not None:
-        df = sequence_windows(
-            df,
-            field,
-            size=spec.sequence.size,
-            stride=spec.sequence.stride,
-            partition_by=partition_by,
-            out="__seq__",
-        )
-        field = "__seq__"
+    windows = sequence_windows(
+        compiled.stream(spec.stream),
+        spec.field,
+        size=spec.sequence.size,
+        stride=spec.sequence.stride,
+        partition_by=partition_by,
+        out="__seq__",
+    )
     long_df = project_series(
-        df,
+        windows,
         base_id=spec.id,
         partition_by=partition_by,
         entity_keys=entity_keys,
-        value_field=field,
+        value_field="__seq__",
     )
     return long_df.withColumn("base_id", F.lit(spec.id))
 
@@ -111,7 +111,7 @@ def scalar_series(compiled: CompiledProject) -> DataFrame:
     projected once for all of its specs (``project_stream_series``), so its
     transform chain appears once in the plan; the per-stream frames are
     unioned. Sequence arrays do not union with scalars; they assemble from
-    their own long frames."""
+    ``_sequence_series``."""
     cfg = _dataset(compiled)
     keys = list(cfg.sample.keys)
     by_stream: dict[str, list[tuple[str, str]]] = {}
@@ -258,7 +258,7 @@ def postprocess_preview(build: DatasetBuild) -> DataFrame:
     return next(iter(outs.values())) if len(outs) == 1 else build.samples
 
 
-# window_mode → (range id, window_bounds mode): 'strict' intersects
+# window_mode → (range id, combine_bounds mode): 'strict' intersects
 # per-partition (full series id) ranges, the others per-base ranges with the
 # partitions of a base unioned first
 _WINDOW = {
@@ -268,39 +268,24 @@ _WINDOW = {
 }
 
 
-def _window_clip(wide, cadence, facts, seq_longs: Sequence[DataFrame], window_mode: str):
+def _window_clip(wide, cadence, facts, window_mode: str):
     """Clip samples to the metadata window (reference operations/artifacts/
     metadata.py:36-108; serve applies it, default mode 'intersection') over
-    the [min, max] observed ROW bucket of each id. The scalar series' ranges
-    come from the facts rows (microseconds): the floor is monotone, so the
-    floor of an id's first time is its first bucket, and a base id's range
-    is the union of its series' ranges. Sequence frames are not in the
-    facts; one grouped aggregation over their slim union gives their
-    window, and the two windows combine (their id sets are disjoint)."""
+    the [min, max] observed ROW bucket of each id. Every pivot column's
+    range, scalar or sequence, comes from the facts rows (microseconds):
+    the floor is monotone, so the floor of an id's first time is its first
+    bucket, and a base id's range is the union of its series' ranges."""
     id_col, mode = _WINDOW[window_mode]
     per_id: dict[str, list] = {}
     for r in facts:
         rid = r["series_id"] if id_col == "series_id" else r["series_id"].split("__", 1)[0]
         per_id.setdefault(rid, []).append((r["first_time"], r["last_time"]))
-    # floor commutes with min and max, so the window floors once
     start, end = combine_bounds([combine_bounds(b, "union") for b in per_id.values()], mode)
-    step = parse_cadence_seconds(cadence) * 1_000_000
-
-    def bucket(us: int):
-        return TimestampType().fromInternal(us // step * step)
-
-    windows = [(None, None) if start is None else (bucket(start), bucket(end))]
-    if seq_longs:
-        slim = _union_all(
-            [
-                long_df.select(id_col, floor_time_expr("time", cadence).alias("time"))
-                for long_df in seq_longs
-            ]
-        )
-        windows.append(window_bounds(slim, id_col, mode))
-    start, end = combine_bounds(windows, mode)
     if start is None:
         return wide
+    # floor commutes with min and max, so the window floors once
+    step = parse_cadence_seconds(cadence) * 1_000_000
+    start, end = (TimestampType().fromInternal(us // step * step) for us in (start, end))
     if start > end:
         return wide.filter(F.lit(False))
     return wide.filter((F.col("time") >= F.lit(start)) & (F.col("time") <= F.lit(end)))
@@ -317,8 +302,8 @@ def _build(compiled: CompiledProject, cfg: DatasetConfig) -> DatasetBuild:
 
     specs = [(s, "feature") for s in cfg.features] + [(s, "target") for s in cfg.targets]
     seq_specs = [s for s, _ in specs if s.sequence is not None]
-    series = scaler_stats = None
-    facts: list = []
+    series = scaler_stats = seq_long = None
+    fact_frames: list[DataFrame] = []
     if len(seq_specs) < len(specs):
         series = fresh_frame(compiled, SERIES)
         if series is None:
@@ -329,49 +314,59 @@ def _build(compiled: CompiledProject, cfg: DatasetConfig) -> DatasetBuild:
             scaler_stats = fresh_frame(compiled, SCALER)
         if scaler_stats is None:
             scaler_stats = fit_split_scaler(series, cfg)
-        # the plan-time facts: the metadata artifact's rows (no Spark job),
-        # or one collect over the series frame. Only the columns the build
-        # reads are selected, so the collect aggregates nothing else
+        # the metadata artifact's rows are a local relation (no Spark job)
         metadata = fresh_frame(compiled, METADATA)
-        if metadata is None:
-            metadata = series_facts(series, cadence, keys)
-        times = ["first_time", "last_time"] if cfg.metadata is not None else []
-        facts = driver_rows(metadata.select("series_id", "lo", "hi", *times))
-    seq_longs = [_long_frame(compiled, s, keys) for s in seq_specs]
+        fact_frames.append(series_facts(series, cadence, keys) if metadata is None else metadata)
+    if seq_specs:
+        seq_long = _union_all([_sequence_series(compiled, s, keys) for s in seq_specs])
+        fact_frames.append(series_facts(seq_long, cadence, keys))
+    # the facts of every pivot column in one collect; the scalar and
+    # sequence id sets are disjoint, since a series id starts with its
+    # spec's id. Only the columns the build reads are selected, so the
+    # collect aggregates nothing else
+    times = ["first_time", "last_time"] if cfg.metadata is not None else []
+    facts = driver_rows(
+        _union_all([f.select("series_id", "lo", "hi", *times) for f in fact_frames])
+    )
+    if len(facts) > MAX_PIVOT_COLUMNS:
+        raise ValueError(
+            f"dataset has {len(facts)} series ids, more than {MAX_PIVOT_COLUMNS}: "
+            "a pivot emits one column per id, so a data-scale field in "
+            "partition_by would build a plan of that width"
+        )
+    size_of_base = {s.id: s.sequence.size for s in seq_specs}
+    base_of = {r["series_id"]: r["series_id"].split("__", 1)[0] for r in facts}
+    scalar_facts = [r for r in facts if base_of[r["series_id"]] not in size_of_base]
+    scalar_ids = sorted(r["series_id"] for r in scalar_facts)
+    seq_ids = sorted(sid for sid, base in base_of.items() if base in size_of_base)
+    col_base = {sid: base_of[sid] for sid in [*scalar_ids, *seq_ids]}
 
-    col_base: dict[str, str] = {}
     wide: DataFrame | None = None
     list_conform: dict[str, int] = {}
     if series is not None:
-        # ---- the pivot ids are the series_ids of the facts. A series whose
-        # buckets hold >1 observation becomes a fixed-length list column,
-        # time-ordered within the bucket (reference operations/artifacts/
-        # series.py:336-367 _assemble_values: len != 1 → list;
-        # artifacts/utils.py:54-82 enforces ONE kind and ONE length per
-        # series).
-        ids = sorted(r["series_id"] for r in facts)
-        multi_len = {r["series_id"]: r["hi"] for r in facts if r["hi"] > 1}
-        for r in facts:
+        # ---- a scalar series whose buckets hold >1 observation becomes a
+        # fixed-length list column, time-ordered within the bucket
+        # (reference operations/artifacts/series.py:336-367 _assemble_values:
+        # len != 1 → list; artifacts/utils.py:54-82 enforces ONE kind and ONE
+        # length per series). A sequence bucket keeps its last window.
+        multi_len = {r["series_id"]: r["hi"] for r in scalar_facts if r["hi"] > 1}
+        for r in scalar_facts:
             if r["hi"] > 1 and r["lo"] != r["hi"]:
                 raise ValueError(
                     f"Series {r['series_id']!r} mixes bucket multiplicities "
                     f"{r['lo']} and {r['hi']} (the metadata contract requires "
                     "one kind and one fixed list length per series)"
                 )
-        col_base.update({sid: sid.split("__", 1)[0] for sid in ids})
         wide = assemble_samples(
-            series, cadence, keys, series_ids=ids, sequence_ids=sorted(multi_len)
+            series, cadence, keys, series_ids=scalar_ids, sequence_ids=sorted(multi_len)
         )
         # absent buckets of list-kind series conform to [null]*length —
         # applied after lattice densification (below) so lattice-only rows
         # conform too
         list_conform.update(multi_len)
 
-    if seq_longs:
-        seq_long = _union_all(seq_longs)
-        ids = sorted(r[0] for r in seq_long.select("series_id").distinct().collect())
-        col_base.update({sid: sid.split("__", 1)[0] for sid in ids})
-        seq_wide = assemble_samples(seq_long, cadence, keys, series_ids=ids)
+    if seq_long is not None:
+        seq_wide = assemble_samples(seq_long, cadence, keys, series_ids=seq_ids)
         wide = (
             seq_wide
             if wide is None
@@ -381,13 +376,11 @@ def _build(compiled: CompiledProject, cfg: DatasetConfig) -> DatasetBuild:
         # a scalar null (reference transforms/vector/conform.py:10-75 list
         # handling, asserted by the identity-alignment fixture) — deferred to
         # after lattice densification like the multi-value conformance
-        size_of_base = {s.id: s.sequence.size for s in seq_specs}
-        for sid in ids:
-            list_conform[sid] = size_of_base[col_base[sid]]
+        list_conform.update({sid: size_of_base[base_of[sid]] for sid in seq_ids})
 
     assert wide is not None
     if cfg.metadata is not None:
-        wide = _window_clip(wide, cadence, facts, seq_longs, cfg.metadata.window_mode)
+        wide = _window_clip(wide, cadence, facts, cfg.metadata.window_mode)
     # ---- rectangular key lattice (reference sample/input.py:37 rectangular
     # =True on every serve: pipelines/sample/keys.py:16-121 dense lattice) —
     # every cadence tick inside each sample key's observed [first, last]

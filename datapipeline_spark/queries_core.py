@@ -39,11 +39,18 @@ from datapipeline_spark.functions.time import floor_time_expr, shift_time_expr
 from datapipeline_spark.operators.window import canonical_window
 from datapipeline_spark.tables import load_table
 
+#: name → (query, DuckDB oracle SQL) of every registry query; the other
+#: ``queries_*`` modules register here through ``query`` too
 REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {}
 
 
 def query(name: str, sql: str | None = None):
+    """Register the decorated function as query ``name`` with its oracle
+    ``sql``. A name already taken raises rather than shadowing the first."""
+
     def deco(fn):
+        if name in REGISTRY:
+            raise ValueError(f"registry query {name!r} is already registered")
         REGISTRY[name] = (fn, sql)
         return fn
 

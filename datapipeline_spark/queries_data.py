@@ -19,8 +19,6 @@ oracle-verified ground truth.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -39,6 +37,8 @@ from datapipeline_spark.similarity import (
     lsh_knn,
     lsh_similar_pairs,
 )
+# REGISTRY re-exported: tests look queries up as queries_data.REGISTRY[name]
+from datapipeline_spark.queries_core import REGISTRY, query  # noqa: F401
 from datapipeline_spark.tables import load_table, spread
 from datapipeline_spark.text import (
     BPE_PATTERN,
@@ -51,17 +51,6 @@ from datapipeline_spark.text import (
 )
 from datapipeline_spark.text.analysis import winnow_fingerprints
 from datapipeline_spark.text.pack import pack_sequences
-
-REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {}
-
-
-def query(name: str, sql: str | None = None):
-    def deco(fn):
-        REGISTRY[name] = (fn, sql)
-        return fn
-
-    return deco
-
 
 PARAMS = MinHashParams()  # seed=42, 8 hashes — ingest/row_minhash shape
 

@@ -5,7 +5,6 @@ tick-grid reindex, window bounds."""
 from __future__ import annotations
 
 from datetime import datetime
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,18 +25,9 @@ from datapipeline_spark.queries_core import (
     W,
     events_stream,
     hourly_stream,
+    query,
 )
 from datapipeline_spark.tables import load_table
-
-REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {}
-
-
-def query(name: str, sql: str | None = None):
-    def deco(fn):
-        REGISTRY[name] = (fn, sql)
-        return fn
-
-    return deco
 
 
 @query(

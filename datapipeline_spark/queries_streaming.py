@@ -12,23 +12,12 @@ from __future__ import annotations
 
 import hashlib
 import os
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datapipeline_spark.queries_core import EVENTS_BASE, W, events_stream
+from datapipeline_spark.queries_core import EVENTS_BASE, W, events_stream, query
 from datapipeline_spark.tables import load_table
-
-REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {}
-
-
-def query(name: str, sql: str | None = None):
-    def deco(fn):
-        REGISTRY[name] = (fn, sql)
-        return fn
-
-    return deco
 
 
 def _staged_events(spark: SparkSession, sf_dir: str) -> str:

@@ -92,12 +92,20 @@ def _windows(df) -> int:
 def _per_field_union(compiled):
     """The series frame as one projection per feature, unioned: the
     reference the per-stream projection must equal."""
-    from datapipeline_spark.plans.dataset_build import _long_frame
+    from pyspark.sql import functions as F
+
+    from datapipeline_spark.dataset.series import project_series
 
     cfg = compiled.definition.dataset
     keys = list(cfg.sample.keys)
     longs = [
-        _long_frame(compiled, s, keys)
+        project_series(
+            compiled.stream(s.stream),
+            base_id=s.id,
+            partition_by=compiled.partition_by(s.stream),
+            entity_keys=keys,
+            value_field=s.field,
+        ).withColumn("base_id", F.lit(s.id))
         for s in [*cfg.features, *cfg.targets]
         if s.sequence is None
     ]
@@ -163,6 +171,61 @@ def _build_reading(spark, root, monkeypatch, cfg_of=None):
         cfg = compiled.definition.dataset if cfg_of is None else cfg_of(compiled)
         build = dataset_build._build(compiled, cfg)
     return seen[0], build, bool(computed)
+
+
+def _canonical_rows(build):
+    out = build.outputs()[("all", "full")]
+    rows = [
+        json.dumps(r.asDict(recursive=True), default=str, sort_keys=True)
+        for r in out.orderBy("time").collect()
+    ]
+    return out.columns, rows
+
+
+def test_fresh_metadata_unions_sequence_facts(
+    spark, regression_project, monkeypatch  # noqa: F811
+):
+    """After ``build_artifacts`` the regression fixture's build takes its
+    scalar facts from the JSON metadata artifact and unions them with the
+    facts of its sequence spec, which no artifact holds. Under every
+    window mode its output equals the build computed from the streams."""
+    from datapipeline_spark.plans import dataset_build
+    from datapipeline_spark.plans.artifacts import build_artifacts
+
+    dataset_yaml = regression_project / "dataset.yaml"
+    base = dataset_yaml.read_text(encoding="utf-8")
+    modes = ("intersection", "strict", "union")
+
+    def set_mode(mode):
+        dataset_yaml.write_text(
+            base.replace("window_mode: intersection", f"window_mode: {mode}"),
+            encoding="utf-8",
+        )
+
+    want = {}
+    for mode in modes:
+        set_mode(mode)
+        _, build, computed = _build_reading(spark, regression_project, monkeypatch)
+        assert computed
+        want[mode] = _canonical_rows(build)
+    build_artifacts(_compiled(spark, regression_project))
+    facts, driver_rows = [], dataset_build.driver_rows
+
+    def spy(df):
+        facts.append(df)
+        return driver_rows(df)
+
+    for mode in modes:
+        set_mode(mode)
+        with monkeypatch.context() as m:
+            m.setattr(dataset_build, "driver_rows", spy)
+            _, build, computed = _build_reading(spark, regression_project, monkeypatch)
+        assert not computed
+        plan = facts[-1]._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "HashAggregate" in plan
+        assert _canonical_rows(build) == want[mode], mode
+    # the window modes clip differently, so each mode's equality counts
+    assert len({tuple(w[1]) for w in want.values()}) > 1
 
 
 def _reads_artifact(df, key: str) -> bool:

@@ -25,7 +25,7 @@ from datapipeline_spark.dataset import (
     select_columns_by_coverage,
     time_split_label,
 )
-from datapipeline_spark.dataset.metadata import window_bounds
+from datapipeline_spark.dataset.metadata import combine_bounds
 from datapipeline_spark.dataset.split import hash_split_value
 
 
@@ -211,30 +211,15 @@ def test_metadata_and_window_bounds(spark):
     meta = {r["series_id"]: r for r in collect_series_metadata(df).collect()}
     assert meta["a"]["n_rows"] == 2 and meta["a"]["n_present"] == 1 and meta["a"]["n_null"] == 1
     assert meta["a"]["first_time"] == ts(1) and meta["a"]["last_time"] == ts(5)
-    assert window_bounds(df, mode="union") == (ts(1), ts(9))
-    assert window_bounds(df, mode="intersection") == (ts(3), ts(5))
+    ranges = [(r["first_time"], r["last_time"]) for r in meta.values()]
+    assert combine_bounds(ranges, "union") == (ts(1), ts(9))
+    assert combine_bounds(ranges, "intersection") == (ts(3), ts(5))
+    assert combine_bounds([*ranges, (None, None)], "intersection") == (ts(3), ts(5))
+    assert combine_bounds([(None, None)], "union") == (None, None)
 
     wide = spark.createDataFrame([(1.0, None), (2.0, 3.0)], "x double, y double")
     stats = {r["column"]: r for r in coverage_stats(wide, ["x", "y"]).collect()}
     assert stats["x"]["coverage"] == 1.0 and stats["y"]["coverage"] == 0.5
-
-
-def test_assemble_samples_discovery_bound(spark):
-    import pytest
-
-    df = spark.range(50).selectExpr(
-        "concat('sid_', id) AS series_id",
-        "timestamp('2024-01-01 00:00:00') AS time",
-        "id * 1.0 AS value",
-        "'e' AS ent",
-    )
-    with pytest.raises(ValueError, match="more than 10"):
-        assemble_samples(df, "1d", ["ent"], series_ids=None, max_discovered_ids=10)
-    # under the bound, discovery still works
-    wide = assemble_samples(
-        df.filter("id < 3"), "1d", ["ent"], series_ids=None, max_discovered_ids=10
-    )
-    assert {"sid_0", "sid_1", "sid_2"}.issubset(set(wide.columns))
 
 
 def test_quantile_normalize_exact_rank_mapping(spark):

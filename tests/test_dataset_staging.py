@@ -10,6 +10,8 @@ import math
 
 import pytest
 
+from tests.test_full_regression_golden import project as regression_project  # noqa: F401
+
 ROLES_SPLIT = """split:
   mode: time
   intervals:
@@ -105,13 +107,8 @@ def _jobs_in_group(spark, group: str) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_build_scans_once_and_role_writes_read_the_staged_table(
-    spark, tmp_path, monkeypatch
-):
-    from datapipeline_spark.io.writers import write_parquet
-    from datapipeline_spark.plans.dataset_build import build_dataset
-
-    compiled = _compiled(spark, _project(tmp_path / "proj", ROLES_SPLIT))
+def _collects(spark, monkeypatch, fn):
+    """``fn()`` and the number of ``DataFrame.collect`` calls it made."""
     frame_cls = type(spark.range(1))
     collect = frame_cls.collect
     calls = []
@@ -120,11 +117,22 @@ def test_build_scans_once_and_role_writes_read_the_staged_table(
         calls.append(1)
         return collect(self)
 
-    monkeypatch.setattr(frame_cls, "collect", counted)
-    build = build_dataset(compiled)
-    monkeypatch.setattr(frame_cls, "collect", collect)
+    with monkeypatch.context() as m:
+        m.setattr(frame_cls, "collect", counted)
+        out = fn()
+    return out, len(calls)
+
+
+def test_build_scans_once_and_role_writes_read_the_staged_table(
+    spark, tmp_path, monkeypatch
+):
+    from datapipeline_spark.io.writers import write_parquet
+    from datapipeline_spark.plans.dataset_build import build_dataset
+
+    compiled = _compiled(spark, _project(tmp_path / "proj", ROLES_SPLIT))
+    build, collects = _collects(spark, monkeypatch, lambda: build_dataset(compiled))
     # series ids and bucket multiplicities come from ONE collect
-    assert len(calls) == 1
+    assert collects == 1
 
     outputs = build.outputs()
     assert sorted(outputs) == [("main", "test"), ("main", "train"), ("main", "validation")]
@@ -192,3 +200,23 @@ def test_feed_over_fresh_artifacts_runs_few_jobs(spark, tmp_path):
         sc.setJobGroup("", "")
     assert sum(b.features.shape[0] for b in batches) == 2 * 24  # the 'early' day
     assert _jobs_in_group(spark, group) <= 6
+
+
+def test_one_facts_collect_names_every_pivot_column(
+    spark, regression_project, monkeypatch  # noqa: F811
+):
+    """The regression fixture has 10 scalar series ids, 1 sequence id and
+    an intersection window. Their ids and the window come from one collect
+    of the unioned facts, and the pivot-width cap counts both kinds."""
+    from datapipeline_spark.plans import dataset_build
+
+    compiled = _compiled(spark, regression_project)
+    monkeypatch.setattr(dataset_build, "MAX_PIVOT_COLUMNS", 10)
+    with pytest.raises(ValueError, match="11 series ids, more than 10"):
+        dataset_build.build_dataset(compiled)
+    monkeypatch.setattr(dataset_build, "MAX_PIVOT_COLUMNS", 11)
+    build, collects = _collects(
+        spark, monkeypatch, lambda: dataset_build.build_dataset(compiled)
+    )
+    assert collects == 1
+    assert len(build.column_base) == 11 and "sine_window" in build.column_base

@@ -160,7 +160,6 @@ KEEP_OPTIONS = {
     "iter_model_batches.batch_size": "public API (api.py)",
     "iter_model_batches.strict_finite": "public API (api.py)",
     "collect_matrix.max_cells": "seam: tests lower the cap to reach its raise at small data",
-    "assemble_samples.max_discovered_ids": "seam: tests lower the cap to reach its raise at small data",
     "frequent_pairs.min_item_support": "seam: tests prune at 2-3 on a few rows, and the property "
     "test checks the unpruned default against pure Python",
     "chunk_documents.size": "seam: tests chunk a few words at size 4 and reach the size check with 0",
@@ -350,3 +349,16 @@ def test_every_engine_option_is_set_outside_tests():
     assert not stale, "KEEP_OPTIONS names no single-valued option:\n" + "\n".join(stale)
     unset = sorted(single - KEEP_OPTIONS.keys())
     assert not unset, "engine options only tests set:\n" + "\n".join(unset)
+
+
+def test_query_name_registers_once():
+    """Every queries_* module registers into one REGISTRY, so a name taken
+    twice raises instead of silently shadowing the first query."""
+    import pytest
+
+    from datapipeline_spark.queries_core import REGISTRY, query
+
+    name, first = next(iter(REGISTRY.items()))
+    with pytest.raises(ValueError, match="already registered"):
+        query(name)(lambda spark, sf_dir: None)
+    assert REGISTRY[name] is first
