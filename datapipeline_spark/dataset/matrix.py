@@ -36,15 +36,18 @@ def availability_statuses(
     """
     from datapipeline_spark.functions.time import parse_cadence_seconds
 
+    # present requires a non-null, non-NaN value (the operators' missing
+    # test), or a sequence row's window
+    present = F.col("value").isNotNull() & ~F.isnan(F.col("value").cast("double"))
+    if "values" in series.columns:
+        present = present | F.col("values").isNotNull()
     bucketed = series.select(
         floor_time_expr("time", cadence).alias("bucket"),
         "series_id",
-        "value",
+        present.alias("present"),
     )
-    # present requires a non-null, non-NaN value (the operators' missing test)
-    present = F.col("value").isNotNull() & ~F.isnan(F.col("value").cast("double"))
     cells = bucketed.groupBy("bucket", "series_id").agg(
-        F.max(F.when(present, 2).otherwise(1)).alias("__code__")
+        F.max(F.when(F.col("present"), 2).otherwise(1)).alias("__code__")
     )
     # dense bucket axis spans min..max — an all-series outage bucket must
     # still render (as an all-absent row), so the axis cannot come from

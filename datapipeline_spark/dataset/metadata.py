@@ -8,9 +8,9 @@ length; CoverageStatsAccumulator (analysis/vector/coverage_stats.py:24-118)
 Both are single aggregate passes in Spark; outputs are tiny artifact tables.
 ``series_facts`` is the metadata artifact's row set: the counts and times
 plus the bucket multiplicity that decides each series' kind and list
-length, so a dataset build takes its plan-time facts from the artifact.
-The build also runs it over its sequence specs' long frames, and
-``combine_bounds`` turns the per-id times into the metadata window.
+length, so a dataset build takes its plan-time facts from the artifact
+(or, when it is stale, the series frame), and ``combine_bounds`` turns the
+per-id times into the metadata window.
 """
 
 from __future__ import annotations
@@ -42,12 +42,16 @@ def series_facts(long_df: DataFrame, cadence: str, keys: Sequence[str]) -> DataF
     (reference operations/artifacts/series.py:336-367; utils.py:54-82 wants
     one length, so lo == hi). One aggregation grouped twice: per (bucket,
     *keys, series_id), then per series_id; the floor is monotone, so the
-    floor of first_time is the series' first bucket."""
+    floor of first_time is the series' first bucket. A sequence row is
+    present when its window (``values``) is."""
+    present = F.col("value").isNotNull()
+    if "values" in long_df.columns:
+        present = present | F.col("values").isNotNull()
     cells = long_df.groupBy(
         floor_time_expr("time", cadence).alias("__b__"), *keys, "series_id"
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        F.count("value").alias("present"),
+        F.count(F.when(present, 1)).alias("present"),
         F.min("time").alias("first"),
         F.max("time").alias("last"),
     )

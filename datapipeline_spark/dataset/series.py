@@ -27,6 +27,8 @@ from pyspark.sql.types import (
     StringType,
 )
 
+from datapipeline_spark.operators.window import sequence_window
+
 _SAFE_RE = "^[A-Za-z0-9_.~-]*$"
 
 
@@ -93,7 +95,8 @@ def project_series(
     df: DataFrame,
     base_id: str,
     partition_by: Sequence[str] = (),
-    entity_keys: Sequence[str] = (),
+    *,
+    entity_keys: Sequence[str],
     value_field: str = "value",
     time_field: str = "time",
 ) -> DataFrame:
@@ -119,21 +122,26 @@ def project_stream_series(
     values: Sequence[tuple[str, str]],
     partition_by: Sequence[str] = (),
     entity_keys: Sequence[str] = (),
+    windows: Sequence[tuple[str, str, int, int]] = (),
 ) -> DataFrame:
     """Project several fields of ONE stream into long series rows in one
-    pass over the stream: ``values`` pairs each base id with its value
-    field (a field may serve two ids). The stream's plan appears once, so
-    its transform chain runs once, where a union of one
+    pass over the stream: ``values`` pairs each scalar base id with its
+    value field (a field may serve two ids), and ``windows`` gives each
+    sequence base id its field, size and stride. The stream's plan appears
+    once, so its transform chain runs once, where a union of one
     ``project_series`` per field would repeat it per field.
 
     Each stream row selects time, the keys, its series-id suffix (encoded
-    once per row, not per field) and the fields under positional aliases;
-    one ``inline(array(struct(base_id, value)…))`` then emits a long row
-    per (stream row, base id). The array widens the value types by the
-    same rule as a union of the per-field projections.
-    Output: (series_id, time, *entity_keys, value, base_id).
+    once per row, not per field), the fields and each ``sequence_window``
+    (over ``partition_by`` and time) under positional aliases; one
+    ``inline(array(struct(base_id, value, values)…))`` then emits a long
+    row per (stream row, base id). A sequence row has ``value`` NULL and
+    its window in ``values``, and is emitted only where the window is kept;
+    a scalar row has ``values`` NULL. The array widens the value types by
+    the same rule as a union of the per-field projections.
+    Output: (series_id, time, *entity_keys, value, values, base_id).
     """
-    for base_id, _ in values:
+    for base_id, *_ in [*values, *windows]:
         _check_base_id(base_id)
     leftover = [f for f in partition_by if f not in entity_keys]
     suffix = ["__suffix__"] if leftover else []
@@ -142,21 +150,33 @@ def project_stream_series(
         *entity_keys,
         *[series_suffix_expr(df, leftover).alias(c) for c in suffix],
         *[F.col(field).alias(f"__v{i}__") for i, (_, field) in enumerate(values)],
+        *[
+            sequence_window(field, size, stride, partition_by).alias(f"__w{i}__")
+            for i, (_, field, size, stride) in enumerate(windows)
+        ],
     )
+    no_window = F.lit(None).cast("array<double>")
+    entries = [(b, F.col(f"__v{i}__"), no_window) for i, (b, _) in enumerate(values)] + [
+        (b, F.lit(None).cast(df.schema[field].dataType), F.col(f"__w{i}__"))
+        for i, (b, field, *_) in enumerate(windows)
+    ]
     pairs = F.array(
         *[
-            F.struct(F.lit(base_id).alias("base_id"), F.col(f"__v{i}__").alias("value"))
-            for i, (base_id, _) in enumerate(values)
+            F.struct(F.lit(b).alias("base_id"), v.alias("value"), w.alias("values"))
+            for b, v, w in entries
         ]
     )
     long_df = rows.select("time", *entity_keys, *suffix, F.inline(pairs))
+    if windows:
+        sequences = [base_id for base_id, *_ in windows]
+        long_df = long_df.filter(F.col("values").isNotNull() | ~F.col("base_id").isin(sequences))
     sid = (
         F.concat(F.col("base_id"), F.lit("__"), F.col("__suffix__"))
         if leftover
         else F.col("base_id")
     )
     return long_df.select(
-        sid.alias("series_id"), "time", *entity_keys, "value", "base_id"
+        sid.alias("series_id"), "time", *entity_keys, "value", "values", "base_id"
     )
 
 

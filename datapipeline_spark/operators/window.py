@@ -257,18 +257,16 @@ def forward_fill(
     return df.withColumn(out or field, F.last(_nn(field), ignorenulls=True).over(w))
 
 
-def sequence_windows(
-    df: DataFrame,
+def sequence_window(
     field: str,
     size: int,
     stride: int = 1,
     partition_by: Sequence[str] = (),
-    out: str | None = None,
     order_by: Sequence[str] = (TIME,),
-) -> DataFrame:
-    """Sliding fixed-size windows per partition: each emitted row carries the
-    trailing `size` values as an array; only rows where a full window is
-    available AND the offset from series start is a stride multiple survive.
+) -> Column:
+    """The trailing `size` values of `field` as an array on each row where a
+    full window is available AND the offset from series start is a stride
+    multiple; NULL on every other row (a kept window is never NULL).
 
     Reference: pipelines/series/stages.py:32-60 (emits only full windows
     aligned to stride from the series start; state resets per series).
@@ -282,9 +280,23 @@ def sequence_windows(
         lambda s: s["v"],
     )
     rn = F.row_number().over(w_rank)
-    keep = (rn >= size) & (((rn - size) % stride) == 0)
-    out_df = df.withColumn(out or field, values).withColumn("__seq_keep__", keep)
-    return out_df.filter(F.col("__seq_keep__")).drop("__seq_keep__")
+    return F.when((rn >= size) & (((rn - size) % stride) == 0), values)
+
+
+def sequence_windows(
+    df: DataFrame,
+    field: str,
+    size: int,
+    stride: int = 1,
+    partition_by: Sequence[str] = (),
+    *,
+    out: str,
+    order_by: Sequence[str] = (TIME,),
+) -> DataFrame:
+    """Sliding fixed-size windows per partition: the rows where
+    ``sequence_window`` keeps a window, each carrying it in `out`."""
+    df = df.withColumn(out, sequence_window(field, size, stride, partition_by, order_by))
+    return df.filter(F.col(out).isNotNull())
 
 
 def ewma(

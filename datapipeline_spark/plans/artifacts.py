@@ -18,7 +18,8 @@ its scaler (artifacts/scaler.py:16-88), and read back as a local
 relation, so reading and collecting them runs no Spark job. The series,
 scaler and ticks producers share the staged series frame
 (``CompiledProject.series``), so the stream transforms run once for all
-three.
+three. It holds every feature and target, sequence windows included, so
+the series and metadata artifacts cover every pivot column.
 
 Read-back rule: an artifact is fresh when its manifest carries the
 fingerprint the configs and source-file stats hash to (with its
@@ -72,7 +73,7 @@ JSON_KEYS = frozenset({SCALER, METADATA, COVERAGE_STATS})
 
 #: the store's layout and the producers' row sets; hashed into every
 #: fingerprint, so artifacts written under an older layout are stale
-LAYOUT = 2
+LAYOUT = 3
 
 
 def topological_order(keys: set[str]) -> list[str]:
@@ -260,13 +261,14 @@ def _build_ticks(compiled: CompiledProject) -> DataFrame:
     Each grid is unique per (partition, time), so the union needs no dedupe.
 
     A stream's grid comes from the staged series frame filtered to one of
-    its base ids: ``project_stream_series`` filters no row, so every stream
-    row is there with its raw time, and the series and scaler producers
-    have already run the stream's transforms for it. Two kinds of stream
-    read the stream itself, re-running its transforms: one whose
-    ``partition_by`` is not contained in the sample keys (the fields left
-    over are encoded in the series-id suffix, not kept as columns), and one
-    with only sequence specs (the series frame holds scalar specs only)."""
+    its scalar base ids: ``project_stream_series`` filters no scalar row,
+    so every stream row is there with its raw time, and the series and
+    scaler producers have already run the stream's transforms for it. Two
+    kinds of stream read the stream itself, re-running its transforms: one
+    whose ``partition_by`` is not contained in the sample keys (the fields
+    left over are encoded in the series-id suffix, not kept as columns),
+    and one whose dataset specs are all sequences (a sequence base holds
+    only its kept windows, so its rows do not span the stream's bounds)."""
     cfg = compiled.definition.dataset
     cadence = cfg.sample.cadence
     specs = [*cfg.features, *cfg.targets]
@@ -296,7 +298,7 @@ def _build_ticks(compiled: CompiledProject) -> DataFrame:
 
 def dataset_requires_scaler(compiled: CompiledProject) -> bool:
     cfg = compiled.definition.dataset
-    return cfg is not None and any(s.scale for s in [*cfg.features, *cfg.targets])
+    return cfg is not None and any(s.scaled for s in [*cfg.features, *cfg.targets])
 
 
 # --------------------------------------------------------------------------- #

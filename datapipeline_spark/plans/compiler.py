@@ -263,21 +263,21 @@ class CompiledProject:
     _series: DataFrame | None = None
 
     def series(self) -> DataFrame:
-        """The dataset's scalar long series frame, computed from the streams
-        and staged once behind a localCheckpoint (the reference's series
-        cache): the series, scaler and ticks artifacts and a build without
-        fresh artifacts read it instead of re-running the stream transforms.
-        ``eager=False`` defers only the final stage: under AQE, building
-        the checkpoint runs every shuffle map stage of the stream plans
-        (their stage jobs run inside this call), and the first action runs
-        the rest. A build whose series artifact is fresh reads that parquet
-        instead (``artifacts.fresh_frame``; the fingerprint covers configs
-        and file stats, not code). Its blocks live as long as this object's
-        frames."""
+        """The dataset's long series frame (``dataset_build.series_frame``),
+        computed from the streams and staged once behind a localCheckpoint
+        (the reference's series cache): the series, scaler and ticks
+        artifacts and a build without fresh artifacts read it instead of
+        re-running the stream transforms. ``eager=False`` defers only the
+        final stage: under AQE, building the checkpoint runs every shuffle
+        map stage of the stream plans (their stage jobs run inside this
+        call), and the first action runs the rest. A build whose series
+        artifact is fresh reads that parquet instead
+        (``artifacts.fresh_frame``; the fingerprint covers configs and file
+        stats, not code). Its blocks live as long as this object's frames."""
         if self._series is None:
-            from datapipeline_spark.plans.dataset_build import scalar_series
+            from datapipeline_spark.plans.dataset_build import series_frame
 
-            self._series = scalar_series(self).localCheckpoint(eager=False)
+            self._series = series_frame(self).localCheckpoint(eager=False)
         return self._series
 
     def source(self, source_id: str) -> DataFrame:

@@ -358,6 +358,11 @@ class FeatureSpec(_Strict):
     scale: bool = False
     sequence: SequenceSpec | None = None
 
+    @property
+    def scaled(self) -> bool:
+        """``scale: true`` on a scalar spec; sequence windows are never scaled."""
+        return self.scale and self.sequence is None
+
 
 class SampleSpec(_Strict):
     cadence: NonEmpty

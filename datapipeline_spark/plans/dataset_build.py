@@ -6,19 +6,18 @@ from the series artifact, label splits, fit/apply leakage-free per-fold
 scalers, run the fixed postprocess order, route folds.
 
 Spark runs each stream's transforms at most once per compiled project and
-the pivot once per build. The scalar series frame projects every stream
-once for all of its specs (``scalar_series``). A build reads the series,
-scaler and metadata artifacts when they are fresh (``artifacts.fresh_frame``:
-configs and source-file stats unchanged since ``build_artifacts`` wrote
-them; code changes are not seen, as with the reference's
-``artifact_revision``), and otherwise the series frame staged behind a
-localCheckpoint (``CompiledProject.series``; read by the facts scan, the
-pivot and the scaler fit). The plan-time facts of every pivot column (its
-id, list length and time range) come from one collect: the metadata
-artifact's rows or ``series_facts`` over the series frame, unioned with
-``series_facts`` over the sequence specs' long frames. The build takes the
-pivot ids and the metadata window from these rows and refuses more than
-``MAX_PIVOT_COLUMNS`` of them. The wide sample table after its last
+the pivot once per build. The series frame projects every stream once for
+all of its specs, sequences included (``series_frame``). A build reads the
+series, scaler and metadata artifacts when they are fresh
+(``artifacts.fresh_frame``: configs and source-file stats unchanged since
+``build_artifacts`` wrote them; code changes are not seen, as with the
+reference's ``artifact_revision``), and otherwise the series frame staged
+behind a localCheckpoint (``CompiledProject.series``; read by the facts
+scan, the pivot and the scaler fit). The plan-time facts of every pivot
+column (its id, list length and time range) come from one collect of the
+metadata artifact's rows or of ``series_facts`` over the series frame; the
+build takes the pivot ids and the metadata window from them and refuses
+more than ``MAX_PIVOT_COLUMNS``. The wide sample table after its last
 shuffle (the lattice) sits behind a second checkpoint, so postprocess,
 labels, scaling and every fold/role write are narrow work over one
 materialization. Staged blocks live as long as the DataFrames that own
@@ -51,14 +50,13 @@ from datapipeline_spark.dataset.postprocess import (
 )
 from datapipeline_spark.dataset.sample import assemble_samples, rectangular_samples
 from datapipeline_spark.dataset.scaler import apply_scaler, fit_scaler
-from datapipeline_spark.dataset.series import project_series, project_stream_series
+from datapipeline_spark.dataset.series import project_stream_series
 from datapipeline_spark.dataset.split import (
     hash_split_label,
     route_folds,
     time_split_label,
 )
 from datapipeline_spark.functions.time import parse_cadence_seconds, parse_datetime_utc
-from datapipeline_spark.operators.window import sequence_windows
 from datapipeline_spark.plans.artifacts import (
     METADATA,
     SCALER,
@@ -67,7 +65,7 @@ from datapipeline_spark.plans.artifacts import (
     fresh_frame,
 )
 from datapipeline_spark.plans.compiler import CompiledProject
-from datapipeline_spark.plans.config import DatasetConfig, FeatureSpec
+from datapipeline_spark.plans.config import DatasetConfig
 
 LABEL = "__split__"
 ROLES = ("train", "validation", "test")
@@ -79,56 +77,30 @@ ROLES = ("train", "validation", "test")
 MAX_PIVOT_COLUMNS = 10_000
 
 
-def _sequence_series(
-    compiled: CompiledProject, spec: FeatureSpec, entity_keys: Sequence[str]
-) -> DataFrame:
-    """One sequence spec → long series rows (series_id, time, *keys, value,
-    base_id) whose value is the field windowed into arrays. Scalar specs
-    project per stream in ``scalar_series``."""
-    partition_by = compiled.partition_by(spec.stream)
-    windows = sequence_windows(
-        compiled.stream(spec.stream),
-        spec.field,
-        size=spec.sequence.size,
-        stride=spec.sequence.stride,
-        partition_by=partition_by,
-        out="__seq__",
-    )
-    long_df = project_series(
-        windows,
-        base_id=spec.id,
-        partition_by=partition_by,
-        entity_keys=entity_keys,
-        value_field="__seq__",
-    )
-    return long_df.withColumn("base_id", F.lit(spec.id))
-
-
-def scalar_series(compiled: CompiledProject) -> DataFrame:
-    """Long rows of every scalar feature/target: the frame
-    ``CompiledProject.series`` stages and the series artifact writes
-    (reference operations/artifacts/series.py:71-150). Each stream is
-    projected once for all of its specs (``project_stream_series``), so its
-    transform chain appears once in the plan; the per-stream frames are
-    unioned. Sequence arrays do not union with scalars; they assemble from
-    ``_sequence_series``."""
+def series_frame(compiled: CompiledProject) -> DataFrame:
+    """Long rows of every feature/target, a sequence's windows included
+    (``SeriesSequence``): the frame ``CompiledProject.series`` stages and
+    the series artifact writes (reference operations/artifacts/series.py:
+    71-150). Each stream is projected once for all of its specs
+    (``project_stream_series``); the per-stream frames are unioned."""
     cfg = _dataset(compiled)
-    keys = list(cfg.sample.keys)
-    by_stream: dict[str, list[tuple[str, str]]] = {}
+    by_stream: dict[str, tuple[list, list]] = {}
     for spec in [*cfg.features, *cfg.targets]:
+        values, windows = by_stream.setdefault(spec.stream, ([], []))
         if spec.sequence is None:
-            by_stream.setdefault(spec.stream, []).append((spec.id, spec.field))
-    if not by_stream:
-        raise ValueError("dataset has no scalar series")
+            values.append((spec.id, spec.field))
+        else:
+            windows.append((spec.id, spec.field, spec.sequence.size, spec.sequence.stride))
     return _union_all(
         [
             project_stream_series(
                 compiled.stream(stream_id),
                 values,
                 partition_by=compiled.partition_by(stream_id),
-                entity_keys=keys,
+                entity_keys=list(cfg.sample.keys),
+                windows=windows,
             )
-            for stream_id, values in by_stream.items()
+            for stream_id, (values, windows) in by_stream.items()
         ]
     )
 
@@ -176,8 +148,8 @@ def fit_split_scaler(series: DataFrame, cfg: DatasetConfig) -> DataFrame | None:
     from the long series frame: each fold fits only on rows labelled with
     one of its train labels. Series are selected by BASE id and fitted per
     FULL series id (each partition suffix owns its mean/std). None when
-    nothing is scaled."""
-    scaled_bases = [s.id for s in [*cfg.features, *cfg.targets] if s.scale]
+    nothing is scaled. Sequence specs are not (``FeatureSpec.scaled``)."""
+    scaled_bases = [s.id for s in [*cfg.features, *cfg.targets] if s.scaled]
     if not scaled_bases:
         return None
     labeled = series.filter(F.col("base_id").isin(scaled_bases)).withColumn(
@@ -301,84 +273,65 @@ def _build(compiled: CompiledProject, cfg: DatasetConfig) -> DatasetBuild:
     cadence = cfg.sample.cadence
 
     specs = [(s, "feature") for s in cfg.features] + [(s, "target") for s in cfg.targets]
-    seq_specs = [s for s, _ in specs if s.sequence is not None]
-    series = scaler_stats = seq_long = None
-    fact_frames: list[DataFrame] = []
-    if len(seq_specs) < len(specs):
-        series = fresh_frame(compiled, SERIES)
-        if series is None:
-            series = compiled.series()
-        # a stripped config (the samples preview drops the split) fits its
-        # own statistics
-        if cfg is compiled.definition.dataset:
-            scaler_stats = fresh_frame(compiled, SCALER)
-        if scaler_stats is None:
-            scaler_stats = fit_split_scaler(series, cfg)
-        # the metadata artifact's rows are a local relation (no Spark job)
-        metadata = fresh_frame(compiled, METADATA)
-        fact_frames.append(series_facts(series, cadence, keys) if metadata is None else metadata)
-    if seq_specs:
-        seq_long = _union_all([_sequence_series(compiled, s, keys) for s in seq_specs])
-        fact_frames.append(series_facts(seq_long, cadence, keys))
-    # the facts of every pivot column in one collect; the scalar and
-    # sequence id sets are disjoint, since a series id starts with its
-    # spec's id. Only the columns the build reads are selected, so the
-    # collect aggregates nothing else
+    size_of_base = {s.id: s.sequence.size for s, _ in specs if s.sequence is not None}
+    series = fresh_frame(compiled, SERIES)
+    if series is None:
+        series = compiled.series()
+    # a stripped config (the samples preview drops the split) fits its own
+    # statistics
+    scaler_stats = None
+    if cfg is compiled.definition.dataset:
+        scaler_stats = fresh_frame(compiled, SCALER)
+    if scaler_stats is None:
+        scaler_stats = fit_split_scaler(series, cfg)
+    # the facts of every pivot column in one collect: the metadata
+    # artifact's rows are a local relation (no Spark job). Only the columns
+    # the build reads are selected, so the collect aggregates nothing else
+    metadata = fresh_frame(compiled, METADATA)
+    if metadata is None:
+        metadata = series_facts(series, cadence, keys)
     times = ["first_time", "last_time"] if cfg.metadata is not None else []
-    facts = driver_rows(
-        _union_all([f.select("series_id", "lo", "hi", *times) for f in fact_frames])
-    )
+    facts = driver_rows(metadata.select("series_id", "lo", "hi", *times))
     if len(facts) > MAX_PIVOT_COLUMNS:
         raise ValueError(
             f"dataset has {len(facts)} series ids, more than {MAX_PIVOT_COLUMNS}: "
             "a pivot emits one column per id, so a data-scale field in "
             "partition_by would build a plan of that width"
         )
-    size_of_base = {s.id: s.sequence.size for s in seq_specs}
+    # a series id starts with its spec's id
     base_of = {r["series_id"]: r["series_id"].split("__", 1)[0] for r in facts}
     scalar_facts = [r for r in facts if base_of[r["series_id"]] not in size_of_base]
+    window_ids = sorted(sid for sid, base in base_of.items() if base in size_of_base)
+    # ---- a scalar series whose buckets hold >1 observation becomes a
+    # fixed-length list column, time-ordered within the bucket (reference
+    # operations/artifacts/series.py:336-367 _assemble_values: len != 1 →
+    # list; artifacts/utils.py:54-82 enforces ONE kind and ONE length per
+    # series). A sequence bucket keeps its last window.
+    list_len = {r["series_id"]: r["hi"] for r in scalar_facts if r["hi"] > 1}
+    for r in scalar_facts:
+        if r["hi"] > 1 and r["lo"] != r["hi"]:
+            raise ValueError(
+                f"Series {r['series_id']!r} mixes bucket multiplicities "
+                f"{r['lo']} and {r['hi']} (the metadata contract requires "
+                "one kind and one fixed list length per series)"
+            )
     scalar_ids = sorted(r["series_id"] for r in scalar_facts)
-    seq_ids = sorted(sid for sid, base in base_of.items() if base in size_of_base)
-    col_base = {sid: base_of[sid] for sid in [*scalar_ids, *seq_ids]}
+    col_base = {sid: base_of[sid] for sid in [*scalar_ids, *window_ids]}
+    wide = assemble_samples(
+        series,
+        cadence,
+        keys,
+        series_ids=[sid for sid in scalar_ids if sid not in list_len],
+        list_ids=sorted(list_len),
+        window_ids=window_ids,
+    )
+    # absent buckets of list-kind series conform to [null]*length, and a
+    # bucket with no full window to [null]*size, not a scalar null
+    # (reference transforms/vector/conform.py:10-75 list handling, asserted
+    # by the identity-alignment fixture) — applied after lattice
+    # densification (below) so lattice-only rows conform too
+    list_conform = {**list_len, **{sid: size_of_base[base_of[sid]] for sid in window_ids}}
 
-    wide: DataFrame | None = None
-    list_conform: dict[str, int] = {}
-    if series is not None:
-        # ---- a scalar series whose buckets hold >1 observation becomes a
-        # fixed-length list column, time-ordered within the bucket
-        # (reference operations/artifacts/series.py:336-367 _assemble_values:
-        # len != 1 → list; artifacts/utils.py:54-82 enforces ONE kind and ONE
-        # length per series). A sequence bucket keeps its last window.
-        multi_len = {r["series_id"]: r["hi"] for r in scalar_facts if r["hi"] > 1}
-        for r in scalar_facts:
-            if r["hi"] > 1 and r["lo"] != r["hi"]:
-                raise ValueError(
-                    f"Series {r['series_id']!r} mixes bucket multiplicities "
-                    f"{r['lo']} and {r['hi']} (the metadata contract requires "
-                    "one kind and one fixed list length per series)"
-                )
-        wide = assemble_samples(
-            series, cadence, keys, series_ids=scalar_ids, sequence_ids=sorted(multi_len)
-        )
-        # absent buckets of list-kind series conform to [null]*length —
-        # applied after lattice densification (below) so lattice-only rows
-        # conform too
-        list_conform.update(multi_len)
-
-    if seq_long is not None:
-        seq_wide = assemble_samples(seq_long, cadence, keys, series_ids=seq_ids)
-        wide = (
-            seq_wide
-            if wide is None
-            else wide.join(seq_wide, on=["time", *keys], how="full_outer")
-        )
-        # conform: a bucket with no full window materializes [null]*size, not
-        # a scalar null (reference transforms/vector/conform.py:10-75 list
-        # handling, asserted by the identity-alignment fixture) — deferred to
-        # after lattice densification like the multi-value conformance
-        list_conform.update({sid: size_of_base[base_of[sid]] for sid in seq_ids})
-
-    assert wide is not None
     if cfg.metadata is not None:
         wide = _window_clip(wide, cadence, facts, cfg.metadata.window_mode)
     # ---- rectangular key lattice (reference sample/input.py:37 rectangular

@@ -200,11 +200,18 @@ def env_report() -> str:
 
 # ------------------------------------------------------------------- cleanup
 
+#: the registry queries' cross-process caches, and state a killed call left
+ENGINE_CACHES = (
+    "/tmp/spark_graft_stream_*",
+    "/tmp/spark_graft_cdc_state_*",
+    "/tmp/spark_graft_bucketed/*",
+)
+
 
 def find_stale(project_dir: str | None, older_than: str = "0h") -> list[str]:
     """Candidate directories for `clean`: run-scoped outputs under the
-    project's runs/ tree (never the `latest` symlink or its target) and
-    streaming staging dirs under /tmp, filtered by age."""
+    project's runs/ tree (never the `latest` symlink or its target) and the
+    engine's caches under /tmp (``ENGINE_CACHES``), filtered by age."""
     cutoff = time.time() - parse_timecode_seconds(older_than)
     cands: list[str] = []
     if project_dir is not None:
@@ -223,7 +230,7 @@ def find_stale(project_dir: str | None, older_than: str = "0h") -> list[str]:
                     continue
                 if d.stat().st_mtime <= cutoff:
                     cands.append(str(d))
-    for d in sorted(glob.glob("/tmp/spark_graft_stream_*")):
+    for d in sorted(d for pattern in ENGINE_CACHES for d in glob.glob(pattern)):
         if os.path.isdir(d) and os.stat(d).st_mtime <= cutoff:
             cands.append(d)
     return cands

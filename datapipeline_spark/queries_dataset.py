@@ -282,8 +282,8 @@ def sample_multivalue(spark: SparkSession, sf_dir: str) -> DataFrame:
         long,
         cadence="1d",
         entity_keys=["user_id"],
-        series_ids=["clicks"],
-        sequence_ids=["clicks"],
+        series_ids=[],
+        list_ids=["clicks"],
     )
     return wide.select(
         "user_id", "time", F.posexplode_outer("clicks").alias("pos", "value")

@@ -451,69 +451,55 @@ def streaming_cdc_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     retention. The materialized final state equals the one-shot batch
     merge, so cdc_apply_changes' SQL is an exact oracle — the strongest
     form of the streaming == batch contract (stateful, multi-batch,
-    delete-bearing)."""
-    from datapipeline_spark.operators.cdc import apply_changes
+    delete-bearing).
+
+    Only the snapshot and changelog inputs are cached across calls (keyed
+    by the staging path, as ``_staged_events`` is); every call folds them
+    into a fresh state directory, stages the result and removes it."""
+    import shutil
+    import tempfile
+
+    from pyspark.sql import Window
+
     from datapipeline_spark.streaming.ops import cdc_upsert_sink, read_cdc_state
 
     staging = _staged_events(spark, sf_dir)
     key = hashlib.sha256(("cdc|" + staging).encode()).hexdigest()[:8]
-    state = f"/tmp/spark_graft_cdc_state_{key}"
-    marker = state + "/_DONE"
-    if not os.path.exists(marker):
-        import shutil
-
-        shutil.rmtree(state, ignore_errors=True)
-        base = spark.read.parquet(staging)
-        cutoff = "2024-01-16 00:00:00"
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("user_id").orderBy(
-            F.col("time").desc(), F.col("event_id").desc()
-        )
-        snap = (
-            base.filter(F.col("time") < F.lit(cutoff).cast("timestamp"))
-            .withColumn("__rn__", F.row_number().over(w))
-            .filter(F.col("__rn__") == 1)
-            .select("user_id", "time", "event_id", "value", F.lit("U").alias("op"))
-        )
+    prefix = f"/tmp/spark_graft_cdc_state_{key}"
+    snap_dir, chg_dir = prefix + "_snap", prefix + "_chg"
+    base = spark.read.parquet(staging)
+    cutoff = F.lit("2024-01-16 00:00:00").cast("timestamp")
+    cols = ["user_id", "time", "event_id", "value"]
+    if not os.path.exists(os.path.join(snap_dir, "_SUCCESS")):
+        w = Window.partitionBy("user_id").orderBy(F.col("time").desc(), F.col("event_id").desc())
+        snap = base.filter(F.col("time") < cutoff).withColumn("__rn__", F.row_number().over(w))
+        snap = snap.filter(F.col("__rn__") == 1).select(*cols, F.lit("U").alias("op"))
+        snap.write.mode("overwrite").parquet(snap_dir)
+    if not os.path.exists(os.path.join(chg_dir, "_SUCCESS")):
+        op = F.when(F.col("event_type") == "error", "D").otherwise("U").alias("op")
+        chg = base.filter(F.col("time") >= cutoff).select(*cols, op)
+        chg.repartition(3).write.mode("overwrite").parquet(chg_dir)  # 3 files -> 3 micro-batches
+    run = tempfile.mkdtemp(prefix=prefix + "_run_", dir="/tmp")
+    try:
         # seed the state table with the snapshot (tombstone-bearing layout)
-        snap.write.mode("overwrite").parquet(state)
-        chg_dir = state + "_chg"
-        if not os.path.exists(os.path.join(chg_dir, "_SUCCESS")):
-            (
-                base.filter(F.col("time") >= F.lit(cutoff).cast("timestamp"))
-                .select(
-                    "user_id",
-                    "time",
-                    "event_id",
-                    "value",
-                    F.when(F.col("event_type") == "error", F.lit("D"))
-                    .otherwise(F.lit("U"))
-                    .alias("op"),
-                )
-                .repartition(3)  # 3 files -> 3 micro-batches
-                .write.mode("overwrite")
-                .parquet(chg_dir)
-            )
+        state = os.path.join(run, "state")
+        shutil.copytree(snap_dir, state)
         sch = "user_id bigint, time timestamp, event_id bigint, value double, op string"
-        stream = (
-            spark.readStream.schema(sch)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(chg_dir)
-        )
+        stream = spark.readStream.schema(sch).option("maxFilesPerTrigger", 1).parquet(chg_dir)
         q = (
             stream.writeStream.foreachBatch(
                 cdc_upsert_sink(state, ["user_id"], ["time", "event_id"])
             )
-            .option("checkpointLocation", state + "_ckpt")
+            .option("checkpointLocation", os.path.join(run, "ckpt"))
             .trigger(availableNow=True)
             .start()
         )
         if not q.awaitTermination(300):
             q.stop()
             raise TimeoutError("streaming_cdc_state did not finish in 300s")
-        open(marker, "w").write("done")
-    return read_cdc_state(spark, state).select("user_id", "time", "event_id", "value")
+        return read_cdc_state(spark, state).select(*cols).localCheckpoint()
+    finally:
+        shutil.rmtree(run, ignore_errors=True)
 
 
 @query(

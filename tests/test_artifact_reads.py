@@ -91,24 +91,35 @@ def _windows(df) -> int:
 
 def _per_field_union(compiled):
     """The series frame as one projection per feature, unioned: the
-    reference the per-stream projection must equal."""
+    reference the per-stream projection must equal. A sequence spec's rows
+    are its stream's kept windows, in ``values``."""
     from pyspark.sql import functions as F
 
     from datapipeline_spark.dataset.series import project_series
+    from datapipeline_spark.operators.window import sequence_windows
 
     cfg = compiled.definition.dataset
     keys = list(cfg.sample.keys)
-    longs = [
-        project_series(
-            compiled.stream(s.stream),
-            base_id=s.id,
-            partition_by=compiled.partition_by(s.stream),
-            entity_keys=keys,
-            value_field=s.field,
-        ).withColumn("base_id", F.lit(s.id))
-        for s in [*cfg.features, *cfg.targets]
-        if s.sequence is None
-    ]
+    longs = []
+    for s in [*cfg.features, *cfg.targets]:
+        stream, partition_by = compiled.stream(s.stream), compiled.partition_by(s.stream)
+        if s.sequence is None:
+            long = project_series(stream, s.id, partition_by, entity_keys=keys, value_field=s.field)
+            long = long.withColumn("values", F.lit(None).cast("array<double>"))
+        else:
+            seq = s.sequence
+            windows = sequence_windows(
+                stream, s.field, seq.size, seq.stride, partition_by, out="__seq__"
+            )
+            long = project_series(
+                windows, s.id, partition_by, entity_keys=keys, value_field="__seq__"
+            )
+            long = long.withColumnRenamed("value", "values").withColumn(
+                "value", F.lit(None).cast(stream.schema[s.field].dataType)
+            )
+        longs.append(
+            long.select("series_id", "time", *keys, "value", "values", F.lit(s.id).alias("base_id"))
+        )
     return reduce(lambda a, b: a.unionByName(b), longs)
 
 
@@ -121,8 +132,9 @@ def _assert_same_frame(got, want):
 def test_series_frame_equals_per_field_union(spark, project, regression_project):  # noqa: F811
     """Same schema and rows as a union of one projection per spec, on a
     project whose specs share a field under two ids and on the regression
-    fixture (partition suffixes, broadcast and aligned streams)."""
-    from datapipeline_spark.plans.dataset_build import scalar_series
+    fixture (partition suffixes, broadcast and aligned streams, a sequence
+    spec)."""
+    from datapipeline_spark.plans.dataset_build import series_frame
 
     _write(
         project / "dataset.yaml",
@@ -130,21 +142,21 @@ def test_series_frame_equals_per_field_union(spark, project, regression_project)
     )
     for root in (project, regression_project):
         compiled = _compiled(spark, root)
-        series = scalar_series(compiled)
+        series = series_frame(compiled)
         _assert_same_frame(series, _per_field_union(compiled))
-    bases = scalar_series(_compiled(spark, project)).select("base_id").distinct()
+    bases = series_frame(_compiled(spark, project)).select("base_id").distinct()
     assert {r[0] for r in bases.collect()} == {"val", "roll", "prev", "val_again"}
 
 
 def test_series_plan_windows_do_not_grow_with_fields(spark, project):
-    from datapipeline_spark.plans.dataset_build import scalar_series
+    from datapipeline_spark.plans.dataset_build import series_frame
 
     one = "  - { id: roll, stream: s.m, field: roll3 }\n"
     _write(project / "dataset.yaml", _dataset_yaml(one))
-    n_one = _windows(scalar_series(_compiled(spark, project)))
+    n_one = _windows(series_frame(_compiled(spark, project)))
     assert n_one > 0
     _write(project / "dataset.yaml", _dataset_yaml(THREE_FIELDS))
-    assert _windows(scalar_series(_compiled(spark, project))) == n_one
+    assert _windows(series_frame(_compiled(spark, project))) == n_one
 
 
 def _build_reading(spark, root, monkeypatch, cfg_of=None):
@@ -182,12 +194,12 @@ def _canonical_rows(build):
     return out.columns, rows
 
 
-def test_fresh_metadata_unions_sequence_facts(
+def test_fresh_metadata_holds_sequence_facts(
     spark, regression_project, monkeypatch  # noqa: F811
 ):
-    """After ``build_artifacts`` the regression fixture's build takes its
-    scalar facts from the JSON metadata artifact and unions them with the
-    facts of its sequence spec, which no artifact holds. Under every
+    """After ``build_artifacts`` the metadata artifact holds the facts of
+    every pivot column, the sequence spec's included, and the regression
+    fixture's build takes them from that local relation alone. Under every
     window mode its output equals the build computed from the streams."""
     from datapipeline_spark.plans import dataset_build
     from datapipeline_spark.plans.artifacts import build_artifacts
@@ -209,6 +221,11 @@ def test_fresh_metadata_unions_sequence_facts(
         assert computed
         want[mode] = _canonical_rows(build)
     build_artifacts(_compiled(spark, regression_project))
+    for key in ("metadata", "coverage_stats"):
+        stored = json.loads((regression_project / "build" / key / "data.json").read_text())
+        sine = [r for r in stored if r[0] == "sine_window"]
+        # (series_id, n_rows, n_present, ...): every kept window is present
+        assert len(sine) == 1 and sine[0][1] == sine[0][2] > 0, key
     facts, driver_rows = [], dataset_build.driver_rows
 
     def spy(df):
@@ -222,10 +239,48 @@ def test_fresh_metadata_unions_sequence_facts(
             _, build, computed = _build_reading(spark, regression_project, monkeypatch)
         assert not computed
         plan = facts[-1]._jdf.queryExecution().executedPlan().toString()
-        assert "LocalTableScan" in plan and "HashAggregate" in plan
+        assert "LocalTableScan" in plan and "Aggregate" not in plan
+        assert not facts[-1].inputFiles()
         assert _canonical_rows(build) == want[mode], mode
     # the window modes clip differently, so each mode's equality counts
     assert len({tuple(w[1]) for w in want.values()}) > 1
+
+
+def test_sequence_stream_runs_once_and_never_over_fresh_artifacts(
+    spark, regression_project  # noqa: F811
+):
+    """Of the plans the regression fixture's build runs (its collects and
+    localCheckpoints), one reads the sequence spec's source when the build
+    computes, the staged series frame, and none does over fresh artifacts."""
+    from datapipeline_spark.plans import dataset_build
+    from datapipeline_spark.plans.artifacts import build_artifacts
+
+    frame_cls = type(spark.range(1))
+
+    def sine_plans():
+        ran = []
+        originals = {m: getattr(frame_cls, m) for m in ("collect", "localCheckpoint")}
+
+        def spied(method):
+            def run(self, *args, **kwargs):
+                ran.append(self)
+                return originals[method](self, *args, **kwargs)
+
+            return run
+
+        with pytest.MonkeyPatch.context() as m:
+            for method in originals:
+                m.setattr(frame_cls, method, spied(method))
+            build = dataset_build.build_dataset(_compiled(spark, regression_project))
+            for out in build.outputs().values():
+                out.collect()
+        return [df for df in ran if any(f.endswith("sine.jsonl") for f in df.inputFiles())]
+
+    computed = sine_plans()
+    assert len(computed) == 1
+    assert {"value", "values", "base_id"} <= set(computed[0].columns)
+    build_artifacts(_compiled(spark, regression_project))
+    assert sine_plans() == []
 
 
 def _reads_artifact(df, key: str) -> bool:

@@ -100,3 +100,35 @@ def test_streaming_cdc_fold_equals_one_shot(spark, tmp_path):
     # deleted keys stay as tombstones in the raw state (resurrection guard)
     raw = spark.read.parquet(state)
     assert raw.filter("op = 'D'").count() > 0
+
+
+def test_cdc_state_query_folds_its_changelog_on_every_call(spark, monkeypatch):
+    """The ``streaming_cdc_state`` registry query caches only its inputs:
+    a second call in one session runs its micro-batches again, returns the
+    same state, and leaves no per-call state directory behind."""
+    import os
+
+    from datapipeline_spark.queries_streaming import streaming_cdc_state
+    from datapipeline_spark.streaming import ops
+    from tests.test_construction_time import SF
+
+    sink, batches, states = ops.cdc_upsert_sink, [], []
+
+    def counted(path, *args, **kwargs):
+        process = sink(path, *args, **kwargs)
+        states.append(path)
+
+        def run(batch_df, batch_id):
+            batches.append(batch_id)
+            process(batch_df, batch_id)
+
+        return run
+
+    monkeypatch.setattr(ops, "cdc_upsert_sink", counted)
+    first = sorted(map(tuple, streaming_cdc_state(spark, SF).collect()))
+    n_first = len(batches)
+    second = sorted(map(tuple, streaming_cdc_state(spark, SF).collect()))
+    assert n_first > 0 and len(batches) == 2 * n_first
+    assert first == second and len(first) > 0
+    assert len(set(states)) == 2
+    assert not any(os.path.exists(os.path.dirname(p)) for p in states)

@@ -207,7 +207,7 @@ def test_one_facts_collect_names_every_pivot_column(
 ):
     """The regression fixture has 10 scalar series ids, 1 sequence id and
     an intersection window. Their ids and the window come from one collect
-    of the unioned facts, and the pivot-width cap counts both kinds."""
+    of the series frame's facts, and the pivot-width cap counts both kinds."""
     from datapipeline_spark.plans import dataset_build
 
     compiled = _compiled(spark, regression_project)
@@ -220,3 +220,31 @@ def test_one_facts_collect_names_every_pivot_column(
     )
     assert collects == 1
     assert len(build.column_base) == 11 and "sine_window" in build.column_base
+
+
+def test_scaled_sequence_passes_through_unscaled(
+    spark, regression_project  # noqa: F811
+):
+    """``scale: true`` on a sequence spec scales nothing: the scaler fits
+    scalar specs only, so the windows keep their golden values instead of
+    being scaled by statistics of no rows, and no artifact or build
+    statistic names the sequence."""
+    from datapipeline_spark.plans import dataset_build
+    from datapipeline_spark.plans.artifacts import build_artifacts
+    from tests.test_full_regression_golden import COLS, EXPECTED
+
+    dataset_yaml = regression_project / "dataset.yaml"
+    text = dataset_yaml.read_text(encoding="utf-8")
+    seq = "    sequence: { size: 2, stride: 2 }\n"
+    assert seq in text
+    dataset_yaml.write_text(text.replace(seq, "    scale: true\n" + seq), encoding="utf-8")
+
+    build = dataset_build.build_dataset(_compiled(spark, regression_project))
+    assert {r["series_id"] for r in build.scaler_stats.collect()} == {"linear_scaled"}
+    out = build.outputs()[("all", "full")]
+    got = [r["sine_window"] for r in out.orderBy("time").collect()]
+    assert got == [row[COLS.index("sine_window") + 1] for row in EXPECTED]
+
+    build_artifacts(_compiled(spark, regression_project))
+    stored = json.loads((regression_project / "build" / "scaler" / "data.json").read_text())
+    assert [r[0] for r in stored] == ["linear_scaled"]

@@ -47,7 +47,12 @@ def test_create_source_stream(tmp_path):
         create_source(str(tmp_path), "wind")
 
 
-def test_clean_preserves_latest(tmp_path):
+def test_clean_preserves_latest(tmp_path, monkeypatch):
+    """Old run trees go, the `latest` one stays, and every engine cache
+    kind under the temp directory is swept by the same age rule. The cache
+    patterns are rebased under ``tmp_path`` so the test never touches a
+    live cache."""
+    from datapipeline_spark.plans import scaffold
     from datapipeline_spark.plans.scaffold import clean, find_stale
 
     runs = tmp_path / "output" / "runs"
@@ -59,12 +64,37 @@ def test_clean_preserves_latest(tmp_path):
     past = time.time() - 3600
     os.utime(old, (past, past))
 
+    caches = tmp_path / "tmp"
+    monkeypatch.setattr(
+        scaffold,
+        "ENGINE_CACHES",
+        tuple(p.replace("/tmp/", f"{caches}/", 1) for p in scaffold.ENGINE_CACHES),
+    )
+    stale_caches = [
+        caches / "spark_graft_stream_0a1b",
+        caches / "spark_graft_cdc_state_0a1b_chg",
+        caches / "spark_graft_cdc_state_0a1b_run_x1",
+        caches / "spark_graft_bucketed" / "bjr_orders_0a1b",
+    ]
+    fresh_caches = [
+        caches / "spark_graft_cdc_state_2c3d_snap",
+        caches / "spark_graft_bucketed" / "bjr_orders_2c3d",
+    ]
+    for d in (*stale_caches, *fresh_caches):
+        d.mkdir(parents=True)
+    for d in stale_caches:
+        os.utime(d, (past, past))
+
     stale = find_stale(str(tmp_path), older_than="30m")
     assert [os.path.basename(s) for s in stale if "demo" not in s and "spark_graft" not in s] == [
         "20240101T000000Z"
     ]
+    assert sorted(s for s in stale if "spark_graft" in s) == sorted(map(str, stale_caches))
     removed = clean(str(tmp_path), older_than="30m", yes=True)
     assert str(old) in removed and not old.exists() and new.exists()
+    assert not any(d.exists() for d in stale_caches)
+    assert all(d.exists() for d in fresh_caches)
+    assert (caches / "spark_graft_bucketed").is_dir()
 
 
 def test_plugin_init_registers(tmp_path):
